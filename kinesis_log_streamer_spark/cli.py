@@ -24,6 +24,17 @@ from collections.abc import Sequence
 
 from kinesis_log_streamer_spark.hostid import get_host_id
 
+# --streaming intake per micro-batch, in landed spool bytes: a queued
+# backlog drains in one batch (paying the stream engine's fixed
+# per-batch cost once), while a trickle still takes whatever has
+# landed at each trigger.  It bounds the memory of one batch.
+MAX_BYTES_PER_TRIGGER = 64 * 2**20
+
+# Above this many files, Spark lists a batch's input with a separate
+# distributed job.  The landing dir is always local, where a stat per
+# file on the driver is cheaper than a job at any batch size.
+_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
@@ -88,15 +99,6 @@ def build_parser() -> argparse.ArgumentParser:
             "partition key on a real cluster (linestreamer.go:102)"
         ),
     )
-    p.add_argument(
-        "--max-files-per-trigger",
-        type=int,
-        default=5,
-        metavar="N",
-        help="per-micro-batch intake cap for --streaming — the "
-        "reference's bounded (cap-5) channel backpressure "
-        "(linestreamer.go:37)",
-    )
     p.add_argument("stream_name", nargs="*")
     return p
 
@@ -131,9 +133,11 @@ def run_streaming(args, entries, output_format, stream) -> int:
 
     The full input is NEVER held in one string: the spooler carries at
     most one 64 KiB chunk plus one partial record
-    (`streaming/stdin_spool.py`), and the query pulls at most
-    ``--max-files-per-trigger`` landed files per micro-batch."""
+    (`streaming/stdin_spool.py`), and each micro-batch admits landed
+    files up to ``MAX_BYTES_PER_TRIGGER`` bytes (always at least one
+    file).  The spool's temp dir is removed once the query stopped."""
     import os
+    import shutil
     import tempfile
 
     from kinesis_log_streamer_spark.session import get_spark
@@ -154,60 +158,63 @@ def run_streaming(args, entries, output_format, stream) -> int:
     ckpt = os.path.join(work, "ckpt")
     os.makedirs(landing, exist_ok=True)
 
-    per_exec = args.host_identity == "per-executor"
-    host_id = None if per_exec else get_host_id(probe_network=not args.dry_run)
-    # cleanSource=delete: processed spool files are removed on later
-    # triggers, so a never-EOF pipe (the Apache CustomLog deployment)
-    # keeps both the landing dir and the source's file listing
-    # bounded instead of growing for the life of the process.
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", args.max_files_per_trigger)
-        .option("cleanSource", "delete")
-        .load(landing)
-    )
-    if args.format == "json":
-        # landing files are JSONL: one complete JSON value per line
-        records = build_json_pipeline(
-            raw, entries, host_id, per_executor_identity=per_exec,
-            probe_network=not args.dry_run,
-        )
-    else:
-        records = build_line_pipeline(
-            raw, output_format, args.output_key, entries, host_id,
-            per_executor_identity=per_exec,
-            probe_network=not args.dry_run,
-        )
-
-    if args.dry_run:
-
-        class _StdoutSink:
-            def write_batch(self, df, epoch_id):
-                for row in df.collect():
-                    print(f"{row['partitionKey']}\t{row['data']}")
-
-        sink = _StdoutSink()
-    else:
-        from kinesis_log_streamer_spark.streaming.kinesis_sink import (
-            KinesisSink,
-        )
-
-        sink = KinesisSink(
-            args.stream_name[0],
-            region=args.region,
-            profile=args.profile,
-            delivery=args.delivery,
-        )
-
-    spooler = StdinSpooler(stream, landing, fmt=args.format)
-    query = run_stream(
-        records,
-        sink,
-        ckpt,
-        available_now=False,
-        processing_time=args.trigger,
-    )
+    threshold = spark.conf.get(_DISCOVERY_THRESHOLD)
+    spark.conf.set(_DISCOVERY_THRESHOLD, str(2**31 - 1))
+    query = None
     try:
+        per_exec = args.host_identity == "per-executor"
+        host_id = None if per_exec else get_host_id(probe_network=not args.dry_run)
+        # cleanSource=delete: processed spool files are removed on later
+        # triggers, so a never-EOF pipe (the Apache CustomLog deployment)
+        # keeps both the landing dir and the source's file listing
+        # bounded instead of growing for the life of the process.
+        raw = (
+            spark.readStream.format("text")
+            .option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
+            .option("cleanSource", "delete")
+            .load(landing)
+        )
+        if args.format == "json":
+            # landing files are JSONL: one complete JSON value per line
+            records = build_json_pipeline(
+                raw, entries, host_id, per_executor_identity=per_exec,
+                probe_network=not args.dry_run,
+            )
+        else:
+            records = build_line_pipeline(
+                raw, output_format, args.output_key, entries, host_id,
+                per_executor_identity=per_exec,
+                probe_network=not args.dry_run,
+            )
+
+        if args.dry_run:
+
+            class _StdoutSink:
+                def write_batch(self, df, epoch_id):
+                    for row in df.collect():
+                        print(f"{row['partitionKey']}\t{row['data']}")
+
+            sink = _StdoutSink()
+        else:
+            from kinesis_log_streamer_spark.streaming.kinesis_sink import (
+                KinesisSink,
+            )
+
+            sink = KinesisSink(
+                args.stream_name[0],
+                region=args.region,
+                profile=args.profile,
+                delivery=args.delivery,
+            )
+
+        spooler = StdinSpooler(stream, landing, fmt=args.format)
+        query = run_stream(
+            records,
+            sink,
+            ckpt,
+            available_now=False,
+            processing_time=args.trigger,
+        )
         spooler.start_thread()
         drain_and_stop(
             query,
@@ -215,8 +222,10 @@ def run_streaming(args, entries, output_format, stream) -> int:
             trigger_interval_s=parse_trigger_seconds(args.trigger),
         )
     finally:
-        if query.isActive:
+        if query is not None and query.isActive:
             query.stop()
+        spark.conf.set(_DISCOVERY_THRESHOLD, threshold)
+        shutil.rmtree(work, ignore_errors=True)
     if spooler.error is not None:
         print(f"stdin spool failed: {spooler.error}", file=sys.stderr)
         return 1

@@ -10,7 +10,8 @@ Streaming semantics mapping:
 * flush-on-idle / EOF drain (B1) → ``Trigger.AvailableNow`` drains all
   pending input then stops; ``processingTime`` triggers approximate
   the idle-flush cadence (documented delta, SURVEY §7 risk 3).
-* bounded channel backpressure → ``maxFilesPerTrigger``.
+* bounded channel backpressure → a byte budget per micro-batch
+  (``maxBytesPerTrigger``, ``cli.MAX_BYTES_PER_TRIGGER``).
 * per-host partition key ordering → constant partitionKey column +
   repartition in the sink.
 """

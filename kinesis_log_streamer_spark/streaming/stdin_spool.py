@@ -15,10 +15,11 @@ thread reads stdin chunk-by-chunk, extracts COMPLETE records (lines,
 or concatenated-JSON values via incremental ``raw_decode``), and
 lands each chunk's records as one atomically-renamed file in a
 landing directory.  `spark.readStream.format("text")` tails the
-directory; ``maxFilesPerTrigger`` is the bounded-channel
-backpressure, the micro-batch trigger cadence is the flush-on-idle
-timer, and EOF is observed as "spooler finished AND the query has
-drained every landed file" (see :func:`drain_and_stop`).
+directory; a byte budget per micro-batch (``maxBytesPerTrigger``)
+is the bounded-channel backpressure, the micro-batch trigger cadence
+is the flush-on-idle timer, and EOF is observed as "spooler finished
+AND the query has drained every landed file" (see
+:func:`drain_and_stop`).
 
 Memory bound: one chunk + one partial record — never the full input.
 """

@@ -4,9 +4,9 @@
 * time plan construction (driver-side Python+Catalyst cost),
 * time N noop-sink executions (computation only, guide §1.4),
 * time N bench-methodology collects (what BENCH times),
-* write ``df.explain('formatted')`` to plans/r14/<name>_<tag>.txt.
+* write ``df.explain('formatted')`` to plans/r15/<name>_<tag>.txt.
 
-Usage: python scripts/profile_r14.py [--tag before|after] [--runs N]
+Usage: python scripts/profile_r15.py [--tag before|after] [--runs N]
        [--sf sf_dir] query [query ...]
 Prints one JSON line per query so runs are easy to diff.
 """
@@ -30,7 +30,7 @@ from kinesis_log_streamer_spark.session import get_spark  # noqa: E402
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--tag", default=None, help="write plans/r14/<q>_<tag>.txt")
+    ap.add_argument("--tag", default=None, help="write plans/r15/<q>_<tag>.txt")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -39,7 +39,7 @@ def main() -> int:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    spark = get_spark("profile_r14")
+    spark = get_spark("profile_r15")
     # Warm-up: same as bench.py so first-sample JIT/page-cache cost is
     # excluded from every profile row.
     Q.q01_pricing_summary(spark, args.sf).collect()

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import io
 import os
+import tempfile
 import time
 
 import pytest
@@ -101,11 +102,43 @@ class TestSpooler:
 class _RecordingSink:
     def __init__(self):
         self.batches: list[tuple[int, list[str]]] = []
+        self.arrived: list[float] = []  # monotonic time of each batch
 
     def write_batch(self, df, epoch_id):
         rows = [r["data"] for r in df.collect()]
         if rows:
             self.batches.append((epoch_id, rows))
+            self.arrived.append(time.monotonic())
+
+
+def _run_cli_streaming(monkeypatch, stream, fmt="line"):
+    """``cli.run_streaming`` (no --dry-run) with a recording sink bound
+    in place of ``KinesisSink``; returns (exit code, sink)."""
+    from kinesis_log_streamer_spark import cli
+    from kinesis_log_streamer_spark.streaming import kinesis_sink
+
+    sink = _RecordingSink()
+    monkeypatch.setattr(kinesis_sink, "KinesisSink", lambda *a, **kw: sink)
+    monkeypatch.setattr(cli, "get_host_id", lambda probe_network=False: "testhost")
+    args = cli.build_parser().parse_args(["--streaming", "-f", fmt, "Stream"])
+    output_format = "json" if fmt == "json" else "string"
+    return cli.run_streaming(args, {}, output_format, stream), sink
+
+
+def _file_pieces(n_files: int, lines_per_file: int = 20) -> list[bytes]:
+    """One read per piece, each of whole lines: the spooler lands
+    exactly one file per piece, of the piece's size."""
+    return [
+        b"".join(
+            f"rec-{i:03d}-{j:02d} GET /index.html 200\n".encode()
+            for j in range(lines_per_file)
+        )
+        for i in range(n_files)
+    ]
+
+
+def _lines(pieces: list[bytes]) -> list[str]:
+    return [x.decode() for p in pieces for x in p.splitlines()]
 
 
 class TestStreamingEndToEnd:
@@ -186,6 +219,90 @@ class TestStreamingEndToEnd:
             line.split("\t", 1)[1] for line in out.strip().splitlines()
         )
         assert got == ["one", "three", "two"]
+
+
+class TestCliStreamingIntake:
+    """``run_streaming`` sizes micro-batch intake by landed bytes
+    (``cli.MAX_BYTES_PER_TRIGGER``), not by a file count."""
+
+    def test_backlog_drains_in_at_most_two_batches(self, spark, monkeypatch):
+        # 40 landed files: more than Spark's 32-path listing threshold
+        # and 8 batches' worth under the old 5-file cap
+        pieces = _file_pieces(40)
+        rc, sink = _run_cli_streaming(monkeypatch, ChunkedStream(pieces))
+        assert rc == 0
+        got = [r for _, rows in sink.batches for r in rows]
+        assert sorted(got) == sorted(_lines(pieces))  # exactly once
+        # the first trigger may list the landing dir mid-spool
+        assert len(sink.batches) <= 2
+
+    def test_byte_cap_bounds_each_batch(self, spark, monkeypatch):
+        from kinesis_log_streamer_spark import cli
+
+        pieces = _file_pieces(12)
+        file_bytes = len(pieces[0])
+        cap = int(2.5 * file_bytes)
+        monkeypatch.setattr(cli, "MAX_BYTES_PER_TRIGGER", cap)
+        rc, sink = _run_cli_streaming(monkeypatch, ChunkedStream(pieces))
+        assert rc == 0
+        got = [r for _, rows in sink.batches for r in rows]
+        assert sorted(got) == sorted(_lines(pieces))
+        # Spark admits files up to the cap, and always at least one
+        for _, rows in sink.batches:
+            assert sum(len(r) + 1 for r in rows) <= cap + file_bytes
+
+    def test_trickle_flushes_on_idle(self, spark, monkeypatch):
+        """Single-record reads with pauses: each record reaches the
+        sink within a couple of trigger intervals of being read, not
+        when a byte budget fills or the stream ends."""
+        from kinesis_log_streamer_spark import cli
+        from kinesis_log_streamer_spark.streaming.stdin_spool import (
+            parse_trigger_seconds,
+        )
+
+        trigger_s = parse_trigger_seconds(cli.build_parser().get_default("trigger"))
+
+        class TricklingStream(io.RawIOBase):
+            def __init__(self, records: list[str], pause_s: float):
+                self._records = list(records)
+                self._pause = pause_s
+                self.read_at: dict[str, float] = {}
+
+            def read(self, n: int = -1) -> bytes:
+                if not self._records:
+                    return b""
+                if self.read_at:
+                    time.sleep(self._pause)
+                rec = self._records.pop(0)
+                self.read_at[rec] = time.monotonic()
+                return (rec + "\n").encode()
+
+        records = [f"trickle-{i}" for i in range(5)]
+        stream = TricklingStream(records, pause_s=6 * trigger_s)
+        rc, sink = _run_cli_streaming(monkeypatch, stream)
+        assert rc == 0
+        arrived = {
+            r: t for (_, rows), t in zip(sink.batches, sink.arrived) for r in rows
+        }
+        assert sorted(arrived) == records
+        # records[0] also waits for the query's first batch to start;
+        # a record held for more input would lag by a whole pause
+        lags = [arrived[r] - stream.read_at[r] for r in records[1:]]
+        assert max(lags) < 4 * trigger_s, lags
+
+    @pytest.mark.parametrize(
+        "fmt, payload, want_rc",
+        [("line", b"one\ntwo\n", 0), ("json", b'{"ok": 1} {"unterminated', 1)],
+    )
+    def test_spool_temp_dir_removed(
+        self, spark, monkeypatch, tmp_path, fmt, payload, want_rc
+    ):
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        stream = ChunkedStream([payload])
+        rc, sink = _run_cli_streaming(monkeypatch, stream, fmt=fmt)
+        assert rc == want_rc
+        assert sink.batches  # the spool dir held data during the run
+        assert not list(tmp_path.glob("klss-spool-*"))
 
 
 def test_parse_trigger_seconds():
