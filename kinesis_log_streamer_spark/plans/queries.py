@@ -3760,12 +3760,10 @@ def q53_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def l09_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score anomaly detection: each event scored against
-    the mean/stddev of the 100 PRECEDING events of its type (the
-    trailing frame excludes the current row — no self-contamination);
-    rows with |z| > 3 and a full history window are flagged.  One
-    window shuffle on event_type.
+def _l09_history_z(ev: DataFrame) -> DataFrame:
+    """(event_id, event_type, value, z): every event with a full
+    100-event history of its type, z-scored against that history
+    (the 100 PRECEDING events; the current row is excluded).
 
     PREFIX-SUM FORM (r15, guide §2.4 / VERDICT r14 #3): the naive
     ``avg/stddev OVER (ROWS BETWEEN 100 PRECEDING AND 1 PRECEDING)``
@@ -3775,24 +3773,23 @@ def l09_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate here is instead recovered as the difference of two
     UNBOUNDED-PRECEDING running aggregates (frames (UP,-1) and
     (UP,-101)), each maintained incrementally at O(1)/row, all six
-    sharing one Window node / one sort.  ``value`` is 2-decimal money,
-    so the running Σv (DECIMAL ,2) and Σv² (DECIMAL ,4) are EXACT at
-    any magnitude and the frame differences are the exact frame sums —
-    no float cancellation from subtracting large prefixes; mu and the
-    textbook variance (100·Σv² − (Σv)²)/9900 are then computed from
-    exact frame sums with a single double rounding each.  n_hist is
-    the same count-difference, so the ``n_hist = 100`` gate keeps
-    count(value) null semantics exactly.  Equivalence with the
-    sliding-frame form is pinned row-for-row in
-    ``tests/test_r15_opt.py`` (including the round(z,3)
-    boundary-margin audit) and by the tri-scale oracle sweep.
+    sharing one Window node / one sort.  ``value`` is 2-decimal money
+    (pinned on the fixtures by ``tests/test_r15_opt.py``), so the
+    running Σv (DECIMAL(28,2)) and Σv² (DECIMAL(38,4)) are exact and
+    their differences are the exact frame sums — no float
+    cancellation from subtracting large prefixes.
 
-    ACCEPTED-FP-RISK: ``round(z, 3)`` compares doubles from two
-    engines' arithmetic — see u04's note; no boundary hit observed
-    across the sf sweep, monitored there (the exact-decimal frame
-    sums place this form at most 1-2 ulp from the true z, tighter
-    than the old double recompute)."""
-    ev = _t(spark, sf_dir, "events")
+    The frame sums are stored as DECIMAL(22,2) / DECIMAL(26,4): exact
+    while |value| < 1e10 (100·v² < 1e22).  Past that the cast
+    overflows — NULL z, i.e. silently dropped anomalies, with ANSI
+    off; an error with ANSI on.
+
+    mu and the textbook variance (100·Σv² − (Σv)²)/9900 are computed
+    from the exact frame sums: the numerator is an exact decimal, its
+    double cast rounds once (a double holds it exactly only below 2^53
+    units of 1e-4), then sqrt/divide round once each.  n_hist is the
+    same count-difference, so the ``n_hist = 100`` gate keeps
+    count(value) null semantics exactly."""
     word = W.partitionBy("event_type").orderBy("ts", "event_id")
     w1 = word.rowsBetween(W.unboundedPreceding, -1)
     w101 = word.rowsBetween(W.unboundedPreceding, -101)
@@ -3806,26 +3803,51 @@ def l09_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         (
             F.sum(dv).over(w1) - F.coalesce(F.sum(dv).over(w101), zero2)
-        ).cast("decimal(12,2)").alias("sumv"),
+        ).cast("decimal(22,2)").alias("sumv"),
         (
             F.sum(dv2).over(w1) - F.coalesce(F.sum(dv2).over(w101), zero4)
-        ).cast("decimal(16,4)").alias("sumv2"),
+        ).cast("decimal(26,4)").alias("sumv2"),
         (
             F.count("value").over(w1) - F.count("value").over(w101)
         ).alias("n_hist"),
     )
-    # Exact integer-scaled variance numerator: 9900·var_samp =
-    # 100·Σv² − (Σv)²; both terms exact decimals, magnitude < 2^53,
-    # so the double cast is exact and sqrt/divide round once each.
     sd = F.sqrt(
         (F.lit(100) * F.col("sumv2") - F.col("sumv") * F.col("sumv"))
         .cast("double")
         / F.lit(9900.0)
     )
     mu = (F.col("sumv") / 100).cast("double")
+    return scored.filter(F.col("n_hist") == 100).select(
+        "event_id",
+        "event_type",
+        "value",
+        ((F.col("value") - mu) / sd).alias("z"),
+    )
+
+
+def l09_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling z-score anomaly detection: each event scored against
+    the mean/stddev of the 100 PRECEDING events of its type (the
+    trailing frame excludes the current row — no self-contamination);
+    rows with |z| > 3 and a full history window are flagged.  One
+    window shuffle on event_type; the exact prefix-sum scoring is
+    :func:`_l09_history_z`.  Equivalence with the sliding-frame form
+    is pinned row-for-row in ``tests/test_r15_opt.py`` (including the
+    round(z,3) boundary-margin audit and values of 1e5–1e6) and by the
+    tri-scale oracle sweep.
+
+    ACCEPTED-FP-RISK: ``round(z, 3)`` compares doubles from two
+    engines' arithmetic — see u04's note; no boundary hit observed
+    across the sf sweep, monitored there (the exact-decimal frame
+    sums place this form at most 1-2 ulp from the true z, tighter
+    than the old double recompute)."""
+    return _l09_anomalies(_t(spark, sf_dir, "events"))
+
+
+def _l09_anomalies(ev: DataFrame) -> DataFrame:
+    """l09's result over an events frame: |z| > 3 rows, rounded."""
     return (
-        scored.filter(F.col("n_hist") == 100)
-        .withColumn("z", (F.col("value") - mu) / sd)
+        _l09_history_z(ev)
         .filter(F.abs("z") > 3)
         .select(
             "event_id",

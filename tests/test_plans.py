@@ -155,14 +155,32 @@ class TestExplodeAggPlan:
 
 class TestKmeansPlan:
     def test_s09_assignment_is_scan_local(self, spark):
-        """s09: Lloyd assignment must stay broadcast-centroid
-        scan-local work — one Exchange (the per-cluster re-center
-        agg), never a join of points against centroids."""
-        df = Q.REGISTRY["s09_kmeans"](spark, SF)
-        plan = _plan(df)
+        """s09: a Lloyd round is ONE aggregation — row-local
+        assignment against the centroid literal, then the (cell, pos)
+        re-center agg: exactly one Exchange, never a join of points
+        against centroids, and no RDD scan or Python node (a
+        ``createDataFrame`` centroid table would start a Python worker
+        every round)."""
+        from kinesis_log_streamer_spark.operators.clustering import (
+            lloyd_round,
+        )
+        from kinesis_log_streamer_spark.operators.similarity import (
+            _normalized,
+        )
+
+        cn = _normalized(
+            load_table(spark, SF, "embeddings"), "vec_id", "embedding"
+        )
+        cents = [
+            list(r.nvec)
+            for r in cn.orderBy("id").limit(8).select("nvec").collect()
+        ]
+        plan = _plan(lloyd_round(cn, cents))
         _no_blowups(plan)
-        assert "SortMergeJoin" not in plan
-        assert plan.count("Exchange") <= 1
+        assert plan.count("Exchange") == 1
+        assert "Join" not in plan
+        for marker in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython"):
+            assert marker not in plan
 
 
 class TestCosineTopkPlan:

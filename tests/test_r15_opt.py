@@ -12,12 +12,15 @@ pre-rewrite sliding-frame form is reproduced inline here and compared
 row-for-row on real testdata AND on synthetic 2-decimal data, plus a
 boundary-margin audit showing every z sits far from the round(z, 3)
 half-up boundaries and the |z| > 3 cut where the two arithmetics could
-disagree.
+disagree.  The decimal frame sums are also pinned at values of 1e5–1e6
+(no NULL z, same rows as the sliding frame), and the fixtures'
+2-decimal ``value`` assumption is checked.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import random
 
 import pytest
@@ -59,50 +62,23 @@ def _l09_sliding_frame(ev):
 
 
 def _l09_prefix_z(ev):
-    """The r15 prefix-sum internals, stopping BEFORE rounding: every
+    """The shipped prefix-sum internals, stopping BEFORE rounding: every
     (event_id, unrounded z) with a full 100-row history."""
-    word = W.partitionBy("event_type").orderBy("ts", "event_id")
-    w1 = word.rowsBetween(W.unboundedPreceding, -1)
-    w101 = word.rowsBetween(W.unboundedPreceding, -101)
-    dv = F.col("value").cast("decimal(18,2)")
-    dv2 = dv * dv
-    zero2 = F.lit(0).cast("decimal(28,2)")
-    zero4 = F.lit(0).cast("decimal(38,4)")
-    scored = ev.select(
-        "event_id",
-        "value",
-        (F.sum(dv).over(w1) - F.coalesce(F.sum(dv).over(w101), zero2))
-        .cast("decimal(12,2)")
-        .alias("sumv"),
-        (F.sum(dv2).over(w1) - F.coalesce(F.sum(dv2).over(w101), zero4))
-        .cast("decimal(16,4)")
-        .alias("sumv2"),
-        (F.count("value").over(w1) - F.count("value").over(w101)).alias(
-            "n_hist"
-        ),
-    )
-    sd = F.sqrt(
-        (F.lit(100) * F.col("sumv2") - F.col("sumv") * F.col("sumv"))
-        .cast("double")
-        / F.lit(9900.0)
-    )
-    mu = (F.col("sumv") / 100).cast("double")
-    return scored.filter(F.col("n_hist") == 100).select(
-        "event_id", ((F.col("value") - mu) / sd).alias("z")
-    )
+    return Q._l09_history_z(ev).select("event_id", "z")
 
 
-def _synthetic_events(spark, n_rows=6000, n_types=3, seed=1715):
+def _synthetic_events(spark, n_rows=6000, n_types=3, seed=1715, scale=1.0):
     """Deterministic 2-decimal synthetic events: mostly-normal values
-    with injected outliers so the |z| > 3 filter actually fires."""
+    with injected outliers so the |z| > 3 filter actually fires;
+    ``scale`` multiplies the value distribution."""
     rng = random.Random(seed)
     rows = []
     for i in range(n_rows):
         et = f"type_{i % n_types}"
         if rng.random() < 0.02:
-            v = round(rng.uniform(300.0, 480.0), 2)  # outlier band
+            v = round(scale * rng.uniform(300.0, 480.0), 2)  # outlier band
         else:
-            v = round(rng.gauss(100.0, 15.0), 2)
+            v = round(scale * rng.gauss(100.0, 15.0), 2)
         rows.append((i, i * 1000, et, max(v, 0.01)))
     return spark.createDataFrame(
         rows, "event_id long, ts long, event_type string, value double"
@@ -360,50 +336,7 @@ class TestL09PrefixSumEquivalence:
     def test_matches_sliding_frame_on_synthetic(self, spark):
         ev = _synthetic_events(spark)
         old = _l09_sliding_frame(ev).collect()
-
-        # Run the shipped internals over the synthetic frame by
-        # rebuilding the query's final projection on top of the
-        # prefix-sum z (identical expressions to the query body).
-        word = W.partitionBy("event_type").orderBy("ts", "event_id")
-        w1 = word.rowsBetween(W.unboundedPreceding, -1)
-        w101 = word.rowsBetween(W.unboundedPreceding, -101)
-        dv = F.col("value").cast("decimal(18,2)")
-        dv2 = dv * dv
-        zero2 = F.lit(0).cast("decimal(28,2)")
-        zero4 = F.lit(0).cast("decimal(38,4)")
-        scored = ev.select(
-            "event_id",
-            "event_type",
-            "value",
-            (F.sum(dv).over(w1) - F.coalesce(F.sum(dv).over(w101), zero2))
-            .cast("decimal(12,2)")
-            .alias("sumv"),
-            (F.sum(dv2).over(w1) - F.coalesce(F.sum(dv2).over(w101), zero4))
-            .cast("decimal(16,4)")
-            .alias("sumv2"),
-            (
-                F.count("value").over(w1) - F.count("value").over(w101)
-            ).alias("n_hist"),
-        )
-        sd = F.sqrt(
-            (F.lit(100) * F.col("sumv2") - F.col("sumv") * F.col("sumv"))
-            .cast("double")
-            / F.lit(9900.0)
-        )
-        mu = (F.col("sumv") / 100).cast("double")
-        new = (
-            scored.filter(F.col("n_hist") == 100)
-            .withColumn("z", (F.col("value") - mu) / sd)
-            .filter(F.abs("z") > 3)
-            .select(
-                "event_id",
-                "event_type",
-                F.round("value", 2).alias("value"),
-                F.round("z", 3).alias("z"),
-            )
-            .orderBy("event_id")
-            .collect()
-        )
+        new = Q._l09_anomalies(ev).collect()
         assert [tuple(r) for r in new] == [tuple(r) for r in old]
         assert len(new) > 10
 
@@ -426,3 +359,38 @@ class TestL09PrefixSumEquivalence:
                 scaled = abs(z) * 1000.0
                 frac = scaled - math.floor(scaled)
                 assert abs(frac - 0.5) > 1e-6, z
+
+
+class TestL09DecimalCeiling:
+    """The frame sums' DECIMAL types bound the magnitude l09 can score:
+    at (12,2)/(16,4) a 100-row Σv² overflowed once values reached
+    ~1e5 — NULL z with ANSI off (anomalies silently dropped), an
+    overflow error with ANSI on."""
+
+    @pytest.mark.parametrize("ansi", ["false", "true"])
+    def test_values_1e5_to_1e6_match_sliding_frame(self, spark, ansi):
+        # values ~1e5 (mass at 1.5e5 ± 2.25e4), outliers 4.5e5–7.2e5
+        ev = _synthetic_events(spark, scale=1500.0)
+        prev = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        try:
+            new = Q._l09_anomalies(ev).collect()
+            nulls = Q._l09_history_z(ev).filter(F.col("z").isNull()).count()
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", prev)
+        old = _l09_sliding_frame(ev).collect()
+        assert nulls == 0
+        assert [tuple(r) for r in new] == [tuple(r) for r in old]
+        assert len(new) > 10
+        assert max(r.value for r in new) > 4e5
+
+    @pytest.mark.parametrize(
+        "sf", [*SFS, os.path.join(os.path.dirname(SFS[0]), "sf0.1")]
+    )
+    def test_fixture_values_are_two_decimal(self, spark, sf):
+        """The exact-decimal form assumes 2-decimal money: the
+        decimal(18,2) cast of ``value`` must be lossless."""
+        ev = Q._t(spark, sf, "events")
+        bad = ev.filter(F.col("value") != F.round("value", 2)).count()
+        assert bad == 0
+        assert ev.filter(F.col("value").isNotNull()).count() > 0
