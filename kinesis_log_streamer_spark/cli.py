@@ -13,7 +13,9 @@ Same flags, same validation, same exit codes:
 * usage errors → exit 2 with usage on stderr (main.go:22-55)
 
 Data path: stdin → line/JSON records → transform/enrich → partition-key
-stamp → Kinesis sink (or ``--dry-run`` → records to stdout).
+stamp → Kinesis sink (or ``--dry-run`` → records to stdout).  JSON
+records are enriched and serialized by the stdin splitter itself
+(``json_source.render_record``), so Spark only stamps their key.
 """
 
 from __future__ import annotations
@@ -125,11 +127,35 @@ def resolve_output_format(fmt: str, output_format: str) -> str:
     return "json" if fmt == "json" else "string"
 
 
+def build_records(args, values, entries, output_format):
+    """Input rows (column ``value``) → sink records ``(data,
+    partitionKey)``, batch or streaming alike.
+
+    JSON values arrive sink-ready from the splitter (the ``-I`` merge
+    and serialization are done, ``json_source.render_record``), so they
+    only get the partition key; lines take the line pipeline."""
+    from kinesis_log_streamer_spark.streaming.pipeline import (
+        build_line_pipeline,
+        stamp_identity,
+    )
+
+    per_exec = args.host_identity == "per-executor"
+    probe = not args.dry_run
+    host_id = None if per_exec else get_host_id(probe_network=probe)
+    if args.format == "json":
+        return stamp_identity(values, host_id, per_exec, probe)
+    return build_line_pipeline(
+        values, output_format, args.output_key, entries, host_id,
+        per_executor_identity=per_exec, probe_network=probe,
+    )
+
+
 def run_streaming(args, entries, output_format, stream) -> int:
     """The CLI's streaming data path (C1 parity with the reference's
     never-EOF pipe deployment): chunked stdin → landing-dir spool →
-    ``readStream`` → line/JSON pipeline → sink, with bounded
-    per-trigger intake and idle-stop on EOF.
+    ``readStream`` → key stamp (JSON records land sink-ready; lines
+    take the line pipeline) → sink, with bounded per-trigger intake and
+    idle-stop on EOF.
 
     The full input is NEVER held in one string: the spooler carries at
     most one 64 KiB chunk plus one partial record
@@ -141,11 +167,7 @@ def run_streaming(args, entries, output_format, stream) -> int:
     import tempfile
 
     from kinesis_log_streamer_spark.session import get_spark
-    from kinesis_log_streamer_spark.streaming.pipeline import (
-        build_json_pipeline,
-        build_line_pipeline,
-        run_stream,
-    )
+    from kinesis_log_streamer_spark.streaming.pipeline import run_stream
     from kinesis_log_streamer_spark.streaming.stdin_spool import (
         StdinSpooler,
         drain_and_stop,
@@ -162,8 +184,6 @@ def run_streaming(args, entries, output_format, stream) -> int:
     spark.conf.set(_DISCOVERY_THRESHOLD, str(2**31 - 1))
     query = None
     try:
-        per_exec = args.host_identity == "per-executor"
-        host_id = None if per_exec else get_host_id(probe_network=not args.dry_run)
         # cleanSource=delete: processed spool files are removed on later
         # triggers, so a never-EOF pipe (the Apache CustomLog deployment)
         # keeps both the landing dir and the source's file listing
@@ -174,18 +194,8 @@ def run_streaming(args, entries, output_format, stream) -> int:
             .option("cleanSource", "delete")
             .load(landing)
         )
-        if args.format == "json":
-            # landing files are JSONL: one complete JSON value per line
-            records = build_json_pipeline(
-                raw, entries, host_id, per_executor_identity=per_exec,
-                probe_network=not args.dry_run,
-            )
-        else:
-            records = build_line_pipeline(
-                raw, output_format, args.output_key, entries, host_id,
-                per_executor_identity=per_exec,
-                probe_network=not args.dry_run,
-            )
+        # JSON landing files are JSONL: one sink-ready record per line
+        records = build_records(args, raw, entries, output_format)
 
         if args.dry_run:
 
@@ -207,7 +217,7 @@ def run_streaming(args, entries, output_format, stream) -> int:
                 delivery=args.delivery,
             )
 
-        spooler = StdinSpooler(stream, landing, fmt=args.format)
+        spooler = StdinSpooler(stream, landing, fmt=args.format, entries=entries)
         query = run_stream(
             records,
             sink,
@@ -243,36 +253,28 @@ def main(argv: Sequence[str] | None = None) -> int:
 
     from kinesis_log_streamer_spark.session import get_spark
     from kinesis_log_streamer_spark.sources.json_source import (
+        ConcatenatedJsonError,
         split_concatenated_json,
     )
     from kinesis_log_streamer_spark.sources.lines import lines_from_stdin
-    from kinesis_log_streamer_spark.streaming.pipeline import (
-        build_json_pipeline,
-        build_line_pipeline,
-    )
 
     if args.streaming:
         return run_streaming(args, entries, output_format, sys.stdin.buffer)
 
     spark = get_spark("kinesis-log-streamer-cli")
     stdin_data = sys.stdin.read()
-    per_exec = args.host_identity == "per-executor"
-    host_id = None if per_exec else get_host_id(probe_network=not args.dry_run)
-
     if args.format == "json":
-        values = split_concatenated_json(stdin_data, strict=True)
+        try:
+            values = split_concatenated_json(stdin_data, strict=True, entries=entries)
+        except ConcatenatedJsonError as exc:
+            # strict mode: stop at the first malformed value, exit 1
+            # (jsonstreamer.go:44-45, main.go:165-168)
+            print(f"stdin: {exc}", file=sys.stderr)
+            return 1
         df = spark.createDataFrame([(v,) for v in values], "value string")
-        records = build_json_pipeline(
-            df, entries, host_id, per_executor_identity=per_exec,
-            probe_network=not args.dry_run,
-        )
     else:
         df = lines_from_stdin(spark, stdin_data)
-        records = build_line_pipeline(
-            df, output_format, args.output_key, entries, host_id,
-            per_executor_identity=per_exec,
-            probe_network=not args.dry_run,
-        )
+    records = build_records(args, df, entries, output_format)
 
     if args.dry_run:
         for row in records.collect():

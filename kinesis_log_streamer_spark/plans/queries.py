@@ -57,7 +57,6 @@ from kinesis_log_streamer_spark.operators.asof import asof_join
 from kinesis_log_streamer_spark.operators.sessionize import sessionize
 from kinesis_log_streamer_spark.operators.topk import topk_per_group
 from kinesis_log_streamer_spark.operators.transforms import (
-    enrich_json_objects,
     stamp_partition_key,
     wrap_line_as_json,
 )
@@ -12460,9 +12459,10 @@ def l20_ingest_rollup_pipeline(
     streamer consumes them as a chunked byte stream with the
     concatenated-JSON carry (jsonstreamer.go:34-49 ≙
     ``StdinSpooler``), enriches each object with static entries under
-    entry-wins overwrite (--add-entry, jsonstreamer.go:49-56 /
-    main.go:102-122 ≙ ``transforms.enrich_json_objects`` — note the
-    entry map here is a FIXTURE choice exercising the --add-entry
+    entry-wins overwrite while splitting, as the CLI does
+    (--add-entry, jsonstreamer.go:49-56 / main.go:102-122 ≙
+    ``StdinSpooler(entries=...)`` → ``json_source.render_record`` — note
+    the entry map here is a FIXTURE choice exercising the --add-entry
     mechanism: httpd.conf:203's json CustomLog pipe carries no
     --add-entry flags, only the ErrorLog line at :182 does, and the
     LogFile/RequestHandler constants are gate-invented), and the
@@ -12473,9 +12473,9 @@ def l20_ingest_rollup_pipeline(
     The rollup keys include the enriched fields: ``log_file`` is a
     NEW key added by the entry map, ``handler`` is an EXISTING key
     the entry map OVERWRITES — both constants the DuckDB oracle
-    asserts, so a dropped/torn record anywhere in chunk→carry→land→
-    scan→enrich→parse breaks the hash, and so does broken overwrite
-    semantics.
+    asserts, so a dropped/torn record anywhere in chunk→carry→
+    enrich→land→scan→parse breaks the hash, and so does broken
+    overwrite semantics.
 
     Scale: the spool stage is the CLI driver's stdin tail (one pipe,
     O(chunk) memory); everything after the landing dir is an ordinary
@@ -12485,9 +12485,6 @@ def l20_ingest_rollup_pipeline(
     import os
     import tempfile
 
-    from kinesis_log_streamer_spark.operators.transforms import (
-        enrich_json_objects,
-    )
     from kinesis_log_streamer_spark.streaming.stdin_spool import StdinSpooler
 
     _sweep_stale_tmp("klss_l20_")
@@ -12500,16 +12497,14 @@ def l20_ingest_rollup_pipeline(
     LA.access_records_from_events(ev).write.text(src)
 
     StdinSpooler(
-        _PartFilesStream(src), landing, fmt="json", chunk_bytes=4096
+        _PartFilesStream(src),
+        landing,
+        fmt="json",
+        chunk_bytes=4096,
+        entries={"LogFile": "HTTPAccessLog", "RequestHandler": "piped"},
     ).run()
 
-    raw = spark.read.text(landing)
-    enriched = enrich_json_objects(
-        raw,
-        "value",
-        {"LogFile": "HTTPAccessLog", "RequestHandler": "piped"},
-    )
-    parsed = LA.parse_access_logs(enriched, value_col="data")
+    parsed = LA.parse_access_logs(spark.read.text(landing))
     # LogFile is outside APACHE_ACCESS_SCHEMA (it only exists because
     # the entry map added it); read it from the raw record the parser
     # carries alongside the typed struct.

@@ -68,6 +68,18 @@ def chunk_records(
         yield batch
 
 
+def record_pair(data, key: str) -> tuple[bytes, str]:
+    """One sink row as a PutRecords ``(Data, PartitionKey)`` pair.
+
+    NULL ``data`` raises: ``str(None)`` would ship the 4-byte record
+    ``None`` in place of a record that no longer exists."""
+    if data is None:
+        raise ValueError(f"record with NULL data (partitionKey={key!r})")
+    if isinstance(data, (bytes, bytearray)):
+        return data, key
+    return str(data).encode(), key
+
+
 def put_records_with_retry(
     client,
     stream_name: str,
@@ -242,13 +254,7 @@ class KinesisSink:
 
         def write_partition(rows) -> None:
             client = factory()
-            pairs = (
-                (
-                    r["data"] if isinstance(r["data"], (bytes, bytearray)) else str(r["data"]).encode(),
-                    r["partitionKey"],
-                )
-                for r in rows
-            )
+            pairs = (record_pair(r["data"], r["partitionKey"]) for r in rows)
             for batch in chunk_records(pairs):
                 if at_most_once:
                     accepted.add(
@@ -285,13 +291,7 @@ class CollectingSink:
 
     def write_batch(self, df: DataFrame, epoch_id: int) -> None:
         rows = df.select("data", "partitionKey").collect()
-        pairs = [
-            (
-                r["data"] if isinstance(r["data"], (bytes, bytearray)) else str(r["data"]).encode(),
-                r["partitionKey"],
-            )
-            for r in rows
-        ]
+        pairs = [record_pair(r["data"], r["partitionKey"]) for r in rows]
         self.batches.extend(chunk_records(pairs, max_records=self.max_records))
 
     @property

@@ -6,6 +6,13 @@ Entry points reproduced (SURVEY.md §3):
 2. JSON mode with enrichment        (jsonstreamer.go:34-81, T3+T4)
 3. line → JSON wrap with entries    (linestreamer.go:92-99, T2+T4)
 
+The CLI's JSON records land sink-ready: its splitters (batch
+``split_concatenated_json``, streaming ``StdinSpooler``) apply T3+T4
+while decoding, as the reference does (jsonstreamer.go:42-62), so the
+CLI's Spark stage for entry point 2 is :func:`stamp_identity` alone.
+:func:`build_json_pipeline` is the Spark-side form of the same merge,
+for values that arrive unenriched.
+
 Streaming semantics mapping:
 * flush-on-idle / EOF drain (B1) → ``Trigger.AvailableNow`` drains all
   pending input then stops; ``processingTime`` triggers approximate
@@ -65,9 +72,21 @@ def build_line_pipeline(
         projected = wrap_line_as_json(clean, "value", output_key, entries)
     else:
         projected = line_passthrough(clean)
+    return stamp_identity(projected, host_id, per_executor_identity, probe_network)
+
+
+def stamp_identity(
+    records: DataFrame,
+    host_id: str | None = None,
+    per_executor_identity: bool = False,
+    probe_network: bool = False,
+) -> DataFrame:
+    """E1: records (``data`` or the first column) → sink records
+    ``(data, partitionKey)``; ``host_id`` or the driver's identity as a
+    constant, or each executor's own with ``per_executor_identity``."""
     if per_executor_identity:
-        return stamp_partition_key_per_executor(projected, probe_network)
-    return to_sink_records(projected, host_id or get_host_id())
+        return stamp_partition_key_per_executor(records, probe_network)
+    return to_sink_records(records, host_id or get_host_id())
 
 
 def build_json_pipeline(
@@ -85,9 +104,7 @@ def build_json_pipeline(
         values["value"] != "null"
     )
     projected = enrich_json_objects(nonnull, "value", entries)
-    if per_executor_identity:
-        return stamp_partition_key_per_executor(projected, probe_network)
-    return to_sink_records(projected, host_id or get_host_id())
+    return stamp_identity(projected, host_id, per_executor_identity, probe_network)
 
 
 def run_stream(

@@ -14,12 +14,15 @@ This module is the Spark-native equivalent of that loop: a spooler
 thread reads stdin chunk-by-chunk, extracts COMPLETE records (lines,
 or concatenated-JSON values via incremental ``raw_decode``), and
 lands each chunk's records as one atomically-renamed file in a
-landing directory.  `spark.readStream.format("text")` tails the
-directory; a byte budget per micro-batch (``maxBytesPerTrigger``)
-is the bounded-channel backpressure, the micro-batch trigger cadence
-is the flush-on-idle timer, and EOF is observed as "spooler finished
-AND the query has drained every landed file" (see
-:func:`drain_and_stop`).
+landing directory.  JSON values given the CLI's ``-I`` entry map land
+sink-ready — merged and serialized once by
+``json_source.render_record``, as the reference does per value
+(jsonstreamer.go:42-62) — so the query only stamps the partition key.
+`spark.readStream.format("text")` tails the directory; a byte budget
+per micro-batch (``maxBytesPerTrigger``) is the bounded-channel
+backpressure, the micro-batch trigger cadence is the flush-on-idle
+timer, and EOF is observed as "spooler finished AND the query has
+drained every landed file" (see :func:`drain_and_stop`).
 
 Memory bound: one chunk + one partial record — never the full input.
 """
@@ -32,6 +35,12 @@ import os
 import threading
 import time
 import uuid
+from collections.abc import Mapping
+
+from kinesis_log_streamer_spark.sources.json_source import (
+    ConcatenatedJsonError,
+    render_record,
+)
 
 CHUNK_BYTES = 65536  # the reference's read size, linestreamer.go:34
 
@@ -45,8 +54,11 @@ class StdinSpooler:
     ``fmt='json'``  → records are concatenated JSON values
     (jsonstreamer.go:34-49): an incremental ``raw_decode`` peels
     complete values off the carry buffer; each is landed as one line
-    of compact JSON, so the landing files are JSONL regardless of how
-    values were whitespace-separated on the wire.
+    of ``json_source.render_record(value, entries)``, so the landing
+    files are JSONL regardless of how values were whitespace-separated
+    on the wire.  With the CLI's ``-I`` map as ``entries`` (possibly
+    empty) each line is the sink-ready record; ``entries=None`` lands
+    plain compact JSON for a later enrichment stage.
 
     Files are written to ``<dir>/.tmp-*`` then ``os.rename``d into
     place: the file streaming source lists only completed files, so a
@@ -61,6 +73,7 @@ class StdinSpooler:
         landing_dir: str,
         fmt: str = "line",
         chunk_bytes: int = CHUNK_BYTES,
+        entries: Mapping[str, str] | None = None,
     ) -> None:
         if fmt not in ("line", "json"):
             raise ValueError(f"fmt must be line|json, got {fmt!r}")
@@ -68,6 +81,7 @@ class StdinSpooler:
         self._dir = landing_dir
         self._fmt = fmt
         self._chunk = chunk_bytes
+        self._entries = entries
         self._seq = 0
         self._carry = ""
         self._decoder = json.JSONDecoder()
@@ -112,7 +126,11 @@ class StdinSpooler:
         ``raw_decode`` matches the longest valid prefix, so "0.0"
         split at "0."|"0" yields ``raw_decode("0.") == (0, 1)`` — one
         char short of the buffer end — and consuming that prefix
-        would strand ".0" as garbage (hypothesis-found, round 6)."""
+        would strand ".0" as garbage (hypothesis-found, round 6).
+
+        A value :func:`render_record` rejects (a non-finite number)
+        raises at once, after the values before it have landed — the
+        stop-at-first-bad-value rule of the batch splitter."""
         out: list[str] = []
         number_cont = ".eE+-0123456789"
         buf = self._carry.lstrip()
@@ -128,7 +146,15 @@ class StdinSpooler:
                 and (end == len(buf) or buf[end] in number_cont)
             ):
                 break  # possibly-unterminated trailing number
-            out.append(json.dumps(value, separators=(",", ":")))
+            try:
+                record = render_record(value, self._entries)
+            except ValueError as exc:
+                self._land(out)
+                raise ConcatenatedJsonError(
+                    f"JSON value rejected: {exc}: {buf[:80]!r}"
+                ) from exc
+            if record is not None:  # a top-level null (F2)
+                out.append(record)
             buf = buf[end:].lstrip()
         self._carry = buf
         return out

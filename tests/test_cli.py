@@ -99,3 +99,86 @@ class TestHostId:
         from kinesis_log_streamer_spark.hostid import get_host_id
 
         assert get_host_id() == get_host_id()
+
+
+class TestJsonRecordsBatchAndStreaming:
+    """``-f json`` records land sink-ready from the splitter in both CLI
+    paths; Spark only stamps the key."""
+
+    INPUT = (
+        '{"host":"web-1","LogFile":"orig","Status":200,'
+        '"req":{"path":"/caf\\u00e9","method":"GET","q":{"z":1,"a":[1.0,2.5]}},'
+        '"ms":12.0,"ratio":0.25,"zero":-0.0,"user":"Zo\\u00eb \\u5317\\u4eac"}'
+        ' 42 ["b",{"y":1,"x":2},1.0] null "na\\u00efve"\n'
+        '{"n":-7,"note":"tab\\there"}'
+    )
+    ARGV = [
+        "-f", "json", "-I", "LogFile=HTTPAccessLog", "-I", "Region=eu-west-1",
+        "--dry-run", "Test",
+    ]
+    # The records the CLI sent before the merge moved into the splitter
+    # (Spark's to_json over map<string,variant>), captured once.
+    EXPECTED = [
+        '{"host":"web-1","LogFile":"HTTPAccessLog","Status":200,'
+        '"req":{"method":"GET","path":"/café","q":{"a":[1,2.5],"z":1}},'
+        '"ms":12,"ratio":0.25,"zero":0,"user":"Zoë 北京",'
+        '"Region":"eu-west-1"}',
+        "42",
+        '["b",{"y":1,"x":2},1.0]',
+        '"na\\u00efve"',
+        '{"n":-7,"note":"tab\\there","LogFile":"HTTPAccessLog","Region":"eu-west-1"}',
+    ]
+
+    def _streaming_args(self):
+        return cli.build_parser().parse_args(["--streaming", *self.ARGV])
+
+    def test_batch_and_streaming_print_the_same_records(
+        self, spark, monkeypatch, capsys
+    ):
+        monkeypatch.setattr("sys.stdin", io.StringIO(self.INPUT))
+        assert cli.main(self.ARGV) == 0
+        batch = capsys.readouterr().out.splitlines()
+        args = self._streaming_args()
+        entries = cli.parse_entries(args.add_entry, cli.build_parser())
+        stream = io.BytesIO(self.INPUT.encode())
+        assert cli.run_streaming(args, entries, "json", stream) == 0
+        streaming = capsys.readouterr().out.splitlines()
+        assert batch == streaming
+        pairs = [line.split("\t", 1) for line in batch]
+        assert len({key for key, _ in pairs}) == 1
+        assert [data for _, data in pairs] == self.EXPECTED
+
+    def test_non_finite_number_exits_1_in_both_paths(
+        self, spark, monkeypatch, capsys
+    ):
+        text = '{"ok":1} {"n":NaN}'
+        monkeypatch.setattr("sys.stdin", io.StringIO(text))
+        assert cli.main(self.ARGV) == 1
+        args = self._streaming_args()
+        assert cli.run_streaming(args, {}, "json", io.BytesIO(text.encode())) == 1
+        assert '"NaN"' not in capsys.readouterr().out
+
+    def test_records_plan_no_json_parse_or_serialize(self, spark, monkeypatch):
+        from kinesis_log_streamer_spark.streaming import pipeline
+
+        captured = []
+        run_stream = pipeline.run_stream
+
+        def capture(records, *a, **kw):
+            captured.append(records)
+            return run_stream(records, *a, **kw)
+
+        monkeypatch.setattr(pipeline, "run_stream", capture)
+        args = self._streaming_args()
+        assert cli.run_streaming(args, {"k": "v"}, "json", io.BytesIO(b'{"a":1}')) == 0
+        batch = cli.build_records(
+            cli.build_parser().parse_args(self.ARGV),
+            spark.createDataFrame([('{"a":1}',)], "value string"),
+            {"k": "v"},
+            "json",
+        )
+        for records in (captured[0], batch):
+            plan = records._jdf.queryExecution().analyzed().toString()
+            assert "partitionKey" in plan
+            for name in ("JsonToStructs", "StructsToJson", "from_json", "to_json"):
+                assert name not in plan, name

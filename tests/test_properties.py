@@ -194,6 +194,47 @@ class TestEnrichmentProperty:
             want.update(entries)
             assert json.loads(out) == self._canon(want)
 
+    # the generator above plus floats (integral ones print as ints on
+    # both sides) and any non-surrogate text
+    mixed = st.dictionaries(
+        st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=6),
+        st.recursive(
+            st.booleans()
+            | st.none()
+            | st.integers(min_value=-(2**70), max_value=2**70)
+            | st.floats(allow_nan=False, allow_infinity=False)
+            | st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=10),
+            lambda c: st.lists(c, max_size=3)
+            | st.dictionaries(st.text(max_size=4), c, max_size=3),
+            max_leaves=6,
+        ),
+        max_size=5,
+    )
+
+    @given(st.lists(objs | mixed, min_size=1, max_size=30))
+    @settings(
+        max_examples=5,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    def test_renderer_matches_spark_operator(self, spark, objects):
+        """The CLI's splitter-side merge (``render_record``) and the
+        Spark operator give json.loads-equal records for every object."""
+        from kinesis_log_streamer_spark.operators.transforms import (
+            enrich_json_objects,
+        )
+        from kinesis_log_streamer_spark.sources.json_source import (
+            render_record,
+        )
+
+        entries = {"source": "engine", "ключ": "значение"}
+        df = spark.createDataFrame(
+            [(json.dumps(o),) for o in objects], "value string"
+        )
+        got = [r.data for r in enrich_json_objects(df, entries=entries).collect()]
+        for raw, out in zip(objects, got):
+            assert json.loads(render_record(raw, entries)) == json.loads(out)
+
 
 def _chunked(raw: bytes, cuts: list[int]):
     """Split raw bytes at the (sorted, deduped) cut offsets."""

@@ -10,6 +10,7 @@ import pytest
 from kinesis_log_streamer_spark.sources.json_source import (
     ConcatenatedJsonError,
     read_concatenated_json,
+    render_record,
     split_concatenated_json,
 )
 from kinesis_log_streamer_spark.sources.lines import lines_from_stdin, read_lines
@@ -42,6 +43,93 @@ class TestSplitConcatenatedJson:
 
     def test_empty_input(self):
         assert split_concatenated_json("  \n ") == []
+
+
+class TestRenderRecord:
+    """``render_record`` with an entry map: the sink-ready record the
+    CLI sends (T3+T4, jsonstreamer.go:49-62), byte for byte what the
+    Spark ``to_json(map<string,variant>)`` merge produced before."""
+
+    ENTRIES = {"LogFile": "HTTPAccessLog", "Region": "eu-west-1"}
+
+    def test_merge_appends_new_keys_and_keeps_slots(self):
+        value = {"a": 1, "LogFile": "orig", "b": "x"}
+        assert render_record(value, self.ENTRIES) == (
+            '{"a":1,"LogFile":"HTTPAccessLog","b":"x","Region":"eu-west-1"}'
+        )
+        assert value["LogFile"] == "orig"  # the caller's value is untouched
+
+    def test_null_is_no_record_only_when_rendering(self):
+        assert render_record(None, {}) is None
+        assert render_record(None) == "null"  # raw landing form
+
+    def test_values_that_are_not_objects_keep_their_landed_form(self):
+        for value in (42, "na\u00efve", ["b", {"y": 1, "x": 2}, 1.0], True):
+            assert render_record(value, self.ENTRIES) == json.dumps(
+                value, separators=(",", ":")
+            )
+
+    def test_nested_objects_sort_keys_in_utf16_order(self):
+        # U+1F600 is a surrogate pair (D83D ...) and sorts before U+FFFF
+        value = {"z": {"b": 1, "a": {"\uffff": 1, "\U0001f600": 2}}, "y": 0}
+        assert render_record(value, {}) == (
+            '{"z":{"a":{"\U0001f600":2,"\uffff":1},"b":1},"y":0}'
+        )
+
+    def test_numbers_print_as_the_variant_round_trip_did(self):
+        value = {
+            "i": 100.0, "z": -0.0, "f": 2.5, "g": 1234567890123456.0,
+            "d38": 10**38 - 1, "d39": 10**38, "tiny": 1e-05, "huge": 1e16,
+        }
+        out = render_record(value, {})
+        assert out.startswith(
+            '{"i":100,"z":0,"f":2.5,"g":1234567890123456,'
+            '"d38":99999999999999999999999999999999999999,'
+        )
+        # exponent-form floats: the text differs from the JVM's
+        # (1.0E-5), the value does not
+        tail = json.loads(out)
+        assert tail["d39"] == 1e38 and isinstance(tail["d39"], float)
+        assert tail["tiny"] == 1e-05 and tail["huge"] == 1e16
+
+    def test_strings_raw_utf8_with_upper_hex_control_escapes(self):
+        value = {"s": "caf\u00e9 \u5317 \x1f \\u001f \t\n\"", "\x01k": 1}
+        assert render_record(value, {}) == (
+            '{"s":"caf\u00e9 \u5317 \\u001F \\\\u001f \\t\\n\\"","\\u0001k":1}'
+        )
+
+    @pytest.mark.parametrize(
+        "text",
+        ['{"s":"\\ud800x"}', '{"\\udc00":1}', '{"n":{"s":["\\udbff"]}}'],
+    )
+    def test_lone_surrogate_renders_as_replacement_char(self, text):
+        # Go's decoder turns an unpaired surrogate escape into U+FFFD;
+        # the JVM round trip used to send "?"
+        (out,) = split_concatenated_json(text, entries={})
+        assert "\ufffd" in out and "?" not in out
+        out.encode("utf-8")  # writable as UTF-8 (the spool's landing file)
+
+    @pytest.mark.parametrize(
+        "text",
+        [
+            '{"n":NaN}',
+            '{"n":Infinity}',
+            '{"n":[-Infinity]}',
+            '{"n":1e400}',
+            "NaN",
+            "[1e400]",
+        ],
+    )
+    @pytest.mark.parametrize("entries", [None, {"Tag": "T"}])
+    def test_non_finite_numbers_are_malformed(self, text, entries):
+        # RFC 8259 has no NaN/Infinity; the JVM round trip used to send
+        # {"n":"NaN"}, a number turned into a string
+        with pytest.raises(ConcatenatedJsonError):
+            split_concatenated_json('{"ok":1} ' + text, entries=entries)
+        got = split_concatenated_json(
+            '{"ok":1} ' + text, strict=False, entries=entries
+        )
+        assert len(got) == 1  # permissive: prior records kept
 
 
 class TestFileSources:

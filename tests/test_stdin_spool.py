@@ -90,6 +90,39 @@ class TestSpooler:
         with pytest.raises(ValueError, match="trailing non-JSON"):
             sp.run()
 
+    def test_json_entries_land_sink_ready_records(self, tmp_path):
+        raw = b'{"a": 1.0, "LogFile": "x", "s": "\\ud800"} null [2] {"b": {"d": 1, "c": 2}}'
+        pieces = [raw[i : i + 5] for i in range(0, len(raw), 5)]
+        sp = StdinSpooler(
+            ChunkedStream(pieces), str(tmp_path), fmt="json",
+            entries={"LogFile": "L", "Tag": "T"},
+        )
+        assert sp.run() == 3  # the top-level null is no record
+        out = []
+        for f in sorted(os.listdir(tmp_path)):
+            out += (tmp_path / f).read_text(encoding="utf-8").splitlines()
+        assert out == [
+            '{"a":1,"LogFile":"L","s":"\ufffd","Tag":"T"}',
+            "[2]",
+            '{"b":{"c":2,"d":1},"LogFile":"L","Tag":"T"}',
+        ]
+
+    def test_json_non_finite_number_raises_after_prior_records(self, tmp_path):
+        sp = StdinSpooler(
+            ChunkedStream([b'{"a": 1} {"n": NaN} {"b": 2}']),
+            str(tmp_path),
+            fmt="json",
+            entries={},
+        )
+        with pytest.raises(ValueError, match="Out of range float"):
+            sp.run()
+        landed = [
+            line
+            for f in sorted(os.listdir(tmp_path))
+            for line in (tmp_path / f).read_text().splitlines()
+        ]
+        assert landed == ['{"a":1}']
+
     def test_memory_bound_never_slurps(self, tmp_path):
         # 300 KiB through a 4 KiB window: any read() wider than the
         # window raises inside ChunkedStream
@@ -350,6 +383,17 @@ def test_spooler_crash_sets_done_and_error(tmp_path):
     t.join(timeout=10)
     assert sp.done.is_set()
     assert isinstance(sp.error, ValueError)
+
+
+def test_cli_streaming_json_non_finite_exits_1(spark, capsys):
+    from kinesis_log_streamer_spark import cli
+
+    args = cli.build_parser().parse_args(
+        ["--streaming", "--dry-run", "-f", "json", "Stream"]
+    )
+    stream = ChunkedStream([b'{"ok": 1} {"n": 1e400}'])
+    assert cli.run_streaming(args, {}, "json", stream) == 1
+    assert '"n":"Infinity"' not in capsys.readouterr().out
 
 
 def test_cli_streaming_json_garbage_exits_1(spark, capsys):

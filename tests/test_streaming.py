@@ -48,6 +48,33 @@ class TestChunking:
             list(chunk_records(rows))
 
 
+class TestNullData:
+    """A NULL ``data`` column must fail loudly, not ship ``b"None"``."""
+
+    def test_collecting_sink_rejects_null_data(self, spark):
+        df = spark.createDataFrame(
+            [("ok", "k1"), (None, "host-7")], "data string, partitionKey string"
+        )
+        with pytest.raises(ValueError, match="NULL data.*host-7"):
+            CollectingSink().write_batch(df, epoch_id=0)
+
+    def test_kinesis_sink_rejects_null_data(self, spark, tmp_path):
+        from kinesis_log_streamer_spark.sources.kinesis_source import (
+            DirKinesisClient,
+        )
+        from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
+
+        ep = str(tmp_path / "sink")
+        df = spark.createDataFrame(
+            [(None, "host-7")], "data string, partitionKey string"
+        )
+        sink = KinesisSink("Test", client_factory=lambda: DirKinesisClient(ep))
+        with pytest.raises(Exception, match="NULL data.*host-7"):
+            sink.write_batch(df, epoch_id=0)
+        shipped = [p.read_bytes() for p in tmp_path.rglob("*") if p.is_file()]
+        assert not any(b"None" in data for data in shipped)
+
+
 class _AlwaysFailingClient:
     """put_records stub that fails the last record of every call."""
 
