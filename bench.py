@@ -350,30 +350,15 @@ def _wait_for_quiet_host() -> float:
 
 def _reset_warm_state(spark) -> None:
     """Reset per-process warm state between suite passes so every pass
-    is statistically identical (ADVICE r8 low #2: the degraded-retry
-    loop recorded attempt-2 — memoized d02/d03 cohort, warmed caches —
-    as the round's clean number, letting _vs_prev read warmth as a
-    plan-level speedup vs a cold attempt-1 row from a prior round).
-    Codegen/JIT warmth can't be reset without a new JVM; the per-query
-    cold-first-sample drop handles that class."""
-    from kinesis_log_streamer_spark.operators import similarity as _S
-    from kinesis_log_streamer_spark.plans import queries as _Q
-    from kinesis_log_streamer_spark.sources import tables as _T
+    pays the same cold first sample and cross-pass medians stay
+    identically distributed: drop Spark's cached data and the session
+    cache (loaded tables, LSH planes, prepared indexes, staged
+    fixtures).  Codegen/JIT warmth can't be reset without a new JVM;
+    the per-query cold-first-sample drop handles that class."""
+    from kinesis_log_streamer_spark.session import CACHE
 
     spark.catalog.clearCache()
-    _Q._COHORT_TRUTH_MEMO.clear()
-    # Round-10 memos (VERDICT r9 #2): loaded-table plans, LSH plane
-    # matrices, the s05 prepared IVF index.  Cleared per pass for the
-    # same reason as the cohort memo — every pass must pay the same
-    # cold first sample so cross-pass medians stay identically
-    # distributed (the per-query median already absorbs the miss:
-    # sample 1 warms the memo, samples 2+ hit it).
-    _T.clear_table_memo()
-    _S.clear_planes_memo()
-    _Q._IVF_PREP_MEMO.clear()
-    _Q._SIMHASH_FP_MEMO.clear()
-    _Q._ACCESS_MEMO.clear()
-    _Q._EVFLUSH_MEMO.clear()
+    CACHE.clear()
 
 
 def _measure_suite(spark, sf_dir: str) -> dict:

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from kinesis_log_streamer_spark.functions.vector import cosine_sim, dot, l2_norm
+from kinesis_log_streamer_spark.session import CACHE
 
 
 def cosine_topk(
@@ -79,35 +80,22 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((bits, dim)).tolist()
 
 
-# The plane matrix is a pure function of (dim, bits, seed) — the same
-# 64×(bits+1) local relation was re-built (Python→JVM conversion +
-# analysis) on every lsh_sig_bits call, a fixed ~100 ms driver-side
-# term per s03/s04/s05/s17 sample (VERDICT r9 #2: per-call plan
-# construction dominated the s-family's driver-visible cost).  Keyed
-# by applicationId so a new session rebuilds against its own JVM.
-_PLANES_MEMO: dict = {}
-
-
-def clear_planes_memo() -> None:
-    """Drop memoized plane matrices (bench per-pass reset)."""
-    _PLANES_MEMO.clear()
-
-
 def _planes_df(spark, dim: int, bits: int, seed: int):
-    key = (spark.sparkContext.applicationId, dim, bits, seed)
-    hit = _PLANES_MEMO.get(key)
-    if hit is not None:
-        return hit
-    planes = _hyperplanes(dim, bits, seed)  # bits × dim
-    plane_rows = [
-        (pos, *[float(planes[i][pos]) for i in range(bits)])
-        for pos in range(dim)
-    ]
-    df = spark.createDataFrame(
-        plane_rows, ["pos", *[f"w{i}" for i in range(bits)]]
-    )
-    _PLANES_MEMO[key] = df
-    return df
+    """The ``dim`` x (pos, w0..w{bits-1}) plane relation, built once per
+    session: re-building it (Python→JVM conversion plus analysis) cost
+    ~100 ms of driver time per lsh_sig_bits call."""
+
+    def build():
+        planes = _hyperplanes(dim, bits, seed)  # bits × dim
+        plane_rows = [
+            (pos, *[float(planes[i][pos]) for i in range(bits)])
+            for pos in range(dim)
+        ]
+        return spark.createDataFrame(
+            plane_rows, ["pos", *[f"w{i}" for i in range(bits)]]
+        )
+
+    return CACHE.get(spark, ("lsh_planes", dim, bits, seed), build)
 
 
 def lsh_sig_bits(

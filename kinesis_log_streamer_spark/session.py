@@ -55,3 +55,47 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+class SessionCache:
+    """Get-or-build cache for plans and artifacts derived from input files.
+
+    Entries are keyed by ``(applicationId, key)``, so a new SparkContext
+    never sees DataFrames bound to a dead JVM; inserting for one
+    application drops every other application's entries (PySpark allows
+    one SparkContext per process).  Each entry records ``(realpath,
+    mtime_ns)`` of the source paths it was built from and is rebuilt
+    when any of them changes, so no entry outlives its files.
+    """
+
+    def __init__(self) -> None:
+        self._entries: dict = {}
+
+    def get(self, spark: SparkSession, key, build, paths=()):
+        """Return ``build()`` for ``key``, built at most once per session
+        and source-file version."""
+        app = spark.sparkContext.applicationId
+        stamp = tuple(_file_stamp(p) for p in paths)
+        hit = self._entries.get((app, key))
+        if hit is not None and hit[0] == stamp:
+            return hit[1]
+        value = build()
+        for k in list(self._entries):
+            if k[0] != app:
+                self._entries.pop(k, None)
+        self._entries[(app, key)] = (stamp, value)
+        return value
+
+    def clear(self) -> None:
+        self._entries.clear()
+
+
+def _file_stamp(path: str) -> tuple:
+    real = os.path.realpath(path)
+    try:
+        return real, os.stat(real).st_mtime_ns
+    except FileNotFoundError:
+        return real, None
+
+
+CACHE = SessionCache()

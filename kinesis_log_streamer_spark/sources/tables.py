@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kinesis_log_streamer_spark.session import CACHE
+
 TABLES = (
     "region",
     "nation",
@@ -32,38 +34,34 @@ TABLES = (
 BROADCAST_SAFE = ("region", "nation")
 
 
-# Per-process memo of loaded tables, keyed (session, dir, table).
-# Resolving a parquet relation costs ~90 ms of single-threaded driver
-# time (footer read + schema merge + the NTZ sweep below) on EVERY
-# call, and the registry's 310 queries each load 1-3 tables — across a
-# bench pass that fixed cost was the single largest per-sample term
-# for the small-plan families (VERDICT r9 #2: the s-family's driver-
-# visible cost was dominated by per-call plan construction, not
-# execution).  DataFrames are immutable plans over immutable driver-
-# generated fixtures, so reuse is safe; ``clear_table_memo()`` exists
-# for callers that rewrite a path mid-process (none in-repo do) and
-# for the bench's per-pass warm-state reset.
-_TABLE_MEMO: dict = {}
-
-
-def clear_table_memo() -> None:
-    """Drop all memoized table DataFrames (bench per-pass reset)."""
-    _TABLE_MEMO.clear()
+def table_path(sf_dir: str, name: str) -> str:
+    """Path of catalog table ``name`` under ``sf_dir``."""
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one catalog table from ``sf_dir`` (memoized per session).
+    """Load one catalog table from ``sf_dir``.
+
+    Resolving a parquet relation costs ~90 ms of driver time (footer
+    read, schema merge, the NTZ sweep below), and most queries load 1-3
+    tables, so the DataFrame is kept in the session cache until the
+    session ends or the table's file changes.
 
     ``events.parquet`` carries TIMESTAMP(NANOS) which Spark's vectorized
     parquet reader rejects; we read nanos as long and truncate to
     microseconds (same truncation DuckDB applies), keeping a proper
     TimestampType ``ts`` column for every consumer.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (spark.sparkContext.applicationId, os.path.realpath(path))
-    hit = _TABLE_MEMO.get(key)
-    if hit is not None:
-        return hit
+    path = table_path(sf_dir, name)
+    return CACHE.get(
+        spark,
+        ("table", os.path.realpath(path)),
+        lambda: _read_table(spark, path, name),
+        (path,),
+    )
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     # Pin the session timezone so timestamp results are oracle-comparable
     # even when the caller's session (e.g. the driver's) didn't set it.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -81,11 +79,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
             )
-        df = _ntz_to_ltz(df)
-    else:
-        df = _ntz_to_ltz(spark.read.parquet(path))
-    _TABLE_MEMO[key] = df
-    return df
+        return _ntz_to_ltz(df)
+    return _ntz_to_ltz(spark.read.parquet(path))
 
 
 def _ntz_to_ltz(df: DataFrame) -> DataFrame:

@@ -1,13 +1,14 @@
 #!/usr/bin/env python
-"""Round-15 optimization profiler (guide §1): for each named query,
+"""Analytics query profiler: for each named query,
 
 * time plan construction (driver-side Python+Catalyst cost),
-* time N noop-sink executions (computation only, guide §1.4),
-* time N bench-methodology collects (what BENCH times),
-* write ``df.explain('formatted')`` to plans/r15/<name>_<tag>.txt.
+* time N noop-sink executions (computation only),
+* time N bench-methodology collects (what bench.py times),
+* with ``--tag``, write ``df.explain('formatted')`` to
+  <plans-dir>/<name>_<tag>.txt.
 
-Usage: python scripts/profile_r15.py [--tag before|after] [--runs N]
-       [--sf sf_dir] query [query ...]
+Usage: python scripts/profile_queries.py [--tag before|after] [--plans-dir DIR]
+       [--runs N] [--sf sf_dir] query [query ...]
 Prints one JSON line per query so runs are easy to diff.
 """
 
@@ -30,7 +31,9 @@ from kinesis_log_streamer_spark.session import get_spark  # noqa: E402
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--tag", default=None, help="write plans/r15/<q>_<tag>.txt")
+    ap.add_argument("--tag", default=None, help="write <plans-dir>/<q>_<tag>.txt")
+    ap.add_argument("--plans-dir", default=os.path.join(_REPO, "plans"),
+                    help="output directory for --tag plans")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -39,14 +42,14 @@ def main() -> int:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    spark = get_spark("profile_r15")
+    spark = get_spark("profile")
     # Warm-up: same as bench.py so first-sample JIT/page-cache cost is
     # excluded from every profile row.
     Q.q01_pricing_summary(spark, args.sf).collect()
     Q.s01_cosine_topk(spark, args.sf).collect()
 
-    plans_dir = os.path.join(_REPO, "plans", "r15")
-    os.makedirs(plans_dir, exist_ok=True)
+    if args.tag:
+        os.makedirs(args.plans_dir, exist_ok=True)
 
     for name in args.queries:
         fn = Q.REGISTRY[name]
@@ -60,7 +63,7 @@ def main() -> int:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"),
+            with open(os.path.join(args.plans_dir, f"{name}_{args.tag}.txt"),
                       "w") as fh:
                 fh.write(buf.getvalue())
 

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Full-registry DuckDB-oracle sweep in driver-window-sized chunks.
 #
-# The 325-query registry exceeds one command window at sf0.1, so the
+# The 336-query registry exceeds one command window at sf0.1, so the
 # sweep runs scripts/selfcheck.py over ~65-name slices in REGISTRY
 # order (slice 1 therefore covers the entire 50-name driver window).
 #

@@ -97,3 +97,44 @@ class TestBareSessionContract:
         # query now carries an oracle entry.
         rows_only = sorted(set(qs) - set(os_))
         assert rows_only == [], rows_only
+
+
+class TestRegistryOrder:
+    """The driver verifies only the first 50 registry entries; the
+    registry is one family-ordered literal with ``_FRONT`` in front."""
+
+    # Queries whose code changed after their latest driver verdict.
+    CHANGED = (
+        "l09_rolling_anomaly", "t22_ngram_novelty", "d02_minhash_pairs",
+        "s08_pq_topk", "t27_bm25_topk", "s21_ivf_maxsim_rerank",
+        "s09_kmeans", "i05_concat_json_decode", "i07_stdin_spool_pipeline",
+        "i08_live_spool_stream", "l20_ingest_rollup_pipeline",
+        "l21_errorlog_pipeline",
+    )
+
+    def test_front_leads_the_registry(self):
+        from kinesis_log_streamer_spark.plans import queries as Q
+
+        assert list(Q.REGISTRY)[:50] == Q._FRONT
+
+    def test_front_is_50_unique_registered_names(self):
+        from kinesis_log_streamer_spark.plans import queries as Q
+
+        assert len(Q._FRONT) == len(set(Q._FRONT)) == 50
+        assert set(Q._FRONT) <= set(Q._BY_FAMILY)
+        assert len(Q.REGISTRY) == len(Q._BY_FAMILY) == 336
+
+    def test_front_holds_the_changed_queries(self):
+        from kinesis_log_streamer_spark.plans import queries as Q
+
+        assert set(self.CHANGED) <= set(Q._FRONT)
+
+    def test_entry_queries_bind_registry_functions(self):
+        sys.path.insert(0, REPO)
+        import __spark_entry__ as entry
+        from kinesis_log_streamer_spark.plans import queries as Q
+
+        qs = entry.queries()
+        assert list(qs) == list(Q.REGISTRY)
+        assert all(qs[n] is Q.REGISTRY[n] for n in Q.REGISTRY)
+        assert all(f.__name__ == n for n, f in qs.items())
