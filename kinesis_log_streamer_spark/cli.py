@@ -12,10 +12,20 @@ Same flags, same validation, same exit codes:
 * exactly one positional stream name (main.go:124-136)
 * usage errors → exit 2 with usage on stderr (main.go:22-55)
 
-Data path: stdin → line/JSON records → transform/enrich → partition-key
-stamp → Kinesis sink (or ``--dry-run`` → records to stdout).  JSON
-records are enriched and serialized by the stdin splitter itself
-(``json_source.render_record``), so Spark only stamps their key.
+Data path, the same for a never-EOF Apache pipe and a finite file:
+stdin is read in 64 KiB chunks and spooled to a landing dir
+(``streaming/stdin_spool.py``), a Structured Streaming query tails it
+→ transform/enrich → partition-key stamp → Kinesis sink (or
+``--dry-run`` → records to stdout), and EOF stops the query once the
+last landed record is committed.  JSON records are enriched and
+serialized by the stdin splitter itself (``json_source.render_record``),
+so Spark only stamps their key.  A malformed JSON value exits 1 after
+the records before it were sent (jsonstreamer.go:44-45).
+
+Record order: every record is sent exactly once, and the records of
+one landed file (one stdin read) stay contiguous and in input order.
+Across the files of one micro-batch order is not kept: the file source
+packs a batch's files into splits by size.
 """
 
 from __future__ import annotations
@@ -26,11 +36,16 @@ from collections.abc import Sequence
 
 from kinesis_log_streamer_spark.hostid import get_host_id
 
-# --streaming intake per micro-batch, in landed spool bytes: a queued
-# backlog drains in one batch (paying the stream engine's fixed
-# per-batch cost once), while a trickle still takes whatever has
-# landed at each trigger.  It bounds the memory of one batch.
+# Intake per micro-batch, in landed spool bytes: a queued backlog
+# drains in one batch (paying the stream engine's fixed per-batch cost
+# once), while a trickle still takes whatever has landed at each
+# trigger.  It bounds the memory of one batch, not the spool.
 MAX_BYTES_PER_TRIGGER = 64 * 2**20
+
+# The micro-batch trigger interval: the flush-on-idle cadence, as a
+# record read from a quiet pipe reaches the sink about one interval
+# later (basestreamer.go:42-46).
+TRIGGER = "500 milliseconds"
 
 # Above this many files, Spark lists a batch's input with a separate
 # distributed job.  The landing dir is always local, where a stat per
@@ -72,23 +87,8 @@ def build_parser() -> argparse.ArgumentParser:
             "(basestreamer.go:64-87)"
         ),
     )
-    p.add_argument(
-        "--streaming",
-        action="store_true",
-        help=(
-            "tail stdin continuously instead of buffering it: 64 KiB "
-            "chunked reads spooled to a landing dir drive a Structured "
-            "Streaming query with a processingTime trigger — the "
-            "reference's actual loop (bounded reads, flush-on-idle, "
-            "EOF drain; linestreamer.go:34-57, basestreamer.go:27-46)"
-        ),
-    )
-    p.add_argument(
-        "--trigger",
-        default="500 milliseconds",
-        help="processingTime trigger interval for --streaming "
-        "(the flush-on-idle cadence)",
-    )
+    # Accepted and ignored: every invocation streams.
+    p.add_argument("--streaming", action="store_true", help=argparse.SUPPRESS)
     p.add_argument(
         "--host-identity",
         choices=["driver", "per-executor"],
@@ -129,7 +129,7 @@ def resolve_output_format(fmt: str, output_format: str) -> str:
 
 def build_records(args, values, entries, output_format):
     """Input rows (column ``value``) → sink records ``(data,
-    partitionKey)``, batch or streaming alike.
+    partitionKey)``, on a batch or streaming DataFrame alike.
 
     JSON values arrive sink-ready from the splitter (the ``-I`` merge
     and serialization are done, ``json_source.render_record``), so they
@@ -151,11 +151,11 @@ def build_records(args, values, entries, output_format):
 
 
 def run_streaming(args, entries, output_format, stream) -> int:
-    """The CLI's streaming data path (C1 parity with the reference's
-    never-EOF pipe deployment): chunked stdin → landing-dir spool →
-    ``readStream`` → key stamp (JSON records land sink-ready; lines
-    take the line pipeline) → sink, with bounded per-trigger intake and
-    idle-stop on EOF.
+    """The CLI's data path (C1 parity with the reference's loop,
+    linestreamer.go:34-57, basestreamer.go:27-46): chunked ``stream``
+    → landing-dir spool → ``readStream`` → key stamp (JSON records
+    land sink-ready; lines take the line pipeline) → sink, with bounded
+    per-trigger intake and an exact stop at EOF.
 
     The full input is NEVER held in one string: the spooler carries at
     most one 64 KiB chunk plus one partial record
@@ -171,7 +171,6 @@ def run_streaming(args, entries, output_format, stream) -> int:
     from kinesis_log_streamer_spark.streaming.stdin_spool import (
         StdinSpooler,
         drain_and_stop,
-        parse_trigger_seconds,
     )
 
     spark = get_spark("kinesis-log-streamer-cli")
@@ -223,14 +222,10 @@ def run_streaming(args, entries, output_format, stream) -> int:
             sink,
             ckpt,
             available_now=False,
-            processing_time=args.trigger,
+            processing_time=TRIGGER,
         )
         spooler.start_thread()
-        drain_and_stop(
-            query,
-            spooler,
-            trigger_interval_s=parse_trigger_seconds(args.trigger),
-        )
+        drain_and_stop(query, spooler)
     finally:
         if query is not None and query.isActive:
             query.stop()
@@ -250,47 +245,7 @@ def main(argv: Sequence[str] | None = None) -> int:
         return 2
     entries = parse_entries(args.add_entry, parser)
     output_format = resolve_output_format(args.format, args.output_format)
-
-    from kinesis_log_streamer_spark.session import get_spark
-    from kinesis_log_streamer_spark.sources.json_source import (
-        ConcatenatedJsonError,
-        split_concatenated_json,
-    )
-    from kinesis_log_streamer_spark.sources.lines import lines_from_stdin
-
-    if args.streaming:
-        return run_streaming(args, entries, output_format, sys.stdin.buffer)
-
-    spark = get_spark("kinesis-log-streamer-cli")
-    stdin_data = sys.stdin.read()
-    if args.format == "json":
-        try:
-            values = split_concatenated_json(stdin_data, strict=True, entries=entries)
-        except ConcatenatedJsonError as exc:
-            # strict mode: stop at the first malformed value, exit 1
-            # (jsonstreamer.go:44-45, main.go:165-168)
-            print(f"stdin: {exc}", file=sys.stderr)
-            return 1
-        df = spark.createDataFrame([(v,) for v in values], "value string")
-    else:
-        df = lines_from_stdin(spark, stdin_data)
-    records = build_records(args, df, entries, output_format)
-
-    if args.dry_run:
-        for row in records.collect():
-            print(f"{row['partitionKey']}\t{row['data']}")
-        return 0
-
-    from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
-
-    sink = KinesisSink(
-        args.stream_name[0],
-        region=args.region,
-        profile=args.profile,
-        delivery=args.delivery,
-    )
-    sink.write_batch(records, epoch_id=0)
-    return 0
+    return run_streaming(args, entries, output_format, sys.stdin.buffer)
 
 
 if __name__ == "__main__":

@@ -3333,9 +3333,6 @@ def i04_line_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, and pushed through ``build_line_pipeline`` — the oracle is
     the original table, so any CR residue, dropped/extra line, or
     payload mutation breaks the hash."""
-    import os
-    import tempfile
-
     from kinesis_log_streamer_spark.streaming.pipeline import build_line_pipeline
 
     docs = _t(spark, sf_dir, "documents")
@@ -3347,7 +3344,7 @@ def i04_line_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(
         docs.filter(F.col("doc_id") % 10 == 0).select(F.lit("").alias("value"))
     )
-    path = os.path.join(tempfile.gettempdir(), "klss_i04_lines")
+    path = _app_tmp(spark, "klss_i04_lines_")
     lines.write.mode("overwrite").text(path)
     raw = spark.read.text(path)
     return build_line_pipeline(
@@ -3363,9 +3360,6 @@ def i05_concat_json_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     per top-level value, skip the nulls, and re-serialize compactly —
     the oracle reconstructs the expected value multiset from the
     events table directly."""
-    import os
-    import tempfile
-
     from kinesis_log_streamer_spark.sources.json_source import (
         read_concatenated_json,
     )
@@ -3379,7 +3373,7 @@ def i05_concat_json_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").cast("string"),
         F.lit(",5]"),
     )
-    path = os.path.join(tempfile.gettempdir(), "klss_i05_concat")
+    path = _app_tmp(spark, "klss_i05_concat_")
     ev.select(blob.alias("value")).write.mode("overwrite").text(path)
     return read_concatenated_json(spark, path).orderBy("value")
 
@@ -3395,11 +3389,9 @@ def i06_json_seq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver-side fixture loop); the parsed rollup must hash-match
     the direct aggregate, proving zero records lost, duplicated, or
     torn at separator boundaries."""
-    import os
     import shutil
-    import tempfile
 
-    path = os.path.join(tempfile.gettempdir(), "klss_i06_jsonseq")
+    path = _app_tmp(spark, "klss_i06_jsonseq_")
     shutil.rmtree(path, ignore_errors=True)
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 97 == 0)
@@ -10577,7 +10569,7 @@ class _PartFilesStream:
 
 
 def i07_stdin_spool_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CLI STREAMING path's spool stage under the oracle gate
+    """The CLI data path's spool stage under the oracle gate
     (round-5 C1 fix; `streaming/stdin_spool.py`): a concatenated-JSON
     byte stream is fed to ``StdinSpooler`` in 97-byte chunks — far
     smaller than most records, so nearly every record is split across
@@ -12899,14 +12891,14 @@ def p11_join_size_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def i08_live_spool_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CLI STREAMING mode's LIVE concurrency under the oracle
-    gate (cli.py:147-225): the spooler thread lands 64 KiB chunks
+    """The CLI data path's LIVE concurrency under the oracle gate
+    (``cli.run_streaming``): the spooler thread lands 64 KiB chunks
     (the reference's read size, linestreamer.go:34) WHILE a
-    ``processingTime`` micro-batch query tails the landing directory
-    with ``maxFilesPerTrigger`` backpressure (the cap-5 channel,
-    linestreamer.go:37) and ``cleanSource=delete`` keeps the listing
-    bounded; ``drain_and_stop`` applies the reference's EOF-or-idle
-    stop rule (basestreamer.go:27-46).  i07 proves the chunk-carry
+    ``processingTime`` micro-batch query tails the landing directory,
+    taking at most 16 files per batch (``maxFilesPerTrigger``), and
+    ``cleanSource=delete`` keeps the listing bounded;
+    ``drain_and_stop`` stops the query at EOF once every landed file
+    is committed (basestreamer.go:27-33).  i07 proves the chunk-carry
     SPLIT is correct synchronously; this proves the concurrent
     land/list/clean machinery drops or duplicates nothing — the
     oracle recomputes the rollup from events, so one lost or re-read
@@ -12967,9 +12959,7 @@ def i08_live_spool_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spooler = StdinSpooler(_PartFilesStream(src), landing, fmt="json")
     try:
         spooler.start_thread()
-        drain_and_stop(
-            q, spooler, trigger_interval_s=0.25, timeout_s=300
-        )
+        drain_and_stop(q, spooler)
     finally:
         if q.isActive:
             q.stop()

@@ -21,10 +21,11 @@ Semantics reproduced:
 * non-finite numbers (``NaN``, ``Infinity``, ``1e400``) are malformed
   JSON (RFC 8259 §6), as in Go's decoder
 
-Both splitters — :func:`split_concatenated_json` (batch CLI) and
-``streaming.stdin_spool.StdinSpooler`` (``--streaming``) — turn each
-decoded value into its record text with :func:`render_record`.  Given
-the CLI's ``-I`` entry map it renders the record SINK-READY (T3+T4,
+Both splitters — :func:`split_concatenated_json` (files, via
+:func:`read_concatenated_json`) and ``streaming.stdin_spool.
+StdinSpooler`` (the CLI's stdin) — turn each decoded value into its
+record text with :func:`render_record`.  Given the CLI's ``-I`` entry
+map the spooler renders the record SINK-READY (T3+T4,
 jsonstreamer.go:49-62), so Spark only stamps the partition key.
 """
 
@@ -117,15 +118,11 @@ def render_record(
     return out
 
 
-def split_concatenated_json(
-    text: str,
-    strict: bool = True,
-    entries: Mapping[str, str] | None = None,
-) -> list[str]:
+def split_concatenated_json(text: str, strict: bool = True) -> list[str]:
     """Split one concatenated-JSON string into record strings.
 
-    Mirrors Go's json.Decoder value loop; each value becomes
-    :func:`render_record` ``(value, entries)``.  Top-level nulls are
+    Mirrors Go's json.Decoder value loop; each value becomes its
+    compact JSON (:func:`render_record`).  Top-level nulls are
     dropped (F2).  A malformed or non-finite value raises
     :class:`ConcatenatedJsonError` in strict mode and ends the split in
     permissive mode.
@@ -140,7 +137,7 @@ def split_concatenated_json(
             break
         try:
             value, end = decoder.raw_decode(text, i)
-            record = None if value is None else render_record(value, entries)
+            record = None if value is None else render_record(value)
         except ValueError as exc:
             if strict:
                 raise ConcatenatedJsonError(

@@ -9,14 +9,13 @@ text source plus the F1 empty filter — the ``pending`` carry-over
 state (linestreamer.go:18,71,83) has no user-visible equivalent to
 reproduce.
 
-The streaming twin watches a landing directory (the pipe-from-Apache
-deployment becomes log-shipper → landing dir → file stream source).
+The CLI reads stdin through ``streaming.stdin_spool``, whose landing
+files a streaming text source tails.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.operators.transforms import (
     filter_empty_lines,
@@ -27,32 +26,4 @@ from kinesis_log_streamer_spark.operators.transforms import (
 def read_lines(spark: SparkSession, path: str) -> DataFrame:
     """Batch line source: one row per non-empty line (S2+F1)."""
     df = spark.read.text(path)
-    return filter_empty_lines(strip_cr(df))
-
-
-def read_lines_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """Streaming line source over a landing directory.
-
-    ``maxFilesPerTrigger`` is the engine's backpressure knob — the
-    analog of the reference's bounded channel capacity
-    (linestreamer.go:37).
-    """
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.load(path)
-    return filter_empty_lines(strip_cr(df))
-
-
-def lines_from_stdin(spark: SparkSession, data: str) -> DataFrame:
-    """Driver-side stdin adapter for the CLI (the reference's actual
-    input path, main.go:164): split the piped text into line rows.
-
-    Stdin is inherently single-process; for cluster-scale ingest use
-    the landing-directory sources above.
-    """
-    lines = data.split("\n")
-    df = spark.createDataFrame(
-        [(ln,) for ln in lines], "value string"
-    )
     return filter_empty_lines(strip_cr(df))

@@ -6,19 +6,23 @@ Entry points reproduced (SURVEY.md §3):
 2. JSON mode with enrichment        (jsonstreamer.go:34-81, T3+T4)
 3. line → JSON wrap with entries    (linestreamer.go:92-99, T2+T4)
 
-The CLI's JSON records land sink-ready: its splitters (batch
-``split_concatenated_json``, streaming ``StdinSpooler``) apply T3+T4
-while decoding, as the reference does (jsonstreamer.go:42-62), so the
-CLI's Spark stage for entry point 2 is :func:`stamp_identity` alone.
-:func:`build_json_pipeline` is the Spark-side form of the same merge,
-for values that arrive unenriched.
+The CLI's JSON records land sink-ready: its stdin splitter
+(``StdinSpooler``) applies T3+T4 while decoding, as the reference does
+(jsonstreamer.go:42-62), so the CLI's Spark stage for entry point 2 is
+:func:`stamp_identity` alone.  :func:`build_json_pipeline` is the
+Spark-side form of the same merge, for values that arrive unenriched.
 
 Streaming semantics mapping:
-* flush-on-idle / EOF drain (B1) → ``Trigger.AvailableNow`` drains all
-  pending input then stops; ``processingTime`` triggers approximate
-  the idle-flush cadence (documented delta, SURVEY §7 risk 3).
-* bounded channel backpressure → a byte budget per micro-batch
-  (``maxBytesPerTrigger``, ``cli.MAX_BYTES_PER_TRIGGER``).
+* flush-on-idle (B1) → a ``processingTime`` trigger
+  (``cli.TRIGGER``) approximates the idle-flush cadence (documented
+  delta, SURVEY §7 risk 3).
+* EOF drain (B1) → ``stdin_spool.drain_and_stop``: once stdin ended,
+  one ``processAllAvailable`` commits every landed record, then the
+  query stops.  ``Trigger.AvailableNow`` drains input already present
+  at start, for sources that do not grow.
+* bounded channel → a byte budget per micro-batch
+  (``maxBytesPerTrigger``, ``cli.MAX_BYTES_PER_TRIGGER``) bounds one
+  batch's intake; the spool itself is not bounded.
 * per-host partition key ordering → constant partitionKey column +
   repartition in the sink.
 """

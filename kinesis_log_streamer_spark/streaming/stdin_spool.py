@@ -1,14 +1,10 @@
-"""Chunked stdin → landing-dir spool for the CLI's STREAMING mode.
+"""Chunked stdin → landing-dir spool: the CLI's data path.
 
 The reference never buffers its input: it reads stdin in 64 KiB
 chunks (linestreamer.go:34), carries the trailing partial record
 across chunk boundaries (linestreamer.go:49-57), and ships complete
 records downstream through a bounded (cap-5) channel
 (linestreamer.go:37) with flush-on-idle (basestreamer.go:42-46).
-The CLI's original batch path (`sys.stdin.read()`) held the whole
-input in one driver string — a semantics delta as much as a memory
-one, because an Apache log pipe never EOFs and flush-on-idle could
-never fire.
 
 This module is the Spark-native equivalent of that loop: a spooler
 thread reads stdin chunk-by-chunk, extracts COMPLETE records (lines,
@@ -18,11 +14,16 @@ landing directory.  JSON values given the CLI's ``-I`` entry map land
 sink-ready — merged and serialized once by
 ``json_source.render_record``, as the reference does per value
 (jsonstreamer.go:42-62) — so the query only stamps the partition key.
-`spark.readStream.format("text")` tails the directory; a byte budget
-per micro-batch (``maxBytesPerTrigger``) is the bounded-channel
-backpressure, the micro-batch trigger cadence is the flush-on-idle
-timer, and EOF is observed as "spooler finished AND the query has
-drained every landed file" (see :func:`drain_and_stop`).
+`spark.readStream.format("text")` tails the directory and the
+micro-batch trigger cadence is the flush-on-idle timer.  A byte budget
+per micro-batch (``maxBytesPerTrigger``) bounds one batch's intake;
+it does NOT bound the spool, which lands whatever stdin delivers
+however far the query lags.
+
+EOF is exact (:func:`drain_and_stop`): once the spooler has landed its
+last file, one ``processAllAvailable`` returns only after a source
+listing taken after that file landed found nothing left to commit,
+and the query is stopped then — no idle window.
 
 Memory bound: one chunk + one partial record — never the full input.
 """
@@ -33,7 +34,6 @@ import codecs
 import json
 import os
 import threading
-import time
 import uuid
 from collections.abc import Mapping
 
@@ -130,7 +130,7 @@ class StdinSpooler:
 
         A value :func:`render_record` rejects (a non-finite number)
         raises at once, after the values before it have landed — the
-        stop-at-first-bad-value rule of the batch splitter."""
+        stop-at-first-bad-value rule of ``split_concatenated_json``."""
         out: list[str] = []
         number_cont = ".eE+-0123456789"
         buf = self._carry.lstrip()
@@ -187,7 +187,7 @@ class StdinSpooler:
         except BaseException as exc:
             # Surface the failure AND unblock drain_and_stop — a dead
             # spool thread that never set `done` would park the drain
-            # loop forever (it has no timeout on the CLI path).
+            # loop forever (it has no timeout).
             self.error = exc
             raise
         finally:
@@ -237,72 +237,27 @@ class StdinSpooler:
         return t
 
 
-def drain_and_stop(
-    query,
-    spooler: StdinSpooler,
-    idle_span_s: float = 3.0,
-    poll_s: float = 0.2,
-    timeout_s: float | None = None,
-    trigger_interval_s: float | None = None,
-) -> None:
-    """Stop a processingTime streaming query once the spooler hit EOF
-    and the query has gone idle — the EOF-drain half of the
-    reference's flush-on-idle-or-EOF contract (basestreamer.go:27-46).
+def drain_and_stop(query, spooler: StdinSpooler) -> None:
+    """Stop a streaming query once every record the spooler landed is
+    committed — the EOF drain of the reference's flush-on-idle-or-EOF
+    contract (basestreamer.go:27-46).
 
-    "Idle" = ``query.status['isDataAvailable']`` has stayed False for
-    a continuous window AFTER the spooler finished.  (Progress events
-    are NOT the signal: an idle stream re-reports the last batchId,
-    so waiting for a fresh zero-row batch id spins forever.)  The
-    window is stretched to cover at least two trigger intervals so
-    the source is guaranteed a listing pass over the final landed
-    files before the query stops.
+    Waits for ``spooler.done`` while the query is active, then calls
+    ``query.processAllAvailable()`` once.  Spark lists the source and
+    records "no new data" under the same lock under which that call
+    resets the flag, and ``done`` is set only after the final rename,
+    so the call returns once a listing that saw the last landed file
+    has nothing left to commit.  A query that dies while stdin is still
+    open (a sink failure on a pipe that never EOFs) ends the wait and
+    its cause is re-raised; the query is stopped on every exit.
     """
-    if trigger_interval_s:
-        idle_span_s = max(idle_span_s, 2.5 * trigger_interval_s)
-    deadline = time.monotonic() + timeout_s if timeout_s else None
-    idle_since: float | None = None
-    while True:
-        if not query.isActive:
-            # The query died (sink failure, bad checkpoint) or was
-            # stopped externally — exit immediately instead of
-            # spinning on a corpse (the CLI path passes no timeout).
-            # awaitTermination below re-raises its exception.
-            break
-        now = time.monotonic()
-        if deadline and now > deadline:
-            break
-        if spooler.done.is_set() and query.lastProgress is not None:
-            if query.status["isDataAvailable"]:
-                idle_since = None
-            elif idle_since is None:
-                idle_since = now
-            elif now - idle_since >= idle_span_s:
-                break
-        time.sleep(poll_s)
+    try:
+        while query.isActive and not spooler.done.wait(0.2):
+            pass
+        if query.isActive:
+            query.processAllAvailable()
+    finally:
+        query.stop()
     exc = query.exception()
-    query.stop()
-    query.awaitTermination()
     if exc is not None:
         raise exc
-
-
-def parse_trigger_seconds(trigger: str) -> float:
-    """Best-effort parse of a Spark processingTime string ('500
-    milliseconds', '2 seconds', '1 minute') into seconds, for sizing
-    the idle-drain window; unknown shapes fall back to 1s."""
-    parts = trigger.strip().lower().split()
-    try:
-        value = float(parts[0])
-        unit = parts[1] if len(parts) > 1 else "seconds"
-    except (ValueError, IndexError):
-        return 1.0
-    for prefix, scale in (
-        ("milli", 0.001),
-        ("micro", 0.000001),
-        ("second", 1.0),
-        ("minute", 60.0),
-        ("hour", 3600.0),
-    ):
-        if unit.startswith(prefix):
-            return value * scale
-    return 1.0

@@ -9,6 +9,11 @@ import pytest
 from kinesis_log_streamer_spark import cli
 
 
+def _stdin(text: str) -> io.TextIOWrapper:
+    """A text stdin over bytes: ``.buffer`` exists, as on a real pipe."""
+    return io.TextIOWrapper(io.BytesIO(text.encode()))
+
+
 class TestParsing:
     def test_defaults(self):
         args = cli.build_parser().parse_args(["Stream"])
@@ -63,9 +68,7 @@ class TestParsing:
 class TestDryRunEndToEnd:
     def test_line_json_pipeline(self, spark, monkeypatch, capsys):
         # entry point 3: error-log shape (httpd.conf:182)
-        monkeypatch.setattr(
-            "sys.stdin", io.StringIO("warn: x\n\nerror: y\n")
-        )
+        monkeypatch.setattr("sys.stdin", _stdin("warn: x\n\nerror: y\n"))
         rc = cli.main(
             ["-F", "json", "-I", "LogFile=HTTPErrorLog", "--dry-run", "Test"]
         )
@@ -76,9 +79,7 @@ class TestDryRunEndToEnd:
         assert '"LogFile":"HTTPErrorLog"' in out[0]
 
     def test_json_pipeline(self, spark, monkeypatch, capsys):
-        monkeypatch.setattr(
-            "sys.stdin", io.StringIO('{"a":"1"} null 42')
-        )
+        monkeypatch.setattr("sys.stdin", _stdin('{"a":"1"} null 42'))
         rc = cli.main(["-f", "json", "-I", "Tag=T", "--dry-run", "Test"])
         assert rc == 0
         out = capsys.readouterr().out.strip().splitlines()
@@ -86,6 +87,20 @@ class TestDryRunEndToEnd:
         assert len(out) == 2
         assert any('"Tag":"T"' in line for line in out)
         assert any(line.endswith("\t42") for line in out)
+
+    @pytest.mark.parametrize(
+        "fmt, text, want",
+        [
+            ("line", "a\nb\r\n\nc", ["a", "b", "c"]),  # CR strip, empty drop
+            ("line", "", []),
+            ("json", "", []),
+        ],
+    )
+    def test_records_printed(self, spark, monkeypatch, capsys, fmt, text, want):
+        monkeypatch.setattr("sys.stdin", _stdin(text))
+        assert cli.main(["-f", fmt, "--dry-run", "Test"]) == 0
+        out = capsys.readouterr().out.splitlines()
+        assert sorted(line.split("\t", 1)[1] for line in out) == want
 
 
 class TestHostId:
@@ -102,8 +117,8 @@ class TestHostId:
 
 
 class TestJsonRecordsBatchAndStreaming:
-    """``-f json`` records land sink-ready from the splitter in both CLI
-    paths; Spark only stamps the key."""
+    """``-f json`` records land sink-ready from the splitter, with or
+    without ``--streaming`` (one data path); Spark only stamps the key."""
 
     INPUT = (
         '{"host":"web-1","LogFile":"orig","Status":200,'
@@ -135,7 +150,7 @@ class TestJsonRecordsBatchAndStreaming:
     def test_batch_and_streaming_print_the_same_records(
         self, spark, monkeypatch, capsys
     ):
-        monkeypatch.setattr("sys.stdin", io.StringIO(self.INPUT))
+        monkeypatch.setattr("sys.stdin", _stdin(self.INPUT))
         assert cli.main(self.ARGV) == 0
         batch = capsys.readouterr().out.splitlines()
         args = self._streaming_args()
@@ -152,7 +167,7 @@ class TestJsonRecordsBatchAndStreaming:
         self, spark, monkeypatch, capsys
     ):
         text = '{"ok":1} {"n":NaN}'
-        monkeypatch.setattr("sys.stdin", io.StringIO(text))
+        monkeypatch.setattr("sys.stdin", _stdin(text))
         assert cli.main(self.ARGV) == 1
         args = self._streaming_args()
         assert cli.run_streaming(args, {}, "json", io.BytesIO(text.encode())) == 1

@@ -157,6 +157,9 @@ class TestPerApplicationFixtures:
             ("f02_partitioned_parquet_roundtrip", "klss_f02_events_"),
             ("f03_orc_roundtrip", "klss_orc_roundtrip_"),
             ("f06_schema_evolution", "klss_f06_evo_"),
+            ("i04_line_pipeline_roundtrip", "klss_i04_lines_"),
+            ("i05_concat_json_decode", "klss_i05_concat_"),
+            ("i06_json_seq_roundtrip", "klss_i06_jsonseq_"),
         ],
     )
     def test_fixture_dir_names_the_application(self, spark, sf_dir, name, prefix):

@@ -13,7 +13,7 @@ from kinesis_log_streamer_spark.sources.json_source import (
     render_record,
     split_concatenated_json,
 )
-from kinesis_log_streamer_spark.sources.lines import lines_from_stdin, read_lines
+from kinesis_log_streamer_spark.sources.lines import read_lines
 
 
 class TestSplitConcatenatedJson:
@@ -105,7 +105,7 @@ class TestRenderRecord:
     def test_lone_surrogate_renders_as_replacement_char(self, text):
         # Go's decoder turns an unpaired surrogate escape into U+FFFD;
         # the JVM round trip used to send "?"
-        (out,) = split_concatenated_json(text, entries={})
+        out = render_record(json.loads(text), {})
         assert "\ufffd" in out and "?" not in out
         out.encode("utf-8")  # writable as UTF-8 (the spool's landing file)
 
@@ -125,11 +125,11 @@ class TestRenderRecord:
         # RFC 8259 has no NaN/Infinity; the JVM round trip used to send
         # {"n":"NaN"}, a number turned into a string
         with pytest.raises(ConcatenatedJsonError):
-            split_concatenated_json('{"ok":1} ' + text, entries=entries)
-        got = split_concatenated_json(
-            '{"ok":1} ' + text, strict=False, entries=entries
-        )
+            split_concatenated_json('{"ok":1} ' + text)
+        got = split_concatenated_json('{"ok":1} ' + text, strict=False)
         assert len(got) == 1  # permissive: prior records kept
+        with pytest.raises(ValueError):
+            render_record(json.loads(text), entries)
 
 
 class TestFileSources:
@@ -147,10 +147,6 @@ class TestFileSources:
         df = read_concatenated_json(spark, str(p))
         vals = sorted(r.value for r in df.collect())
         assert vals == sorted(['{"a":1}', '{"b":[1,2]}', "7", '"x"'])
-
-    def test_stdin_adapter(self, spark):
-        df = lines_from_stdin(spark, "a\nb\r\n\nc")
-        assert sorted(r.value for r in df.collect()) == ["a", "b", "c"]
 
 
 class TestApacheAccessLogPath:
