@@ -4292,8 +4292,8 @@ def k01_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     sink = KinesisSink("k01", client_factory=lambda: DirKinesisClient(ep))
-    # Few fat PutRecords chunks beat 32 thin ones for a bounded gate
-    # run (each partition opens its own client + shard files).
+    # Two tasks feed the sink's one collect job (the sink fills its
+    # PutRecords chunks across partitions, on the driver).
     sink.write_batch(payload.coalesce(2), epoch_id=0)
 
     spark.dataSource.register(KinesisDataSource)
@@ -13188,7 +13188,7 @@ def k08_aws_transport_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 access_key=ak,
                 secret_key=sk,
             )
-            # Few fat PutRecords chunks beat 32 thin ones (k01).
+            # Two tasks feed the sink's one collect job (k01).
             sink.write_batch(payload.coalesce(2), epoch_id=0)
             raw = (
                 spark.readStream.format("kinesis_py")

@@ -708,17 +708,23 @@ class DirKinesisClient:
             path = os.path.join(self._dir, f"shard-{shard}.jsonl")
             payload = ("\n".join(lines) + "\n").encode("utf-8")
             # Concurrent writer tasks (one DirKinesisClient per task —
-            # KinesisDataSourceWriter, k04/k05 with coalesce(2)) may
-            # append to the SAME shard file.  A buffered text write is
-            # multiple syscalls and can interleave mid-line; O_APPEND
-            # plus ONE os.write per shard group is atomic on POSIX for
-            # these small batches (chunk_records caps a group at 5
-            # records / 1 MiB), so lines never tear.
+            # KinesisDataSourceWriter) may append to the SAME shard
+            # file.  A buffered text write is multiple syscalls and can
+            # interleave mid-line; O_APPEND plus ONE os.write per shard
+            # group keeps each group whole (chunk_records caps a group
+            # at 500 records / 5 MiB).  A short write raises rather
+            # than appending the rest: a second write could land after
+            # another writer's group and tear a line.
             fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_APPEND, 0o644)
             try:
-                os.write(fd, payload)
+                written = os.write(fd, payload)
             finally:
                 os.close(fd)
+            if written != len(payload):
+                raise OSError(
+                    f"short write to {path}: {written} of "
+                    f"{len(payload)} bytes"
+                )
         return {"FailedRecordCount": 0, "Records": [{} for _ in Records]}
 
 

@@ -1,21 +1,26 @@
 """Kinesis PutRecords sink (reference B1+K1: basestreamer.go:19-87).
 
 The reference accumulates ≤5 records and ships each buffer as one
-``PutRecords`` call, dropping failed batches/records (at-most-once,
-basestreamer.go:73-83).  The engine upgrades this deliberately:
+``PutRecords`` call, made by the process that read stdin, dropping
+failed batches/records (at-most-once, basestreamer.go:73-83).  The
+engine upgrades this deliberately:
 
 * **Sub-batching at the real API limits** — 500 records / 5 MiB per
   call (the reference's 5 uses ~1% of a call; BASELINE.md) — inside
-  ``foreachBatch``, per partition, executor-side.
+  ``foreachBatch``, on the driver: the micro-batch arrives as Arrow
+  and is walked one Arrow record batch at a time, so a write is one
+  Spark job with no exchange and no Python worker task.
 * **At-least-once** — failed records are retried with exponential
-  backoff; Structured Streaming checkpointing replays the batch on
-  task failure.  (Documented delta from the reference's at-most-once.)
+  backoff; records still failing raise out of ``foreachBatch``, which
+  fails the query, and a restart from the checkpoint replays the
+  micro-batch.  (Documented delta from the reference's at-most-once.)
   ``KinesisSink(delivery="at_most_once")`` restores STRICT reference
   parity — one call, no retry, log-and-drop, never raise
   (:func:`put_records_at_most_once`).
 * **Partition-key affinity** — rows carry a ``partitionKey`` column
-  (E1); ``df.repartition("partitionKey")`` before the write reproduces
-  the reference's per-key ordering into shards.
+  (E1) that routes them to shards.  Records reach the put loop in
+  partition order, so one input split's records stay together and in
+  order; order across the splits of one micro-batch is not kept.
 
 The client is injected / import-gated: tests use ``CollectingSink``
 (a local stand-in with the same record contract — SURVEY.md §2.1 row
@@ -177,16 +182,25 @@ def put_records_at_most_once(
 
 
 class KinesisSink:
-    """foreachBatch writer shipping (data, partitionKey) rows to Kinesis.
+    """foreachBatch writer shipping (data, partitionKey) rows to Kinesis
+    from the driver.
 
-    ``client_factory`` is called once per executor partition (boto3
-    clients are not picklable); defaults to a boto3 factory that
-    raises a clear error when boto3 is absent.
+    Each micro-batch is taken as Arrow (``toArrow``) and converted to
+    Python one Arrow record batch at a time, so the sink holds one
+    micro-batch as Arrow plus one record batch as Python objects.  That
+    suits micro-batches (the CLI's is bounded by
+    ``cli.MAX_BYTES_PER_TRIGGER``); table-sized writes belong to the
+    executor-side ``df.write.format("kinesis_py")`` writer.
+
+    ``client_factory`` is called once per sink, on the first batch, and
+    the client is reused for every later batch; it defaults to a boto3
+    factory that raises a clear error when boto3 is absent.
 
     ``delivery`` selects the end-to-end guarantee:
 
     * ``"at_least_once"`` (default) — retry with backoff, raise on
-      exhaustion so the micro-batch replays from the checkpoint.
+      exhaustion so the query fails and its restart replays the
+      micro-batch from the checkpoint.
     * ``"at_most_once"`` — strict reference parity
       (:func:`put_records_at_most_once`): one call, no retry, log and
       drop, never raise.
@@ -213,17 +227,16 @@ class KinesisSink:
         self.region = region
         self.profile = profile
         # Kinesis-compatible HTTP endpoint override (the moto server in
-        # tests); None = the real service.  Explicit credentials ride
-        # the sink object (executor python workers don't see env vars
-        # set after the JVM started); None = boto3's default chain.
-        # All plain strings, so the sink pickles into foreachBatch
-        # partitions unchanged.
+        # tests); None = the real service.  Explicit credentials; None =
+        # boto3's default chain.
         self.endpoint_url = endpoint_url
         self.access_key = access_key
         self.secret_key = secret_key
         self.client_factory = client_factory or self._boto3_factory
-        # Dead-letter hook for records that exhaust retries; None means
-        # raise → task retry → micro-batch replay (at-least-once).
+        self._client = None
+        # Dead-letter hook for records that exhaust retries (called on
+        # the driver, so it may collect into the caller's objects);
+        # None means raise → the query fails (at-least-once).
         self.on_drop = on_drop
         self.delivery = delivery
 
@@ -244,39 +257,33 @@ class KinesisSink:
         return session.client("kinesis", endpoint_url=self.endpoint_url)
 
     def write_batch(self, df: DataFrame, epoch_id: int) -> None:
-        """foreachBatch entry point: executor-side partition iteration,
-        no driver collect."""
-        stream_name = self.stream_name
-        factory = self.client_factory
-        on_drop = self.on_drop
-        at_most_once = self.delivery == "at_most_once"
-        accepted = df.sparkSession.sparkContext.accumulator(0)
-
-        def write_partition(rows) -> None:
-            client = factory()
-            pairs = (record_pair(r["data"], r["partitionKey"]) for r in rows)
-            for batch in chunk_records(pairs):
-                if at_most_once:
-                    accepted.add(
-                        put_records_at_most_once(
-                            client, stream_name, batch, on_drop=on_drop
-                        )
-                    )
-                else:
-                    accepted.add(
-                        put_records_with_retry(
-                            client, stream_name, batch, on_drop=on_drop
-                        )
-                    )
-
-        df.select("data", "partitionKey").repartition("partitionKey").foreachPartition(
-            write_partition
+        """foreachBatch entry point: one Spark job brings the batch to
+        the driver as Arrow; the records are put from here, in
+        partition order."""
+        table = df.select("data", "partitionKey").toArrow()
+        if self._client is None:
+            self._client = self.client_factory()
+        pairs = (
+            record_pair(data, key)
+            for batch in table.to_batches()
+            for data, key in zip(
+                batch.column(0).to_pylist(), batch.column(1).to_pylist()
+            )
+        )
+        put = (
+            put_records_at_most_once
+            if self.delivery == "at_most_once"
+            else put_records_with_retry
+        )
+        accepted = sum(
+            put(self._client, self.stream_name, chunk, on_drop=self.on_drop)
+            for chunk in chunk_records(pairs)
         )
         logging.getLogger(__name__).info(
             "epoch %s: %s record(s) accepted by %s",
             epoch_id,
-            accepted.value,
-            stream_name,
+            accepted,
+            self.stream_name,
         )
 
 

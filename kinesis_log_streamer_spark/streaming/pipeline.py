@@ -23,8 +23,9 @@ Streaming semantics mapping:
 * bounded channel → a byte budget per micro-batch
   (``maxBytesPerTrigger``, ``cli.MAX_BYTES_PER_TRIGGER``) bounds one
   batch's intake; the spool itself is not bounded.
-* per-host partition key ordering → constant partitionKey column +
-  repartition in the sink.
+* per-host partition key ordering → constant partitionKey column; the
+  sink puts a micro-batch from the driver in partition order, so one
+  landed file's records stay together and in order.
 """
 
 from __future__ import annotations

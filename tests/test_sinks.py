@@ -142,6 +142,29 @@ class TestDirShardAppendAtomicity:
             seen.add((inner["tid"], inner["batch"]))
         assert len(seen) == n_threads * n_batches  # no dup, no loss
 
+    def test_short_write_raises(self, tmp_path, monkeypatch):
+        """A short append must surface, not lose the records past the
+        written bytes; put_records does not loop on it, since a second
+        write could land after another writer's group."""
+        import pytest
+
+        import kinesis_log_streamer_spark.sources.kinesis_source as ks
+
+        client = ks.DirKinesisClient(str(tmp_path / "shards"), num_shards=1)
+        records = [{"Data": f"r{i}".encode(), "PartitionKey": "k"} for i in range(5)]
+        real_write = os.write
+        calls = []
+
+        def short_write(fd, data):
+            calls.append(len(data))
+            return real_write(fd, bytes(data)[: len(data) // 2])
+
+        monkeypatch.setattr(ks.os, "write", short_write)
+        with pytest.raises(OSError, match="short write"):
+            client.put_records(StreamName="t", Records=records)
+        monkeypatch.setattr(ks.os, "write", real_write)
+        assert len(calls) == 1  # one write per shard group, no retry loop
+
 
 class TestKinesisWriterTwoPhaseCommit:
     """KinesisDataSourceWriter retry idempotence (VERDICT r05 item 4):

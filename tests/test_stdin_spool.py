@@ -364,6 +364,73 @@ class TestCliRecordOrder:
             assert got[at : at + len(want)] == want
 
 
+class TestKinesisSinkWriteShape:
+    def test_driver_side_write_keeps_file_order_without_exchange(
+        self, spark, tmp_path
+    ):
+        """``KinesisSink.write_batch`` over a micro-batch of 40 landed
+        files: every record once, one file's records together and in
+        file order in the shard file, ``put_records`` called in this
+        (the driver's) process, and the write's plan has no exchange.
+        Order ACROSS files is not pinned."""
+        import json
+
+        from kinesis_log_streamer_spark.sources.kinesis_source import (
+            DirKinesisClient,
+        )
+        from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
+        from kinesis_log_streamer_spark.streaming.pipeline import (
+            build_line_pipeline,
+        )
+
+        class PidClient(DirKinesisClient):
+            pids: list[int] = []
+
+            def put_records(self, StreamName, Records):  # noqa: N803
+                self.pids.append(os.getpid())
+                return super().put_records(StreamName=StreamName, Records=Records)
+
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        pieces = _file_pieces(40)
+        for i, piece in enumerate(pieces):
+            (landing / f"part-{i:03d}.txt").write_bytes(piece)
+        records = build_line_pipeline(
+            spark.read.text(str(landing)), "string", host_id="testhost"
+        )
+        ep = str(tmp_path / "sink")
+        sink = KinesisSink("Test", client_factory=lambda: PidClient(ep))
+
+        store = spark._jsparkSession.sharedState().statusStore()
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+
+        def plans() -> dict[int, str]:
+            bus.waitUntilEmpty()
+            execs = store.executionsList()
+            return {
+                execs.apply(i).executionId(): execs.apply(i).physicalPlanDescription()
+                for i in range(execs.size())
+            }
+
+        before = plans()
+        sink.write_batch(records, epoch_id=0)
+        new = [plan for eid, plan in plans().items() if eid not in before]
+
+        got = [
+            json.loads(line)["data"]
+            for p in sorted((tmp_path / "sink").glob("shard-*.jsonl"))
+            for line in p.read_text().splitlines()
+        ]
+        assert sorted(got) == sorted(_lines(pieces))  # exactly once
+        for piece in pieces:
+            want = piece.decode().splitlines()
+            at = got.index(want[0])
+            assert got[at : at + len(want)] == want
+        assert PidClient.pids and set(PidClient.pids) == {os.getpid()}
+        assert len(new) == 1  # the write is one SQL execution...
+        assert "Exchange" not in new[0]  # ...that shuffles nothing
+
+
 class _FakeSpooler:
     def __init__(self):
         self.done = threading.Event()

@@ -180,6 +180,73 @@ class TestAtMostOnceParity:
             KinesisSink("s", delivery="exactly_once")
 
 
+class TestKinesisSinkDriverWrite:
+    """``KinesisSink.write_batch`` puts from the driver: the dead-letter
+    hook is the caller's own object, and one client serves every
+    batch."""
+
+    @pytest.mark.parametrize("delivery", ["at_most_once", "at_least_once"])
+    def test_on_drop_reaches_caller(self, spark, tmp_path, delivery):
+        # at-least-once exhausts its retries on the deterministic rejects
+        from kinesis_log_streamer_spark.sources.kinesis_source import (
+            ThrottlingDirKinesisClient,
+        )
+        from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
+
+        ep = str(tmp_path / "sink")
+        df = spark.createDataFrame(
+            [(json.dumps({"event_id": i}), "k") for i in range(20)],
+            "data string, partitionKey string",
+        )
+        dropped: list = []
+        sink = KinesisSink(
+            "Test",
+            client_factory=lambda: ThrottlingDirKinesisClient(ep, reject_mod=10),
+            on_drop=dropped.extend,
+            delivery=delivery,
+        )
+        sink.write_batch(df, epoch_id=0)
+        assert sorted(dropped) == sorted(
+            (json.dumps({"event_id": i}).encode(), "k") for i in (0, 10)
+        )
+        shipped = [
+            json.loads(json.loads(line)["data"])["event_id"]
+            for p in (tmp_path / "sink").glob("shard-*.jsonl")
+            for line in p.read_text().splitlines()
+        ]
+        assert sorted(shipped) == [i for i in range(20) if i % 10]
+
+    def test_client_built_once_across_batches(self, spark, tmp_path):
+        from kinesis_log_streamer_spark.sources.kinesis_source import (
+            DirKinesisClient,
+        )
+        from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
+
+        ep = str(tmp_path / "sink")
+        built: list = []
+
+        def factory():
+            built.append(DirKinesisClient(ep))
+            return built[-1]
+
+        sink = KinesisSink("Test", client_factory=factory)
+        for epoch in range(2):
+            df = spark.createDataFrame(
+                [(f"e{epoch}-{i}", f"k{i % 3}") for i in range(30)],
+                "data string, partitionKey string",
+            ).repartition(4)
+            sink.write_batch(df, epoch_id=epoch)
+        assert len(built) == 1
+        shipped = [
+            json.loads(line)["data"]
+            for p in (tmp_path / "sink").glob("shard-*.jsonl")
+            for line in p.read_text().splitlines()
+        ]
+        assert sorted(shipped) == sorted(
+            f"e{e}-{i}" for e in range(2) for i in range(30)
+        )
+
+
 class TestAvailableNowDrain:
     def test_stream_drains_and_flushes(self, spark, tmp_path):
         # EOF drain: all pending input processed, tail flushed
