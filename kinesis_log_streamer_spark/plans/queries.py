@@ -40,11 +40,13 @@ from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.window import Window as W
 
 from kinesis_log_streamer_spark.operators import dedup as D
@@ -68,23 +70,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _sweep_stale_tmp(prefix: str, max_age_s: float = 3600.0) -> None:
-    """Remove abandoned ``/tmp/<prefix>*`` fixture dirs older than an hour.
+def _sweep_stale_tmp(max_age_s: float = 3600.0) -> None:
+    """Remove scratch roots (``<tmp>/klss-*``) untouched for an hour.
 
-    Shared by every query that stages a per-invocation tempdir (i07,
-    i08, l20, l21) and by the evflush memo.  Two processes (pytest vs
-    selfcheck — the scenario the evflush comment anticipates) can race:
-    one rmtrees a dir between the other's glob and getmtime, so the
-    stat is guarded — a vanished path is exactly the swept state we
-    wanted (ADVICE r11).
+    Two processes can race: one rmtrees a root between the other's
+    glob and getmtime, so the stat is guarded — a vanished path is
+    exactly the swept state we wanted.  ``klss-spool-*`` belongs to a
+    running CLI (which removes it on exit) and is never swept.
     """
     import glob
-    import os
     import shutil
     import tempfile
     import time
 
-    for stale in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")):
+    for stale in glob.glob(os.path.join(tempfile.gettempdir(), "klss-*")):
+        if os.path.basename(stale).startswith("klss-spool-"):
+            continue
         try:
             old = time.time() - os.path.getmtime(stale) > max_age_s
         except OSError:
@@ -93,15 +94,62 @@ def _sweep_stale_tmp(prefix: str, max_age_s: float = 3600.0) -> None:
             shutil.rmtree(stale, ignore_errors=True)
 
 
-def _app_tmp(spark: SparkSession, prefix: str) -> str:
-    """``/tmp/<prefix><applicationId>``: a fixture path no concurrent
-    process shares, after sweeping abandoned ``<prefix>*`` copies."""
+def _scratch_root(spark: SparkSession) -> str:
+    """``<tmp>/klss-<applicationId>``, this application's scratch root:
+    created, its mtime refreshed, then stale roots swept."""
     import re
     import tempfile
 
-    _sweep_stale_tmp(prefix)
     app = re.sub(r"[^A-Za-z0-9_-]", "_", spark.sparkContext.applicationId)
-    return os.path.join(tempfile.gettempdir(), prefix + app)
+    root = os.path.join(tempfile.gettempdir(), "klss-" + app)
+    try:
+        os.utime(root)
+    except FileNotFoundError:
+        os.makedirs(root, exist_ok=True)
+    _sweep_stale_tmp()
+    return root
+
+
+def _scratch(spark: SparkSession, name: str) -> str:
+    """An empty directory ``<root>/<name>-<thread ident>`` (emptied and
+    recreated on every call).  No concurrent process or thread shares
+    it; a sequential caller reuses it, so disk use stays bounded."""
+    import shutil
+    import threading
+
+    path = os.path.join(_scratch_root(spark), f"{name}-{threading.get_ident()}")
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
+
+
+def _drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Run a bounded streaming query to completion
+    (``Trigger.AvailableNow``, the reference's EOF drain,
+    basestreamer.go:27-33) and return it.  A drain still running after
+    600 s is stopped and raises rather than leave a half-drained sink."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(f"availableNow drain {q.id} timed out (600s)")
+    return q
+
+
+@contextmanager
+def _conf(spark: SparkSession, settings: dict):
+    """Set ``settings`` for the body; on exit put each previous value
+    back, or unset the key if it had none."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------------------------------
@@ -2070,10 +2118,8 @@ def _drain_stream_to_table(
     n_partitions: int = 8,
     no_data: bool = True,
 ) -> None:
-    """Run a bounded streaming query to completion:
-    ``Trigger.AvailableNow`` (the reference's EOF drain,
-    basestreamer.go:27-33) into a memory sink.  ``complete`` mode for
-    aggregations (every window/session emitted regardless of
+    """``_drain`` into a memory sink named ``name``.  ``complete`` mode
+    for aggregations (every window/session emitted regardless of
     watermark); ``append`` for stream-stream joins / dedup, which emit
     rows as they materialize.
 
@@ -2094,29 +2140,16 @@ def _drain_stream_to_table(
     # conf is restored — batch queries keep the session default).
     # Python-stateful ops (applyInPandasWithState) pass a higher count:
     # their per-group work runs in Python workers, so parallelism wins.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if no_data else "false",
-    )
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
-        )
+    with _conf(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(n_partitions),
+            "spark.sql.streaming.noDataMicroBatches.enabled": (
+                "true" if no_data else "false"
+            ),
+        },
+    ):
+        _drain(agg.writeStream.format("memory").queryName(name).outputMode(mode))
 
 
 def st01_stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2399,7 +2432,7 @@ def f06_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the same evolution is a metadata operation, which is
     exactly why pipelines add columns instead of rewriting tables."""
     sup = _t(spark, sf_dir, "supplier")
-    base = _app_tmp(spark, "klss_f06_evo_")
+    base = _scratch(spark, "f06")
     even = F.col("s_suppkey") % 2 == 0
     sup.filter(even).select("s_suppkey", "s_name", "s_acctbal").write.mode(
         "overwrite"
@@ -2744,9 +2777,7 @@ def f01_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_streamer_spark.sources.sinks import read_csv, write_csv
 
     nation = _t(spark, sf_dir, "nation")
-    # One path per application + overwrite mode: repeated invocations
-    # reuse one dir instead of leaking a fresh mkdtemp per call.
-    path = _app_tmp(spark, "klss_csv_roundtrip_")
+    path = _scratch(spark, "f01")
     write_csv(nation, path)
     back = read_csv(
         spark,
@@ -2776,7 +2807,7 @@ def f02_partitioned_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     from kinesis_log_streamer_spark.sources.sinks import write_events_by_date
 
     ev = _t(spark, sf_dir, "events")
-    path = _app_tmp(spark, "klss_f02_events_")
+    path = _scratch(spark, "f02")
     write_events_by_date(ev, path)
     back = spark.read.parquet(path)
     return (
@@ -2796,7 +2827,7 @@ def f03_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, carries column stats for pushdown; the filter below
     shows in the scan's PushedFilters."""
     sup = _t(spark, sf_dir, "supplier")
-    path = _app_tmp(spark, "klss_orc_roundtrip_")
+    path = _scratch(spark, "f03")
     sup.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return (
@@ -2976,11 +3007,9 @@ def _events_stream_with_flush(spark: SparkSession, sf_dir: str, name: str) -> Da
 
     The staged directory is a pure function of the events table, so it
     is written once per session and corpus (rewriting the whole fact
-    table per call was most of the st-family's drain floor); the app id
-    in its name keeps concurrent processes off each other's files.
+    table per call was most of the st-family's drain floor).
     """
     import re
-    import shutil
 
     # Pin the timezone like sources/tables.py:load_table — timestamps
     # must be oracle-comparable from a bare driver session too.
@@ -2990,9 +3019,7 @@ def _events_stream_with_flush(spark: SparkSession, sf_dir: str, name: str) -> Da
     )
 
     def build() -> str:
-        tmp = _app_tmp(spark, "klss_evflush_") + f"_{corp}_src"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
+        tmp = _scratch(spark, f"evflush_{corp}")
         # Normalize through the catalog loader: it handles whichever
         # timestamp encoding the generated parquet carries (NANOS-as-
         # long or native micros) and always yields an LTZ ``ts``.
@@ -3009,14 +3036,10 @@ def _events_stream_with_flush(spark: SparkSession, sf_dir: str, name: str) -> Da
         return tmp
 
     tmp = _derived(spark, sf_dir, "evflush", "events", build)
-    # Another process's _sweep_stale_tmp removes dirs untouched for an
-    # hour: touch ours on every use, and rebuild it if it was swept.
-    if os.path.isdir(tmp):
-        try:
-            os.utime(tmp)
-        except OSError:
-            pass
-    else:
+    # The sweep removes roots untouched for an hour: refresh ours on
+    # every use, and rebuild the memo dir if it was swept.
+    _scratch_root(spark)
+    if not os.path.isdir(tmp):
         tmp = build()
 
     return (
@@ -3079,14 +3102,8 @@ def st06_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     past every window so append mode emits them all.  The oracle
     recomputes exactly that row set in SQL — hash-equality pins the
     drop rule, not just row counts."""
-    import os
-    import shutil
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tmp = os.path.join(tempfile.gettempdir(), "klss_st06_src")
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
+    tmp = _scratch(spark, "st06")
     ev = _t(spark, sf_dir, "events")
     _write_single_parquet(
         ev.filter(F.col("event_id") % 2 == 0), os.path.join(tmp, "b1")
@@ -3190,15 +3207,12 @@ def st08_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batched and survives foreachBatch's replay-on-failure
     contract — which is why the batch ranked-window oracle can
     hash-match it exactly."""
-    import os
     import shutil
-    import tempfile
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tmp = os.path.join(tempfile.gettempdir(), "klss_st08_src")
-    tgt = os.path.join(tempfile.gettempdir(), "klss_st08_tbl")
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(tgt, ignore_errors=True)
+    base = _scratch(spark, "st08")
+    tmp = os.path.join(base, "src")
+    tgt = os.path.join(base, "tbl")
     os.makedirs(tmp)
     ev = _t(spark, sf_dir, "events")
     for b in range(4):
@@ -3246,12 +3260,7 @@ def st08_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .load(f"{tmp}/b*")
     )
-    q = (
-        raw.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
+    _drain(raw.writeStream.foreachBatch(merge_batch))
     snap = spark.read.parquet(tgt)
     return snap.select(
         "user_id",
@@ -3344,7 +3353,7 @@ def i04_line_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(
         docs.filter(F.col("doc_id") % 10 == 0).select(F.lit("").alias("value"))
     )
-    path = _app_tmp(spark, "klss_i04_lines_")
+    path = _scratch(spark, "i04")
     lines.write.mode("overwrite").text(path)
     raw = spark.read.text(path)
     return build_line_pipeline(
@@ -3373,7 +3382,7 @@ def i05_concat_json_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").cast("string"),
         F.lit(",5]"),
     )
-    path = _app_tmp(spark, "klss_i05_concat_")
+    path = _scratch(spark, "i05")
     ev.select(blob.alias("value")).write.mode("overwrite").text(path)
     return read_concatenated_json(spark, path).orderBy("value")
 
@@ -3389,10 +3398,7 @@ def i06_json_seq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver-side fixture loop); the parsed rollup must hash-match
     the direct aggregate, proving zero records lost, duplicated, or
     torn at separator boundaries."""
-    import shutil
-
-    path = _app_tmp(spark, "klss_i06_jsonseq_")
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_scratch(spark, "i06"), "seq")
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 97 == 0)
     payload = ev.select(
@@ -3430,12 +3436,7 @@ def f23_max_records_per_file(
     ``input_file_name()`` and asserts the file count, the per-file
     cap, and zero lost rows against the closed-form expectation the
     oracle states from the row count alone."""
-    import os
-    import shutil
-    import tempfile
-
-    path = os.path.join(tempfile.gettempdir(), "klss_f23_maxrec")
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_scratch(spark, "f23"), "maxrec")
 
     sub = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 7 == 0
@@ -3818,14 +3819,9 @@ def f07_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a handful of right-sized files; the compacted table must carry
     exactly the original rows.  Returns per-flag checksums over the
     COMPACTED files — hash-matched against the pristine table."""
-    import os
-    import shutil
-    import tempfile
-
     li = _t(spark, sf_dir, "lineitem")
-    base = os.path.join(tempfile.gettempdir(), "klss_f07")
+    base = _scratch(spark, "f07")
     frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
-    shutil.rmtree(base, ignore_errors=True)
     li.repartition(64).write.parquet(frag)
     fragmented = spark.read.parquet(frag)
     n_small = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
@@ -4026,15 +4022,9 @@ def q55_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
     filters, so non-matching year directories are never read.  The
     code asserts the injection; the oracle recomputes from the
     unpartitioned table."""
-    import os
-    import shutil
-    import tempfile
-
     orders = _t(spark, sf_dir, "orders")
-    base = os.path.join(tempfile.gettempdir(), "klss_q55")
-    dimp = os.path.join(tempfile.gettempdir(), "klss_q55_dim")
-    shutil.rmtree(base, ignore_errors=True)
-    shutil.rmtree(dimp, ignore_errors=True)
+    tmp = _scratch(spark, "q55")
+    base, dimp = os.path.join(tmp, "fact"), os.path.join(tmp, "dim")
     orders.withColumn("o_year", F.year("o_orderdate")).write.partitionBy(
         "o_year"
     ).parquet(base)
@@ -4185,12 +4175,7 @@ def f09_jsonlines_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     inference — an extra full scan at 100 TB), and re-flattened; the
     result must hash-match the same aggregate computed straight from
     the tables, proving complex-type serialization is lossless."""
-    import os
-    import shutil
-    import tempfile
-
-    base = os.path.join(tempfile.gettempdir(), "klss_f09")
-    shutil.rmtree(base, ignore_errors=True)
+    base = os.path.join(_scratch(spark, "f09"), "json")
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     nested = (
@@ -4264,10 +4249,6 @@ def k01_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     must hash-match the same aggregate computed directly on the events
     table, proving the transport neither lost, duplicated, nor altered
     a single record."""
-    import os
-    import shutil
-    import tempfile
-
     from kinesis_log_streamer_spark.sources.kinesis_source import (
         DirKinesisClient,
         KinesisDataSource,
@@ -4275,8 +4256,7 @@ def k01_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ep = os.path.join(tempfile.gettempdir(), "klss_k01_stream")
-    shutil.rmtree(ep, ignore_errors=True)
+    ep = _scratch(spark, "k01")
 
     # A third of the table proves the transport at a third of the
     # drain cost — the contract (no loss, no dup, no alteration) is
@@ -4386,12 +4366,7 @@ def f08_malformed_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     jsonstreamer.go:44-45 → i05).  The oracle reads the same file
     with DuckDB's ignore_errors and must agree on the surviving rows;
     the corrupt count is pinned by the row arithmetic."""
-    import os
-    import shutil
-    import tempfile
-
-    base = os.path.join(tempfile.gettempdir(), "klss_f08")
-    shutil.rmtree(base, ignore_errors=True)
+    base = os.path.join(_scratch(spark, "f08"), "csv")
     li = (
         _t(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") < 300)
@@ -4501,17 +4476,11 @@ def st09_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     process ONLY the new files — zero re-emission of phase-1 batches.
     The final rollup sums the partial-count log; any reprocessing
     would double-count and break the hash against the batch oracle."""
-    import os
-    import shutil
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tmp = os.path.join(tempfile.gettempdir(), "klss_st09_src")
-    hold = os.path.join(tempfile.gettempdir(), "klss_st09_hold")
-    ckpt = os.path.join(tempfile.gettempdir(), "klss_st09_ckpt")
-    outp = os.path.join(tempfile.gettempdir(), "klss_st09_out")
-    for d in (tmp, hold, ckpt, outp):
-        shutil.rmtree(d, ignore_errors=True)
+    base = _scratch(spark, "st09")
+    tmp, hold, ckpt, outp = (
+        os.path.join(base, d) for d in ("src", "hold", "ckpt", "out")
+    )
     os.makedirs(tmp)
     os.makedirs(hold)
     os.makedirs(outp)
@@ -4538,17 +4507,14 @@ def st09_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def drain() -> None:
-        q = (
+        _drain(
             spark.readStream.schema(_EVENTS_TS_SCHEMA)
             .format("parquet")
             .option("maxFilesPerTrigger", "1")
             .load(f"{tmp}/b*")
             .writeStream.foreachBatch(append_partial)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(600)
 
     drain()  # phase 1: sees b0, b1 only
     for p, s in zip(later, staged):
@@ -4599,14 +4565,8 @@ def m04_binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 of each file's bytes must equal the md5 DuckDB computes from
     the source text.  At 100 TB this scan is how image/audio shards
     enter the lakehouse (pointer-and-payload, one row per object)."""
-    import os
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 64)
-    base = os.path.join(tempfile.gettempdir(), "klss_m04")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = _scratch(spark, "m04")
     for r in docs.select("doc_id", "text").collect():
         with open(os.path.join(base, f"{r.doc_id:06d}.bin"), "wb") as f:
             f.write(r.text.encode("utf-8"))
@@ -4811,12 +4771,7 @@ def f10_corrupt_json_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corrupt rows are constructed, not found — so the DuckDB
     oracle knows exactly which ids fail parsing and checks both
     populations."""
-    import os
-    import shutil
-    import tempfile
-
-    base = os.path.join(tempfile.gettempdir(), "klss_f10")
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch(spark, "f10")
     cust = _t(spark, sf_dir, "customer")
     line = F.to_json(F.struct("c_custkey", "c_acctbal", "c_mktsegment"))
     lines = cust.select(
@@ -4985,12 +4940,7 @@ def f11_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer, parallelism across files, which is why this engine
     treats multiline CSV as an ingest format to normalize into
     parquet, never a query-time format."""
-    import os
-    import shutil
-    import tempfile
-
-    base = os.path.join(tempfile.gettempdir(), "klss_f11")
-    shutil.rmtree(base, ignore_errors=True)
+    base = os.path.join(_scratch(spark, "f11"), "csv")
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 500)
     tricky = F.concat(
         F.col("c_mktsegment"),
@@ -5119,11 +5069,8 @@ def f12_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     → aggregate.  XML is the interchange surface log shippers still
     emit; entity escaping (&, <, quotes in names) must survive the
     round trip for the hash to match the parquet-side oracle."""
-    import os
-    import tempfile
-
     sup = _t(spark, sf_dir, "supplier")
-    path = os.path.join(tempfile.gettempdir(), "klss_xml_roundtrip")
+    path = _scratch(spark, "f12")
     (
         sup.select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
         .write.mode("overwrite")
@@ -5191,14 +5138,7 @@ def q65_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {}
-    for k, v in tuned.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with _conf(spark, tuned):
         li = _t(spark, sf_dir, "lineitem")
         part = _t(spark, sf_dir, "part").filter(F.col("p_size") >= 44)
         out = (
@@ -5220,12 +5160,6 @@ def q65_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "fact scan"
             )
         return out
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def u06_arrow_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5517,15 +5451,9 @@ def p04_stream_progress_metrics(
     during the drain.  This is p03's Observation pattern applied to
     the streaming engine: metrics collected as a side effect of the
     run, cross-checked in-code, then oracle-gated as exact counts."""
-    import os
-    import shutil
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _t(spark, sf_dir, "events")
-    tmp = os.path.join(tempfile.gettempdir(), "klss_p04_src")
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
+    tmp = _scratch(spark, "p04")
     # 4 single-file micro-batches so the progress log has real
     # per-batch structure, not one monolithic entry.
     for i in range(4):
@@ -5543,16 +5471,13 @@ def p04_stream_progress_metrics(
         F.count(F.lit(1)).alias("n")
     )
     spark.catalog.dropTempView("p04_out")
-    q = (
+    q = _drain(
         counted.writeStream.format("memory")
         .queryName("p04_out")
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(600)
-    # recentProgress is synchronous with batch completion: after
-    # awaitTermination every batch's numInputRows is present.
+    # recentProgress is synchronous with batch completion: after the
+    # drain every batch's numInputRows is present.
     total_in = sum(
         int(p["numInputRows"]) for p in q.recentProgress
     )
@@ -5680,11 +5605,8 @@ def f14_gzip_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB.  The oracle aggregates the original parquet, so codec,
     JSON serialization, and timestamp formatting must all round-trip
     losslessly."""
-    import os
-    import tempfile
-
     orders = _t(spark, sf_dir, "orders")
-    path = os.path.join(tempfile.gettempdir(), "klss_gzip_jsonl")
+    path = _scratch(spark, "f14")
     (
         orders.select(
             "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
@@ -5893,17 +5815,12 @@ def f15_dynamic_partition_overwrite(
     partition-pruned; the oracle applies the same restatement rule
     to the original table, so both the overwrite's surgical scope
     AND the untouched remainder are hash-checked."""
-    import os
-    import shutil
-    import tempfile
-
     from kinesis_log_streamer_spark.sources.sinks import (
         write_events_by_date,
     )
 
     ev = _t(spark, sf_dir, "events")
-    path = os.path.join(tempfile.gettempdir(), "klss_f15_events")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch(spark, "f15")
     write_events_by_date(ev, path)
     target = "2024-01-10"
     restated = (
@@ -5911,16 +5828,10 @@ def f15_dynamic_partition_overwrite(
         .filter(F.col("event_date") == target)
         .withColumn("value", F.col("value") * 2)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with _conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         restated.write.mode("overwrite").partitionBy(
             "event_date"
         ).parquet(path)
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev
-        )
     back = spark.read.parquet(path)
     return (
         back.groupBy("event_date")
@@ -5940,14 +5851,9 @@ def st11_stream_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed aggregation.  Offsets are tracked per source; the
     drained result must equal batch SQL over the undivided table —
     proving the union neither drops nor double-reads either leg."""
-    import os
-    import shutil
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _t(spark, sf_dir, "events")
-    base = os.path.join(tempfile.gettempdir(), "klss_st11_src")
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch(spark, "st11")
     for leg in ("even", "odd"):
         os.makedirs(os.path.join(base, leg))
     _write_single_parquet(
@@ -6134,13 +6040,8 @@ def f16_multiline_json_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``multiLine=true``, which parses the whole file as one value and
     explodes the array into rows.  Oracle aggregates the original
     parquet."""
-    import os
-    import shutil
-    import tempfile
-
     nation = _t(spark, sf_dir, "nation")
-    path = os.path.join(tempfile.gettempdir(), "klss_f16_json_array")
-    shutil.rmtree(path, ignore_errors=True)
+    path = os.path.join(_scratch(spark, "f16"), "json_array")
     (
         nation.agg(
             F.to_json(
@@ -6179,10 +6080,6 @@ def k02_kinesis_checkpoint_resume(
     log would double-count otherwise and break the oracle hash).
     This is the strongest evidence the Python Data Source's offset
     API is implemented correctly, not just its happy-path read."""
-    import os
-    import shutil
-    import tempfile
-
     from kinesis_log_streamer_spark.sources.kinesis_source import (
         DirKinesisClient,
         KinesisDataSource,
@@ -6192,11 +6089,10 @@ def k02_kinesis_checkpoint_resume(
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ep = os.path.join(tempfile.gettempdir(), "klss_k02_stream")
-    ckpt = os.path.join(tempfile.gettempdir(), "klss_k02_ckpt")
-    outp = os.path.join(tempfile.gettempdir(), "klss_k02_out")
-    for d in (ep, ckpt, outp):
-        shutil.rmtree(d, ignore_errors=True)
+    base = _scratch(spark, "k02")
+    ep, ckpt, outp = (
+        os.path.join(base, d) for d in ("stream", "ckpt", "out")
+    )
     os.makedirs(outp)
 
     ev = _t(spark, sf_dir, "events")
@@ -6234,16 +6130,13 @@ def k02_kinesis_checkpoint_resume(
         )
 
     def drain() -> None:
-        q = (
+        _drain(
             spark.readStream.format("kinesis_py")
             .option("endpoint", f"dir:{ep}")
             .load()
             .writeStream.foreachBatch(append_partial)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(600)
 
     sink.write_batch(payload(0).coalesce(2), epoch_id=0)
     drain()  # phase 1
@@ -6637,11 +6530,8 @@ def f17_failfast_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     strict read must be lossless (hash-matched here); on corrupt
     input it must raise, not quarantine (pinned by
     tests/test_round3_ext.py, a query can't return an error)."""
-    import os
-    import tempfile
-
     sup = _t(spark, sf_dir, "supplier")
-    path = os.path.join(tempfile.gettempdir(), "klss_f17_json")
+    path = _scratch(spark, "f17")
     (
         sup.select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
         .write.mode("overwrite")
@@ -6857,13 +6747,8 @@ def f18_path_glob_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet leaves load regardless of depth.  The oracle
     aggregates the original table — any decoy leaking into the scan
     or any missed nested shard breaks the hash."""
-    import os
-    import shutil
-    import tempfile
-
     sup = _t(spark, sf_dir, "supplier")
-    base = os.path.join(tempfile.gettempdir(), "klss_f18_tree")
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch(spark, "f18")
     for i, sub in enumerate(("a", "a/deep", "b")):
         d = os.path.join(base, sub)
         os.makedirs(d, exist_ok=True)
@@ -7266,15 +7151,11 @@ def f19_parquet_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec proves the lake can mix codecs file-by-file (each parquet
     footer self-describes), which is how fleets migrate codecs
     in place.  Output: one row per codec, all value columns equal."""
-    import os
-    import tempfile
-
     sup = _t(spark, sf_dir, "supplier")
+    base = _scratch(spark, "f19")
     rows = []
     for codec in ("lz4", "snappy", "zstd"):
-        path = os.path.join(
-            tempfile.gettempdir(), f"klss_f19_{codec}"
-        )
+        path = os.path.join(base, codec)
         (
             sup.write.mode("overwrite")
             .option("compression", codec)
@@ -7359,16 +7240,9 @@ def st12_file_sink_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     input rows — partial/uncommitted files are invisible by
     construction.  This is the mechanism production streaming lakes
     rely on before table formats."""
-    import os
-    import shutil
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = os.path.join(tempfile.gettempdir(), "klss_st12_src")
-    out = os.path.join(tempfile.gettempdir(), "klss_st12_out")
-    ckpt = os.path.join(tempfile.gettempdir(), "klss_st12_ckpt")
-    for d in (src, out, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    base = _scratch(spark, "st12")
+    src, out, ckpt = (os.path.join(base, d) for d in ("src", "out", "ckpt"))
     os.makedirs(src)
     ev = _t(spark, sf_dir, "events")
     for i in range(2):
@@ -7376,7 +7250,7 @@ def st12_file_sink_log(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("event_id") % 2 == i),
             os.path.join(src, f"p{i}.parquet"),
         )
-    q = (
+    _drain(
         spark.readStream.schema(_EVENTS_TS_SCHEMA)
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
@@ -7384,10 +7258,7 @@ def st12_file_sink_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(600)
     assert os.path.isdir(os.path.join(out, "_spark_metadata"))
     back = spark.read.parquet(out)
     return (
@@ -7522,16 +7393,10 @@ def f20_wholetext_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     individual .txt files, read back whole, and length-accounted.
     Newlines inside a document must survive (they would become row
     splits under the default mode)."""
-    import os
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 100 == 0
     )
-    base = os.path.join(tempfile.gettempdir(), "klss_f20_files")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = _scratch(spark, "f20")
     for r in docs.select("doc_id", "text").collect():  # bounded: n/100
         with open(
             os.path.join(base, f"doc_{r['doc_id']:06d}.txt", ),
@@ -7598,9 +7463,7 @@ def q89_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("col_name") == "Statistics")
     if stats.count() != 1:
         raise RuntimeError("ANALYZE produced no catalog statistics")
-    prev = spark.conf.get("spark.sql.cbo.enabled")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try:
+    with _conf(spark, {"spark.sql.cbo.enabled": "true"}):
         out = (
             sup.join(
                 spark.table("klss_q89_nation"),
@@ -7619,8 +7482,6 @@ def q89_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "expected the analyzed dim broadcast under CBO"
             )
         return out
-    finally:
-        spark.conf.set("spark.sql.cbo.enabled", prev)
 
 
 def l13_errorlog_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8257,13 +8118,9 @@ def f21_nested_schema_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between reading a 2-column sliver and deserializing
     every struct; the code raises if pruning regressed, and the
     values hash-match an oracle computed from the flat base table."""
-    import os
     import re
-    import shutil
-    import tempfile
 
-    base = os.path.join(tempfile.gettempdir(), "klss_f21")
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch(spark, "f21")
     cust = _t(spark, sf_dir, "customer")
     nested = cust.select(
         "c_custkey",
@@ -8776,10 +8633,6 @@ def k03_kinesis_reshard_discovery(
     DISCOVER the new shards and read them from the start — k02's
     resume contract extended to a changing shard set, which is what
     production Kinesis consumers actually face."""
-    import os
-    import shutil
-    import tempfile
-
     from kinesis_log_streamer_spark.sources.kinesis_source import (
         DirKinesisClient,
         KinesisDataSource,
@@ -8789,11 +8642,10 @@ def k03_kinesis_reshard_discovery(
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ep = os.path.join(tempfile.gettempdir(), "klss_k03_stream")
-    ckpt = os.path.join(tempfile.gettempdir(), "klss_k03_ckpt")
-    outp = os.path.join(tempfile.gettempdir(), "klss_k03_out")
-    for d in (ep, ckpt, outp):
-        shutil.rmtree(d, ignore_errors=True)
+    base = _scratch(spark, "k03")
+    ep, ckpt, outp = (
+        os.path.join(base, d) for d in ("stream", "ckpt", "out")
+    )
     os.makedirs(outp)
 
     ev = _t(spark, sf_dir, "events")
@@ -8828,16 +8680,13 @@ def k03_kinesis_reshard_discovery(
         )
 
     def drain() -> None:
-        q = (
+        _drain(
             spark.readStream.format("kinesis_py")
             .option("endpoint", f"dir:{ep}")
             .load()
             .writeStream.foreachBatch(append_partial)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(600)
 
     sink2 = KinesisSink(
         "k03", client_factory=lambda: DirKinesisClient(ep, num_shards=2)
@@ -8873,10 +8722,6 @@ def k04_at_most_once_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the throttled records, or raises instead of dropping.
     ``n_events == n_distinct`` per group additionally pins
     no-duplication inside the surviving set."""
-    import os
-    import shutil
-    import tempfile
-
     from kinesis_log_streamer_spark.sources.kinesis_source import (
         KinesisDataSource,
         ThrottlingDirKinesisClient,
@@ -8884,8 +8729,7 @@ def k04_at_most_once_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ep = os.path.join(tempfile.gettempdir(), "klss_k04_stream")
-    shutil.rmtree(ep, ignore_errors=True)
+    ep = _scratch(spark, "k04")
 
     payload = _t(spark, sf_dir, "events").filter(
         F.col("event_id") % 5 == 0
@@ -8940,17 +8784,12 @@ def k05_python_datasource_writer(
     rolled up; the hash match proves the writer neither lost,
     duplicated, nor altered a record, and that hash-routing landed
     every record in exactly one shard."""
-    import os
-    import shutil
-    import tempfile
-
     from kinesis_log_streamer_spark.sources.kinesis_source import (
         KinesisDataSource,
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ep = os.path.join(tempfile.gettempdir(), "klss_k05_stream")
-    shutil.rmtree(ep, ignore_errors=True)
+    ep = _scratch(spark, "k05")
 
     payload = _t(spark, sf_dir, "events").filter(
         F.col("event_id") % 23 == 0
@@ -9007,14 +8846,9 @@ def s15_ivf_index_persist(
     Scale: the index build is the d13 broadcast assignment; queries
     touch 1/16 of the corpus (their cell), and the rerank is a
     per-query rank window."""
-    import os
-    import shutil
-    import tempfile
-
     from kinesis_log_streamer_spark.functions.vector import cosine_sim
 
-    idx_path = os.path.join(tempfile.gettempdir(), "klss_s15_index")
-    shutil.rmtree(idx_path, ignore_errors=True)
+    idx_path = _scratch(spark, "s15")
 
     emb = _t(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 2 == 0).select(
@@ -9159,12 +8993,8 @@ def f22_ignore_corrupt_files(
     (the 'BUILDING' segment's file), so the oracle knows exactly
     which rows vanish."""
     import glob
-    import os
-    import shutil
-    import tempfile
 
-    base = os.path.join(tempfile.gettempdir(), "klss_f22")
-    shutil.rmtree(base, ignore_errors=True)
+    base = os.path.join(_scratch(spark, "f22"), "parts")
     cust = _t(spark, sf_dir, "customer")
     (
         cust.select("c_custkey", "c_acctbal", "c_mktsegment")
@@ -9177,9 +9007,7 @@ def f22_ignore_corrupt_files(
     ):
         with open(f, "wb") as fh:
             fh.write(b"not a parquet file")
-    prev = spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false")
-    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
-    try:
+    with _conf(spark, {"spark.sql.files.ignoreCorruptFiles": "true"}):
         # Materialize INSIDE the conf window: the driver re-collects
         # the returned DataFrame after this function restores the
         # conf, and the scan must not re-run with the flag off.
@@ -9193,8 +9021,6 @@ def f22_ignore_corrupt_files(
             .orderBy("c_mktsegment")
             .collect()
         )
-    finally:
-        spark.conf.set("spark.sql.files.ignoreCorruptFiles", prev)
     return spark.createDataFrame(
         rows, "c_mktsegment string, n long, bal double"
     ).orderBy("c_mktsegment")
@@ -9662,14 +9488,8 @@ def st14_chained_window_rollup(
     in append mode; the sentinel's own far-future bucket is cut by
     the driver-known max timestamp.  Final counts/sums must match
     the batch 6-hour aggregate."""
-    import os
-    import shutil
-    import tempfile
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tmp = os.path.join(tempfile.gettempdir(), "klss_st14_src")
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
+    tmp = _scratch(spark, "st14")
     ev = _t(spark, sf_dir, "events")
     _write_single_parquet(ev, os.path.join(tmp, "b1"))
     max_us = ev.agg(F.max(F.unix_micros("ts"))).first()[0]
@@ -9736,14 +9556,10 @@ def st15_state_across_restarts(
 
     Scale: per-key state is two scalars in the state-store
     partitions; the same shape holds at any key cardinality."""
-    import os
     import shutil
-    import tempfile
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Per-invocation dir (st16/i07 pattern, r6): a fixed /tmp path let
-    # concurrent runs rmtree each other's checkpoints mid-drain.
-    base = tempfile.mkdtemp(prefix="klss_st15_")
+    base = _scratch(spark, "st15")
     indir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
     outp = os.path.join(base, "out")
@@ -9771,16 +9587,13 @@ def st15_state_across_restarts(
             .load(indir)
         )
         out = running_totals_with_state(stream)
-        q = (
+        _drain(
             out.writeStream.foreachBatch(
                 lambda df, _id: df.write.mode("append").parquet(outp)
             )
             .option("checkpointLocation", ckpt)
             .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(600)
 
     for p in range(3):
         drain_phase(p)
@@ -9790,8 +9603,8 @@ def st15_state_across_restarts(
         .select("key", "phase", "running_n", "running_sum")
         .orderBy("key", "phase")
     )
-    # Materialize before dropping the tempdir (the driver re-collects
-    # the returned frame after this function exits — st16's pattern).
+    # Materialize before dropping the dir (the driver re-collects the
+    # returned frame after this function exits).
     rows = result.collect()
     shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
@@ -9822,9 +9635,7 @@ def st16_transform_with_state(
 
     Scale: per-key state is two scalars in RocksDB/state-store
     partitions; shape holds at any key cardinality."""
-    import os
     import shutil
-    import tempfile
 
     from kinesis_log_streamer_spark.streaming.stateful import (
         running_totals_transform_with_state,
@@ -9833,7 +9644,7 @@ def st16_transform_with_state(
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = tempfile.mkdtemp(prefix="klss_st16_")
+    base = _scratch(spark, "st16")
     indir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
     outp = os.path.join(base, "out")
@@ -9862,28 +9673,21 @@ def st16_transform_with_state(
             .format("parquet")
             .load(indir)
         )
-        q = (
+        _drain(
             op(stream)
             .writeStream.foreachBatch(
                 lambda df, _id: df.write.mode("append").parquet(outp)
             )
             .option("checkpointLocation", ckpt)
             .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(600)
 
     # 8 state-store tasks instead of 32 for a 30-key state space —
     # same per-batch-overhead cut as _drain_stream_to_table / st18
     # (the prefix totals are per-key sums, partition-count-invariant).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         for p in range(2):
             drain_phase(p)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     result = (
         spark.read.parquet(outp)
@@ -10030,9 +9834,7 @@ def q126_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed — which is the right split at any scale."""
     orders = _t(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("klss_q126_orders")
-    prev = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with _conf(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -10049,8 +9851,6 @@ def q126_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 def q127_generator_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10584,17 +10384,9 @@ def i07_stdin_spool_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the spool stage is the CLI driver's stdin tail — inherently
     single-stream (one pipe) and O(chunk) memory; everything after the
     landing dir is ordinary distributed scan."""
-    import os
-    import tempfile
-
     from kinesis_log_streamer_spark.streaming.stdin_spool import StdinSpooler
 
-    # Per-invocation tempdir: a fixed path let concurrent runs
-    # (selfcheck vs pytest vs bench) rmtree each other's landing
-    # files mid-scan (r5 ADVICE).  Stale dirs from crashed runs are
-    # swept opportunistically; live dirs are unique so never shared.
-    _sweep_stale_tmp("klss_i07_")
-    base = tempfile.mkdtemp(prefix="klss_i07_")
+    base = _scratch(spark, "i07")
     src = os.path.join(base, "src")
     landing = os.path.join(base, "landing")
     os.makedirs(landing)
@@ -11084,11 +10876,9 @@ def q133_file_metadata_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ``_metadata`` is populated by the scan itself (no extra
     I/O); the audit is one aggregation on the partition key."""
-    import os
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="klss_q133_")
+    base = _scratch(spark, "q133")
     out = os.path.join(base, "ev")
     ev = _t(spark, sf_dir, "events").select(
         "event_id", F.to_date("ts").alias("event_date"), "value"
@@ -11251,13 +11041,11 @@ def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     `state_ok` gate.  Env gate: if this Spark build lacks the
     statestore format, the drained sink rows stand in (documented
     fallback, st16 pattern) — the reconciliation contract is
-    identical.  Per-invocation mkdtemp checkpoint (st15 precedent).
+    identical.  The checkpoint is removed before returning.
 
     Scale: state-reader scans are per-partition parallel reads of the
     HDFS state store; the reconcile is a 5-row broadcast join."""
-    import os
     import shutil
-    import tempfile
 
     from kinesis_log_streamer_spark.streaming.pipeline import (
         read_events_stream,
@@ -11265,28 +11053,16 @@ def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = tempfile.mkdtemp(prefix="klss-st17-ckpt-")
+    ckpt = _scratch(spark, "st17")
     name = "st17_out"
     spark.catalog.dropTempView(name)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
+    with _conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        _drain(
             agg.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        # ADVICE r7 low #3: a False return means TIMEOUT with the query
-        # still running — reading + rmtree-ing the checkpoint under it
-        # races the store; stop and fail loudly instead.
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("st17: availableNow drain timed out (600s)")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         state = (
             spark.read.format("statestore")
@@ -11622,16 +11398,14 @@ def st18_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
     provider drain (same reconciliation contract, st16 pattern, gated
     on the specific CLASS_NOT_FOUND/instantiate error); a build
     without the statestore reader falls back to the memory sink
-    (st17's DATA_SOURCE_NOT_FOUND gate).  Restores the provider conf
-    in a finally so later queries see the session default.
+    (st17's DATA_SOURCE_NOT_FOUND gate).  The provider conf is set only
+    inside a ``_conf`` window, so later queries see the session's own.
 
     Scale: RocksDB state scans are per-partition parallel reads; the
     reconcile is a bounded broadcast join (distinct event types).
     Reference parity: the reference has no stateful surface (it is an
     ingest pipe, linestreamer.go); this is analytics-layer breadth."""
-    import os
     import shutil
-    import tempfile
 
     from kinesis_log_streamer_spark.streaming.pipeline import (
         read_events_stream,
@@ -11641,81 +11415,68 @@ def st18_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id") % 3 == 0
     )
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = tempfile.mkdtemp(prefix="klss-st18-ckpt-")
+    ckpt = _scratch(spark, "st18")
     name = "st18_out"
     spark.catalog.dropTempView(name)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     provider_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev_provider = spark.conf.get(provider_key)
-    except Exception:
-        prev_provider = None
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
+    rocksdb = {
+        "spark.sql.shuffle.partitions": "8",
+        provider_key: "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
-    )
+    }
 
-    def _drain() -> None:
-        q = (
+    def drain() -> None:
+        _drain(
             agg.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("st18: availableNow drain timed out (600s)")
 
     try:
-        try:
-            _drain()
-        except Exception as exc:  # noqa: BLE001
-            # Env gate: only a missing/unloadable RocksDB provider
-            # falls back to the default provider — anything else
-            # (a real drain failure) stays loud.
-            msg = str(exc)
-            if not (
-                "RocksDB" in msg
-                and (
-                    "ClassNotFound" in msg
-                    or "cannot be instantiated" in msg
-                    or "CANNOT_LOAD_STATE_STORE" in msg
+        with _conf(spark, rocksdb):
+            try:
+                drain()
+            except Exception as exc:  # noqa: BLE001
+                # Env gate: only a missing/unloadable RocksDB provider
+                # falls back to the default provider — anything else
+                # (a real drain failure) stays loud.
+                msg = str(exc)
+                if not (
+                    "RocksDB" in msg
+                    and (
+                        "ClassNotFound" in msg
+                        or "cannot be instantiated" in msg
+                        or "CANNOT_LOAD_STATE_STORE" in msg
+                    )
+                ):
+                    raise
+                spark.conf.unset(provider_key)
+                shutil.rmtree(ckpt, ignore_errors=True)
+                os.makedirs(ckpt, exist_ok=True)
+                drain()
+            try:
+                state = (
+                    spark.read.format("statestore")
+                    .load(ckpt)
+                    .select(
+                        F.col("key.event_type").alias("event_type"),
+                        F.col("value.count").alias("state_n"),
+                    )
                 )
-            ):
-                raise
-            spark.conf.unset(provider_key)
-            shutil.rmtree(ckpt, ignore_errors=True)
-            os.makedirs(ckpt, exist_ok=True)
-            _drain()
-        try:
-            state = (
-                spark.read.format("statestore")
-                .load(ckpt)
-                .select(
-                    F.col("key.event_type").alias("event_type"),
-                    F.col("value.count").alias("state_n"),
-                )
-            )
-            state_rows = [(r.event_type, r.state_n) for r in state.collect()]
-        except AnalysisException as exc:
-            msg = str(exc).upper()
-            if not (
-                "DATA_SOURCE_NOT_FOUND" in msg or "FAILED TO FIND" in msg
-            ):
-                raise
-            state_rows = [
-                (r.event_type, r.n) for r in spark.table(name).collect()
-            ]
+                state_rows = [
+                    (r.event_type, r.state_n) for r in state.collect()
+                ]
+            except AnalysisException as exc:
+                msg = str(exc).upper()
+                if not (
+                    "DATA_SOURCE_NOT_FOUND" in msg or "FAILED TO FIND" in msg
+                ):
+                    raise
+                state_rows = [
+                    (r.event_type, r.n) for r in spark.table(name).collect()
+                ]
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is not None:
-            spark.conf.set(provider_key, prev_provider)
-        else:
-            spark.conf.unset(provider_key)
         shutil.rmtree(ckpt, ignore_errors=True)
     state_df = spark.createDataFrame(state_rows, "event_type string, state_n long")
     batch = (
@@ -11763,9 +11524,7 @@ def st19_state_ttl_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-key state is three scalars; TTL eviction is the
     mechanism that BOUNDS total state at high key cardinality."""
-    import os
     import shutil
-    import tempfile
 
     from kinesis_log_streamer_spark.streaming.stateful import (
         running_totals_transform_with_state_ttl,
@@ -11774,7 +11533,7 @@ def st19_state_ttl_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = tempfile.mkdtemp(prefix="klss_st19_")
+    base = _scratch(spark, "st19")
     indir = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
     outp = os.path.join(base, "out")
@@ -11804,31 +11563,22 @@ def st19_state_ttl_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .format("parquet")
             .load(indir)
         )
-        q = (
+        _drain(
             op(stream, ttl_ms)
             .writeStream.foreachBatch(
                 lambda df, _id: df.write.mode("append").parquet(outp)
             )
             .option("checkpointLocation", ckpt)
             .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("st19: availableNow drain timed out (600s)")
 
     # 8 state-store tasks instead of 32 for a 30-key state space —
     # st16/st18's per-batch-overhead cut; per-key prefix sums are
     # partition-count-invariant.  Measured round 9: st19 was the most
     # expensive headline query (9.4s median) at 32 state partitions.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         for p in range(2):
             drain_phase(p)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     result = (
         spark.read.parquet(outp)
@@ -12436,13 +12186,9 @@ def l20_ingest_rollup_pipeline(
     distributed scan → codegen JSON parse → partial-agg rollup.
     Chunk size 4096 ≪ the reference's 64 KiB keeps ~1 carry per chunk
     live in the gate without i07's per-record-file torture cost."""
-    import os
-    import tempfile
-
     from kinesis_log_streamer_spark.streaming.stdin_spool import StdinSpooler
 
-    _sweep_stale_tmp("klss_l20_")
-    base = tempfile.mkdtemp(prefix="klss_l20_")
+    base = _scratch(spark, "l20")
     src = os.path.join(base, "src")
     landing = os.path.join(base, "landing")
     os.makedirs(landing)
@@ -12507,14 +12253,10 @@ def l21_errorlog_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: spool = one pipe (O(chunk) memory); the analytics leg is
     scan → codegen regexp over the wrapped JSON → partial-agg rollup
     on |levels| × 1 groups."""
-    import os
-    import tempfile
-
     from kinesis_log_streamer_spark.operators import transforms as T
     from kinesis_log_streamer_spark.streaming.stdin_spool import StdinSpooler
 
-    _sweep_stale_tmp("klss_l21_")
-    base = tempfile.mkdtemp(prefix="klss_l21_")
+    base = _scratch(spark, "l21")
     src = os.path.join(base, "src")
     landing = os.path.join(base, "landing")
     os.makedirs(landing)
@@ -12907,16 +12649,12 @@ def i08_live_spool_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the spool is the single-stream CLI tail; the query side is
     the ordinary file-source micro-batch engine — the same pipeline
     shape that runs against a never-EOF Apache pipe in production."""
-    import os
-    import tempfile
-
     from kinesis_log_streamer_spark.streaming.stdin_spool import (
         StdinSpooler,
         drain_and_stop,
     )
 
-    _sweep_stale_tmp("klss_i08_")
-    base = tempfile.mkdtemp(prefix="klss_i08_")
+    base = _scratch(spark, "i08")
     src = os.path.join(base, "src")
     landing = os.path.join(base, "landing")
     ckpt = os.path.join(base, "ckpt")
@@ -13210,28 +12948,14 @@ def k08_aws_transport_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             server.stop()
     else:  # pragma: no cover - exercised only in leaner images
-        import os
-        import tempfile
+        import shutil
 
         from kinesis_log_streamer_spark.sources.kinesis_source import (
             DirKinesisClient,
         )
 
-        # Per-invocation dir keyed by applicationId + uuid (the
-        # l20/l21/i08 pattern) — a fixed shared name plus rmtree let
-        # two concurrent processes delete each other's live stream dir
-        # mid-read (ADVICE r13 low #3); the uuid also isolates reruns
-        # inside ONE application.  Stale copies from dead runs are
-        # age-swept; our own dir is dropped right after the drain.
-        import shutil
-        import uuid
-
-        _sweep_stale_tmp("klss_k08_stream_")
-        ep = os.path.join(
-            tempfile.gettempdir(),
-            "klss_k08_stream_"
-            f"{spark.sparkContext.applicationId}_{uuid.uuid4().hex[:8]}",
-        )
+        # Dropped right after the drain.
+        ep = _scratch(spark, "k08")
         sink = KinesisSink("k08", client_factory=lambda: DirKinesisClient(ep))
         sink.write_batch(payload.coalesce(2), epoch_id=0)
         raw = (
@@ -13367,21 +13091,13 @@ def k09_aws_throttled_put(spark: SparkSession, sf_dir: str) -> DataFrame:
             proxy.stop()
             server.stop()
     else:  # pragma: no cover - exercised only in leaner images
-        import os
         import shutil
-        import tempfile
-        import uuid
 
         from kinesis_log_streamer_spark.sources.kinesis_source import (
             ThrottlingDirKinesisClient,
         )
 
-        _sweep_stale_tmp("klss_k09_stream_")
-        ep = os.path.join(
-            tempfile.gettempdir(),
-            "klss_k09_stream_"
-            f"{spark.sparkContext.applicationId}_{uuid.uuid4().hex[:8]}",
-        )
+        ep = _scratch(spark, "k09")
         sink = KinesisSink(
             "k09",
             client_factory=lambda: ThrottlingDirKinesisClient(

@@ -20,8 +20,10 @@ Writes PLANS.md at the repo root when run with no query filter.
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
+import shutil
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -87,28 +89,7 @@ def _leg_st18(spark, sf_dir):
     )
 
 
-# Temp dirs created by audit legs/drains, removed at process exit
-# (ADVICE r9 low #3: repeated audits accumulated mkdtemp litter).
-_TMPDIRS: list = []
-
-
-def _tmpdir(prefix: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    if not _TMPDIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(t, ignore_errors=True) for t in _TMPDIRS]
-        )
-    _TMPDIRS.append(d)
-    return d
-
-
 def _leg_st19(spark, sf_dir):
-    import os
-
     from pyspark.sql import functions as F
 
     from kinesis_log_streamer_spark.sources.tables import load_table
@@ -116,7 +97,7 @@ def _leg_st19(spark, sf_dir):
         running_totals_with_state_ttl,
     )
 
-    indir = os.path.join(_tmpdir("klss-audit-st19-"), "in")
+    indir = os.path.join(Q._scratch(spark, "audit-st19"), "in")
     load_table(spark, sf_dir, "events").filter(
         F.col("event_id") % 13 == 0
     ).select(
@@ -154,20 +135,13 @@ def stream_plan(spark, sdf, mode: str) -> str:
     import uuid
 
     name = "audit_" + uuid.uuid4().hex[:8]
-    q = (
+    q = Q._drain(
         sdf.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
-        .option(
-            "checkpointLocation",
-            _tmpdir("klss-audit-ckpt-"),
-        )
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", Q._scratch(spark, "audit-ckpt"))
     )
     try:
-        if not q.awaitTermination(600):
-            raise RuntimeError("audit drain timed out")
         return q._jsq.explainInternal(False)
     finally:
         q.stop()
@@ -178,6 +152,9 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:] or sorted(Q.REGISTRY)
     spark = get_spark()
+    # Every fixture and audit dir of this run lives under the
+    # application's scratch root; drop it at exit.
+    atexit.register(shutil.rmtree, Q._scratch_root(spark), True)
     lines = [
         "# PLANS — physical-plan audit (generated by scripts/explain_audit.py)",
         "",

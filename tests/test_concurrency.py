@@ -52,3 +52,30 @@ class TestConcurrentQueries:
             assert not errors, errors
             for n in NAMES:
                 assert results[n] == serial[n], n
+
+
+class TestConcurrentScratchDirs:
+    def test_st09_in_two_threads_matches_serial(self, spark):
+        """Two threads draining st09 at once must each get their own
+        source, checkpoint and output dirs."""
+        name = "st09_checkpoint_resume"
+        serial = [tuple(r) for r in Q.REGISTRY[name](spark, SF).collect()]
+        results: list[list] = [None, None]
+        errors: list[Exception] = []
+
+        def run(i: int) -> None:
+            try:
+                results[i] = [
+                    tuple(r) for r in Q.REGISTRY[name](spark, SF).collect()
+                ]
+            except Exception as e:  # noqa: BLE001
+                errors.append(e)
+
+        threads = [threading.Thread(target=run, args=(i,)) for i in (0, 1)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=900)
+            assert not t.is_alive()
+        assert not errors, errors
+        assert results == [serial, serial]

@@ -160,21 +160,21 @@ class TestZonemapPrune:
 
 
 class TestSweepStaleTmp:
-    """The shared stale-fixture sweeper (ADVICE r11: guarded getmtime,
-    evflush cleanup) — pinned so the race tolerance can't regress."""
+    """The scratch-root sweeper (guarded getmtime) — pinned so the race
+    tolerance can't regress."""
 
     def test_sweeps_old_keeps_fresh(self, tmp_path, monkeypatch):
         import os
         import tempfile
 
         monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-        old = tmp_path / "klss_t12_old"
-        new = tmp_path / "klss_t12_new"
+        old = tmp_path / "klss-t12-old"
+        new = tmp_path / "klss-t12-new"
         old.mkdir()
         new.mkdir()
         past = os.path.getmtime(str(old)) - 7200
         os.utime(str(old), (past, past))
-        Q._sweep_stale_tmp("klss_t12_")
+        Q._sweep_stale_tmp()
         assert not old.exists() and new.exists()
 
     def test_vanished_path_between_glob_and_stat_is_tolerated(
@@ -184,12 +184,12 @@ class TestSweepStaleTmp:
         import tempfile
 
         monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-        gone = tmp_path / "klss_t12_gone"
+        gone = tmp_path / "klss-t12-gone"
         gone.mkdir()
         real_getmtime = os.path.getmtime
 
         def racy_getmtime(p):
-            if "klss_t12_gone" in str(p):
+            if "klss-t12-gone" in str(p):
                 # simulate the concurrent process rmtree-ing between
                 # the sweeper's glob and its stat
                 import shutil
@@ -200,7 +200,7 @@ class TestSweepStaleTmp:
 
         monkeypatch.setattr(os.path, "getmtime", racy_getmtime)
         # must not raise
-        Q._sweep_stale_tmp("klss_t12_")
+        Q._sweep_stale_tmp()
 
 
 def test_bench_headline_names_all_registered():
@@ -220,7 +220,7 @@ def test_bench_headline_names_all_registered():
 class TestConcurrentSpoolPipelines:
     """End-to-end pin of the ADVICE r11 race fix: two spool-staging
     pipelines running simultaneously must neither interfere (their
-    fixture dirs are per-invocation mkdtemps; the shared sweeper
+    fixture dirs are per-thread ``_scratch`` dirs; the shared sweeper
     tolerates vanished paths) nor change their answers vs serial."""
 
     NAMES = ["l20_ingest_rollup_pipeline", "l21_errorlog_pipeline"]

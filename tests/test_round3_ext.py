@@ -835,15 +835,18 @@ class TestIncrementalDedup:
 
 
 class TestFileSinkLog:
-    def test_metadata_log_gates_read(self, spark, tmp_path):
+    def test_metadata_log_gates_read(self, spark, tmp_path, monkeypatch):
         """An orphan parquet file dropped into the sink directory
         OUTSIDE the commit log must be invisible to readers."""
         import os
 
-        out = Q.st12_file_sink_log(spark, SF)
-        base = os.path.join(
-            __import__("tempfile").gettempdir(), "klss_st12_out"
+        made = {}
+        real = Q._scratch
+        monkeypatch.setattr(
+            Q, "_scratch", lambda sp, n: made.setdefault(n, real(sp, n))
         )
+        out = Q.st12_file_sink_log(spark, SF)
+        base = os.path.join(made["st12"], "out")
         n_before = spark.read.parquet(base).count()
         # plant an orphan (valid parquet, not in _spark_metadata)
         Q._t(spark, SF, "events").limit(7).write.parquet(

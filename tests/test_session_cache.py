@@ -151,21 +151,29 @@ class TestPerApplicationFixtures:
                 shutil.rmtree(base, ignore_errors=True)
 
     @pytest.mark.parametrize(
-        "name,prefix",
+        "name,scratch",
         [
-            ("f01_csv_roundtrip", "klss_csv_roundtrip_"),
-            ("f02_partitioned_parquet_roundtrip", "klss_f02_events_"),
-            ("f03_orc_roundtrip", "klss_orc_roundtrip_"),
-            ("f06_schema_evolution", "klss_f06_evo_"),
-            ("i04_line_pipeline_roundtrip", "klss_i04_lines_"),
-            ("i05_concat_json_decode", "klss_i05_concat_"),
-            ("i06_json_seq_roundtrip", "klss_i06_jsonseq_"),
+            ("f01_csv_roundtrip", "f01"),
+            ("f02_partitioned_parquet_roundtrip", "f02"),
+            ("f03_orc_roundtrip", "f03"),
+            ("f06_schema_evolution", "f06"),
+            ("i04_line_pipeline_roundtrip", "i04"),
+            ("i05_concat_json_decode", "i05"),
+            ("i06_json_seq_roundtrip", "i06"),
         ],
     )
-    def test_fixture_dir_names_the_application(self, spark, sf_dir, name, prefix):
+    def test_fixture_dir_names_the_application(
+        self, spark, sf_dir, name, scratch, monkeypatch
+    ):
         from kinesis_log_streamer_spark.plans import queries as Q
 
+        made = {}
+        real = Q._scratch
+        monkeypatch.setattr(
+            Q, "_scratch", lambda sp, n: made.setdefault(n, real(sp, n))
+        )
         assert Q.REGISTRY[name](spark, sf_dir).collect()
-        path = Q._app_tmp(spark, prefix)
+        path = made[scratch]
         assert os.path.isdir(path)
-        assert spark.sparkContext.applicationId in os.path.basename(path)
+        root = os.path.basename(os.path.dirname(path))
+        assert root == "klss-" + spark.sparkContext.applicationId

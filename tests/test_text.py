@@ -109,16 +109,15 @@ class TestTfidf:
 
 
 class TestUnigramEntropy:
-    def test_known_values(self, spark):
+    def test_known_values(self, spark, tmp_path):
         from kinesis_log_streamer_spark.plans.queries import (
             t16_unigram_entropy,
         )
 
         # uniform over 4 tokens -> H = 2; constant -> H = 0
         import os
-        import tempfile
 
-        base = tempfile.mkdtemp(prefix="klss_t16_")
+        base = str(tmp_path)
         df = spark.createDataFrame(
             [
                 (0, "a b c d", "en", "s", 7),
@@ -136,15 +135,14 @@ class TestUnigramEntropy:
 
 
 class TestContainmentPairs:
-    def test_subset_doc_fully_contained(self, spark):
+    def test_subset_doc_fully_contained(self, spark, tmp_path):
         from kinesis_log_streamer_spark.plans.queries import (
             d07_containment_pairs,
         )
 
         import os
-        import tempfile
 
-        base = tempfile.mkdtemp(prefix="klss_d07_")
+        base = str(tmp_path)
         # doc 10's tokens are a strict subset of doc 20's; doc 30 disjoint.
         df = spark.createDataFrame(
             [
