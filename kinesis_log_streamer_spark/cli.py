@@ -17,10 +17,15 @@ stdin is read in 64 KiB chunks and spooled to a landing dir
 (``streaming/stdin_spool.py``), a Structured Streaming query tails it
 → transform/enrich → partition-key stamp → Kinesis sink (or
 ``--dry-run`` → records to stdout), and EOF stops the query once the
-last landed record is committed.  JSON records are enriched and
-serialized by the stdin splitter itself (``json_source.render_record``),
-so Spark only stamps their key.  A malformed JSON value exits 1 after
-the records before it were sent (jsonstreamer.go:44-45).
+last landed record is committed.  The partition key is the host
+identity, resolved once on the driver (``hostid.get_host_id``; one key
+per process, linestreamer.go:102).  JSON records are split, enriched
+and serialized by the stdin splitter itself
+(``json_source.split_json_values``), so Spark only stamps their key.
+A malformed JSON value — a value that does not decode, or a separator
+other than space, tab, LF or CR — exits 1 as soon as it is read, after
+the records before it were sent, even while stdin stays open
+(jsonstreamer.go:44-45).
 
 Record order: every record is sent exactly once, and the records of
 one landed file (one stdin read) stay contiguous and in input order.
@@ -89,18 +94,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     # Accepted and ignored: every invocation streams.
     p.add_argument("--streaming", action="store_true", help=argparse.SUPPRESS)
-    p.add_argument(
-        "--host-identity",
-        choices=["driver", "per-executor"],
-        default="driver",
-        help=(
-            "where E1's host-identity cascade runs: 'driver' stamps one "
-            "key for the whole job (deterministic, the reference's "
-            "single-host deployment); 'per-executor' runs the cascade "
-            "inside each executor so every producing host keeps its own "
-            "partition key on a real cluster (linestreamer.go:102)"
-        ),
-    )
     p.add_argument("stream_name", nargs="*")
     return p
 
@@ -131,22 +124,19 @@ def build_records(args, values, entries, output_format):
     """Input rows (column ``value``) → sink records ``(data,
     partitionKey)``, on a batch or streaming DataFrame alike.
 
-    JSON values arrive sink-ready from the splitter (the ``-I`` merge
-    and serialization are done, ``json_source.render_record``), so they
-    only get the partition key; lines take the line pipeline."""
-    from kinesis_log_streamer_spark.streaming.pipeline import (
-        build_line_pipeline,
-        stamp_identity,
-    )
+    The partition key is the host identity, resolved once here on the
+    driver.  JSON values arrive sink-ready from the splitter (the
+    ``-I`` merge and serialization are done,
+    ``json_source.render_record``), so they only get the key; lines
+    take the line pipeline."""
+    from kinesis_log_streamer_spark.operators.transforms import to_sink_records
+    from kinesis_log_streamer_spark.streaming.pipeline import build_line_pipeline
 
-    per_exec = args.host_identity == "per-executor"
-    probe = not args.dry_run
-    host_id = None if per_exec else get_host_id(probe_network=probe)
+    host_id = get_host_id(probe_network=not args.dry_run)
     if args.format == "json":
-        return stamp_identity(values, host_id, per_exec, probe)
+        return to_sink_records(values, host_id)
     return build_line_pipeline(
-        values, output_format, args.output_key, entries, host_id,
-        per_executor_identity=per_exec, probe_network=probe,
+        values, output_format, args.output_key, entries, host_id=host_id
     )
 
 

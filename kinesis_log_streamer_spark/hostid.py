@@ -16,9 +16,10 @@ Computes a stable identity for the producing host via the reference's
 
 Unlike the reference (which panics, hostid.go:77), level 4 cannot fail,
 so the cascade always yields an identity.  The engine evaluates this
-once driver-side and injects it as a literal ``partitionKey`` column —
-deterministic and test-friendly; a per-executor variant would move the
-memoized lookup into a Pandas UDF.
+once driver-side and injects it as a literal ``partitionKey`` column:
+one key per process, as in the reference (linestreamer.go:102,
+jsonstreamer.go:66).  The session is ``local[N]``, so every executor
+runs on the driver's host.
 """
 
 from __future__ import annotations

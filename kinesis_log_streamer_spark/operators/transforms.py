@@ -3,7 +3,6 @@
 Reference behaviors reproduced (citations into /root/reference):
 
 * F1 empty-record filter        — linestreamer.go:86
-* F2 null-value filter          — jsonstreamer.go:48
 * T1 line passthrough           — linestreamer.go:89-90
 * T2 line→JSON wrap             — linestreamer.go:39-45,92-99 (default
                                   output key "LogEntry", main.go:68)
@@ -32,11 +31,6 @@ DEFAULT_OUTPUT_KEY = "LogEntry"  # main.go:68
 def filter_empty_lines(df: DataFrame, col: str = "value") -> DataFrame:
     """F1: drop zero-length lines (linestreamer.go:86)."""
     return df.filter(F.length(F.col(col)) > 0)
-
-
-def filter_null_values(df: DataFrame, col: str = "value") -> DataFrame:
-    """F2: skip top-level JSON nulls (jsonstreamer.go:48)."""
-    return df.filter(F.col(col).isNotNull() & (F.trim(F.col(col)) != F.lit("null")))
 
 
 def strip_cr(df: DataFrame, col: str = "value") -> DataFrame:
@@ -127,33 +121,3 @@ def to_sink_records(df: DataFrame, partition_key: str) -> DataFrame:
     (kinesis.PutRecordsRequestEntry — linestreamer.go:100-103)."""
     out = df if "data" in df.columns else df.select(F.col(df.columns[0]).alias("data"))
     return stamp_partition_key(out.select("data"), partition_key)
-
-
-def stamp_partition_key_per_executor(
-    df: DataFrame, probe_network: bool = False
-) -> DataFrame:
-    """E1 on a CLUSTER: each EXECUTOR stamps its own host identity.
-
-    The reference runs once per producing host, so every record of one
-    host shares a partition key (linestreamer.go:102); on a Spark
-    cluster the driver-side ``lit()`` default (deterministic,
-    test-friendly — SURVEY §7 risk 4) collapses that to one key for the
-    whole job.  This variant reproduces per-producing-host semantics:
-    the identity cascade runs inside each executor's Python worker
-    (memoized — ``hostid.get_host_id`` is ``lru_cache``d per process)
-    and is stamped Arrow-batch-wise via ``mapInPandas``, so the probe
-    cost is once per worker, not per row.
-    """
-    from kinesis_log_streamer_spark.hostid import get_host_id
-
-    out = df if "data" in df.columns else df.select(F.col(df.columns[0]).alias("data"))
-    out = out.select("data")
-
-    def stamp(batches):
-        hid = get_host_id(probe_network=probe_network)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["partitionKey"] = hid
-            yield pdf
-
-    return out.mapInPandas(stamp, schema="data string, partitionKey string")

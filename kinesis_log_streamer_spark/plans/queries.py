@@ -10373,8 +10373,9 @@ def i07_stdin_spool_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-5 C1 fix; `streaming/stdin_spool.py`): a concatenated-JSON
     byte stream is fed to ``StdinSpooler`` in 97-byte chunks — far
     smaller than most records, so nearly every record is split across
-    chunk boundaries and the incremental ``raw_decode`` carry
-    (jsonstreamer.go:34-49's loop) is exercised on every value.  The
+    chunk boundaries and the splitter's carry
+    (``json_source.split_json_values``, jsonstreamer.go:34-49's loop)
+    is exercised on every value.  The
     spooled landing files are then read back DISTRIBUTED
     (``spark.read.text``), parsed, and aggregated; the oracle computes
     the same rollup from the events table directly, so one torn,

@@ -1,32 +1,34 @@
 """Concatenated-JSON source (reference S3: jsonstreamer.go:34-81).
 
 The reference decodes one top-level JSON value at a time from the
-stream — objects, arrays, or scalars, separated by arbitrary
-whitespace *or nothing at all* — and stops at the first malformed
-value (jsonstreamer.go:40-46).
+stream — objects, arrays, or scalars, separated by whitespace *or
+nothing at all* — and stops at the first malformed value
+(jsonstreamer.go:40-46).
 
 Spark's JSON reader assumes JSON-lines (or one multiLine document), so
-true concatenated JSON needs a pre-splitter: we read whole files
-(``wholetext``) and split each into top-level values with an
-incremental ``json.JSONDecoder.raw_decode`` loop inside
-``mapInPandas`` — Arrow-batched, one Python pass per file, not per
-record. JSON-lines input short-circuits to the native text source.
+true concatenated JSON needs a pre-splitter.  There is one,
+:func:`split_json_values`: an incremental ``raw_decode`` loop over a
+buffer that may end mid-value.  The CLI's stdin spool
+(``streaming.stdin_spool.StdinSpooler``) calls it on every chunk and
+at EOF; :func:`split_concatenated_json` is one call over a whole
+string, and :func:`read_concatenated_json` runs that per file
+(``wholetext``) inside ``mapInPandas`` — Arrow-batched, one Python
+pass per file, not per record.
 
 Semantics reproduced:
 * one record per top-level value, any separation     (jsonstreamer.go:40-46)
+* only RFC 8259 whitespace (space, tab, LF, CR) separates values
 * top-level ``null`` skipped (F2)                    (jsonstreamer.go:48)
-* strict mode: stop at first malformed value, error  (jsonstreamer.go:44-45;
-  main.go:165-168); permissive mode keeps prior records and skips the
-  rest of that file (engine extension, SURVEY §7 risk 2)
+* stop at the first malformed value with an error, after the values
+  before it                                          (jsonstreamer.go:44-45;
+                                                      main.go:165-168)
 * non-finite numbers (``NaN``, ``Infinity``, ``1e400``) are malformed
   JSON (RFC 8259 §6), as in Go's decoder
 
-Both splitters — :func:`split_concatenated_json` (files, via
-:func:`read_concatenated_json`) and ``streaming.stdin_spool.
-StdinSpooler`` (the CLI's stdin) — turn each decoded value into its
-record text with :func:`render_record`.  Given the CLI's ``-I`` entry
-map the spooler renders the record SINK-READY (T3+T4,
-jsonstreamer.go:49-62), so Spark only stamps the partition key.
+Each value becomes its record text through :func:`render_record`.
+Given the CLI's ``-I`` entry map the splitter renders the record
+SINK-READY (T3+T4, jsonstreamer.go:49-62), so Spark only stamps the
+partition key.
 """
 
 from __future__ import annotations
@@ -37,11 +39,16 @@ from collections.abc import Iterator, Mapping
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class ConcatenatedJsonError(ValueError):
-    """Raised in strict mode when a malformed top-level value is hit."""
+    """A malformed top-level value: the split stops there.  ``records``
+    holds the records split before it, which are still sent
+    (jsonstreamer.go:44-45)."""
+
+    def __init__(self, message: str, records: list[str] | None = None):
+        super().__init__(message)
+        self.records = records or []
 
 
 _COMPACT = (",", ":")
@@ -55,6 +62,20 @@ _SURROGATE = re.compile("[\ud800-\udfff]")
 # backslashes before it): Python prints its hex digits in lower case,
 # Spark's JSON writer in upper case.
 _CONTROL_ESCAPE = re.compile(r"(?<!\\)((?:\\\\)*)\\u00([01][0-9a-f])")
+
+# RFC 8259 §2: the only whitespace allowed between values.
+_WHITESPACE = " \t\n\r"
+# What may follow a decoded bare number when more input could still
+# extend it: nothing ("1" then "0"), or the number's own characters
+# ("0." then "5").
+_NUMBER_TAIL = re.compile(r"[-+.eE0-9]*")
+# The text from a decode error to the buffer's end that more input
+# could still complete: a number's continuation (or nothing at all), a
+# literal's prefix, or a \u escape cut short (the error points at its
+# "u").
+_CUT_OFF = re.compile(
+    _NUMBER_TAIL.pattern + r"|t|tr|tru|f|fa|fal|fals|n|nu|nul|u[0-9a-fA-F]{0,4}"
+)
 
 
 def _utf16_order(key: str) -> bytes:
@@ -118,43 +139,80 @@ def render_record(
     return out
 
 
-def split_concatenated_json(text: str, strict: bool = True) -> list[str]:
-    """Split one concatenated-JSON string into record strings.
 
-    Mirrors Go's json.Decoder value loop; each value becomes its
-    compact JSON (:func:`render_record`).  Top-level nulls are
-    dropped (F2).  A malformed or non-finite value raises
-    :class:`ConcatenatedJsonError` in strict mode and ends the split in
-    permissive mode.
+
+def split_json_values(
+    buf: str, final: bool, entries: Mapping[str, str] | None
+) -> tuple[list[str], str]:
+    """Split the complete top-level JSON values off ``buf``: Go's
+    json.Decoder value loop (jsonstreamer.go:40-48), run on a buffer
+    that may end mid-value.
+
+    Returns the records — each non-null value rendered by
+    :func:`render_record` with ``entries``; a top-level ``null`` is no
+    record (F2) — and the unconsumed tail.  Values may be separated by
+    RFC 8259 whitespace (space, tab, LF, CR) or by nothing.
+
+    Unless ``final``, a value the buffer's end cuts off stays in the
+    tail for the next call: an unterminated string, a literal's or a
+    ``\\u`` escape's prefix, or a number (a bare number has no closing
+    token: "-10" read as "-1"|"0" must not give -1 and 0).  With
+    ``final`` the buffer's end terminates it.  Anything else that does
+    not decode — or a non-finite number, which RFC 8259 lacks — raises
+    :class:`ConcatenatedJsonError` at once, carrying the records split
+    before it.
     """
-    decoder = json.JSONDecoder()
+    decode = json.JSONDecoder().raw_decode
     out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        while i < n and text[i] in " \t\r\n":
+    i, n = 0, len(buf)
+    while True:
+        while i < n and buf[i] in _WHITESPACE:
             i += 1
-        if i >= n:
-            break
+        if i == n:
+            return out, ""
         try:
-            value, end = decoder.raw_decode(text, i)
-            record = None if value is None else render_record(value)
-        except ValueError as exc:
-            if strict:
+            value, end = decode(buf, i)
+        except json.JSONDecodeError as exc:
+            # Python reports an unterminated string at its opening
+            # quote, any other error at the text it stopped on.
+            cut = exc.msg.startswith("Unterminated string") or _CUT_OFF.fullmatch(
+                buf, exc.pos
+            )
+            if cut and not final:
+                return out, buf[i:]
+            message = (
+                f"trailing non-JSON input at EOF: {buf[i : i + 80]!r}"
+                if cut
+                else f"malformed JSON value at offset {i}: {exc}"
+            )
+            raise ConcatenatedJsonError(message, out) from exc
+        if (
+            not final
+            and type(value) in (int, float)
+            and _NUMBER_TAIL.fullmatch(buf, end)
+        ):
+            return out, buf[i:]
+        if value is not None:
+            try:
+                out.append(render_record(value, entries))
+            except ValueError as exc:
                 raise ConcatenatedJsonError(
-                    f"malformed JSON value at offset {i}: {exc}"
+                    f"JSON value rejected at offset {i}: {exc}", out
                 ) from exc
-            break
-        if record is not None:
-            out.append(record)
         i = end
-    return out
 
 
-def read_concatenated_json(
-    spark: SparkSession, path: str, strict: bool = True
-) -> DataFrame:
+def split_concatenated_json(text: str) -> list[str]:
+    """Split one whole concatenated-JSON string into compact record
+    strings (:func:`split_json_values` with the text's end as the
+    stream's end)."""
+    return split_json_values(text, True, None)[0]
+
+
+def read_concatenated_json(spark: SparkSession, path: str) -> DataFrame:
     """One row (column ``value``: the compact JSON string) per top-level
-    value across all files under ``path``.
+    value across all files under ``path``; a malformed value fails the
+    job.
 
     Scale: one task per file; each file is decoded in a single
     streaming pass. For 100 TB the landing format should be JSON-lines
@@ -167,19 +225,7 @@ def read_concatenated_json(
         for pdf in batches:
             vals: list[str] = []
             for txt in pdf["value"]:
-                vals.extend(split_concatenated_json(txt, strict=strict))
+                vals.extend(split_concatenated_json(txt))
             yield pd.DataFrame({"value": vals})
 
     return whole.mapInPandas(split_batches, schema="value string")
-
-
-def read_json_lines(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """JSON-lines fast path: native splittable source, full pushdown.
-
-    With ``schema`` → typed columns; without → keep the raw line for
-    passthrough fidelity (the reference never interprets values)."""
-    if schema:
-        return spark.read.schema(schema).json(path)
-    return spark.read.text(path).filter(F.length("value") > 0)

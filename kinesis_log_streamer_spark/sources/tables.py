@@ -108,9 +108,3 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     """Load several tables at once; defaults to the full catalog."""
     use = names or TABLES
     return {n: load_table(spark, sf_dir, n) for n in use}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register temp views so operators can be expressed in Spark SQL."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)

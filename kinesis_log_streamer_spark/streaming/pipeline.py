@@ -7,9 +7,10 @@ Entry points reproduced (SURVEY.md §3):
 3. line → JSON wrap with entries    (linestreamer.go:92-99, T2+T4)
 
 The CLI's JSON records land sink-ready: its stdin splitter
-(``StdinSpooler``) applies T3+T4 while decoding, as the reference does
-(jsonstreamer.go:42-62), so the CLI's Spark stage for entry point 2 is
-:func:`stamp_identity` alone.  :func:`build_json_pipeline` is the
+(``StdinSpooler`` → ``json_source.split_json_values``) applies T3+T4
+while decoding, as the reference does (jsonstreamer.go:42-62), so the
+CLI's Spark stage for entry point 2 is the E1 key stamp alone
+(``transforms.to_sink_records``).  :func:`build_json_pipeline` is the
 Spark-side form of the same merge, for values that arrive unenriched.
 
 Streaming semantics mapping:
@@ -22,10 +23,15 @@ Streaming semantics mapping:
   at start, for sources that do not grow.
 * bounded channel → a byte budget per micro-batch
   (``maxBytesPerTrigger``, ``cli.MAX_BYTES_PER_TRIGGER``) bounds one
-  batch's intake; the spool itself is not bounded.
-* per-host partition key ordering → constant partitionKey column; the
-  sink puts a micro-batch from the driver in partition order, so one
-  landed file's records stay together and in order.
+  batch's intake.  The spool itself is not bounded by the query: it
+  lands whatever stdin delivers, holding at most one chunk and one
+  partial record in memory, and stops at the first malformed JSON
+  value.
+* per-host partition key → one key per process, resolved once on the
+  driver (every executor of the ``local[N]`` session runs on the
+  driver's host) and stamped as a constant ``partitionKey`` column;
+  the sink puts a micro-batch from the driver in partition order, so
+  one landed file's records stay together and in order.
 """
 
 from __future__ import annotations
@@ -40,7 +46,6 @@ from kinesis_log_streamer_spark.operators.transforms import (
     enrich_json_objects,
     filter_empty_lines,
     line_passthrough,
-    stamp_partition_key_per_executor,
     strip_cr,
     to_sink_records,
     wrap_line_as_json,
@@ -53,63 +58,36 @@ def build_line_pipeline(
     output_key: str = "LogEntry",
     entries: Mapping[str, str] | None = None,
     host_id: str | None = None,
-    per_executor_identity: bool = False,
-    probe_network: bool = False,
 ) -> DataFrame:
     """Entry points 1 & 3: line records → sink records.
 
     ``output_format='string'`` → T1 passthrough;
-    ``'json'`` → T2 wrap + T4 enrichment.
+    ``'json'`` → T2 wrap + T4 enrichment.  E1 stamps ``host_id`` (the
+    driver's identity by default) as every record's partition key.
     Works identically on batch and streaming DataFrames (same logical
     plan; the micro-batch engine re-plans per trigger).
-
-    ``per_executor_identity=True`` stamps E1 inside each executor
-    (closer to the reference's one-key-per-producing-host semantics on
-    a real cluster, SURVEY §2.1 E1) instead of the driver-side
-    constant; ``host_id`` is ignored in that mode.  ``probe_network``
-    reaches the executor-side cascade too, so driver and per-executor
-    modes resolve identity through the SAME levels on a real run
-    (ADVICE r06: per-executor used to pin probe_network=False while
-    driver mode probed, letting the two modes disagree on one host).
     """
     clean = filter_empty_lines(strip_cr(lines))
     if output_format == "json":
         projected = wrap_line_as_json(clean, "value", output_key, entries)
     else:
         projected = line_passthrough(clean)
-    return stamp_identity(projected, host_id, per_executor_identity, probe_network)
-
-
-def stamp_identity(
-    records: DataFrame,
-    host_id: str | None = None,
-    per_executor_identity: bool = False,
-    probe_network: bool = False,
-) -> DataFrame:
-    """E1: records (``data`` or the first column) → sink records
-    ``(data, partitionKey)``; ``host_id`` or the driver's identity as a
-    constant, or each executor's own with ``per_executor_identity``."""
-    if per_executor_identity:
-        return stamp_partition_key_per_executor(records, probe_network)
-    return to_sink_records(records, host_id or get_host_id())
+    return to_sink_records(projected, host_id or get_host_id())
 
 
 def build_json_pipeline(
     values: DataFrame,
     entries: Mapping[str, str] | None = None,
     host_id: str | None = None,
-    per_executor_identity: bool = False,
-    probe_network: bool = False,
 ) -> DataFrame:
     """Entry point 2: JSON value records → enriched sink records
-    (F2 null skip + T4 objects-only enrichment + T3 re-serialize).
-    ``per_executor_identity`` / ``probe_network`` as in
-    :func:`build_line_pipeline`."""
+    (F2 null skip + T4 objects-only enrichment + T3 re-serialize), keyed
+    as in :func:`build_line_pipeline`."""
     nonnull = values.filter(values["value"].isNotNull()).filter(
         values["value"] != "null"
     )
     projected = enrich_json_objects(nonnull, "value", entries)
-    return stamp_identity(projected, host_id, per_executor_identity, probe_network)
+    return to_sink_records(projected, host_id or get_host_id())
 
 
 def run_stream(
@@ -153,19 +131,6 @@ def windowed_event_counts(
         events.withWatermark("ts", watermark)
         .groupBy(w, "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
-    )
-
-
-def sessionized_event_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Streaming session windows (gap-close semantics) per user."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
     )
 
 

@@ -8,10 +8,10 @@ records downstream through a bounded (cap-5) channel
 
 This module is the Spark-native equivalent of that loop: a spooler
 thread reads stdin chunk-by-chunk, extracts COMPLETE records (lines,
-or concatenated-JSON values via incremental ``raw_decode``), and
-lands each chunk's records as one atomically-renamed file in a
-landing directory.  JSON values given the CLI's ``-I`` entry map land
-sink-ready — merged and serialized once by
+or concatenated-JSON values via ``json_source.split_json_values``, the
+engine's one JSON splitter), and lands each chunk's records as one
+atomically-renamed file in a landing directory.  JSON values given the
+CLI's ``-I`` entry map land sink-ready — merged and serialized once by
 ``json_source.render_record``, as the reference does per value
 (jsonstreamer.go:42-62) — so the query only stamps the partition key.
 `spark.readStream.format("text")` tails the directory and the
@@ -26,12 +26,14 @@ listing taken after that file landed found nothing left to commit,
 and the query is stopped then — no idle window.
 
 Memory bound: one chunk + one partial record — never the full input.
+A malformed JSON value ends the spool as soon as it is read, after the
+values before it have landed (jsonstreamer.go:44-45); it is never
+carried while more input piles up behind it.
 """
 
 from __future__ import annotations
 
 import codecs
-import json
 import os
 import threading
 import uuid
@@ -39,7 +41,7 @@ from collections.abc import Mapping
 
 from kinesis_log_streamer_spark.sources.json_source import (
     ConcatenatedJsonError,
-    render_record,
+    split_json_values,
 )
 
 CHUNK_BYTES = 65536  # the reference's read size, linestreamer.go:34
@@ -52,13 +54,14 @@ class StdinSpooler:
     ``fmt='line'``  → records are LF-terminated lines (CR stripped by
     the downstream pipeline, not here — transform parity).
     ``fmt='json'``  → records are concatenated JSON values
-    (jsonstreamer.go:34-49): an incremental ``raw_decode`` peels
-    complete values off the carry buffer; each is landed as one line
-    of ``json_source.render_record(value, entries)``, so the landing
-    files are JSONL regardless of how values were whitespace-separated
-    on the wire.  With the CLI's ``-I`` map as ``entries`` (possibly
-    empty) each line is the sink-ready record; ``entries=None`` lands
-    plain compact JSON for a later enrichment stage.
+    (jsonstreamer.go:34-49): ``json_source.split_json_values`` splits
+    complete values off the carry buffer; each non-null one is landed
+    as one line of ``json_source.render_record(value, entries)``, so
+    the landing files are JSONL regardless of how values were
+    separated on the wire.  With the CLI's ``-I`` map as ``entries``
+    (possibly empty) each line is the sink-ready record;
+    ``entries=None`` lands plain compact JSON for a later enrichment
+    stage.
 
     Files are written to ``<dir>/.tmp-*`` then ``os.rename``d into
     place: the file streaming source lists only completed files, so a
@@ -84,7 +87,6 @@ class StdinSpooler:
         self._entries = entries
         self._seq = 0
         self._carry = ""
-        self._decoder = json.JSONDecoder()
         # Incremental UTF-8: a chunk boundary can split a multibyte
         # character (inevitable with fixed-size reads); decoding each
         # chunk independently would mangle both halves into U+FFFD.
@@ -108,56 +110,19 @@ class StdinSpooler:
         return complete.split("\n")
 
     def _take_json_values(self, final: bool = False) -> list[str]:
-        """Peel complete JSON values off the carry buffer — the
-        incremental twin of ``sources.json_source.
-        split_concatenated_json`` (jsonstreamer.go:34-49).  A value
-        split across chunks simply stays in the carry until its
-        closing token arrives.
-
-        Numbers are the one JSON type with no closing token: a bare
-        number reaching the END of the buffer may continue in the
-        next chunk ("-10" split at "-1"|"0" must not emit -1 and 0),
-        so it is deferred until more input arrives — or consumed at
-        EOF (``final=True``), where the stream's end terminates it,
-        exactly as Go's json.Decoder tokenizes a number.
-
-        The deferral must ALSO fire when the parse stopped mid-buffer
-        on a character that can only be a CONTINUATION of the number:
-        ``raw_decode`` matches the longest valid prefix, so "0.0"
-        split at "0."|"0" yields ``raw_decode("0.") == (0, 1)`` — one
-        char short of the buffer end — and consuming that prefix
-        would strand ".0" as garbage (hypothesis-found, round 6).
-
-        A value :func:`render_record` rejects (a non-finite number)
-        raises at once, after the values before it have landed — the
-        stop-at-first-bad-value rule of ``split_concatenated_json``."""
-        out: list[str] = []
-        number_cont = ".eE+-0123456789"
-        buf = self._carry.lstrip()
-        while buf:
-            try:
-                value, end = self._decoder.raw_decode(buf)
-            except ValueError:
-                break  # incomplete (or garbage — surfaced at EOF)
-            if (
-                not final
-                and isinstance(value, (int, float))
-                and not isinstance(value, bool)
-                and (end == len(buf) or buf[end] in number_cont)
-            ):
-                break  # possibly-unterminated trailing number
-            try:
-                record = render_record(value, self._entries)
-            except ValueError as exc:
-                self._land(out)
-                raise ConcatenatedJsonError(
-                    f"JSON value rejected: {exc}: {buf[:80]!r}"
-                ) from exc
-            if record is not None:  # a top-level null (F2)
-                out.append(record)
-            buf = buf[end:].lstrip()
-        self._carry = buf
-        return out
+        """Split the complete JSON values off the carry
+        (``json_source.split_json_values``); a value a chunk boundary
+        cuts off stays carried until the next chunk, or EOF
+        (``final``), completes it.  A malformed value raises at once,
+        after the values before it have landed."""
+        try:
+            records, self._carry = split_json_values(
+                self._carry, final, self._entries
+            )
+        except ConcatenatedJsonError as exc:
+            self._land(exc.records)
+            raise
+        return records
 
     # -- landing -----------------------------------------------------------
 
@@ -212,18 +177,12 @@ class StdinSpooler:
             self._land(take())
         # EOF: flush any partial UTF-8 sequence (renders U+FFFD, like
         # a truncated pipe would), then the trailing partial line is
-        # still a record (linestreamer.go:70-76); trailing partial
-        # JSON is an error in strict mode, matching
-        # split_concatenated_json.
+        # still a record (linestreamer.go:70-76); EOF terminates a
+        # trailing bare number, and any other partial JSON value is an
+        # error.
         self._carry += self._utf8.decode(b"", True)
         if self._fmt == "json":
-            # EOF terminates a trailing bare number — take it now
             self._land(self._take_json_values(final=True))
-            tail = self._carry.strip()
-            if tail:
-                raise ValueError(
-                    f"trailing non-JSON input at EOF: {tail[:80]!r}"
-                )
         elif self._carry:
             # Land whatever trailed — even whitespace-only: dropping
             # empties is the pipeline's F1 filter's call, not ours.

@@ -65,7 +65,7 @@ class TestConcatenatedJsonProperties:
                 sep = " "
             blob += sep + dumped
             parts.append(dumped)
-        got = split_concatenated_json(blob, strict=True)
+        got = split_concatenated_json(blob)
         want = [
             json.dumps(v, separators=(",", ":")) for v in values if v is not None
         ]
@@ -83,18 +83,11 @@ class TestConcatenatedJsonProperties:
 
         blob = " ".join(json.dumps(v) for v in values) + " !" + garbage
         try:
-            split_concatenated_json(blob, strict=True)
+            split_concatenated_json(blob)
             raised = False
         except ConcatenatedJsonError:
             raised = True
         assert raised  # '!' can never start a JSON value
-
-    @given(st.lists(json_values, max_size=5))
-    @settings(max_examples=100, deadline=None)
-    def test_permissive_mode_never_raises(self, values):
-        blob = " ".join(json.dumps(v) for v in values) + " !garbage"
-        got = split_concatenated_json(blob, strict=False)
-        assert len(got) == len([v for v in values if v is not None])
 
 
 records = st.lists(
@@ -361,14 +354,16 @@ class TestSpoolerProperties:
             _PieceStream(_chunked(raw, cuts)), str(d), fmt="json"
         )
         n = sp.run()
-        got = []
+        landed = []
         for f in sorted(os.listdir(d)):
             with open(os.path.join(d, f), encoding="utf-8") as fh:
-                got += [
-                    json.loads(line) for line in fh.read().splitlines()
-                ]
-        assert got == values
-        assert n == len(values)
+                landed += fh.read().splitlines()
+        nonnull = [v for v in values if v is not None]  # F2
+        assert [json.loads(line) for line in landed] == nonnull
+        assert n == len(nonnull)
+        # one splitter: the chunked spool lands exactly the records the
+        # whole-string split gives
+        assert landed == split_concatenated_json(blob)
 
 
 class TestUncompressedCodecProperties:

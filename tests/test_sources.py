@@ -3,7 +3,10 @@ the concatenated-JSON decoder (A4; jsonstreamer.go:40-62)."""
 
 from __future__ import annotations
 
+import ast
+import io
 import json
+import pathlib
 
 import pytest
 
@@ -14,6 +17,7 @@ from kinesis_log_streamer_spark.sources.json_source import (
     split_concatenated_json,
 )
 from kinesis_log_streamer_spark.sources.lines import read_lines
+from kinesis_log_streamer_spark.streaming.stdin_spool import StdinSpooler
 
 
 class TestSplitConcatenatedJson:
@@ -31,10 +35,6 @@ class TestSplitConcatenatedJson:
         with pytest.raises(ConcatenatedJsonError):
             split_concatenated_json('{"a":1} {bad} {"b":2}')
 
-    def test_permissive_keeps_prefix(self):
-        out = split_concatenated_json('{"a":1} {bad}', strict=False)
-        assert out == ['{"a":1}']
-
     def test_large_int_precision(self):
         # A4 caveat: Go decodes to float64 and loses precision above
         # 2^53; Python's json keeps ints exact — documented improvement.
@@ -43,6 +43,33 @@ class TestSplitConcatenatedJson:
 
     def test_empty_input(self):
         assert split_concatenated_json("  \n ") == []
+
+    def test_one_splitter_decodes_json(self):
+        # Every concatenated-JSON split in the package goes through one
+        # function: a second raw_decode loop could drift from it.
+        import kinesis_log_streamer_spark
+
+        root = pathlib.Path(kinesis_log_streamer_spark.__file__).parent
+        owners = set()
+        for path in sorted(root.rglob("*.py")):
+            tree = ast.parse(path.read_text(encoding="utf-8"))
+            parent = {
+                child: node
+                for node in ast.walk(tree)
+                for child in ast.iter_child_nodes(node)
+            }
+            for node in ast.walk(tree):
+                name = getattr(node, "attr", None) or getattr(node, "id", None)
+                if name not in ("raw_decode", "JSONDecoder"):
+                    continue
+                owner = parent.get(node)
+                while owner is not None and not isinstance(owner, ast.FunctionDef):
+                    owner = parent.get(owner)
+                owners.add(
+                    f"{path.relative_to(root)}:"
+                    f"{owner.name if owner else '<module>'}"
+                )
+        assert owners == {"sources/json_source.py:split_json_values"}
 
 
 class TestRenderRecord:
@@ -118,16 +145,30 @@ class TestRenderRecord:
             '{"n":1e400}',
             "NaN",
             "[1e400]",
+            # RFC 8259 whitespace is space, tab, LF and CR only
+            pytest.param('\x0c{"a":1}', id="sep-formfeed"),
+            pytest.param('\xa0{"a":1}', id="sep-nbsp"),
+            pytest.param('\x1c{"a":1}', id="sep-file-separator"),
+            pytest.param('\u2028{"a":1}', id="sep-line-separator"),
         ],
     )
     @pytest.mark.parametrize("entries", [None, {"Tag": "T"}])
-    def test_non_finite_numbers_are_malformed(self, text, entries):
+    def test_non_finite_numbers_are_malformed(self, tmp_path, text, entries):
         # RFC 8259 has no NaN/Infinity; the JVM round trip used to send
-        # {"n":"NaN"}, a number turned into a string
+        # {"n":"NaN"}, a number turned into a string.  Both entry points
+        # (a whole string, the CLI's chunked stdin) stop there, after
+        # the value before it.
+        blob = '{"ok":1} ' + text
         with pytest.raises(ConcatenatedJsonError):
-            split_concatenated_json('{"ok":1} ' + text)
-        got = split_concatenated_json('{"ok":1} ' + text, strict=False)
-        assert len(got) == 1  # permissive: prior records kept
+            split_concatenated_json(blob)
+        sp = StdinSpooler(
+            io.BytesIO(blob.encode("utf-8")), str(tmp_path), "json",
+            entries=entries,
+        )
+        with pytest.raises(ConcatenatedJsonError):
+            sp.run()
+        assert sp.n_records == 1
+        # (json.loads itself refuses the separators)
         with pytest.raises(ValueError):
             render_record(json.loads(text), entries)
 

@@ -556,39 +556,68 @@ def test_cli_streaming_json_garbage_exits_1(spark, capsys):
 
 @pytest.mark.parametrize("mode", ["driver", "per-executor"])
 def test_cli_streaming_host_identity_modes(spark, capsys, mode):
-    """E1 through `--streaming` in BOTH identity modes (VERDICT r05
-    item 5): every record carries a non-empty partition key, all
-    records of one producing host share one key (linestreamer.go:102
-    — on local[n] every executor IS the same host, so per-executor
-    mode also yields a single stable key), and the per-executor key
-    matches the cascade the executors actually ran."""
+    """E1: every record carries the driver's host identity as its
+    partition key, one key per process (linestreamer.go:102), and
+    ``--host-identity`` is gone: every executor of the local session
+    runs on the driver's host, so there is no other key to choose."""
     from kinesis_log_streamer_spark import cli
     from kinesis_log_streamer_spark.hostid import get_host_id
 
-    args = cli.build_parser().parse_args(
-        [
-            "--streaming", "--dry-run", "-f", "line",
-            "--host-identity", mode, "Stream",
-        ]
-    )
+    parser = cli.build_parser()
+    with pytest.raises(SystemExit) as exc:
+        parser.parse_args(["--host-identity", mode, "Stream"])
+    assert exc.value.code == 2
+    capsys.readouterr()
+
+    args = parser.parse_args(["--dry-run", "-f", "line", "Stream"])
     stream = ChunkedStream([b"alpha\nbe", b"ta\ngamma\n"])
     rc = cli.run_streaming(args, {}, "string", stream)
     assert rc == 0
     lines = capsys.readouterr().out.strip().splitlines()
     pairs = [line.split("\t", 1) for line in lines]
     assert sorted(p[1] for p in pairs) == ["alpha", "beta", "gamma"]
-    keys = {p[0] for p in pairs}
-    assert len(keys) == 1  # one producing host -> one stable key
-    key = keys.pop()
-    assert key
-    # local-mode executors share the driver's host: both modes resolve
-    # the same identity cascade (uuid tail aside, the cascade levels
-    # above uuid are deterministic per host)
-    expected = get_host_id(probe_network=False)
-    if not expected.startswith("uuid:"):
-        assert key == expected
-    else:
-        assert key.startswith("uuid:")
+    assert {p[0] for p in pairs} == {get_host_id(probe_network=False)}
+
+
+def test_malformed_json_on_open_pipe_fails_at_once(spark, tmp_path):
+    """A malformed value ends the spool as soon as it is read, with the
+    records before it landed, although stdin stays open and valid input
+    keeps coming behind it: it is never mistaken for a value that more
+    input could complete, so nothing stalls and the carry never grows
+    (jsonstreamer.go:44-45)."""
+    from kinesis_log_streamer_spark import cli
+
+    payload = b'{"a":1}\n{bad}\n' + b'{"b":2}\n' * 2000
+
+    def open_pipe():
+        r, w = os.pipe()
+        os.write(w, payload)  # fits the pipe buffer; w stays open
+        return os.fdopen(r, "rb"), w
+
+    stream, w = open_pipe()
+    try:
+        sp = StdinSpooler(stream, str(tmp_path), fmt="json", entries={})
+        sp.start_thread()
+        assert sp.done.wait(2.0)
+        assert isinstance(sp.error, ValueError)
+        assert "malformed JSON value" in str(sp.error)
+        landed = [
+            line
+            for f in sorted(os.listdir(tmp_path))
+            for line in (tmp_path / f).read_text().splitlines()
+        ]
+        assert landed == ['{"a":1}']
+    finally:
+        os.close(w)  # EOF first: a spool thread still reading then ends
+        stream.close()
+
+    stream, w = open_pipe()
+    try:
+        args = cli.build_parser().parse_args(["--dry-run", "-f", "json", "Stream"])
+        assert cli.run_streaming(args, {}, "json", stream) == 1
+    finally:
+        os.close(w)
+        stream.close()
 
 
 def test_json_float_split_after_decimal_point(tmp_path):

@@ -125,43 +125,3 @@ class TestSinkContract:
         )
         assert set(df.columns) == {"data", "partitionKey"}
         assert {r.partitionKey for r in df.collect()} == {"host-1"}
-
-
-class TestPerExecutorPartitionKey:
-    def test_each_partition_stamps_a_valid_host_identity(self, spark):
-        # SURVEY §7 risk 4: the per-executor variant runs the identity
-        # cascade inside the workers.  In local mode every worker is on
-        # one host, so all rows carry the same well-formed key.
-        df = TR.line_passthrough(_lines(spark, ["a", "b", "c"])).repartition(3)
-        rows = TR.stamp_partition_key_per_executor(df).collect()
-        assert len(rows) == 3
-        keys = {r.partitionKey for r in rows}
-        assert len(keys) == 1
-        key = keys.pop()
-        assert key.split(":", 1)[0] in ("ip-address", "uuid", "arn")
-
-    def test_probe_network_reaches_per_executor_stamp(
-        self, spark, monkeypatch
-    ):
-        # ADVICE r06: per-executor mode used to hard-pin
-        # probe_network=False while driver mode probed on real runs —
-        # the builders must forward the flag into the executor stamp.
-        import kinesis_log_streamer_spark.streaming.pipeline as P
-
-        seen = []
-
-        def fake(df, probe_network=False):
-            seen.append(probe_network)
-            return df
-
-        monkeypatch.setattr(P, "stamp_partition_key_per_executor", fake)
-        lines = _lines(spark, ["a"])
-        P.build_line_pipeline(
-            lines, per_executor_identity=True, probe_network=True
-        )
-        P.build_json_pipeline(
-            spark.createDataFrame([('{"a":1}',)], "value string"),
-            per_executor_identity=True,
-            probe_network=True,
-        )
-        assert seen == [True, True]
