@@ -4785,9 +4785,9 @@ WINDOW w AS (PARTITION BY key ORDER BY phase)
 ORDER BY key, phase
 """
 
-# st16: st15's prefix-aggregate shape on the transformWithState slice
+# st16: st15's prefix-aggregate shape on a second slice
 # (event_id % 11, 2 phases, key = user_id % 40) — only true if the
-# typed ValueState survived the restart between the two drains.
+# running-totals state survived the restart between the two drains.
 ORACLES["st16_transform_with_state"] = """
 WITH e AS (
     SELECT CAST(user_id % 40 AS INT) AS key,

@@ -43,7 +43,6 @@ import os
 from contextlib import contextmanager
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
@@ -4238,52 +4237,36 @@ def q59_null_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(50)
 
 
-def k01_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's NORTH-STAR transport inside the correctness
-    gate: every event JSON-wrapped and shipped through the
-    PutRecords-contract sink (`streaming/kinesis_sink.py:KinesisSink`,
-    500-record/5 MiB sub-batching, hash-routed shards via
-    `DirKinesisClient`), then read BACK through the `kinesis_py`
-    streaming source (`sources/kinesis_source.py`, Python Data Source
-    API, per-shard offsets), JSON-parsed, and rolled up — the rollup
-    must hash-match the same aggregate computed directly on the events
-    table, proving the transport neither lost, duplicated, nor altered
-    a single record."""
+def _kinesis_payload(spark: SparkSession, sf_dir: str, mod: int) -> DataFrame:
+    """The k-family sink records: the ``event_id % mod == 0`` events as
+    (data = JSON of event_id/event_type/value, partitionKey =
+    ``host-<user_id % 8>``).  Also registers the ``kinesis_py`` data
+    source every k-query reads (or writes) the stream through."""
     from kinesis_log_streamer_spark.sources.kinesis_source import (
-        DirKinesisClient,
         KinesisDataSource,
     )
-    from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ep = _scratch(spark, "k01")
-
-    # A third of the table proves the transport at a third of the
-    # drain cost — the contract (no loss, no dup, no alteration) is
-    # row-for-row regardless of volume.
-    payload = _t(spark, sf_dir, "events").filter(
-        F.col("event_id") % 3 == 0
-    ).select(
-        F.to_json(
-            F.struct("event_id", "event_type", "value")
-        ).alias("data"),
-        F.concat(F.lit("host-"), (F.col("user_id") % 8).cast("string")).alias(
-            "partitionKey"
-        ),
-    )
-    sink = KinesisSink("k01", client_factory=lambda: DirKinesisClient(ep))
-    # Two tasks feed the sink's one collect job (the sink fills its
-    # PutRecords chunks across partitions, on the driver).
-    sink.write_batch(payload.coalesce(2), epoch_id=0)
-
     spark.dataSource.register(KinesisDataSource)
-    raw = (
-        spark.readStream.format("kinesis_py")
-        .option("endpoint", f"dir:{ep}")
-        .load()
+    return (
+        _t(spark, sf_dir, "events")
+        .filter(F.col("event_id") % mod == 0)
+        .select(
+            F.to_json(F.struct("event_id", "event_type", "value")).alias(
+                "data"
+            ),
+            F.concat(
+                F.lit("host-"), (F.col("user_id") % 8).cast("string")
+            ).alias("partitionKey"),
+        )
     )
-    _drain_stream_to_table(raw, "k01_out", mode="append")
-    parsed = spark.table("k01_out").select(
+
+
+def _event_type_rollup(records: DataFrame) -> DataFrame:
+    """Parse the read-back ``data`` JSON and roll it up by event_type:
+    n_events, n_distinct event ids (n_events > n_distinct means a
+    duplicate) and the rounded value sum."""
+    parsed = records.select(
         F.from_json(
             "data", "event_id long, event_type string, value double"
         ).alias("r")
@@ -4297,6 +4280,41 @@ def k01_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
+
+
+def k01_kinesis_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's NORTH-STAR transport inside the correctness
+    gate: every event JSON-wrapped and shipped through the
+    PutRecords-contract sink (`streaming/kinesis_sink.py:KinesisSink`,
+    500-record/5 MiB sub-batching, hash-routed shards via
+    `DirKinesisClient`), then read BACK through the `kinesis_py`
+    streaming source (`sources/kinesis_source.py`, Python Data Source
+    API, per-shard offsets), JSON-parsed, and rolled up — the rollup
+    must hash-match the same aggregate computed directly on the events
+    table, proving the transport neither lost, duplicated, nor altered
+    a single record."""
+    from kinesis_log_streamer_spark.sources.kinesis_source import (
+        DirKinesisClient,
+    )
+    from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
+
+    # A third of the table proves the transport at a third of the
+    # drain cost — the contract (no loss, no dup, no alteration) is
+    # row-for-row regardless of volume.
+    payload = _kinesis_payload(spark, sf_dir, 3)
+    ep = _scratch(spark, "k01")
+    sink = KinesisSink("k01", client_factory=lambda: DirKinesisClient(ep))
+    # Two tasks feed the sink's one collect job (the sink fills its
+    # PutRecords chunks across partitions, on the driver).
+    sink.write_batch(payload.coalesce(2), epoch_id=0)
+
+    raw = (
+        spark.readStream.format("kinesis_py")
+        .option("endpoint", f"dir:{ep}")
+        .load()
+    )
+    _drain_stream_to_table(raw, "k01_out", mode="append")
+    return _event_type_rollup(spark.table("k01_out"))
 
 
 def t15_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8723,24 +8741,12 @@ def k04_at_most_once_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``n_events == n_distinct`` per group additionally pins
     no-duplication inside the surviving set."""
     from kinesis_log_streamer_spark.sources.kinesis_source import (
-        KinesisDataSource,
         ThrottlingDirKinesisClient,
     )
     from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    payload = _kinesis_payload(spark, sf_dir, 5)
     ep = _scratch(spark, "k04")
-
-    payload = _t(spark, sf_dir, "events").filter(
-        F.col("event_id") % 5 == 0
-    ).select(
-        F.to_json(
-            F.struct("event_id", "event_type", "value")
-        ).alias("data"),
-        F.concat(F.lit("host-"), (F.col("user_id") % 8).cast("string")).alias(
-            "partitionKey"
-        ),
-    )
     sink = KinesisSink(
         "k04",
         client_factory=lambda: ThrottlingDirKinesisClient(ep, reject_mod=10),
@@ -8748,27 +8754,13 @@ def k04_at_most_once_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink.write_batch(payload.coalesce(2), epoch_id=0)
 
-    spark.dataSource.register(KinesisDataSource)
     raw = (
         spark.readStream.format("kinesis_py")
         .option("endpoint", f"dir:{ep}")
         .load()
     )
     _drain_stream_to_table(raw, "k04_out", mode="append")
-    parsed = spark.table("k04_out").select(
-        F.from_json(
-            "data", "event_id long, event_type string, value double"
-        ).alias("r")
-    )
-    return (
-        parsed.groupBy(F.col("r.event_type").alias("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("r.event_id").alias("n_distinct"),
-            F.round(F.sum("r.value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _event_type_rollup(spark.table("k04_out"))
 
 
 def k05_python_datasource_writer(
@@ -8784,24 +8776,8 @@ def k05_python_datasource_writer(
     rolled up; the hash match proves the writer neither lost,
     duplicated, nor altered a record, and that hash-routing landed
     every record in exactly one shard."""
-    from kinesis_log_streamer_spark.sources.kinesis_source import (
-        KinesisDataSource,
-    )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    payload = _kinesis_payload(spark, sf_dir, 23)
     ep = _scratch(spark, "k05")
-
-    payload = _t(spark, sf_dir, "events").filter(
-        F.col("event_id") % 23 == 0
-    ).select(
-        F.to_json(
-            F.struct("event_id", "event_type", "value")
-        ).alias("data"),
-        F.concat(F.lit("host-"), (F.col("user_id") % 8).cast("string")).alias(
-            "partitionKey"
-        ),
-    )
-    spark.dataSource.register(KinesisDataSource)
     (
         payload.coalesce(2)
         .write.format("kinesis_py")
@@ -8816,20 +8792,7 @@ def k05_python_datasource_writer(
         .load()
     )
     _drain_stream_to_table(raw, "k05_out", mode="append")
-    parsed = spark.table("k05_out").select(
-        F.from_json(
-            "data", "event_id long, event_type string, value double"
-        ).alias("r")
-    )
-    return (
-        parsed.groupBy(F.col("r.event_type").alias("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("r.event_id").alias("n_distinct"),
-            F.round(F.sum("r.value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _event_type_rollup(spark.table("k05_out"))
 
 
 def s15_ivf_index_persist(
@@ -9536,169 +9499,125 @@ def st14_chained_window_rollup(
     )
 
 
+def _phased_running_totals(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    mod: int,
+    n_keys: int,
+    n_phases: int,
+    partitions: int | None = None,
+    ttl_ms: int | None = None,
+) -> DataFrame:
+    """st15/st16/st19's restart drill.  The ``event_id % mod == 0``
+    slice becomes (key = user_id % n_keys, phase = event_id %
+    n_phases, value); drain p appends exactly the phase-p rows as one
+    new file and runs `streaming/stateful.py:running_totals_with_state`
+    to completion, every drain on the SAME checkpoint.  The union of
+    the drains' emissions equals the per-(key, phase) PREFIX totals
+    only if each drain restored the earlier drains' state from the
+    state store.  ``partitions`` (None: the session's own) sets the
+    shuffle partitions, i.e. the state-store tasks, for the drains;
+    per-key prefix sums do not depend on it.  Returns a frame over
+    the collected rows; the scratch dir is removed."""
+    import shutil
+
+    from kinesis_log_streamer_spark.streaming.stateful import (
+        running_totals_with_state,
+    )
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    base = _scratch(spark, name)
+    indir = os.path.join(base, "in")
+    ckpt = os.path.join(base, "ckpt")
+    outp = os.path.join(base, "out")
+    os.makedirs(indir)
+    os.makedirs(outp)
+
+    payload = (
+        _t(spark, sf_dir, "events")
+        .filter(F.col("event_id") % mod == 0)
+        .select(
+            (F.col("user_id") % n_keys).cast("int").alias("key"),
+            (F.col("event_id") % n_phases).cast("int").alias("phase"),
+            "value",
+        )
+    )
+    window = (
+        {} if partitions is None
+        else {"spark.sql.shuffle.partitions": str(partitions)}
+    )
+    with _conf(spark, window):
+        for p in range(n_phases):
+            payload.filter(F.col("phase") == p).coalesce(1).write.mode(
+                "append"
+            ).parquet(indir)
+            stream = (
+                spark.readStream.schema("key int, phase int, value double")
+                .format("parquet")
+                .load(indir)
+            )
+            _drain(
+                running_totals_with_state(stream, ttl_ms)
+                .writeStream.foreachBatch(
+                    lambda df, _id: df.write.mode("append").parquet(outp)
+                )
+                .option("checkpointLocation", ckpt)
+                .outputMode("update")
+            )
+
+    # Materialize before dropping the dir (the driver re-collects the
+    # returned frame after this function exits).
+    rows = (
+        spark.read.parquet(outp)
+        .select("key", "phase", "running_n", "running_sum")
+        .orderBy("key", "phase")
+        .collect()
+    )
+    shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        rows, "key int, phase int, running_n long, running_sum double"
+    ).orderBy("key", "phase")
+
+
 def st15_state_across_restarts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Arbitrary stateful streaming with its defining property under
     the oracle: state that survives QUERY RESTARTS.  Three sequential
-    drains share one checkpoint; drain p feeds exactly the phase-p
-    slice of events (one new file → one micro-batch), and the
+    drains share one checkpoint (`_phased_running_totals`); the
     operator (`streaming/stateful.py:running_totals_with_state`,
     applyInPandasWithState) folds each batch into per-key running
-    (count, sum) GroupState, emitting the post-batch prefix totals.
-    The union of the three drains' emissions must therefore equal the
-    per-(key, phase) PREFIX aggregates — which only happens if
-    phase-0/1 state was durably restored into drains 1/2 from the
-    state store.  (The Spark 4 ``transformWithStateInPandas`` twin,
-    `streaming/stateful.py:running_totals_processor`, is implemented
-    but environment-gated: its state protocol needs google.protobuf,
-    absent in this container.)
+    (count, sum) GroupState, so the union of the emissions equals the
+    per-(key, phase) PREFIX aggregates only if phase-0/1 state was
+    durably restored into drains 1/2.  Slice: event_id % 7 == 0,
+    key = user_id % 50, phase = event_id % 3, the session's shuffle
+    partitions.
 
-    Scale: per-key state is two scalars in the state-store
+    Scale: per-key state is three scalars in the state-store
     partitions; the same shape holds at any key cardinality."""
-    import shutil
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _scratch(spark, "st15")
-    indir = os.path.join(base, "in")
-    ckpt = os.path.join(base, "ckpt")
-    outp = os.path.join(base, "out")
-    os.makedirs(indir)
-    os.makedirs(outp)
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 7 == 0)
-    payload = ev.select(
-        (F.col("user_id") % 50).cast("int").alias("key"),
-        (F.col("event_id") % 3).cast("int").alias("phase"),
-        "value",
-    )
-
-    from kinesis_log_streamer_spark.streaming.stateful import (
-        running_totals_with_state,
-    )
-
-    def drain_phase(p: int) -> None:
-        payload.filter(F.col("phase") == p).coalesce(1).write.mode(
-            "append"
-        ).parquet(indir)
-        stream = (
-            spark.readStream.schema("key int, phase int, value double")
-            .format("parquet")
-            .load(indir)
-        )
-        out = running_totals_with_state(stream)
-        _drain(
-            out.writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(outp)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-        )
-
-    for p in range(3):
-        drain_phase(p)
-
-    result = (
-        spark.read.parquet(outp)
-        .select("key", "phase", "running_n", "running_sum")
-        .orderBy("key", "phase")
-    )
-    # Materialize before dropping the dir (the driver re-collects the
-    # returned frame after this function exits).
-    rows = result.collect()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "key int, phase int, running_n long, running_sum double"
-    ).orderBy("key", "phase")
+    return _phased_running_totals(spark, sf_dir, "st15", 7, 50, 3)
 
 
 def st16_transform_with_state(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The Spark 4 ``transformWithStateInPandas`` operator (typed
-    ``ValueState`` handles — the arbitrary-state successor to
-    ``applyInPandasWithState``) under the SAME prefix-aggregate oracle
-    shape as st15: two sequential drains share one checkpoint, drain p
-    feeds exactly the phase-p slice, and per-key running (count, sum)
-    state must survive the restart for the union of emissions to equal
-    the per-(key, phase) prefix totals.
+    """st15's prefix-aggregate restart drill on a second slice with
+    two drains: event_id % 11 == 0, key = user_id % 40, phase =
+    event_id % 2, 8 state-store tasks instead of 32 for a 40-key
+    state space (the prefix totals are per-key sums, partition-count
+    invariant).  The name is kept because it is the registry and
+    oracle key; the operator is
+    `streaming/stateful.py:running_totals_with_state`
+    (applyInPandasWithState).  Spark's transformWithState API speaks
+    protobuf to the JVM state server, and google.protobuf is not in
+    this image, so it has no path here.
 
-    ENVIRONMENT-GATED with a VERIFIED FALLBACK (VERDICT r05 item 6):
-    the transformWithState protocol needs ``google.protobuf`` on the
-    workers; where it is importable this query runs the real
-    `streaming/stateful.py:running_totals_transform_with_state`, and
-    where it is not (this container today) it runs the semantically
-    identical `running_totals_with_state` twin st15 already verifies —
-    so the oracle stays green either way and the moment the driver
-    image gains protobuf the new API gets a driver verdict with zero
-    repo changes.
-
-    Scale: per-key state is two scalars in RocksDB/state-store
-    partitions; shape holds at any key cardinality."""
-    import shutil
-
-    from kinesis_log_streamer_spark.streaming.stateful import (
-        running_totals_transform_with_state,
-        running_totals_with_state,
-        transform_with_state_available,
+    Scale: per-key state is three scalars in state-store partitions;
+    shape holds at any key cardinality."""
+    return _phased_running_totals(
+        spark, sf_dir, "st16", 11, 40, 2, partitions=8
     )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _scratch(spark, "st16")
-    indir = os.path.join(base, "in")
-    ckpt = os.path.join(base, "ckpt")
-    outp = os.path.join(base, "out")
-    os.makedirs(indir)
-    os.makedirs(outp)
-
-    op = (
-        running_totals_transform_with_state
-        if transform_with_state_available()
-        else running_totals_with_state
-    )
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 11 == 0)
-    payload = ev.select(
-        (F.col("user_id") % 40).cast("int").alias("key"),
-        (F.col("event_id") % 2).cast("int").alias("phase"),
-        "value",
-    )
-
-    def drain_phase(p: int) -> None:
-        payload.filter(F.col("phase") == p).coalesce(1).write.mode(
-            "append"
-        ).parquet(indir)
-        stream = (
-            spark.readStream.schema("key int, phase int, value double")
-            .format("parquet")
-            .load(indir)
-        )
-        _drain(
-            op(stream)
-            .writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(outp)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-        )
-
-    # 8 state-store tasks instead of 32 for a 30-key state space —
-    # same per-batch-overhead cut as _drain_stream_to_table / st18
-    # (the prefix totals are per-key sums, partition-count-invariant).
-    with _conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        for p in range(2):
-            drain_phase(p)
-
-    result = (
-        spark.read.parquet(outp)
-        .select("key", "phase", "running_n", "running_sum")
-        .orderBy("key", "phase")
-    )
-    rows = result.collect()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "key int, phase int, running_n long, running_sum double"
-    ).orderBy("key", "phase")
 
 
 def q121_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10945,75 +10864,37 @@ def q134_scalar_subquery_api(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-7 additions: Avro round-trip, statestore reader, approx_top_k
+# Codec round-trip, statestore reader, approx_top_k
 # ---------------------------------------------------------------------------
 
 
-def _avro_available(spark: SparkSession) -> bool:
-    """True when the spark-avro connector is loaded.  The functions
-    exist in pyspark unconditionally but analysis fails with
-    AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE without the jar — probe
-    with a 1-row plan (the multimodal codec import-gate pattern,
-    operators/multimodal.py)."""
-    try:
-        from pyspark.sql.avro.functions import to_avro
-
-        spark.range(1).select(to_avro(F.struct("id"))).collect()
-        return True
-    except Exception:
-        return False
-
-
 def f24_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Avro round-trip on the sink-record shape — the one mainstream
-    format family previously without an f-query (VERDICT r06 #6):
-    each order is packed into a struct, serialized to a BINARY Avro
-    record (`to_avro`), deserialized back (`from_avro`), and the
-    rollup is computed from the PARSED columns only — a corrupted
-    byte, a dropped field, or a schema drift in the round-trip breaks
-    the oracle hash.
+    """Codec round-trip on the sink-record shape: each order is packed
+    into a struct, serialized to a BINARY wire column, deserialized
+    back, and the rollup is computed from the PARSED columns only — a
+    corrupted byte, a dropped field, or a schema drift in the
+    round-trip breaks the oracle hash.
 
-    Environment gate (this image ships avro-core but NOT the
-    spark-avro connector): when `to_avro` analysis fails, the same
-    plumbing — struct → binary column → parse → rollup-from-parsed —
-    runs through the JSON codec (`to_json`/`from_json` over a binary
-    cast).  The plan shape, binary wire column, and parsed-side
-    rollup are identical either way, so the oracle contract does not
-    depend on which codec the image provides (st16's gate pattern).
+    The codec is JSON (`to_json` cast to binary, `from_json` over the
+    string cast).  The name is kept because it is the registry and
+    oracle key: this image ships avro-core but not the spark-avro
+    connector, so `to_avro` fails analysis here.
 
     Scale: serialization is a narrow per-row projection inside
     whole-stage codegen; the only shuffle is the 5-group rollup."""
-    o = _t(spark, sf_dir, "orders")
     rec = F.struct(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderpriority").alias("p"),
         F.col("o_totalprice").alias("v"),
     )
-    if _avro_available(spark):
-        import json
-
-        from pyspark.sql.avro.functions import from_avro, to_avro
-
-        avro_schema = json.dumps(
-            {
-                "type": "record",
-                "name": "sink_record",
-                "fields": [
-                    {"name": "k", "type": "long"},
-                    {"name": "p", "type": "string"},
-                    {"name": "v", "type": "double"},
-                ],
-            }
-        )
-        wire = o.select(to_avro(rec).alias("bin"))
-        parsed = wire.select(from_avro("bin", avro_schema).alias("r"))
-    else:
-        wire = o.select(F.to_json(rec).cast("binary").alias("bin"))
-        parsed = wire.select(
-            F.from_json(
-                F.col("bin").cast("string"), "k long, p string, v double"
-            ).alias("r")
-        )
+    wire = _t(spark, sf_dir, "orders").select(
+        F.to_json(rec).cast("binary").alias("bin")
+    )
+    parsed = wire.select(
+        F.from_json(
+            F.col("bin").cast("string"), "k long, p string, v double"
+        ).alias("r")
+    )
     return (
         parsed.select("r.k", "r.p", "r.v")
         .groupBy(F.col("p").alias("o_orderpriority"))
@@ -11026,74 +10907,66 @@ def f24_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Spark 4 STATE STORE READER (`spark.read.format(
-    "statestore")`) — the operational debugging surface for every
-    stateful query shipped in the st-family (VERDICT r06 #7): drain a
-    checkpointed streaming count over events, then read the
-    checkpoint's state rows BACK from disk and reconcile them against
-    the batch aggregate.  A state row the engine persisted wrong, or
-    a key lost by the store, breaks the oracle hash — this is the
-    "is my state what I think it is" query every streaming user
-    eventually runs.
-
-    Output comes FROM THE STATE ROWS (key.event_type, value.count),
-    not the memory sink, joined to the batch aggregate for the
-    `state_ok` gate.  Env gate: if this Spark build lacks the
-    statestore format, the drained sink rows stand in (documented
-    fallback, st16 pattern) — the reconciliation contract is
-    identical.  The checkpoint is removed before returning.
-
-    Scale: state-reader scans are per-partition parallel reads of the
-    HDFS state store; the reconcile is a 5-row broadcast join."""
+def _statestore_reconcile(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    mod: int | None = None,
+    settings: dict | None = None,
+) -> DataFrame:
+    """st17/st18's drill: drain a checkpointed per-event_type count
+    over the events stream (``event_id % mod == 0`` when ``mod`` is
+    given) into the memory sink ``<name>_out``, read the checkpoint's
+    state rows BACK with ``spark.read.format("statestore")``, and join
+    them to the batch count.  ``state_ok`` is 1 where the persisted
+    count equals the batch count.  The drain and the read run in one
+    conf window: 8 shuffle partitions (state-store tasks) plus
+    ``settings``.  The checkpoint is removed before returning."""
     import shutil
 
     from kinesis_log_streamer_spark.streaming.pipeline import (
         read_events_stream,
     )
 
-    ev = read_events_stream(spark, sf_dir)
-    agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = _scratch(spark, "st17")
-    name = "st17_out"
-    spark.catalog.dropTempView(name)
-    with _conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        _drain(
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-        )
+    def sliced(df: DataFrame) -> DataFrame:
+        return df if mod is None else df.filter(F.col("event_id") % mod == 0)
+
+    agg = (
+        sliced(read_events_stream(spark, sf_dir))
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    ckpt = _scratch(spark, name)
+    sink = name + "_out"
+    spark.catalog.dropTempView(sink)
+    window = {"spark.sql.shuffle.partitions": "8", **(settings or {})}
     try:
-        state = (
-            spark.read.format("statestore")
-            .load(ckpt)
-            .select(
-                F.col("key.event_type").alias("event_type"),
-                F.col("value.count").alias("state_n"),
+        with _conf(spark, window):
+            _drain(
+                agg.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
             )
-        )
-        state_rows = [(r.event_type, r.state_n) for r in state.collect()]
-    except AnalysisException as exc:
-        # Fallback ONLY when the build lacks the statestore format
-        # (ADVICE r7 low #3: a bare except silently downgraded real
-        # state-read failures — e.g. a value.count field drift — to
-        # the memory sink where state_ok is trivially 1).
-        msg = str(exc).upper()
-        if not (
-            "DATA_SOURCE_NOT_FOUND" in msg or "FAILED TO FIND" in msg
-        ):
-            raise
-        state_rows = [
-            (r.event_type, r.n) for r in spark.table(name).collect()
-        ]
+            state_rows = [
+                (r.event_type, r.state_n)
+                for r in spark.read.format("statestore")
+                .load(ckpt)
+                .select(
+                    F.col("key.event_type").alias("event_type"),
+                    F.col("value.count").alias("state_n"),
+                )
+                .collect()
+            ]
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     state_df = spark.createDataFrame(
         state_rows, "event_type string, state_n long"
     )
-    batch = _t(spark, sf_dir, "events").groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events")
+    batch = (
+        sliced(_t(spark, sf_dir, "events"))
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
     return (
         batch.join(F.broadcast(state_df), "event_type", "left")
@@ -11110,6 +10983,23 @@ def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
+
+
+def st17_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark 4 STATE STORE READER (`spark.read.format(
+    "statestore")`) — the operational debugging surface for every
+    stateful query shipped in the st-family: drain a checkpointed
+    streaming count over events, then read the checkpoint's state
+    rows BACK from disk and reconcile them against the batch
+    aggregate (`_statestore_reconcile`).  A state row the engine
+    persisted wrong, or a key lost by the store, breaks the oracle
+    hash — this is the "is my state what I think it is" query every
+    streaming user eventually runs.  Output comes FROM THE STATE ROWS
+    (key.event_type, value.count), not the memory sink.
+
+    Scale: state-reader scans are per-partition parallel reads of the
+    HDFS state store; the reconcile is a 5-row broadcast join."""
+    return _statestore_reconcile(spark, sf_dir, "st17")
 
 
 def q135_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11383,214 +11273,55 @@ def s19_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def st18_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """st17's drain + state-reader reconciliation against the ROCKSDB
-    state-store provider (VERDICT r7 #6 — st17 exercises only the
-    default HDFS-backed provider): drain a checkpointed streaming
-    count over events with ``spark.sql.streaming.stateStore
-    .providerClass = RocksDBStateStoreProvider``, read the RocksDB
-    checkpoint's state rows BACK through ``spark.read.format(
-    "statestore")``, and reconcile them against the batch aggregate.
+    state-store provider (st17 exercises only the default HDFS-backed
+    provider): ``spark.sql.streaming.stateStore.providerClass =
+    RocksDBStateStoreProvider`` for the drain and the read-back.
     RocksDB is the provider every large-state production deployment
     runs (bounded executor heap, incremental checkpoints) — a state
-    row it persists wrong breaks this hash.
-
-    Slice differs from st17 (event_id % 3 == 0 subset) so
-    the two queries can't mask each other's fixtures.  Env gates, both
-    loud-by-default: a build without RocksDB falls back to the default
-    provider drain (same reconciliation contract, st16 pattern, gated
-    on the specific CLASS_NOT_FOUND/instantiate error); a build
-    without the statestore reader falls back to the memory sink
-    (st17's DATA_SOURCE_NOT_FOUND gate).  The provider conf is set only
-    inside a ``_conf`` window, so later queries see the session's own.
+    row it persists wrong breaks this hash.  The provider conf is set
+    only inside the helper's conf window, so later queries see the
+    session's own.  Slice differs from st17 (event_id % 3 == 0) so
+    the two queries can't mask each other's fixtures.
 
     Scale: RocksDB state scans are per-partition parallel reads; the
     reconcile is a bounded broadcast join (distinct event types).
     Reference parity: the reference has no stateful surface (it is an
     ingest pipe, linestreamer.go); this is analytics-layer breadth."""
-    import shutil
-
-    from kinesis_log_streamer_spark.streaming.pipeline import (
-        read_events_stream,
-    )
-
-    ev = read_events_stream(spark, sf_dir).filter(
-        F.col("event_id") % 3 == 0
-    )
-    agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = _scratch(spark, "st18")
-    name = "st18_out"
-    spark.catalog.dropTempView(name)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = {
-        "spark.sql.shuffle.partitions": "8",
-        provider_key: "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    }
-
-    def drain() -> None:
-        _drain(
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-        )
-
-    try:
-        with _conf(spark, rocksdb):
-            try:
-                drain()
-            except Exception as exc:  # noqa: BLE001
-                # Env gate: only a missing/unloadable RocksDB provider
-                # falls back to the default provider — anything else
-                # (a real drain failure) stays loud.
-                msg = str(exc)
-                if not (
-                    "RocksDB" in msg
-                    and (
-                        "ClassNotFound" in msg
-                        or "cannot be instantiated" in msg
-                        or "CANNOT_LOAD_STATE_STORE" in msg
-                    )
-                ):
-                    raise
-                spark.conf.unset(provider_key)
-                shutil.rmtree(ckpt, ignore_errors=True)
-                os.makedirs(ckpt, exist_ok=True)
-                drain()
-            try:
-                state = (
-                    spark.read.format("statestore")
-                    .load(ckpt)
-                    .select(
-                        F.col("key.event_type").alias("event_type"),
-                        F.col("value.count").alias("state_n"),
-                    )
-                )
-                state_rows = [
-                    (r.event_type, r.state_n) for r in state.collect()
-                ]
-            except AnalysisException as exc:
-                msg = str(exc).upper()
-                if not (
-                    "DATA_SOURCE_NOT_FOUND" in msg or "FAILED TO FIND" in msg
-                ):
-                    raise
-                state_rows = [
-                    (r.event_type, r.n) for r in spark.table(name).collect()
-                ]
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    state_df = spark.createDataFrame(state_rows, "event_type string, state_n long")
-    batch = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 3 == 0)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return (
-        batch.join(F.broadcast(state_df), "event_type", "left")
-        .select(
-            "event_type",
-            "n_events",
-            # coalesce: a batch key absent from the state rows must read
-            # state_ok=0 (the documented bad marker), not NULL — the left
-            # join would otherwise null the comparison (ADVICE r8 low #3).
-            F.coalesce(
-                (F.col("state_n") == F.col("n_events")).cast("int"),
-                F.lit(0),
-            ).alias("state_ok"),
-        )
-        .orderBy("event_type")
+    return _statestore_reconcile(
+        spark,
+        sf_dir,
+        "st18",
+        mod=3,
+        settings={
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            )
+        },
     )
 
 
 def st19_state_ttl_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key running totals on TTL-configured state (VERDICT r7 #6
-    "add state TTL to one transformWithState query"): st16's
-    two-drain prefix-aggregate shape, but every state handle carries a
-    1-hour TTL — the hygiene knob that keeps an unbounded key space
-    (IPs, session ids) from growing a 100 TB state store forever.
-    Within the drains nothing expires (TTL >> drain wall-clock), so
-    the output is the DETERMINISTIC prefix-total table the oracle
-    states; the EXPIRY behavior itself is wall-clock-dependent and is
-    pinned by `tests/test_stateful.py::TestStateTTL` (a sleep past a
-    1 s TTL resets the totals), not by an oracle hash.
-
-    Env gate (st16 pattern): with protobuf present this runs the real
-    ``transformWithStateInPandas`` TTLConfig path
-    (`stateful.running_totals_transform_with_state_ttl`); without it
-    (this container) the self-managed-timestamp twin
-    (`running_totals_with_state_ttl`) with identical TTL-on-read
-    semantics.  Slice: event_id % 13 == 0, key = user_id % 30,
-    phase = event_id % 2.
+    """Per-key running totals on TTL-configured state: st16's
+    two-drain prefix-aggregate shape, but the state carries a 1-hour
+    TTL (`running_totals_with_state(df, ttl_ms)`: state not refreshed
+    within ttl_ms of processing time reads as absent) — the hygiene
+    knob that keeps an unbounded key space (IPs, session ids) from
+    growing the state store forever.  Within the drains nothing
+    expires (TTL >> drain wall-clock), so the output is the
+    DETERMINISTIC prefix-total table the oracle states; the EXPIRY
+    itself is wall-clock-dependent and is pinned by
+    `tests/test_stateful.py::TestStateTTL` (a sleep past a 1 s TTL
+    resets the totals), not by an oracle hash.  Slice: event_id %
+    13 == 0, key = user_id % 30, phase = event_id % 2, 8 state-store
+    tasks (at 32, st19 was the most expensive headline query, 9.4 s
+    median at sf0.1).
 
     Scale: per-key state is three scalars; TTL eviction is the
     mechanism that BOUNDS total state at high key cardinality."""
-    import shutil
-
-    from kinesis_log_streamer_spark.streaming.stateful import (
-        running_totals_transform_with_state_ttl,
-        running_totals_with_state_ttl,
-        transform_with_state_available,
+    return _phased_running_totals(
+        spark, sf_dir, "st19", 13, 30, 2, partitions=8, ttl_ms=3_600_000
     )
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _scratch(spark, "st19")
-    indir = os.path.join(base, "in")
-    ckpt = os.path.join(base, "ckpt")
-    outp = os.path.join(base, "out")
-    os.makedirs(indir)
-    os.makedirs(outp)
-
-    ttl_ms = 3_600_000  # 1 h: plumbing exercised, nothing expires in-run
-    op = (
-        running_totals_transform_with_state_ttl
-        if transform_with_state_available()
-        else running_totals_with_state_ttl
-    )
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 13 == 0)
-    payload = ev.select(
-        (F.col("user_id") % 30).cast("int").alias("key"),
-        (F.col("event_id") % 2).cast("int").alias("phase"),
-        "value",
-    )
-
-    def drain_phase(p: int) -> None:
-        payload.filter(F.col("phase") == p).coalesce(1).write.mode(
-            "append"
-        ).parquet(indir)
-        stream = (
-            spark.readStream.schema("key int, phase int, value double")
-            .format("parquet")
-            .load(indir)
-        )
-        _drain(
-            op(stream, ttl_ms)
-            .writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(outp)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-        )
-
-    # 8 state-store tasks instead of 32 for a 30-key state space —
-    # st16/st18's per-batch-overhead cut; per-key prefix sums are
-    # partition-count-invariant.  Measured round 9: st19 was the most
-    # expensive headline query (9.4s median) at 32 state partitions.
-    with _conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        for p in range(2):
-            drain_phase(p)
-
-    result = (
-        spark.read.parquet(outp)
-        .select("key", "phase", "running_n", "running_sum")
-        .orderBy("key", "phase")
-    )
-    rows = result.collect()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "key int, phase int, running_n long, running_sum double"
-    ).orderBy("key", "phase")
 
 
 def d21_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12842,6 +12573,48 @@ def k07_reshard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("mode", "shard_no")
 
 
+# Credentials and region of the in-process moto service; the names are
+# both KinesisSink's keyword arguments and the kinesis_py source's
+# option names.
+_MOTO_AUTH = {
+    "region": "us-east-1",
+    "access_key": "testing",
+    "secret_key": "testing",
+}
+
+
+@contextmanager
+def _moto_kinesis(name: str):
+    """An in-process moto Kinesis server (real boto3 wire protocol over
+    loopback HTTP) holding one new 2-shard stream; yields ``(stream,
+    url)`` and stops the server on exit.  A setup failure raises.
+    moto backends are module-global (they outlive the server object),
+    so every call names a fresh stream."""
+    import uuid
+
+    import boto3  # noqa: PLC0415
+    from moto.server import ThreadedMotoServer  # noqa: PLC0415
+
+    server = ThreadedMotoServer(port=0)
+    server.start()
+    try:
+        # Public API (moto 5.x), not server._server.socket — the
+        # private attr broke silently on moto refactors.
+        host, port = server.get_host_and_port()
+        url = f"http://{host}:{port}"
+        stream = f"klss-{name}-{uuid.uuid4().hex[:8]}"
+        boto3.client(
+            "kinesis",
+            region_name=_MOTO_AUTH["region"],
+            endpoint_url=url,
+            aws_access_key_id=_MOTO_AUTH["access_key"],
+            aws_secret_access_key=_MOTO_AUTH["secret_key"],
+        ).create_stream(StreamName=stream, ShardCount=2)
+        yield stream, url
+    finally:
+        server.stop()
+
+
 def k08_aws_transport_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The k01 no-loss/no-dup/no-alteration roundtrip through the REAL
     transport stack: events JSON-wrapped and shipped by
@@ -12852,285 +12625,87 @@ def k08_aws_transport_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     AwsKinesisStreamReader` (ListShards → GetShardIterator →
     GetRecords, per-shard string sequence-number offsets, executor-side
     refetch) and rolled up.  The Kinesis service is an in-process moto
-    server — real boto3 client end to end, no network beyond loopback.
-
-    boto3+moto landed in this image in round 13 (COVERAGE.md probe
-    history); leaner images fall back to the k01 ``dir:`` fake over
-    the SAME slice and rollup, so the gate stays green either way and
-    the result hash is transport-independent by construction.
+    server (`_moto_kinesis`) — real boto3 client end to end, no
+    network beyond loopback.  A server that cannot start fails the
+    query.
 
     A 1-in-20 slice: the roundtrip contract is row-for-row regardless
     of volume (k01's own argument) and every record crosses the HTTP
     wire twice on the driver probe plus once per executor refetch."""
-    from kinesis_log_streamer_spark.sources.kinesis_source import (
-        KinesisDataSource,
-    )
     from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    payload = _t(spark, sf_dir, "events").filter(
-        F.col("event_id") % 20 == 0
-    ).select(
-        F.to_json(
-            F.struct("event_id", "event_type", "value")
-        ).alias("data"),
-        F.concat(F.lit("host-"), (F.col("user_id") % 8).cast("string")).alias(
-            "partitionKey"
-        ),
-    )
-    spark.dataSource.register(KinesisDataSource)
-
-    # Setup-stage guard is WIDE (any Exception, not just ImportError):
-    # a moto-internal refactor or a port/bind failure must downgrade
-    # to the dir: fallback leg, not crash the query (ADVICE r13 low
-    # #2).  Failures AFTER the transport roundtrip starts still raise
-    # — a half-written memory sink cannot silently fall back.
-    server = None
-    try:
-        import uuid
-
-        import boto3  # noqa: PLC0415
-        from moto.server import ThreadedMotoServer  # noqa: PLC0415
-
-        server = ThreadedMotoServer(port=0)
-        server.start()
-        # Public API (moto 5.x), not server._server.socket — the
-        # private attr broke silently on moto refactors.
-        host, port = server.get_host_and_port()
-        url = f"http://{host}:{port}"
-        region, ak, sk = "us-east-1", "testing", "testing"
-        # moto backends are module-global (they outlive the
-        # server object), so a repeated invocation in one process
-        # must not reuse the stream name.
-        stream = "klss-k08-" + uuid.uuid4().hex[:8]
-        boto3.client(
-            "kinesis",
-            region_name=region,
-            endpoint_url=url,
-            aws_access_key_id=ak,
-            aws_secret_access_key=sk,
-        ).create_stream(StreamName=stream, ShardCount=2)
-    except Exception:  # noqa: BLE001 - any setup failure → dir leg
-        if server is not None:
-            try:
-                server.stop()
-            except Exception:  # noqa: BLE001 - best-effort teardown
-                pass
-        server = None
-
-    if server is not None:
-        try:
-            sink = KinesisSink(
-                stream,
-                region=region,
-                endpoint_url=url,
-                access_key=ak,
-                secret_key=sk,
-            )
-            # Two tasks feed the sink's one collect job (k01).
-            sink.write_batch(payload.coalesce(2), epoch_id=0)
-            raw = (
-                spark.readStream.format("kinesis_py")
-                .option("endpoint", "aws")
-                .option("stream", stream)
-                .option("client", "boto3")
-                .option("endpoint_url", url)
-                .option("region", region)
-                .option("access_key", ak)
-                .option("secret_key", sk)
-                .load()
-            )
-            _drain_stream_to_table(
-                raw, "k08_out", mode="append", no_data=False
-            )
-            # Materialize before the server dies: the memory sink
-            # already holds the rows, but keep the contract explicit.
-            spark.table("k08_out").count()
-        finally:
-            server.stop()
-    else:  # pragma: no cover - exercised only in leaner images
-        import shutil
-
-        from kinesis_log_streamer_spark.sources.kinesis_source import (
-            DirKinesisClient,
-        )
-
-        # Dropped right after the drain.
-        ep = _scratch(spark, "k08")
-        sink = KinesisSink("k08", client_factory=lambda: DirKinesisClient(ep))
+    payload = _kinesis_payload(spark, sf_dir, 20)
+    with _moto_kinesis("k08") as (stream, url):
+        sink = KinesisSink(stream, endpoint_url=url, **_MOTO_AUTH)
+        # Two tasks feed the sink's one collect job (k01).
         sink.write_batch(payload.coalesce(2), epoch_id=0)
         raw = (
             spark.readStream.format("kinesis_py")
-            .option("endpoint", f"dir:{ep}")
+            .options(
+                endpoint="aws",
+                stream=stream,
+                client="boto3",
+                endpoint_url=url,
+                **_MOTO_AUTH,
+            )
             .load()
         )
-        try:
-            _drain_stream_to_table(raw, "k08_out", mode="append", no_data=False)
-        finally:
-            shutil.rmtree(ep, ignore_errors=True)
-
-    parsed = spark.table("k08_out").select(
-        F.from_json(
-            "data", "event_id long, event_type string, value double"
-        ).alias("r")
-    )
-    return (
-        parsed.groupBy(F.col("r.event_type").alias("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("r.event_id").alias("n_distinct"),
-            F.round(F.sum("r.value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+        _drain_stream_to_table(raw, "k08_out", mode="append", no_data=False)
+    return _event_type_rollup(spark.table("k08_out"))
 
 
 def k09_aws_throttled_put(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k04's at-most-once drop contract AT THE WIRE (VERDICT r13 next
-    #4): the strict-parity sink (one PutRecords, zero retries,
-    log-and-drop — basestreamer.go:64-87) runs through a REAL boto3
-    client against a loopback throttling proxy
-    (`sources/throttle_proxy.py`) fronting an in-process moto server.
-    The proxy withholds every ``event_id % 10 == 0`` record and
-    splices ``ProvisionedThroughputExceededException`` entries into
-    the HTTP response, so botocore parses a genuine partial-failure
-    PutRecords reply (``FailedRecordCount > 0`` + per-record
-    ``ErrorCode``) — the branch moto alone can never produce — and
-    the per-record handling of basestreamer.go:76-82 is pinned at the
-    wire level.  Survivors are read back through the fence source and
-    rolled up; the oracle states the survivor set exactly
-    (``event_id % 10 == 5`` of the %5 slice, identical to k04), so
-    the hash fails on retries, over-drops, or raises.
-
-    Leaner images (no boto3/moto) fall back to the deterministic
-    ThrottlingDirKinesisClient over the same slice and rollup — the
-    k04 fake — so the gate stays green with a transport-independent
-    hash."""
-    from kinesis_log_streamer_spark.sources.kinesis_source import (
-        KinesisDataSource,
+    """k04's at-most-once drop contract AT THE WIRE: the strict-parity
+    sink (one PutRecords, zero retries, log-and-drop —
+    basestreamer.go:64-87) runs through a REAL boto3 client against a
+    loopback throttling proxy (`sources/throttle_proxy.py`) fronting
+    an in-process moto server (`_moto_kinesis`).  The proxy withholds
+    every ``event_id % 10 == 0`` record and splices
+    ``ProvisionedThroughputExceededException`` entries into the HTTP
+    response, so botocore parses a genuine partial-failure PutRecords
+    reply (``FailedRecordCount > 0`` + per-record ``ErrorCode``) — the
+    branch moto alone can never produce — and the per-record handling
+    of basestreamer.go:76-82 is pinned at the wire level.  Survivors
+    are read back through the fence source and rolled up; the oracle
+    states the survivor set exactly (``event_id % 10 == 5`` of the %5
+    slice, identical to k04), so the hash fails on retries,
+    over-drops, or raises.  A server or proxy that cannot start fails
+    the query."""
+    from kinesis_log_streamer_spark.sources.throttle_proxy import (
+        ThrottlingKinesisProxy,
     )
     from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    payload = _t(spark, sf_dir, "events").filter(
-        F.col("event_id") % 5 == 0
-    ).select(
-        F.to_json(
-            F.struct("event_id", "event_type", "value")
-        ).alias("data"),
-        F.concat(F.lit("host-"), (F.col("user_id") % 8).cast("string")).alias(
-            "partitionKey"
-        ),
-    )
-    spark.dataSource.register(KinesisDataSource)
-
-    # Same wide setup guard as k08: any moto/proxy setup failure
-    # downgrades to the dir: fake, never crashes the query.
-    server = proxy = None
-    try:
-        import uuid
-
-        import boto3  # noqa: PLC0415
-        from moto.server import ThreadedMotoServer  # noqa: PLC0415
-
-        from kinesis_log_streamer_spark.sources.throttle_proxy import (
-            ThrottlingKinesisProxy,
-        )
-
-        server = ThreadedMotoServer(port=0)
-        server.start()
-        host, port = server.get_host_and_port()
-        moto_url = f"http://{host}:{port}"
-        region, ak, sk = "us-east-1", "testing", "testing"
-        stream = "klss-k09-" + uuid.uuid4().hex[:8]
-        boto3.client(
-            "kinesis",
-            region_name=region,
-            endpoint_url=moto_url,
-            aws_access_key_id=ak,
-            aws_secret_access_key=sk,
-        ).create_stream(StreamName=stream, ShardCount=2)
+    payload = _kinesis_payload(spark, sf_dir, 5)
+    with _moto_kinesis("k09") as (stream, moto_url):
         proxy = ThrottlingKinesisProxy(moto_url, reject_mod=10)
         proxy_url = proxy.start()
-    except Exception:  # noqa: BLE001 - any setup failure → dir leg
-        for svc in (proxy, server):
-            if svc is not None:
-                try:
-                    svc.stop()
-                except Exception:  # noqa: BLE001 - best-effort teardown
-                    pass
-        server = proxy = None
-
-    if server is not None:
         try:
             sink = KinesisSink(
                 stream,
-                region=region,
                 endpoint_url=proxy_url,  # producers go THROUGH the proxy
-                access_key=ak,
-                secret_key=sk,
                 delivery="at_most_once",
+                **_MOTO_AUTH,
             )
             sink.write_batch(payload.coalesce(2), epoch_id=0)
             raw = (
                 spark.readStream.format("kinesis_py")
-                .option("endpoint", "aws")
-                .option("stream", stream)
-                .option("client", "boto3")
-                .option("endpoint_url", moto_url)  # readers skip the proxy
-                .option("region", region)
-                .option("access_key", ak)
-                .option("secret_key", sk)
-                .option("fencelagms", "0")
+                .options(
+                    endpoint="aws",
+                    stream=stream,
+                    client="boto3",
+                    endpoint_url=moto_url,  # readers skip the proxy
+                    fencelagms="0",
+                    **_MOTO_AUTH,
+                )
                 .load()
             )
             _drain_stream_to_table(
                 raw, "k09_out", mode="append", no_data=False
             )
-            spark.table("k09_out").count()
         finally:
             proxy.stop()
-            server.stop()
-    else:  # pragma: no cover - exercised only in leaner images
-        import shutil
-
-        from kinesis_log_streamer_spark.sources.kinesis_source import (
-            ThrottlingDirKinesisClient,
-        )
-
-        ep = _scratch(spark, "k09")
-        sink = KinesisSink(
-            "k09",
-            client_factory=lambda: ThrottlingDirKinesisClient(
-                ep, reject_mod=10
-            ),
-            delivery="at_most_once",
-        )
-        sink.write_batch(payload.coalesce(2), epoch_id=0)
-        raw = (
-            spark.readStream.format("kinesis_py")
-            .option("endpoint", f"dir:{ep}")
-            .load()
-        )
-        try:
-            _drain_stream_to_table(raw, "k09_out", mode="append", no_data=False)
-        finally:
-            shutil.rmtree(ep, ignore_errors=True)
-
-    parsed = spark.table("k09_out").select(
-        F.from_json(
-            "data", "event_id long, event_type string, value double"
-        ).alias("r")
-    )
-    return (
-        parsed.groupBy(F.col("r.event_type").alias("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("r.event_id").alias("n_distinct"),
-            F.round(F.sum("r.value"), 2).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    return _event_type_rollup(spark.table("k09_out"))
 
 
 def f25_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:

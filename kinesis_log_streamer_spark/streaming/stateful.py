@@ -19,10 +19,14 @@ query surface a log-analytics engine needs on top of that ingest
   first/last event types).  Python-side, Arrow-batched; keyed state
   lives in the state store and is keyed by user, so it scales
   horizontally with executors.
+* :func:`running_totals_with_state` — ``applyInPandasWithState``
+  per-key running (count, sum) whose state survives query restarts,
+  with an optional TTL-on-read that bounds state by age.
 """
 
 from __future__ import annotations
 
+import time
 from typing import Any, Iterator
 
 import pandas as pd
@@ -114,12 +118,6 @@ def stream_stream_left_join(
     watermark-advancing sentinel past the last real event
     (`plans/queries.py:_events_stream_with_flush`) — without it,
     every trailing unmatched row stays parked in the state store.
-
-    NOTE: ``transformWithStateInPandas`` (the Spark 4 arbitrary-state
-    API) is env-blocked in this container — its driver↔Python state
-    server requires ``protobuf``, which is absent; the
-    ``applyInPandasWithState`` sessionizer covers the custom-state
-    surface instead.
     """
     lhs = left.select(
         F.col("user_id").alias("l_user"),
@@ -329,110 +327,28 @@ def sessionize_with_state(
 
 
 # ---------------------------------------------------------------------------
-# transformWithState (Spark 4.x arbitrary-state API)
+# Per-key running totals with state that survives query restarts
 # ---------------------------------------------------------------------------
 
 
-def running_totals_processor():
-    """Factory for a :class:`StatefulProcessor` keeping per-key running
-    (count, sum) in a ``ValueState`` — the Spark 4
-    ``transformWithStateInPandas`` successor to
-    ``applyInPandasWithState`` (typed state handles, timers, state
-    surviving query restarts from the checkpoint).
-
-    ENVIRONMENT-GATED: the transformWithState state protocol speaks
-    protobuf to the JVM state server
-    (pyspark/sql/streaming/proto/StateMessage_pb2) and
-    ``google.protobuf`` is not installed in this container, so the
-    operator CRASHES at query start here — the oracle-gated query
-    surface uses :func:`running_totals_with_state` (the
-    applyInPandasWithState twin with identical semantics) instead,
-    and this factory stays as the drop-in for protobuf-equipped
-    clusters.  Emits one row per key per batch: (key, phase,
-    running_n, running_sum), phase = max phase tag in the batch.
-
-    Imported lazily inside the factory so the module stays importable
-    on Spark versions without the API."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n long, s double")
-
-        def handleInputRows(
-            self, key, rows, timerValues
-        ) -> Iterator[pd.DataFrame]:
-            n = 0
-            s = 0.0
-            phase = -1
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-                phase = max(phase, int(pdf["phase"].max()))
-            prev = self._agg.get() if self._agg.exists() else (0, 0.0)
-            n_run, s_run = prev[0] + n, prev[1] + s
-            self._agg.update((n_run, s_run))
-            yield pd.DataFrame(
-                {
-                    "key": [int(key[0])],
-                    "phase": [phase],
-                    "running_n": [n_run],
-                    "running_sum": [_round_away(s_run, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _RunningTotals()
-
-
-def transform_with_state_available() -> bool:
-    """True when the Spark 4 ``transformWithStateInPandas`` state
-    protocol can actually run here: its Python worker speaks protobuf
-    to the JVM state server, so ``google.protobuf`` must be
-    importable on the workers."""
-    try:
-        import google.protobuf  # noqa: F401, PLC0415
-    except ImportError:
-        return False
-    return True
-
-
-def running_totals_transform_with_state(
-    df: DataFrame,
-    output_schema: str = (
-        "key int, phase int, running_n long, running_sum double"
-    ),
-) -> DataFrame:
-    """Per-key running (count, sum) on the Spark 4
-    ``transformWithStateInPandas`` API — typed ``ValueState`` handle,
-    update mode, no timers — semantically identical to
-    :func:`running_totals_with_state` (the protobuf-free twin that
-    st15 verifies).  Callers should gate on
-    :func:`transform_with_state_available`; without protobuf the
-    query crashes at start (the state protocol cannot be spoken)."""
-    return df.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=running_totals_processor(),
-        outputStructType=output_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def running_totals_with_state(
-    df: DataFrame,
-    output_schema: str = (
-        "key int, phase int, running_n long, running_sum double"
-    ),
+    df: DataFrame, ttl_ms: int | None = None
 ) -> DataFrame:
-    """Per-key running (count, sum) via ``applyInPandasWithState`` —
-    semantics identical to :func:`running_totals_processor` but on the
-    protobuf-free Spark 3.4+ state API, so it runs anywhere.  Each
-    micro-batch folds into (n, s) GroupState and emits the post-batch
-    prefix totals tagged with the batch's max phase; because the
-    state store checkpoints, the totals keep accumulating across
-    query RESTARTS — which is exactly what st15 asserts."""
+    """Per-key running (count, sum) via ``applyInPandasWithState``.
+
+    Each micro-batch folds into (n, s) GroupState and emits the
+    post-batch prefix totals tagged with the batch's max phase.  The
+    state store checkpoints, so the totals keep accumulating across
+    query RESTARTS (st15, st16, st19 assert exactly that).
+
+    ``ttl_ms`` bounds state by age: a key whose state was not updated
+    within ``ttl_ms`` of processing time reads as ABSENT on its next
+    batch and its totals restart from zero — the hygiene that keeps an
+    unbounded key space (IPs, session ids) from growing the state
+    store forever.  The state carries its last-update time for this;
+    applyInPandasWithState's own timeouts fire only for keys WITHOUT
+    new input, which is eviction, not TTL-on-read.  ``None`` (the
+    default) never expires."""
 
     def fn(key, pdfs, state: GroupState) -> Iterator[pd.DataFrame]:
         n = 0
@@ -442,127 +358,12 @@ def running_totals_with_state(
             n += len(pdf)
             s += float(pdf["value"].sum())
             phase = max(phase, int(pdf["phase"].max()))
-        pn, ps = state.get if state.exists else (0, 0.0)
-        n_run, s_run = pn + n, ps + s
-        state.update((n_run, s_run))
-        yield pd.DataFrame(
-            {
-                "key": [int(key[0])],
-                "phase": [phase],
-                "running_n": [n_run],
-                "running_sum": [_round_away(s_run, 2)],
-            }
-        )
-
-    return df.groupBy("key").applyInPandasWithState(
-        fn,
-        output_schema,
-        "n long, s double",
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def running_totals_processor_ttl(ttl_ms: int):
-    """TTL variant of :func:`running_totals_processor` (VERDICT r7 #6):
-    the ``ValueState`` is registered with a TTL, so a key whose state
-    was not updated within ``ttl_ms`` of processing time reads as
-    ABSENT on its next batch and the running totals restart from zero
-    — the state-hygiene contract that keeps unbounded key spaces (IP
-    addresses, session ids) from growing a 100 TB state store forever.
-    Requires ``timeMode="ProcessingTime"`` on the transform; protobuf-
-    gated exactly like the base processor."""
-    from pyspark.sql.streaming import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotalsTTL(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", "n long, s double", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(
-            self, key, rows, timerValues
-        ) -> Iterator[pd.DataFrame]:
-            n = 0
-            s = 0.0
-            phase = -1
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-                phase = max(phase, int(pdf["phase"].max()))
-            # Engine-managed TTL: an expired value reads as not-exists.
-            prev = self._agg.get() if self._agg.exists() else (0, 0.0)
-            n_run, s_run = prev[0] + n, prev[1] + s
-            self._agg.update((n_run, s_run))
-            yield pd.DataFrame(
-                {
-                    "key": [int(key[0])],
-                    "phase": [phase],
-                    "running_n": [n_run],
-                    "running_sum": [_round_away(s_run, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _RunningTotalsTTL()
-
-
-def running_totals_transform_with_state_ttl(
-    df: DataFrame,
-    ttl_ms: int,
-    output_schema: str = (
-        "key int, phase int, running_n long, running_sum double"
-    ),
-) -> DataFrame:
-    """:func:`running_totals_transform_with_state` with engine-managed
-    state TTL (``TTLConfig`` on the value state, processing-time mode).
-    Protobuf-gated like the base API; the runs-anywhere twin is
-    :func:`running_totals_with_state_ttl`."""
-    return df.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=running_totals_processor_ttl(ttl_ms),
-        outputStructType=output_schema,
-        outputMode="Update",
-        timeMode="ProcessingTime",
-    )
-
-
-def running_totals_with_state_ttl(
-    df: DataFrame,
-    ttl_ms: int,
-    output_schema: str = (
-        "key int, phase int, running_n long, running_sum double"
-    ),
-) -> DataFrame:
-    """Protobuf-free twin of
-    :func:`running_totals_transform_with_state_ttl`: the TTL contract
-    ("state not refreshed within ttl_ms of processing time reads as
-    absent") is self-managed by storing the last-update timestamp in
-    the GroupState — applyInPandasWithState's own timeouts fire only
-    for keys WITHOUT new input, which is eviction, not TTL-on-read.
-    Semantics match the engine-managed path: a stale key's totals
-    restart from zero on its next batch."""
-    import time as _time
-
-    def fn(key, pdfs, state: GroupState) -> Iterator[pd.DataFrame]:
-        n = 0
-        s = 0.0
-        phase = -1
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-            phase = max(phase, int(pdf["phase"].max()))
-        now_ms = int(_time.time() * 1000)
+        now_ms = int(time.time() * 1000)
+        pn, ps = 0, 0.0
         if state.exists:
-            pn, ps, last_ms = state.get
-            if now_ms - last_ms > ttl_ms:
-                pn, ps = 0, 0.0  # expired: reads as absent
-        else:
-            pn, ps = 0, 0.0
+            last_n, last_s, last_ms = state.get
+            if ttl_ms is None or now_ms - last_ms <= ttl_ms:
+                pn, ps = last_n, last_s
         n_run, s_run = pn + n, ps + s
         state.update((n_run, s_run, now_ms))
         yield pd.DataFrame(
@@ -576,7 +377,7 @@ def running_totals_with_state_ttl(
 
     return df.groupBy("key").applyInPandasWithState(
         fn,
-        output_schema,
+        "key int, phase int, running_n long, running_sum double",
         "n long, s double, last_ms long",
         "update",
         GroupStateTimeout.NoTimeout,

@@ -94,7 +94,7 @@ def _leg_st19(spark, sf_dir):
 
     from kinesis_log_streamer_spark.sources.tables import load_table
     from kinesis_log_streamer_spark.streaming.stateful import (
-        running_totals_with_state_ttl,
+        running_totals_with_state,
     )
 
     indir = os.path.join(Q._scratch(spark, "audit-st19"), "in")
@@ -110,7 +110,7 @@ def _leg_st19(spark, sf_dir):
         .format("parquet")
         .load(indir)
     )
-    return running_totals_with_state_ttl(stream, 3_600_000)
+    return running_totals_with_state(stream, ttl_ms=3_600_000)
 
 
 # Production-leg sub-rows (VERDICT r8 #6): the d02/d03/st18/st19 QUERY

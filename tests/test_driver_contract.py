@@ -56,7 +56,7 @@ for name in (
     "q130_listagg",               # listagg ... within group (r5)
     "q131_time_grid_fill",        # sequence/explode + ignoreNulls (r5)
     "i07_stdin_spool_pipeline",   # spool landing scan (r5)
-    "f24_avro_roundtrip",         # avro-jar probe + codec fallback (r7)
+    "f24_avro_roundtrip",         # JSON codec over a binary wire column
     "st17_statestore_reader",     # statestore format read-back (r7)
     "q135_approx_top_k",          # approx_top_k SQL function (r7)
     "t27_bm25_topk",              # createDataFrame probe table (r7)

@@ -314,3 +314,25 @@ class TestAcfPlan:
         _no_blowups(plan)
         assert "Join" not in plan
         assert plan.count("Scan parquet") == 1
+
+
+class TestQ135ApproxTopK:
+    def test_matches_exact_topk(self, spark):
+        got = [(r.rnk, r.item, r.cnt) for r in
+               Q.q135_approx_top_k(spark, SF).collect()]
+        exact = (
+            load_table(spark, SF, "events")
+            .select(
+                F.concat_ws(
+                    "/", "event_type",
+                    (F.col("user_id") % 20).cast("string"),
+                ).alias("item")
+            )
+            .groupBy("item")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .orderBy(F.desc("cnt"), F.asc("item"))
+            .limit(10)
+            .collect()
+        )
+        want = [(i + 1, r.item, r.cnt) for i, r in enumerate(exact)]
+        assert got == want

@@ -2,7 +2,8 @@
 ``_scratch`` (one empty per-application, per-thread fixture dir),
 ``_drain`` (one bounded ``availableNow`` drain) and ``_conf`` (one
 session-conf window).  Pins their contracts and that no query works
-around them."""
+around them — nor around a failure: each query has one path, and a
+setup failure raises."""
 
 from __future__ import annotations
 
@@ -205,3 +206,49 @@ class TestHelperConfinement:
             CACHE.clear()
         app = spark.sparkContext.applicationId
         assert os.listdir(tmp_path) == ["klss-" + app]
+
+
+class TestOnePathPerQuery:
+    def test_no_environment_forks(self):
+        """The only ``except`` handlers in the registry are the two
+        scratch-dir races; no package module probes the environment
+        (``*_available``) or names the protobuf-gated
+        transformWithState API."""
+        with open(Q.__file__) as fh:
+            tree = ast.parse(fh.read())
+        owners = [
+            getattr(top, "name", "<module>")
+            for top in tree.body
+            for node in ast.walk(top)
+            if isinstance(node, ast.ExceptHandler)
+        ]
+        assert sorted(owners) == ["_scratch_root", "_sweep_stale_tmp"], owners
+
+        pkg = os.path.dirname(os.path.dirname(Q.__file__))
+        for root, _dirs, files in os.walk(pkg):
+            for fname in files:
+                if not fname.endswith(".py"):
+                    continue
+                path = os.path.join(root, fname)
+                with open(path) as fh:
+                    src = fh.read()
+                assert "transformWithStateInPandas" not in src, path
+                probes = [
+                    node.name
+                    for node in ast.walk(ast.parse(src))
+                    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and node.name.endswith("_available")
+                ]
+                assert not probes, (path, probes)
+
+    def test_k08_raises_when_the_server_cannot_start(
+        self, spark, sf_dir, monkeypatch
+    ):
+        from moto.server import ThreadedMotoServer
+
+        def refuse(self):
+            raise OSError("bind refused")
+
+        monkeypatch.setattr(ThreadedMotoServer, "start", refuse)
+        with pytest.raises(OSError, match="bind refused"):
+            Q.k08_aws_transport_roundtrip(spark, sf_dir)

@@ -777,64 +777,3 @@ class TestAwsKinesisTransport:
         ).collect()
         # exactly-once per record: no rereads, appended records picked up
         assert [r.data for r in rows] == ["a1", "a2", "b1", "b2"]
-
-
-class TestTransformWithState:
-    """Spark 4 transformWithStateInPandas (VERDICT r05 item 6): the
-    real API is exercised where google.protobuf exists; everywhere
-    else the availability gate must be False and the registered st16
-    query must fall back to the verified applyInPandasWithState twin
-    (covered by its DuckDB oracle in selfcheck)."""
-
-    def test_availability_gate_matches_import(self):
-        from kinesis_log_streamer_spark.streaming.stateful import (
-            transform_with_state_available,
-        )
-
-        try:
-            import google.protobuf  # noqa: F401
-
-            has = True
-        except ImportError:
-            has = False
-        assert transform_with_state_available() is has
-
-    def test_running_totals_via_transform_with_state(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from kinesis_log_streamer_spark.streaming.stateful import (
-            running_totals_transform_with_state,
-            transform_with_state_available,
-        )
-
-        if not transform_with_state_available():
-            _pytest.skip("google.protobuf absent: transformWithState "
-                         "state protocol cannot run in this env")
-        indir = str(tmp_path / "in")
-        outp = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        spark.createDataFrame(
-            [(1, 0, 2.0), (1, 0, 3.0), (2, 0, 5.0)],
-            "key int, phase int, value double",
-        ).coalesce(1).write.parquet(indir)
-        stream = (
-            spark.readStream.schema("key int, phase int, value double")
-            .format("parquet")
-            .load(indir)
-        )
-        q = (
-            running_totals_transform_with_state(stream)
-            .writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(outp)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        rows = {
-            (r.key, r.running_n, r.running_sum)
-            for r in spark.read.parquet(outp).collect()
-        }
-        assert rows == {(1, 2, 5.0), (2, 1, 5.0)}

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.operators import text as TX
+from kinesis_log_streamer_spark.plans import queries as Q
 
 
 class TestTokenCounters:
@@ -162,3 +165,60 @@ class TestContainmentPairs:
         assert got[(10, 20)] == 1000  # fully contained
         assert (20, 10) not in got  # only 2/4 of doc 20 in doc 10
         assert all(a != 30 and b != 30 for a, b in got)
+
+
+class TestT27Bm25:
+    def _write_docs(self, spark, tmp_path, rows):
+        path = str(tmp_path / "documents.parquet")
+        spark.createDataFrame(
+            [(i, t, "en", "unit", len(t)) for i, t in rows],
+            "doc_id long, text string, lang string, source string,"
+            " n_chars long",
+        ).coalesce(1).write.mode("overwrite").parquet(path)
+        return str(tmp_path)
+
+    @staticmethod
+    def _bm25(tf, df, n, dl, avgdl, k1=1.2, b=0.75):
+        idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+        return idf * tf * (k1 + 1.0) / (
+            tf + k1 * (1.0 - b + b * dl / avgdl)
+        )
+
+    def test_scores_match_formula(self, spark, tmp_path):
+        # q1 probes (spark, join, table).  doc 10 matches all three,
+        # doc 11 repeats one term, doc 12 matches nothing.
+        docs = [
+            (10, "spark join table"),
+            (11, "spark spark spark filter"),
+            (12, "other words entirely here"),
+        ]
+        sf = self._write_docs(spark, tmp_path, docs)
+        out = {
+            (r.qid, r.doc_id): r
+            for r in Q.t27_bm25_topk(spark, sf).collect()
+        }
+        n, avgdl = 3, (3 + 4 + 4) / 3.0
+        want10 = (
+            self._bm25(1, 2, n, 3, avgdl)      # spark, df=2
+            + self._bm25(1, 1, n, 3, avgdl)    # join
+            + self._bm25(1, 1, n, 3, avgdl)    # table
+        )
+        want11 = self._bm25(3, 2, n, 4, avgdl)  # spark x3 only
+        assert out[("q1", 10)].score == pytest.approx(want10, abs=1e-3)
+        assert out[("q1", 10)].n_terms == 3
+        assert out[("q1", 11)].score == pytest.approx(want11, abs=1e-3)
+        assert out[("q1", 11)].n_terms == 1
+        assert ("q1", 12) not in out
+        # saturating tf + all-terms coverage must outrank repetition
+        assert out[("q1", 10)].rnk == 1 and out[("q1", 11)].rnk == 2
+
+    def test_topk_shape_on_corpus(self, spark, sf_dir):
+        rows = Q.t27_bm25_topk(spark, sf_dir).collect()
+        by_q: dict[str, list] = {}
+        for r in rows:
+            by_q.setdefault(r.qid, []).append(r)
+        for qid, rs in by_q.items():
+            assert [r.rnk for r in rs] == list(range(1, len(rs) + 1))
+            scores = [r.score for r in rs]
+            assert scores == sorted(scores, reverse=True), qid
+            assert all(1 <= r.n_terms <= 3 for r in rs)
