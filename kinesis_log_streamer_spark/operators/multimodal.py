@@ -6,39 +6,25 @@ typed metadata struct alongside; decode / feature-extraction runs as
 Arrow-batched ``mapInPandas`` so each task streams record batches —
 never a per-row Python roundtrip.
 
-The actual codecs (PIL/soundfile) are IMPORT-GATED: when the library
-is installed, ``fake=False`` runs a real decode inside the executor
-batch; when absent (this container), it raises NotImplementedError
-with an install hint, and ``fake=True`` substitutes a deterministic
-byte-level featurizer so the Spark-side plumbing — schema, batch
-iteration, partitioning — stays testable and oracle-checkable either
-way.  CI and the oracle gate always use the fake path; a deployment
-with pillow/soundfile present gets the real one with zero code change.
+Two kinds of operator live here:
+
+* byte-level featurizers (:func:`decode_media`, :func:`frame_sample`,
+  :func:`resize_media`, :func:`audio_frame_energy`) that read the
+  payload as unsigned bytes and emit exact integer/float features, so
+  every result is oracle-recomputable from the payload;
+* real wire-format codecs with no external library — PPM (P6), RIFF/
+  WAVE PCM-16 and PNG — that parse the actual container bytes
+  (:func:`decode_ppm_stats`, :func:`decode_wav_stats`,
+  :func:`decode_png_stats`).
 """
 
 from __future__ import annotations
 
-import importlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _require(module: str, purpose: str):
-    """Import-gate for optional codec libraries: resolve the module if
-    installed, else raise the documented NotImplementedError.  Raised
-    INSIDE the executor batch — exactly where the decode would run —
-    so a mis-deployed cluster fails fast with an actionable message."""
-    try:
-        return importlib.import_module(module)
-    except ImportError as exc:
-        raise NotImplementedError(
-            f"{module} is not installed ({purpose}); pip install it for "
-            "the real decode, or pass fake=True for the deterministic "
-            "byte-stat stub"
-        ) from exc
 
 MEDIA_SCHEMA = (
     "doc_id long, kind string, n_bytes long, payload binary"
@@ -48,40 +34,6 @@ FEATURE_SCHEMA = (
     "doc_id long, kind string, n_bytes long, "
     "feat_mean double, feat_first long, feat_last long"
 )
-
-
-def _pixel_stats(image_mod, b: bytes) -> tuple[float, int, int]:
-    """Real-codec leg of :func:`decode_media`: grayscale pixel mean /
-    first / last via a PIL-shaped module (injectable for tests)."""
-    import io  # noqa: PLC0415
-
-    px = list(image_mod.open(io.BytesIO(b)).convert("L").getdata())
-    if not px:
-        return 0.0, -1, -1
-    return sum(px) / len(px), int(px[0]), int(px[-1])
-
-
-def _resize_gray(image_mod, b: bytes, target_w: int) -> list[int]:
-    """Real-codec leg of :func:`resize_media`: decode → grayscale →
-    BOX-resample to ``(target_w, 1)`` via a PIL-shaped module."""
-    import io  # noqa: PLC0415
-
-    box = getattr(image_mod, "Resampling", image_mod).BOX
-    img = (
-        image_mod.open(io.BytesIO(b)).convert("L").resize((target_w, 1), box)
-    )
-    return [int(v) for v in img.getdata()]
-
-
-def _samples_soundfile(sf_mod, b: bytes) -> list[float]:
-    """Real-codec leg of :func:`audio_frame_energy`: container decode
-    → mono float samples via a soundfile-shaped module."""
-    import io  # noqa: PLC0415
-
-    data, _sr = sf_mod.read(io.BytesIO(b), dtype="float64")
-    if getattr(data, "ndim", 1) > 1:
-        data = data.mean(axis=1)
-    return [float(x) for x in data]
 
 
 def attach_binary_payload(
@@ -102,35 +54,22 @@ def attach_binary_payload(
     )
 
 
-def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode/feature-extract binary payloads via Arrow-batched
-    ``mapInPandas``.
-
-    ``fake=True`` runs a deterministic byte-stat featurizer (mean byte
-    value, first/last byte) so the batch shape, schema, and
-    partitioning are exercised end-to-end.  ``fake=False`` is
-    IMPORT-GATED on pillow: when installed, each payload is decoded
-    as an image and the same three features are computed over its
-    grayscale pixels (mean / first / last); when absent, the executor
-    batch raises NotImplementedError with an install hint.
-    """
+def decode_media(df: DataFrame) -> DataFrame:
+    """Byte-stat features of binary payloads via Arrow-batched
+    ``mapInPandas``: per payload, the mean byte value and the first
+    and last byte (0.0 / -1 / -1 for an empty payload)."""
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        image_mod = None if fake else _require("PIL.Image", "image decode")
         for pdf in batches:
-            payloads = pdf["payload"]
-            if fake:
-                stats = [
-                    (
-                        (sum(b) / len(b)) if len(b) else 0.0,
-                        int(b[0]) if len(b) else -1,
-                        int(b[-1]) if len(b) else -1,
-                    )
-                    for b in payloads
-                ]
-            else:
-                stats = [_pixel_stats(image_mod, bytes(b)) for b in payloads]
-            pdf_out = pd.DataFrame(
+            stats = [
+                (
+                    (sum(b) / len(b)) if len(b) else 0.0,
+                    int(b[0]) if len(b) else -1,
+                    int(b[-1]) if len(b) else -1,
+                )
+                for b in pdf["payload"]
+            ]
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "kind": pdf["kind"],
@@ -140,20 +79,17 @@ def decode_media(df: DataFrame, fake: bool = False) -> DataFrame:
                     "feat_last": [s[2] for s in stats],
                 }
             )
-            yield pdf_out
 
     return df.mapInPandas(featurize, schema=FEATURE_SCHEMA)
 
 
-def frame_sample(
-    df: DataFrame, every_n_bytes: int = 64, fake: bool = False
-) -> DataFrame:
-    """'Frame sampling' plumbing: explode one row per sampled offset of
-    the payload (for video this would be one row per sampled frame).
+def frame_sample(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
+    """'Frame sampling': explode one row per sampled offset of the
+    payload (for video, one row per sampled frame), with the byte at
+    that offset as the frame's ``frame_token``.
 
     JVM-side explode over a computed offset sequence — the fan-out
-    happens in Spark, not Python; only the per-frame decode (stubbed)
-    would be Python.
+    happens in Spark, not Python.
     """
     n_frames = F.greatest(
         (F.col("n_bytes") / every_n_bytes).cast("long"), F.lit(1)
@@ -166,11 +102,6 @@ def frame_sample(
         "payload",
         F.explode(offsets).alias("frame_no"),
     ).withColumn("frame_offset", F.col("frame_no") * every_n_bytes)
-    if not fake:
-        return exploded.select(
-            "doc_id", "kind", "frame_no", "frame_offset"
-        )
-    # Deterministic fake "frame feature": the byte at the sampled offset.
     return exploded.select(
         "doc_id",
         "kind",
@@ -182,19 +113,13 @@ def frame_sample(
     )
 
 
-def resize_media(
-    df: DataFrame, target_w: int = 8, fake: bool = False
-) -> DataFrame:
-    """'Resize' plumbing — the downsample pass an image pipeline runs
-    after decode — via Arrow-batched ``mapInPandas``: the payload is
-    treated as a 1-D pixel row of unsigned bytes and block-averaged
-    into ``target_w`` cells (PIL's BOX filter on a 1×n image).  All
-    math is INTEGER (per-cell byte sum floor-divided by cell width),
-    so the fake path is exactly oracle-recomputable.  ``fake=False``
-    is IMPORT-GATED on pillow: when installed, the payload is decoded
-    with ``PIL.Image`` and box-resized to ``(target_w, 1)`` grayscale
-    (the real twin of the fake's block average); when absent, the
-    executor batch raises NotImplementedError with an install hint.
+def resize_media(df: DataFrame, target_w: int = 8) -> DataFrame:
+    """'Resize' — the downsample pass an image pipeline runs after
+    decode — via Arrow-batched ``mapInPandas``: the payload is treated
+    as a 1-D pixel row of unsigned bytes and block-averaged into
+    ``target_w`` cells (PIL's BOX filter on a 1×n image).  All math is
+    INTEGER (per-cell byte sum floor-divided by cell width), so the
+    result is exactly oracle-recomputable.
 
     Emits one row per (doc, cell): (doc_id, cell_no, px).  Cell
     boundaries are ``(j*n)//target_w`` — the standard partition of n
@@ -203,31 +128,20 @@ def resize_media(
     """
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        image_mod = None if fake else _require("PIL.Image", "image resize")
         for pdf in batches:
             ids: list = []
             cells: list[int] = []
             px: list[int] = []
             for did, b in zip(pdf["doc_id"], pdf["payload"]):
-                if fake:
-                    n = len(b)
-                    bounds = [
-                        (j * n) // target_w for j in range(target_w + 1)
-                    ]
-                    for j in range(target_w):
-                        lo, hi = bounds[j], bounds[j + 1]
-                        if hi <= lo:
-                            continue
-                        ids.append(did)
-                        cells.append(j)
-                        px.append(sum(b[lo:hi]) // (hi - lo))
-                else:
-                    for j, val in enumerate(
-                        _resize_gray(image_mod, bytes(b), target_w)
-                    ):
-                        ids.append(did)
-                        cells.append(j)
-                        px.append(val)
+                n = len(b)
+                bounds = [(j * n) // target_w for j in range(target_w + 1)]
+                for j in range(target_w):
+                    lo, hi = bounds[j], bounds[j + 1]
+                    if hi <= lo:
+                        continue
+                    ids.append(did)
+                    cells.append(j)
+                    px.append(sum(b[lo:hi]) // (hi - lo))
             yield pd.DataFrame(
                 {"doc_id": ids, "cell_no": cells, "px": px}
             )
@@ -242,56 +156,27 @@ def audio_frame_energy(
     frame_bytes: int = 8,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    decode: str = "u8",
 ) -> DataFrame:
     """Frame-level ENERGY extraction over binary audio-like payloads —
     the windowed feature pass an audio pipeline runs after decode
-    (RMS/energy per fixed-size frame), via Arrow-batched
-    ``mapInPandas`` so bytes never row-trip through Python one at a
-    time.
+    (energy per fixed-size frame), via Arrow-batched ``mapInPandas``
+    so bytes never row-trip through Python one at a time.
 
-    ``decode='u8'`` (default — the oracle/CI path) treats the payload
-    as unsigned 8-bit samples; per frame of ``frame_bytes`` samples
-    the INTEGER sum of squares is emitted (exact — the oracle
-    recomputes it from the payload-generating text).
-    ``decode='soundfile'`` is IMPORT-GATED on the soundfile library:
-    when installed, the payload is decoded as a real audio container
-    (wav/flac/ogg), downmixed to mono, and per-frame energy is the
-    float sum of squares scaled to integer micro-units; when absent,
-    the executor batch raises NotImplementedError with an install
-    hint.  The batch shape, schema, fan-out, and partitioning are the
-    production plumbing either way."""
-    import pandas as pd  # noqa: PLC0415
-
-    if decode not in ("u8", "soundfile"):
-        raise ValueError(f"decode must be u8|soundfile, got {decode!r}")
+    The payload is read as unsigned 8-bit samples; per full frame of
+    ``frame_bytes`` samples the INTEGER sum of squares is emitted
+    (exact — the oracle recomputes it from the payload-generating
+    text).  A trailing partial frame is dropped."""
     schema = "doc_id long, frame_no int, n_samples int, energy long"
 
     def featurize(batches):
-        mod = None if decode == "u8" else _require(
-            "soundfile", "audio decode"
-        )
-        take = (
-            (lambda _m, b: list(b))
-            if decode == "u8"
-            else _samples_soundfile
-        )
         for pdf in batches:
             rows = []
             for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                samples = take(mod, bytes(payload))
+                samples = bytes(payload)
                 for fno in range(len(samples) // frame_bytes):
                     fr = samples[fno * frame_bytes : (fno + 1) * frame_bytes]
-                    e = sum(x * x for x in fr)
-                    # u8 energies are already integers; decoded float
-                    # energies land in integer micro-units
                     rows.append(
-                        (
-                            int(did),
-                            fno,
-                            len(fr),
-                            int(e) if decode == "u8" else round(e * 1_000_000),
-                        )
+                        (int(did), fno, len(fr), sum(x * x for x in fr))
                     )
             yield pd.DataFrame(
                 rows,
@@ -304,11 +189,9 @@ def audio_frame_energy(
 # ---------------------------------------------------------------------------
 # REAL uncompressed-format codecs (round 13) — zero external libraries
 # ---------------------------------------------------------------------------
-# The compressed codecs above stay import-gated on PIL/soundfile (absent
-# in this image).  Uncompressed raster/PCM formats need no library at
-# all: PPM (P6) and RIFF/WAVE PCM-16 decode with a header parser plus
-# ``numpy.frombuffer`` — so the engine carries a REAL decode leg the
-# oracle can hash exactly, not just the deterministic byte-stat stub.
+# Uncompressed raster/PCM formats need no codec library: PPM (P6) and
+# RIFF/WAVE PCM-16 decode with a header parser plus
+# ``numpy.frombuffer`` — a REAL decode leg the oracle hashes exactly.
 # Encoders live alongside so the gates round-trip real bytes: the
 # fixture is written in the actual wire format, then parsed back by a
 # parser that never sees the generator's variables.
@@ -494,8 +377,6 @@ def decode_wav_stats(
 # the payload is zlib-DEFLATE over per-scanline filtered bytes (RFC
 # 2083) and the container is CRC-checked chunks — all decodable with
 # stdlib ``zlib`` plus numpy, exactly like the PPM/WAV legs above.
-# This shrinks the import-gated stub surface to entropy-coded codecs
-# (JPEG/FLAC-class) only.
 
 
 def _png_chunk(tag: bytes, body: bytes) -> bytes:

@@ -1842,8 +1842,8 @@ def s07_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def m01_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary payload column + typed metadata (decode stays stubbed;
-    the schema/plumbing is what's checked — payload length via SQL)."""
+    """Binary payload column + typed metadata (the schema/plumbing is
+    what's checked — payload length via SQL)."""
     docs = _t(spark, sf_dir, "documents")
     media = M.attach_binary_payload(docs)
     return media.select("doc_id", "kind", "n_bytes").orderBy("doc_id")
@@ -1854,14 +1854,13 @@ def m02_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`operators/multimodal.py:decode_media`) inside the oracle gate: an
     ASCII payload (the document's md5 hex — every byte == its
     character, so DuckDB can recompute byte stats with ascii()) runs
-    through the REAL batch-decode plumbing with the deterministic fake
-    featurizer.  Swapping the stub for a true codec changes only the
-    inner function; this pins the schema, batching, and byte math."""
+    through the batch plumbing and its byte-stat featurizer; this pins
+    the schema, batching, and byte math."""
     docs = _t(spark, sf_dir, "documents").withColumn(
         "payload_src", F.md5(F.col("text"))
     )
     media = M.attach_binary_payload(docs, text_col="payload_src", kind="digest")
-    feats = M.decode_media(media, fake=True)
+    feats = M.decode_media(media)
     return feats.select(
         "doc_id",
         "kind",
@@ -1881,7 +1880,7 @@ def m03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "payload_src", F.md5(F.col("text"))
     )
     media = M.attach_binary_payload(docs, text_col="payload_src", kind="digest")
-    frames = M.frame_sample(media, every_n_bytes=8, fake=True)
+    frames = M.frame_sample(media, every_n_bytes=8)
     return frames.select(
         "doc_id", "frame_no", "frame_offset", "frame_token"
     ).orderBy("doc_id", "frame_no")
@@ -1894,13 +1893,12 @@ def m07_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 payload (32 bytes) shrinks to 8 cells of exact integer means,
     which DuckDB recomputes byte-for-byte with ascii()/substr.
     Completes the decode / feature-extract / RESIZE / frame-sample
-    quartet (m02/m06/m07/m03); swapping the stub for a real PIL
-    resize changes only the inner batch function."""
+    quartet (m02/m06/m07/m03)."""
     docs = _t(spark, sf_dir, "documents").withColumn(
         "payload_src", F.md5(F.col("text"))
     )
     media = M.attach_binary_payload(docs, text_col="payload_src", kind="digest")
-    cells = M.resize_media(media, target_w=8, fake=True)
+    cells = M.resize_media(media, target_w=8)
     return cells.orderBy("doc_id", "cell_no")
 
 
@@ -7439,9 +7437,7 @@ def m05_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     yielding the cross-video duplicate-frame histogram a dedup pass
     over video corpora produces."""
     docs = _t(spark, sf_dir, "documents")
-    frames = M.frame_sample(
-        M.attach_binary_payload(docs), every_n_bytes=64, fake=True
-    )
+    frames = M.frame_sample(M.attach_binary_payload(docs), every_n_bytes=64)
     return (
         frames.groupBy("frame_token")
         .agg(
@@ -10053,7 +10049,7 @@ def m06_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-shaped multimodal pass: per-FRAME energy
     (`operators/multimodal.py:audio_frame_energy`, Arrow
     ``mapInPandas``) over binary payloads — 8-sample frames, integer
-    sum-of-squares.  The payload is the md5-digest fake (m01–m05
+    sum-of-squares.  The payload is the md5 digest text (m01–m05
     convention), so the oracle recomputes every frame energy from
     the ASCII codes of the digest text — the full binary→Python→
     Arrow→rows plumbing is exercised with hash-exact output."""
@@ -12592,8 +12588,11 @@ def _moto_kinesis(name: str):
     so every call names a fresh stream."""
     import uuid
 
-    import boto3  # noqa: PLC0415
     from moto.server import ThreadedMotoServer  # noqa: PLC0415
+
+    from kinesis_log_streamer_spark.sources.kinesis_source import (
+        kinesis_client,
+    )
 
     server = ThreadedMotoServer(port=0)
     server.start()
@@ -12603,13 +12602,9 @@ def _moto_kinesis(name: str):
         host, port = server.get_host_and_port()
         url = f"http://{host}:{port}"
         stream = f"klss-{name}-{uuid.uuid4().hex[:8]}"
-        boto3.client(
-            "kinesis",
-            region_name=_MOTO_AUTH["region"],
-            endpoint_url=url,
-            aws_access_key_id=_MOTO_AUTH["access_key"],
-            aws_secret_access_key=_MOTO_AUTH["secret_key"],
-        ).create_stream(StreamName=stream, ShardCount=2)
+        kinesis_client(endpoint_url=url, **_MOTO_AUTH).create_stream(
+            StreamName=stream, ShardCount=2
+        )
         yield stream, url
     finally:
         server.stop()
@@ -12623,15 +12618,15 @@ def k08_aws_transport_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialization, 500-record sub-batching against a live wire
     protocol), then read back with `sources/kinesis_source.
     AwsKinesisStreamReader` (ListShards → GetShardIterator →
-    GetRecords, per-shard string sequence-number offsets, executor-side
-    refetch) and rolled up.  The Kinesis service is an in-process moto
+    GetRecords, per-shard arrival-time fence offsets, executor-side
+    fetch) and rolled up.  The Kinesis service is an in-process moto
     server (`_moto_kinesis`) — real boto3 client end to end, no
     network beyond loopback.  A server that cannot start fails the
     query.
 
     A 1-in-20 slice: the roundtrip contract is row-for-row regardless
     of volume (k01's own argument) and every record crosses the HTTP
-    wire twice on the driver probe plus once per executor refetch."""
+    wire once on the put and once on the executor fetch."""
     from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
 
     payload = _kinesis_payload(spark, sf_dir, 20)
@@ -12644,7 +12639,6 @@ def k08_aws_transport_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .options(
                 endpoint="aws",
                 stream=stream,
-                client="boto3",
                 endpoint_url=url,
                 **_MOTO_AUTH,
             )
@@ -12693,7 +12687,6 @@ def k09_aws_throttled_put(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .options(
                     endpoint="aws",
                     stream=stream,
-                    client="boto3",
                     endpoint_url=moto_url,  # readers skip the proxy
                     fencelagms="0",
                     **_MOTO_AUTH,

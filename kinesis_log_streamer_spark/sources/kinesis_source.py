@@ -16,21 +16,17 @@ driver-side poller:
   shards are Kinesis's unit of parallelism and order, so per-shard
   ordering is preserved end-to-end (the property the reference's
   single partition key exists to provide, linestreamer.go:102).
-* **Transport** is pluggable via the ``endpoint`` option:
+* **Transport** is chosen by the ``endpoint`` option:
 
   - ``dir:<path>`` reads a directory with one JSON-lines file per
     shard (``shard-*.jsonl``) — the local stand-in used by tests, same
     record contract as the real service.
   - ``aws`` drives the real consumer API sequence —
     ``list_shards`` → ``get_shard_iterator`` → ``get_records`` —
-    against a ``stream`` option.  The *client* is injected via the
-    ``client`` option: default ``boto3`` (import-gated; verified
-    against an in-process moto server, tests/test_moto_aws.py), or
-    ``module.path:factory`` resolving to
-    ``factory(options) -> client`` — tests pass
-    ``kinesis_log_streamer_spark.sources.fake_aws:client_for``, a
-    boto3-shaped fake over the same shard files, so the whole aws
-    transport is exercised end-to-end without AWS.
+    against a ``stream`` option, through a boto3 client built by
+    :func:`kinesis_client` from the ``region`` / ``access_key`` /
+    ``secret_key`` / ``endpoint_url`` options (verified against an
+    in-process moto server, tests/test_moto_aws.py).
 
 AWS-mode batch semantics (**timestamp-fence offsets**, round 14 —
 replacing the driver-download probe VERDICT r13 flagged as the one
@@ -81,7 +77,6 @@ fit a long).
 
 from __future__ import annotations
 
-import importlib
 import json
 import logging
 import os
@@ -111,38 +106,42 @@ class KinesisWriteCommit(WriterCommitMessage):
     staging_dir: str = ""
 
 
-def make_read_client(options: dict):
-    """Resolve the ``client`` option into a live Kinesis read client.
+def kinesis_client(
+    region: str | None = None,
+    profile: str | None = None,
+    access_key: str | None = None,
+    secret_key: str | None = None,
+    endpoint_url: str | None = None,
+):
+    """The boto3 Kinesis client, shared by the ``aws`` reader and
+    :class:`~..streaming.kinesis_sink.KinesisSink`.  ``endpoint_url``
+    targets any Kinesis-compatible HTTP endpoint (the moto server in
+    tests), None the real service; None credentials mean boto3's
+    default chain."""
+    try:
+        import boto3  # noqa: PLC0415
+    except ImportError as exc:
+        raise RuntimeError("the Kinesis client requires boto3") from exc
+    session = boto3.Session(
+        profile_name=profile,
+        region_name=region,
+        aws_access_key_id=access_key,
+        aws_secret_access_key=secret_key,
+    )
+    return session.client("kinesis", endpoint_url=endpoint_url)
 
-    ``boto3`` (default) builds the real client; anything containing a
-    colon is ``module.path:factory`` called with the options dict —
-    resolvable on executors (the module must be importable there, which
-    in-package factories always are).
-    """
-    spec = options.get("client", "boto3")
-    if spec == "boto3":
-        try:
-            import boto3  # noqa: PLC0415
-        except ImportError as exc:  # pragma: no cover - env-dependent
-            raise RuntimeError(
-                "endpoint=aws with client=boto3 requires boto3; pass "
-                "client=module.path:factory to inject one"
-            ) from exc
-        # endpoint_url / access_key / secret_key ride the options dict
-        # (NOT the process environment) because `read` rebuilds the
-        # client on EXECUTOR python workers, which don't inherit env
-        # vars set after the JVM started.  endpoint_url targets any
-        # Kinesis-compatible HTTP endpoint (the moto server in tests).
-        session = boto3.Session(
-            region_name=options.get("region"),
-            aws_access_key_id=options.get("access_key"),
-            aws_secret_access_key=options.get("secret_key"),
-        )
-        return session.client(
-            "kinesis", endpoint_url=options.get("endpoint_url")
-        )
-    mod_name, _, fn_name = spec.partition(":")
-    return getattr(importlib.import_module(mod_name), fn_name)(options)
+
+def _read_client(options: dict):
+    # The client settings ride the options dict (NOT the process
+    # environment) because `read` rebuilds the client on EXECUTOR
+    # python workers, which don't inherit env vars set after the JVM
+    # started.
+    return kinesis_client(
+        region=options.get("region"),
+        access_key=options.get("access_key"),
+        secret_key=options.get("secret_key"),
+        endpoint_url=options.get("endpoint_url"),
+    )
 
 
 def shard_files(endpoint_dir: str) -> dict[str, str]:
@@ -187,17 +186,6 @@ class _AwsShardSlice(InputPartition):
     options: dict = field(default_factory=dict)
 
 
-def _arrival_ts(rec: dict) -> float:
-    """Epoch seconds from a GetRecords record — boto3 hands back an
-    aware datetime, fakes may hand back the float directly, legacy
-    fake lines without a stamp read as 0.0 (always inside the first
-    TRIM_HORIZON batch)."""
-    ts = rec.get("ApproximateArrivalTimestamp", 0.0)
-    if hasattr(ts, "timestamp"):
-        return ts.timestamp()
-    return float(ts)
-
-
 class AwsKinesisStreamReader(DataSourceStreamReader):
     """Micro-batch reader over the real Kinesis consumer API
     (ListShards / GetShardIterator / GetRecords) with
@@ -222,7 +210,7 @@ class AwsKinesisStreamReader(DataSourceStreamReader):
 
     def _c(self):
         if self._client is None:
-            self._client = make_read_client(self._options)
+            self._client = _read_client(self._options)
         return self._client
 
     def _now_fence(self) -> float:
@@ -259,7 +247,7 @@ class AwsKinesisStreamReader(DataSourceStreamReader):
         recs = resp.get("Records", [])
         if not recs:
             return False
-        if _arrival_ts(recs[0]) > fence:
+        if recs[0]["ApproximateArrivalTimestamp"].timestamp() > fence:
             return True
         return resp.get("MillisBehindLatest", 0) > 0
 
@@ -309,7 +297,7 @@ class AwsKinesisStreamReader(DataSourceStreamReader):
     def read(self, partition: _AwsShardSlice):
         if partition.shard_id == "__empty__":
             return
-        client = make_read_client(partition.options)
+        client = _read_client(partition.options)
         lo, hi = partition.fence_lo, partition.fence_hi
         disorder = float(partition.options.get("maxdisorderms", "1000")) / 1000.0
         kwargs = {"StreamName": partition.stream, "ShardId": partition.shard_id}
@@ -324,7 +312,7 @@ class AwsKinesisStreamReader(DataSourceStreamReader):
             resp = client.get_records(ShardIterator=it, Limit=10000)
             recs = resp.get("Records", [])
             for rec in recs:
-                ts = _arrival_ts(rec)
+                ts = rec["ApproximateArrivalTimestamp"].timestamp()
                 if ts > hi + disorder:
                     # Deterministic stop: arrival stamps may be
                     # slightly non-monotonic within a shard, so stop
@@ -692,8 +680,8 @@ class DirKinesisClient:
 
         os.makedirs(self._dir, exist_ok=True)
         # Arrival stamp, the service's ApproximateArrivalTimestamp:
-        # assigned at ingest, immutable thereafter — what the aws-mode
-        # fence reader ranges over (dir:-mode readers ignore it).
+        # perfbench/run.py reads it as each record's arrival time
+        # (dir:-mode readers ignore it).
         now = _time.time()
         groups: dict[str, list[str]] = {}
         for rec in Records:
@@ -778,19 +766,10 @@ class ThrottlingDirKinesisClient(DirKinesisClient):
 
 
 def write_fake_shard(endpoint_dir: str, shard_id: str, records: list[tuple[str, str]]) -> None:
-    """Append (data, partitionKey) records to a fake shard file — the
-    test-side producer matching the reference's sink contract.  Each
-    line carries an arrival stamp (``ts``) so the aws-mode fence
-    reader's AT_TIMESTAMP ranging works against the fake exactly as
-    against the service."""
-    import time as _time  # noqa: PLC0415
-
+    """Append (data, partitionKey) records to a ``dir:`` shard file —
+    the test-side producer matching the reference's sink contract."""
     os.makedirs(endpoint_dir, exist_ok=True)
-    now = _time.time()
     path = os.path.join(endpoint_dir, f"shard-{shard_id}.jsonl")
     with open(path, "a", encoding="utf-8") as fh:
         for data, key in records:
-            fh.write(
-                json.dumps({"data": data, "partitionKey": key, "ts": now})
-                + "\n"
-            )
+            fh.write(json.dumps({"data": data, "partitionKey": key}) + "\n")

@@ -22,12 +22,12 @@ engine upgrades this deliberately:
   partition order, so one input split's records stay together and in
   order; order across the splits of one micro-batch is not kept.
 
-The client is injected / import-gated: tests use ``CollectingSink``
-(a local stand-in with the same record contract — SURVEY.md §2.1 row
-K1 prescribes the substitution) and, since boto3+moto landed in this
-image (round 13), the REAL ``_boto3_factory`` path is exercised
-against an in-process moto Kinesis server over HTTP
-(tests/test_moto_aws.py).
+The client defaults to boto3 (``sources.kinesis_source.kinesis_client``,
+the same builder the ``aws`` reader uses), exercised against an
+in-process moto Kinesis server over HTTP (tests/test_moto_aws.py);
+``client_factory`` injects a local client instead (``DirKinesisClient``,
+or ``CollectingSink`` as a whole-sink stand-in with the same record
+contract — SURVEY.md §2.1 row K1 prescribes the substitution).
 """
 
 from __future__ import annotations
@@ -194,7 +194,8 @@ class KinesisSink:
 
     ``client_factory`` is called once per sink, on the first batch, and
     the client is reused for every later batch; it defaults to a boto3
-    factory that raises a clear error when boto3 is absent.
+    client built from the sink's region, profile, credentials and
+    ``endpoint_url``.
 
     ``delivery`` selects the end-to-end guarantee:
 
@@ -241,20 +242,17 @@ class KinesisSink:
         self.delivery = delivery
 
     def _boto3_factory(self):
-        try:
-            import boto3  # noqa: PLC0415
-        except ImportError as exc:  # pragma: no cover - env-dependent
-            raise RuntimeError(
-                "boto3 is not installed; inject client_factory or use "
-                "CollectingSink for local runs"
-            ) from exc
-        session = boto3.Session(
-            profile_name=self.profile,
-            region_name=self.region,
-            aws_access_key_id=self.access_key,
-            aws_secret_access_key=self.secret_key,
+        from kinesis_log_streamer_spark.sources.kinesis_source import (
+            kinesis_client,
         )
-        return session.client("kinesis", endpoint_url=self.endpoint_url)
+
+        return kinesis_client(
+            region=self.region,
+            profile=self.profile,
+            access_key=self.access_key,
+            secret_key=self.secret_key,
+            endpoint_url=self.endpoint_url,
+        )
 
     def write_batch(self, df: DataFrame, epoch_id: int) -> None:
         """foreachBatch entry point: one Spark job brings the batch to

@@ -191,9 +191,20 @@ class StdinSpooler:
         return self.n_records
 
     def start_thread(self) -> threading.Thread:
-        t = threading.Thread(target=self.run, name="stdin-spool", daemon=True)
+        t = threading.Thread(
+            target=self._run_in_thread, name="stdin-spool", daemon=True
+        )
         t.start()
         return t
+
+    def _run_in_thread(self) -> None:
+        try:
+            self.run()
+        except Exception:  # noqa: BLE001
+            # Already in `error`, which the thread's owner reports
+            # after the drain; re-raising here would also print a
+            # thread traceback through threading.excepthook.
+            pass
 
 
 def drain_and_stop(query, spooler: StdinSpooler) -> None:

@@ -79,3 +79,39 @@ class TestConcurrentScratchDirs:
             assert not t.is_alive()
         assert not errors, errors
         assert results == [serial, serial]
+
+
+class TestConcurrentSpoolPipelines:
+    """End-to-end pin of the ADVICE r11 race fix: two spool-staging
+    pipelines running simultaneously must neither interfere (their
+    fixture dirs are per-thread ``_scratch`` dirs; the shared sweeper
+    tolerates vanished paths) nor change their answers vs serial."""
+
+    NAMES = ["l20_ingest_rollup_pipeline", "l21_errorlog_pipeline"]
+
+    def test_parallel_matches_serial(self, spark):
+        serial = {
+            n: [tuple(r) for r in Q.REGISTRY[n](spark, SF).collect()]
+            for n in self.NAMES
+        }
+        results: dict[str, list] = {}
+        errors: list[Exception] = []
+
+        def run(name: str) -> None:
+            try:
+                results[name] = [
+                    tuple(r)
+                    for r in Q.REGISTRY[name](spark, SF).collect()
+                ]
+            except Exception as e:  # noqa: BLE001
+                errors.append(e)
+
+        threads = [
+            threading.Thread(target=run, args=(n,)) for n in self.NAMES
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errors, errors
+        assert results == serial

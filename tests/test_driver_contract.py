@@ -138,3 +138,18 @@ class TestRegistryOrder:
         assert list(qs) == list(Q.REGISTRY)
         assert all(qs[n] is Q.REGISTRY[n] for n in Q.REGISTRY)
         assert all(f.__name__ == n for n, f in qs.items())
+
+
+def test_bench_headline_names_all_registered():
+    """Every bench HEADLINE member must exist in the registry AND have
+    a DuckDB oracle — a typo here would crash the driver's bench run,
+    so catch it in pytest instead."""
+    import bench
+    from kinesis_log_streamer_spark.plans import oracles as O
+    from kinesis_log_streamer_spark.plans import queries as Q
+
+    missing = [n for n in bench.HEADLINE if n not in Q.REGISTRY]
+    assert not missing, f"HEADLINE names absent from REGISTRY: {missing}"
+    no_oracle = [n for n in bench.HEADLINE if n not in O.ORACLES]
+    assert not no_oracle, f"HEADLINE names without oracles: {no_oracle}"
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))

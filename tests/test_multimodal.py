@@ -1,4 +1,5 @@
-"""Multimodal-column plumbing tests (decode stubbed per environment)."""
+"""Multimodal-column tests: byte-level featurizers and the PPM/WAV/PNG
+codecs."""
 
 from __future__ import annotations
 
@@ -26,20 +27,13 @@ class TestBinaryPlumbing:
         assert rows[0].kind == "text"
 
     def test_fake_decode_features(self, media):
-        out = {r.doc_id: r for r in M.decode_media(media, fake=True).collect()}
+        out = {r.doc_id: r for r in M.decode_media(media).collect()}
         assert out[0].feat_first == ord("a")
         assert out[0].feat_last == ord("d")
         assert abs(out[0].feat_mean - (97 + 98 + 99 + 100) / 4) < 1e-9
 
-    def test_real_decode_raises_not_implemented(self, media):
-        with pytest.raises(Exception) as exc_info:
-            M.decode_media(media, fake=False).collect()
-        assert "NotImplementedError" in str(exc_info.value) or isinstance(
-            exc_info.value, NotImplementedError
-        )
-
     def test_frame_sample_explodes_offsets(self, media):
-        frames = M.frame_sample(media, every_n_bytes=2, fake=True).collect()
+        frames = M.frame_sample(media, every_n_bytes=2).collect()
         by_doc = {}
         for r in frames:
             by_doc.setdefault(r.doc_id, []).append(r)
@@ -54,100 +48,16 @@ class TestBinaryPlumbing:
         # (97+98)//2 = 97, (99+100)//2 = 99
         out = {
             (r.doc_id, r.cell_no): r.px
-            for r in M.resize_media(media, target_w=2, fake=True).collect()
+            for r in M.resize_media(media, target_w=2).collect()
         }
         assert out[(0, 0)] == 97 and out[(0, 1)] == 99
         # doc 1 payload "xyz" (120,121,122): bounds 0,1,3 ->
         # cell0 = 120, cell1 = (121+122)//2 = 121
         assert out[(1, 0)] == 120 and out[(1, 1)] == 121
 
-    def test_resize_real_path_raises(self, media):
-        with pytest.raises(Exception) as exc_info:
-            M.resize_media(media, fake=False).collect()
-        assert "NotImplementedError" in str(exc_info.value) or isinstance(
-            exc_info.value, NotImplementedError
-        )
-
-
-class _StubImage:
-    """PIL.Image-shaped stub: 'decodes' raw bytes as a 1xN grayscale
-    strip, supports convert('L') and BOX resize by block-averaging —
-    enough to drive the real-codec legs without pillow installed."""
-
-    class Resampling:
-        BOX = "box"
-
-    def __init__(self, px):
-        self._px = px
-
-    @staticmethod
-    def open(fh):
-        return _StubImage(list(fh.read()))
-
-    def convert(self, mode):
-        assert mode == "L"
-        return self
-
-    def resize(self, size, resample):
-        w, h = size
-        assert h == 1 and resample == "box"
-        n = len(self._px)
-        bounds = [(j * n) // w for j in range(w + 1)]
-        return _StubImage(
-            [
-                sum(self._px[bounds[j] : bounds[j + 1]])
-                // max(1, bounds[j + 1] - bounds[j])
-                for j in range(w)
-            ]
-        )
-
-    def getdata(self):
-        return list(self._px)
-
-
-class _StubSoundfile:
-    @staticmethod
-    def read(fh, dtype):
-        import numpy as np
-
-        raw = fh.read()
-        # 'decode': u8 bytes -> [-1, 1) floats, stereo interleaved
-        mono = np.frombuffer(raw, dtype=np.uint8).astype(np.float64)
-        return (mono / 128.0 - 1.0).reshape(-1, 1), 16000
-
-
-class TestRealCodecLegs:
-    """The import-gated real paths, driven by codec-shaped stub
-    modules (pillow/soundfile are absent in this container; in a
-    deployment with them installed these same helpers run verbatim)."""
-
-    def test_pixel_stats(self):
-        mean, first, last = M._pixel_stats(_StubImage, b"abcd")
-        assert (mean, first, last) == ((97 + 98 + 99 + 100) / 4, 97, 100)
-        assert M._pixel_stats(_StubImage, b"") == (0.0, -1, -1)
-
-    def test_resize_gray_matches_fake_block_average(self):
-        # the real BOX resample and the fake integer block average
-        # agree on a 1xN strip — the fake is a faithful stand-in
-        assert M._resize_gray(_StubImage, b"abcd", 2) == [97, 99]
-        assert M._resize_gray(_StubImage, b"xyz", 2) == [120, 121]
-
-    def test_samples_soundfile_downmixes(self):
-        samples = M._samples_soundfile(_StubSoundfile, bytes([0, 128, 255]))
-        assert samples == [-1.0, 0.0, (255 / 128.0 - 1.0)]
-
-    def test_require_raises_with_hint(self):
-        with pytest.raises(NotImplementedError, match="pip install"):
-            M._require("definitely_not_a_module_xyz", "testing")
-
-    def test_audio_decode_flag_validated(self, media):
-        with pytest.raises(ValueError, match="u8|soundfile"):
-            M.audio_frame_energy(media, decode="mp3")
-
 
 class TestRealUncompressedCodecs:
-    """Round 13: REAL decoders for uncompressed formats — no stub, no
-    import gate.  The encoders write actual PPM/RIFF wire bytes; the
+    """Round 13: REAL decoders for uncompressed formats.  The encoders write actual PPM/RIFF wire bytes; the
     decoders parse them back with zero knowledge of the generator."""
 
     def test_ppm_header_roundtrip(self):

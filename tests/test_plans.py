@@ -17,6 +17,9 @@ committed strategy, not a runtime accident.
 
 from __future__ import annotations
 
+import datetime
+
+import pandas as pd
 from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.operators import dedup as D
@@ -336,3 +339,77 @@ class TestQ135ApproxTopK:
         )
         want = [(i + 1, r.item, r.cnt) for i, r in enumerate(exact)]
         assert got == want
+
+
+def _pq(name: str) -> pd.DataFrame:
+    return pd.read_parquet(f"{SF}/{name}.parquet")
+
+
+class TestZonemapPrune:
+    PROBES = [
+        ("year_1996", "1996-01-01", "1996-12-31", 0.0, 1e9),
+        ("h1_1998", "1998-01-01", "1998-06-30", 0.0, 1e9),
+        ("day_1997_03_15", "1997-03-15", "1997-03-15", 0.0, 1e9),
+        ("price_over_400k", "1992-01-01", "2001-12-31", 400000.0, 1e9),
+        ("none_2005", "2005-01-01", "2005-12-31", 0.0, 1e9),
+    ]
+
+    def _expected(self) -> list[tuple]:
+        od = _pq("orders")
+        d = pd.to_datetime(od["o_orderdate"]).dt.date
+        p = od["o_totalprice"].astype(float)
+        fid = (d.map(lambda x: x.year) - 1992) * 2 + (
+            d.map(lambda x: x.month) > 6
+        ).astype(int)
+        zones = {}
+        for f in sorted(fid.unique()):
+            m = fid == f
+            zones[f] = (
+                d[m].min(), d[m].max(), p[m].min(), p[m].max(), int(m.sum())
+            )
+        out = []
+        for probe, lo, hi, plo, phi in sorted(self.PROBES):
+            lo = datetime.date.fromisoformat(lo)
+            hi = datetime.date.fromisoformat(hi)
+            pruned = {
+                f
+                for f, (dmin, dmax, pmin, pmax, _) in zones.items()
+                if dmax < lo or dmin > hi or pmax < plo or pmin > phi
+            }
+            scanned = sum(
+                z[4] for f, z in zones.items() if f not in pruned
+            )
+            matching = int(
+                ((d >= lo) & (d <= hi) & (p >= plo) & (p <= phi)).sum()
+            )
+            out.append((probe, len(zones), len(pruned), scanned, matching))
+        return out
+
+    def test_matches_python_recompute(self, spark):
+        got = [
+            (
+                r.probe,
+                r.files_total,
+                r.files_pruned,
+                r.rows_scanned,
+                r.rows_matching,
+            )
+            for r in Q.f25_zonemap_prune(spark, SF).collect()
+        ]
+        assert got == self._expected()
+
+    def test_clustered_column_prunes_unclustered_does_not(self, spark):
+        """Zone maps skip only what the layout sorted: every date
+        probe prunes most files; the price-only probe prunes none."""
+        rows = {
+            r.probe: r
+            for r in Q.f25_zonemap_prune(spark, SF).collect()
+        }
+        assert rows["price_over_400k"].files_pruned == 0
+        assert rows["none_2005"].files_pruned == rows["none_2005"].files_total
+        assert rows["none_2005"].rows_scanned == 0
+        for probe in ("year_1996", "h1_1998", "day_1997_03_15"):
+            r = rows[probe]
+            assert r.files_pruned >= r.files_total - 3
+            # a zone-aware scan never reads fewer rows than match
+            assert r.rows_scanned >= r.rows_matching

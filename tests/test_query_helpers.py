@@ -212,8 +212,10 @@ class TestOnePathPerQuery:
     def test_no_environment_forks(self):
         """The only ``except`` handlers in the registry are the two
         scratch-dir races; no package module probes the environment
-        (``*_available``) or names the protobuf-gated
-        transformWithState API."""
+        (``*_available``), names the protobuf-gated transformWithState
+        API, or imports ``importlib``; the package's one ``except
+        ImportError`` is the boto3 guard in ``kinesis_client``; and no
+        package function takes a ``fake`` or ``decode`` switch."""
         with open(Q.__file__) as fh:
             tree = ast.parse(fh.read())
         owners = [
@@ -225,6 +227,7 @@ class TestOnePathPerQuery:
         assert sorted(owners) == ["_scratch_root", "_sweep_stale_tmp"], owners
 
         pkg = os.path.dirname(os.path.dirname(Q.__file__))
+        import_guards = []
         for root, _dirs, files in os.walk(pkg):
             for fname in files:
                 if not fname.endswith(".py"):
@@ -233,13 +236,38 @@ class TestOnePathPerQuery:
                 with open(path) as fh:
                     src = fh.read()
                 assert "transformWithStateInPandas" not in src, path
-                probes = [
-                    node.name
-                    for node in ast.walk(ast.parse(src))
-                    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-                    and node.name.endswith("_available")
-                ]
+                funcs = []
+                for top in ast.parse(src).body:
+                    for node in ast.walk(top):
+                        if isinstance(node, (ast.Import, ast.ImportFrom)):
+                            mods = [a.name for a in node.names]
+                            if isinstance(node, ast.ImportFrom):
+                                mods = [node.module or ""]
+                            tops = [m.split(".")[0] for m in mods]
+                            assert "importlib" not in tops, path
+                        if isinstance(node, ast.ExceptHandler) and any(
+                            err in ast.unparse(node.type or ast.Pass())
+                            for err in ("ImportError", "ModuleNotFoundError")
+                        ):
+                            import_guards.append(
+                                (fname, getattr(top, "name", "<module>"))
+                            )
+                        if isinstance(
+                            node, (ast.FunctionDef, ast.AsyncFunctionDef)
+                        ):
+                            funcs.append(node)
+                probes = [f.name for f in funcs if f.name.endswith("_available")]
                 assert not probes, (path, probes)
+                switches = [
+                    (f.name, a.arg)
+                    for f in funcs
+                    for a in (
+                        f.args.posonlyargs + f.args.args + f.args.kwonlyargs
+                    )
+                    if a.arg in ("fake", "decode")
+                ]
+                assert not switches, (path, switches)
+        assert import_guards == [("kinesis_source.py", "kinesis_client")]
 
     def test_k08_raises_when_the_server_cannot_start(
         self, spark, sf_dir, monkeypatch
@@ -252,3 +280,39 @@ class TestOnePathPerQuery:
         monkeypatch.setattr(ThreadedMotoServer, "start", refuse)
         with pytest.raises(OSError, match="bind refused"):
             Q.k08_aws_transport_roundtrip(spark, sf_dir)
+
+
+class TestSweepStaleTmp:
+    """The scratch-root sweeper (guarded getmtime) — pinned so the race
+    tolerance can't regress."""
+
+    def test_sweeps_old_keeps_fresh(self, tmp_path, monkeypatch):
+        monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+        old = tmp_path / "klss-t12-old"
+        new = tmp_path / "klss-t12-new"
+        old.mkdir()
+        new.mkdir()
+        past = os.path.getmtime(str(old)) - 7200
+        os.utime(str(old), (past, past))
+        Q._sweep_stale_tmp()
+        assert not old.exists() and new.exists()
+
+    def test_vanished_path_between_glob_and_stat_is_tolerated(
+        self, tmp_path, monkeypatch
+    ):
+        monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+        gone = tmp_path / "klss-t12-gone"
+        gone.mkdir()
+        real_getmtime = os.path.getmtime
+
+        def racy_getmtime(p):
+            if "klss-t12-gone" in str(p):
+                # simulate the concurrent process rmtree-ing between
+                # the sweeper's glob and its stat
+                shutil.rmtree(str(gone), ignore_errors=True)
+                raise FileNotFoundError(p)
+            return real_getmtime(p)
+
+        monkeypatch.setattr(os.path, "getmtime", racy_getmtime)
+        # must not raise
+        Q._sweep_stale_tmp()

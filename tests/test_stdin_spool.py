@@ -554,6 +554,24 @@ def test_cli_streaming_json_garbage_exits_1(spark, capsys):
     assert rc == 1
 
 
+def test_cli_spool_failure_is_reported_once(spark, capsys, monkeypatch):
+    """A malformed record fails the run with the CLI's one stderr line;
+    the spool thread records the error instead of raising it, so no
+    thread traceback reaches ``threading.excepthook``."""
+    import threading
+
+    from kinesis_log_streamer_spark import cli
+
+    hooked = []
+    monkeypatch.setattr(threading, "excepthook", hooked.append)
+    args = cli.build_parser().parse_args(["--dry-run", "-f", "json", "Stream"])
+    stream = ChunkedStream([b'{"a":1}{bad'])
+    assert cli.run_streaming(args, {}, "json", stream) == 1
+    err = capsys.readouterr().err.splitlines()
+    assert len(err) == 1 and err[0].startswith("stdin spool failed: "), err
+    assert hooked == []
+
+
 @pytest.mark.parametrize("mode", ["driver", "per-executor"])
 def test_cli_streaming_host_identity_modes(spark, capsys, mode):
     """E1: every record carries the driver's host identity as its

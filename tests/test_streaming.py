@@ -3,11 +3,15 @@ boundaries, windowed/sessionized aggregation (SURVEY §5.2 item 3)."""
 
 from __future__ import annotations
 
+import hashlib
 import json
+from collections import Counter
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from kinesis_log_streamer_spark.plans import queries as Q
 from kinesis_log_streamer_spark.streaming.kinesis_sink import (
     CollectingSink,
     chunk_records,
@@ -17,6 +21,8 @@ from kinesis_log_streamer_spark.streaming.pipeline import (
     run_stream,
     windowed_event_counts,
 )
+
+SF = "/root/testdata/sf0.001"
 
 
 class TestChunking:
@@ -657,123 +663,69 @@ class TestEventTimeSessionizer:
         ]
 
 
-class TestAwsKinesisTransport:
-    """The aws endpoint's ListShards/GetShardIterator/GetRecords path,
-    driven end-to-end through the boto3-shaped fake (fake_aws.py)."""
+def _pq(name: str) -> pd.DataFrame:
+    return pd.read_parquet(f"{SF}/{name}.parquet")
 
-    def _write(self, ep):
-        from kinesis_log_streamer_spark.sources.kinesis_source import (
-            write_fake_shard,
-        )
 
-        write_fake_shard(ep, "000", [("a1", "h1"), ("a2", "h1")])
-        write_fake_shard(ep, "001", [("b1", "h2")])
+def _shard_no(key: str) -> int:
+    return int(hashlib.md5(key.encode("utf-8")).hexdigest()[0], 16) // 2
 
-    def test_fake_client_call_surface(self, tmp_path):
-        from kinesis_log_streamer_spark.sources.fake_aws import (
-            FakeKinesisReadClient,
-        )
 
-        ep = str(tmp_path / "stream")
-        self._write(ep)
-        c = FakeKinesisReadClient(ep)
-        assert [s["ShardId"] for s in c.list_shards(StreamName="s")["Shards"]] == [
-            "000",
-            "001",
-        ]
-        it = c.get_shard_iterator(
-            StreamName="s", ShardId="000", ShardIteratorType="TRIM_HORIZON"
-        )["ShardIterator"]
-        resp = c.get_records(ShardIterator=it, Limit=1)
-        assert resp["Records"][0]["Data"] == b"a1"
-        assert resp["Records"][0]["SequenceNumber"] == "0"
-        resp2 = c.get_records(ShardIterator=resp["NextShardIterator"])
-        assert [r["Data"] for r in resp2["Records"]] == [b"a2"]
-        it3 = c.get_shard_iterator(
-            StreamName="s",
-            ShardId="000",
-            ShardIteratorType="AFTER_SEQUENCE_NUMBER",
-            StartingSequenceNumber="0",
-        )["ShardIterator"]
-        assert c.get_records(ShardIterator=it3)["Records"][0]["Data"] == b"a2"
-
-    def _aws_stream(self, spark, ep):
-        from kinesis_log_streamer_spark.sources.kinesis_source import (
-            KinesisDataSource,
-        )
-
-        spark.dataSource.register(KinesisDataSource)
-        return (
-            spark.readStream.format("kinesis_py")
-            .option("endpoint", "aws")
-            .option("stream", "test-stream")
-            .option(
-                "client", "kinesis_log_streamer_spark.sources.fake_aws:client_for"
+class TestReshardPlan:
+    def _expected(self) -> list[tuple]:
+        ev = _pq("events")
+        out = []
+        for mode, keys in (
+            ("by_type", ev["event_type"].astype(str).tolist()),
+            ("host", ["i-0abc.example.internal"] * len(ev)),
+        ):
+            loads = Counter(_shard_no(k) for k in keys)
+            total = sum(loads.values())
+            rows = []
+            for shard in range(8):
+                n = loads.get(shard, 0)
+                if n * 8 > 2 * total:
+                    action = "split"
+                    children = min(4, -(-n * 8 // total))
+                elif n * 32 < total:
+                    action, children = "merge", 1
+                else:
+                    action, children = "keep", 1
+                rows.append([shard, n, n * 1000 // total, action, children])
+            plan_total = sum(c for _, _, _, a, c in rows if a != "merge") + (
+                sum(1 for r in rows if r[3] == "merge") + 1
+            ) // 2
+            out.extend(
+                (mode, s, n, pm, a, c, plan_total)
+                for s, n, pm, a, c in rows
             )
-            .option("fake_dir", ep)
-            .option("fencelagms", "0")  # single-process clock: no skew
-            .load()
-        )
+        return out
 
-    def test_aws_endpoint_reads_all_shards(self, spark, tmp_path):
-        ep = str(tmp_path / "stream")
-        self._write(ep)
-        q = (
-            self._aws_stream(spark, ep)
-            .writeStream.format("memory")
-            .queryName("kin_aws")
-            .option("checkpointLocation", str(tmp_path / "ck_aws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql(
-            "SELECT * FROM kin_aws ORDER BY shardId, CAST(sequenceNumber AS INT)"
-        ).collect()
-        assert [
-            (r.data, r.partitionKey, r.shardId, r.sequenceNumber) for r in rows
-        ] == [
-            ("a1", "h1", "000", "0"),
-            ("a2", "h1", "000", "1"),
-            ("b1", "h2", "001", "0"),
+    def test_matches_python_recompute(self, spark):
+        got = [
+            (
+                r.mode,
+                r.shard_no,
+                r.n_records,
+                r.share_pm,
+                r.action,
+                r.n_children,
+                r.plan_total_shards,
+            )
+            for r in Q.k07_reshard_plan(spark, SF).collect()
         ]
+        assert got == self._expected()
 
-    def test_aws_incremental_offsets_no_reread(self, spark, tmp_path):
-        import time
-
-        from kinesis_log_streamer_spark.sources.kinesis_source import (
-            write_fake_shard,
-        )
-
-        ep = str(tmp_path / "stream2")
-        self._write(ep)
-        q = (
-            self._aws_stream(spark, ep)
-            .writeStream.format("memory")
-            .queryName("kin_aws_inc")
-            .option("checkpointLocation", str(tmp_path / "ck_aws2"))
-            .trigger(processingTime="1 second")
-            .start()
-        )
-        try:
-            deadline = time.time() + 60
-            while time.time() < deadline:
-                if spark.sql("SELECT count(*) c FROM kin_aws_inc").collect()[0].c >= 3:
-                    break
-                time.sleep(1)
-            # new records on one shard: the next micro-batch's probe must
-            # advance that shard's sequence offset and read ONLY them.
-            write_fake_shard(ep, "001", [("b2", "h2")])
-            deadline = time.time() + 60
-            while time.time() < deadline:
-                if spark.sql("SELECT count(*) c FROM kin_aws_inc").collect()[0].c >= 4:
-                    break
-                time.sleep(1)
-        finally:
-            q.stop()
-        rows = spark.sql(
-            "SELECT data FROM kin_aws_inc "
-            "ORDER BY shardId, CAST(sequenceNumber AS INT)"
-        ).collect()
-        # exactly-once per record: no rereads, appended records picked up
-        assert [r.data for r in rows] == ["a1", "a2", "b1", "b2"]
+    def test_host_mode_split_is_maximal_and_futile(self, spark):
+        """The reference's host key concentrates 1000 pm on one shard;
+        the planner maxes the split (4 children) while every other
+        shard is a merge — the diagnosis k06 quantifies."""
+        rows = [
+            r
+            for r in Q.k07_reshard_plan(spark, SF).collect()
+            if r.mode == "host"
+        ]
+        hot = [r for r in rows if r.action == "split"]
+        assert len(hot) == 1
+        assert hot[0].share_pm == 1000 and hot[0].n_children == 4
+        assert all(r.action == "merge" for r in rows if r is not hot[0])
