@@ -13,7 +13,8 @@ Same flags, same validation, same exit codes:
 * usage errors → exit 2 with usage on stderr (main.go:22-55)
 
 Data path, the same for a never-EOF Apache pipe and a finite file:
-stdin is read in 64 KiB chunks and spooled to a landing dir
+stdin is read in 64 KiB chunks from the first instant (while the
+session is still starting) and spooled to a landing dir
 (``streaming/stdin_spool.py``), a Structured Streaming query tails it
 → transform/enrich → partition-key stamp → Kinesis sink (or
 ``--dry-run`` → records to stdout), and EOF stops the query once the
@@ -163,16 +164,21 @@ def run_streaming(args, entries, output_format, stream) -> int:
         drain_and_stop,
     )
 
-    spark = get_spark("kinesis-log-streamer-cli")
+    # stdin is read from the first instant: the spooler lands records
+    # while the session starts, and the file source takes the files
+    # that landed before the query did.  A piped logger is never
+    # blocked behind JVM start-up.
     work = tempfile.mkdtemp(prefix="klss-spool-")
     landing = os.path.join(work, "landing")
     ckpt = os.path.join(work, "ckpt")
-    os.makedirs(landing, exist_ok=True)
-
-    threshold = spark.conf.get(_DISCOVERY_THRESHOLD)
-    spark.conf.set(_DISCOVERY_THRESHOLD, str(2**31 - 1))
-    query = None
+    query = threshold = None
     try:
+        os.makedirs(landing)
+        spooler = StdinSpooler(stream, landing, fmt=args.format, entries=entries)
+        spooler.start_thread()
+        spark = get_spark("kinesis-log-streamer-cli")
+        threshold = spark.conf.get(_DISCOVERY_THRESHOLD)
+        spark.conf.set(_DISCOVERY_THRESHOLD, str(2**31 - 1))
         # cleanSource=delete: processed spool files are removed on later
         # triggers, so a never-EOF pipe (the Apache CustomLog deployment)
         # keeps both the landing dir and the source's file listing
@@ -206,7 +212,6 @@ def run_streaming(args, entries, output_format, stream) -> int:
                 delivery=args.delivery,
             )
 
-        spooler = StdinSpooler(stream, landing, fmt=args.format, entries=entries)
         query = run_stream(
             records,
             sink,
@@ -214,12 +219,12 @@ def run_streaming(args, entries, output_format, stream) -> int:
             available_now=False,
             processing_time=TRIGGER,
         )
-        spooler.start_thread()
         drain_and_stop(query, spooler)
     finally:
         if query is not None and query.isActive:
             query.stop()
-        spark.conf.set(_DISCOVERY_THRESHOLD, threshold)
+        if threshold is not None:
+            spark.conf.set(_DISCOVERY_THRESHOLD, threshold)
         shutil.rmtree(work, ignore_errors=True)
     if spooler.error is not None:
         print(f"stdin spool failed: {spooler.error}", file=sys.stderr)

@@ -28,7 +28,8 @@ Semantics reproduced:
 Each value becomes its record text through :func:`render_record`.
 Given the CLI's ``-I`` entry map the splitter renders the record
 SINK-READY (T3+T4, jsonstreamer.go:49-62), so Spark only stamps the
-partition key.
+partition key; an object whose text is already in that form is cut
+from the buffer with the entries appended, not encoded again.
 """
 
 from __future__ import annotations
@@ -52,6 +53,11 @@ class ConcatenatedJsonError(ValueError):
 
 
 _COMPACT = (",", ":")
+# The sink-ready record's encoder, built once: ``json.dumps`` with
+# non-default options builds a new encoder on every call.
+_ENCODE_RECORD = json.JSONEncoder(
+    ensure_ascii=False, separators=_COMPACT, allow_nan=False
+).encode
 # Spark's variant holds ints of up to 38 digits as decimals, longer
 # ones as doubles.
 _DECIMAL38 = 10**38
@@ -131,7 +137,12 @@ def render_record(
         return json.dumps(value, separators=_COMPACT, allow_nan=False)
     obj = {k: _nested(v) for k, v in value.items()}
     obj.update(entries)
-    out = json.dumps(obj, ensure_ascii=False, separators=_COMPACT, allow_nan=False)
+    return _spark_escapes(_ENCODE_RECORD(obj))
+
+
+def _spark_escapes(out: str) -> str:
+    """A rendered record with Spark's spelling of control escapes and
+    a lone surrogate as U+FFFD."""
     if "\\u00" in out:
         out = _CONTROL_ESCAPE.sub(lambda m: m[1] + "\\u00" + m[2].upper(), out)
     if not out.isascii():
@@ -139,6 +150,46 @@ def render_record(
     return out
 
 
+def _verbatim_record(
+    buf: str, start: int, end: int, value: dict, entries: Mapping[str, str], tail: str
+) -> str | None:
+    """``render_record(value, entries)`` cut from the object's own text
+    ``buf[start:end]``, or None when that text is not already the
+    object's compact form.  Spares the hot path the re-encoding of
+    ordinary records.
+
+    Every member value must be a string, a DECIMAL(38) int, a boolean
+    or null.  ``size`` counts a string's characters once, ``"`` and
+    ``\\`` twice (the compact form's ``\\"`` and ``\\\\``).  No text of
+    the object is shorter, and only its compact form without control
+    characters is as long: whitespace, a repeated key, a ``-0`` or any
+    other escape make the text longer.  The entries' compact members
+    (``tail``) are then appended, which is the T4 merge when no entry
+    key is in the object.
+    """
+    if not value or not value.keys().isdisjoint(entries):
+        return None
+    escaped = buf.find("\\", start, end) >= 0
+    size = len(value) + 1  # braces and commas
+    for k, v in value.items():
+        t = type(v)
+        if t is str:
+            n = len(v) + 2 + (_escapes(v) if escaped else 0)
+        elif t is int and -_DECIMAL38 < v < _DECIMAL38:
+            n = len(str(v))
+        elif t is bool or v is None:
+            n = 5 if v is False else 4
+        else:
+            return None
+        size += len(k) + 3 + n + (_escapes(k) if escaped else 0)
+    if end - start != size:
+        return None
+    text = f"{buf[start : end - 1]},{tail}}}" if tail else buf[start:end]
+    return _spark_escapes(text)
+
+
+def _escapes(s: str) -> int:
+    return s.count('"') + s.count("\\")
 
 
 def split_json_values(
@@ -163,6 +214,8 @@ def split_json_values(
     before it.
     """
     decode = json.JSONDecoder().raw_decode
+    # the entries' compact members, appended by _verbatim_record
+    tail = None if entries is None else _ENCODE_RECORD(dict(entries))[1:-1]
     out: list[str] = []
     i, n = 0, len(buf)
     while True:
@@ -194,7 +247,10 @@ def split_json_values(
             return out, buf[i:]
         if value is not None:
             try:
-                out.append(render_record(value, entries))
+                record = None
+                if tail is not None and type(value) is dict:
+                    record = _verbatim_record(buf, i, end, value, entries, tail)
+                out.append(record or render_record(value, entries))
             except ValueError as exc:
                 raise ConcatenatedJsonError(
                     f"JSON value rejected at offset {i}: {exc}", out

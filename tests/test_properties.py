@@ -74,6 +74,29 @@ class TestConcatenatedJsonProperties:
         nonnull = [v for v in values if v is not None]
         assert [json.loads(g) for g in got] == nonnull
 
+    @given(
+        st.dictionaries(st.text(max_size=8), json_values, max_size=6),
+        st.sampled_from([(",", ":"), (", ", ": "), (",", ": ")]),
+        st.booleans(),
+        st.sampled_from([{}, {"LogFile": "HTTPAccessLog"}, {"": "\x7f\"\\"}]),
+    )
+    @settings(max_examples=300, deadline=None)
+    def test_split_renders_each_spelling_like_render_record(
+        self, value, seps, ascii_only, entries
+    ):
+        # An object's text, compact or not, escaped or raw UTF-8, gives
+        # the record render_record gives its value (the splitter cuts
+        # compact objects from the buffer instead of encoding them).
+        from kinesis_log_streamer_spark.sources.json_source import (
+            render_record,
+            split_json_values,
+        )
+
+        text = json.dumps(value, separators=seps, ensure_ascii=ascii_only)
+        records, tail = split_json_values(text, True, entries)
+        assert records == [render_record(json.loads(text), entries)]
+        assert tail == ""
+
     @given(st.lists(json_values, max_size=5), st.text(max_size=10))
     @settings(max_examples=200, deadline=None)
     def test_strict_mode_raises_on_trailing_garbage(self, values, garbage):

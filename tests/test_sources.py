@@ -10,6 +10,7 @@ import pathlib
 
 import pytest
 
+from kinesis_log_streamer_spark.sources import json_source
 from kinesis_log_streamer_spark.sources.json_source import (
     ConcatenatedJsonError,
     read_concatenated_json,
@@ -171,6 +172,67 @@ class TestRenderRecord:
         # (json.loads itself refuses the separators)
         with pytest.raises(ValueError):
             render_record(json.loads(text), entries)
+
+
+class TestVerbatimRecord:
+    """An object whose text is already its compact form is cut from the
+    buffer instead of being encoded again; every record still equals
+    ``render_record``'s."""
+
+    TEXTS = [
+        '{"a":"x","b":1,"c":-5}',
+        '{"a":"x \\"q\\" \\\\ y"}',  # the compact form's own escapes
+        '{"a":true,"b":null,"c":"na\u00efve \u5317"}',
+        "{}",
+        '{"a":"\\u0041"}',  # a longer escape than needed
+        '{"a":"\\/"}',
+        '{"a":-0}',
+        '{"a":1,"a":2}',  # a repeated key
+        '{"a":1 ,"b":2}',
+        '{ "a":1}',
+        '{"a":1.5}',
+        '{"a":100.0}',
+        '{"a":99999999999999999999999999999999999999}',
+        '{"a":100000000000000000000000000000000000000}',
+        '{"a":{"z":1,"b":2}}',
+        '{"a":[1.0]}',
+        '{"a":"\\u001f"}',
+        '{"a":"\\u001F\\n"}',
+        '{"a":"x\\ny"}',  # a short escape of a control character
+        '{"k\\"":"v\\\\"}',  # an escaped key
+        '{"a":"\\ud800"}',
+        '{"a":"\ud800"}',
+        '{"\\u00e9":"\u00e9"}',
+        '{"LogFile":"mine","b":1}',  # an entry key in the object
+    ]
+
+    @pytest.mark.parametrize("text", TEXTS)
+    @pytest.mark.parametrize(
+        "entries",
+        [{}, {"LogFile": "HTTPAccessLog"}, {"K": "a\x01\"b", "L": "\ud800"}],
+    )
+    def test_equals_render_record(self, text, entries):
+        records, tail = json_source.split_json_values(text, True, entries)
+        assert records == [render_record(json.loads(text), entries)]
+        assert tail == ""
+
+    def test_compact_objects_skip_the_encoder(self, monkeypatch):
+        calls = []
+
+        def counting(value, entries=None):
+            calls.append(value)
+            return render_record(value, entries)
+
+        monkeypatch.setattr(json_source, "render_record", counting)
+        compact = '{"a":"x \\"q\\"","b":1,"c":true}'
+        records, _ = json_source.split_json_values(
+            compact + "\n" + '{"a": 1}', True, {"LogFile": "L"}
+        )
+        assert records == [
+            '{"a":"x \\"q\\"","b":1,"c":true,"LogFile":"L"}',
+            '{"a":1,"LogFile":"L"}',
+        ]
+        assert calls == [{"a": 1}]  # only the non-compact one re-encoded
 
 
 class TestFileSources:

@@ -338,6 +338,61 @@ class TestCliStreamingIntake:
         assert not list(tmp_path.glob("klss-spool-*"))
 
 
+class TestStdinReadDuringStartup:
+    def test_producer_finishes_while_session_starts(self, spark, monkeypatch):
+        """stdin is drained while ``get_spark`` is still starting: a
+        producer writing 1 MiB into a pipe (whose buffer holds 64 KiB)
+        finishes before a stubbed slow ``get_spark`` returns, and every
+        record then arrives exactly once."""
+        from kinesis_log_streamer_spark import session
+
+        lines = [
+            f"startup-{i:06d} GET /index.html 200 {'x' * 32}\n" for i in range(16384)
+        ]
+        payload = "".join(lines).encode()
+        assert len(payload) >= 2**20
+        r, w = os.pipe()
+        producer_done = threading.Event()
+
+        def produce():
+            with os.fdopen(w, "wb") as fh:
+                fh.write(payload)
+            producer_done.set()
+
+        real_get_spark = session.get_spark
+        seen = []
+
+        def slow_get_spark(*args, **kwargs):
+            seen.append(producer_done.wait(20))
+            return real_get_spark(*args, **kwargs)
+
+        monkeypatch.setattr(session, "get_spark", slow_get_spark)
+        producer = threading.Thread(target=produce, daemon=True)
+        producer.start()
+        with os.fdopen(r, "rb") as stream:
+            rc, sink = _run_cli_streaming(monkeypatch, stream)
+        producer.join(timeout=10)
+        assert seen == [True], "the producer blocked while the session started"
+        assert rc == 0
+        got = [x for _, rows in sink.batches for x in rows]
+        assert sorted(got) == sorted(x.rstrip("\n") for x in lines)
+
+    def test_spool_temp_dir_removed_when_session_fails(self, monkeypatch, tmp_path):
+        """The spooler runs before ``get_spark``; a session that fails to
+        start still leaves no spool dir behind."""
+        from kinesis_log_streamer_spark import session
+
+        def failing_get_spark(*args, **kwargs):
+            time.sleep(0.5)  # the spooler has landed its file by now
+            raise RuntimeError("no session")
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        monkeypatch.setattr(session, "get_spark", failing_get_spark)
+        with pytest.raises(RuntimeError, match="no session"):
+            _run_cli_streaming(monkeypatch, ChunkedStream([b"one\ntwo\n"]))
+        assert not list(tmp_path.glob("klss-spool-*"))
+
+
 class TestCliRecordOrder:
     def test_each_landed_file_prints_contiguous_in_file_order(
         self, spark, monkeypatch, capsys
