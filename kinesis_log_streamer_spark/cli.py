@@ -15,12 +15,14 @@ Same flags, same validation, same exit codes:
 Data path, the same for a never-EOF Apache pipe and a finite file:
 stdin is read in 64 KiB chunks from the first instant (while the
 session is still starting) and spooled to a landing dir
-(``streaming/stdin_spool.py``), a Structured Streaming query tails it
-→ transform/enrich → partition-key stamp → Kinesis sink (or
-``--dry-run`` → records to stdout), and EOF stops the query once the
-last landed record is committed.  The partition key is the host
-identity, resolved once on the driver (``hostid.get_host_id``; one key
-per process, linestreamer.go:102).  JSON records are split, enriched
+(``streaming/stdin_spool.py``).  The spooler hands its landed files
+over as soon as stdin goes quiet (flush-on-idle, basestreamer.go:42-46),
+and each hand-over becomes one Spark batch → transform/enrich →
+partition-key stamp → Kinesis sink (or ``--dry-run`` → records to
+stdout); EOF ends the run once the last landed file is sent.  The
+partition key is the host identity, resolved once on the driver while
+the session starts (``hostid.get_host_id``; one key per process,
+linestreamer.go:102).  JSON records are split, enriched
 and serialized by the stdin splitter itself
 (``json_source.split_json_values``), so Spark only stamps their key.
 A malformed JSON value — a value that does not decode, or a separator
@@ -30,8 +32,8 @@ the records before it were sent, even while stdin stays open
 
 Record order: every record is sent exactly once, and the records of
 one landed file (one stdin read) stay contiguous and in input order.
-Across the files of one micro-batch order is not kept: the file source
-packs a batch's files into splits by size.
+Across the files of one batch order is not kept: the file source packs
+a batch's files into splits by size.
 """
 
 from __future__ import annotations
@@ -39,19 +41,15 @@ from __future__ import annotations
 import argparse
 import sys
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 
 from kinesis_log_streamer_spark.hostid import get_host_id
 
-# Intake per micro-batch, in landed spool bytes: a queued backlog
-# drains in one batch (paying the stream engine's fixed per-batch cost
-# once), while a trickle still takes whatever has landed at each
-# trigger.  It bounds the memory of one batch, not the spool.
+# Intake per batch, in landed spool bytes: a queued backlog drains in
+# one batch (paying Spark's fixed per-batch cost once), while a
+# trickle is sent whenever stdin goes quiet.  The spooler stops reading
+# stdin while more than twice this many landed bytes are unsent.
 MAX_BYTES_PER_TRIGGER = 64 * 2**20
-
-# The micro-batch trigger interval: the flush-on-idle cadence, as a
-# record read from a quiet pipe reaches the sink about one interval
-# later (basestreamer.go:42-46).
-TRIGGER = "500 milliseconds"
 
 # Above this many files, Spark lists a batch's input with a separate
 # distributed job.  The landing dir is always local, where a stat per
@@ -121,19 +119,18 @@ def resolve_output_format(fmt: str, output_format: str) -> str:
     return "json" if fmt == "json" else "string"
 
 
-def build_records(args, values, entries, output_format):
-    """Input rows (column ``value``) → sink records ``(data,
-    partitionKey)``, on a batch or streaming DataFrame alike.
+def build_records(args, values, entries, output_format, host_id):
+    """One batch's input rows (column ``value``) → sink records
+    ``(data, partitionKey)``.
 
-    The partition key is the host identity, resolved once here on the
-    driver.  JSON values arrive sink-ready from the splitter (the
-    ``-I`` merge and serialization are done,
-    ``json_source.render_record``), so they only get the key; lines
-    take the line pipeline."""
+    The partition key is ``host_id``, the host identity
+    ``run_streaming`` resolved once on the driver.  JSON values arrive
+    sink-ready from the splitter (the ``-I`` merge and serialization
+    are done, ``json_source.render_record``), so they only get the key;
+    lines take the line pipeline."""
     from kinesis_log_streamer_spark.operators.transforms import to_sink_records
     from kinesis_log_streamer_spark.streaming.pipeline import build_line_pipeline
 
-    host_id = get_host_id(probe_network=not args.dry_run)
     if args.format == "json":
         return to_sink_records(values, host_id)
     return build_line_pipeline(
@@ -144,85 +141,65 @@ def build_records(args, values, entries, output_format):
 def run_streaming(args, entries, output_format, stream) -> int:
     """The CLI's data path (C1 parity with the reference's loop,
     linestreamer.go:34-57, basestreamer.go:27-46): chunked ``stream``
-    → landing-dir spool → ``readStream`` → key stamp (JSON records
-    land sink-ready; lines take the line pipeline) → sink, with bounded
-    per-trigger intake and an exact stop at EOF.
+    → landing-dir spool → one ``spark.read.text`` batch per hand-over
+    → key stamp (JSON records land sink-ready; lines take the line
+    pipeline) → sink → the batch's files deleted, until EOF.
 
-    The full input is NEVER held in one string: the spooler carries at
-    most one 64 KiB chunk plus one partial record
-    (`streaming/stdin_spool.py`), and each micro-batch admits landed
-    files up to ``MAX_BYTES_PER_TRIGGER`` bytes (always at least one
-    file).  The spool's temp dir is removed once the query stopped."""
+    The spooler hands its landed files over when the stream has no
+    more input ready, at EOF or a spool error, or once
+    ``MAX_BYTES_PER_TRIGGER`` bytes are held, so a queued backlog is one
+    batch and a record from a quiet pipe is sent at once
+    (basestreamer.go:42-46).  The full input is NEVER held in one
+    string: the spooler carries at most one 64 KiB chunk plus one
+    partial record, a batch takes at most ``MAX_BYTES_PER_TRIGGER``
+    bytes of files (always at least one file), and the spooler stops
+    reading while twice that many bytes are unsent
+    (`streaming/stdin_spool.py`).  No checkpoint is kept: a sink
+    failure ends the run non-zero.  The spool's temp dir is removed on
+    every exit."""
     import os
     import shutil
     import tempfile
 
     from kinesis_log_streamer_spark.session import get_spark
-    from kinesis_log_streamer_spark.streaming.pipeline import run_stream
-    from kinesis_log_streamer_spark.streaming.stdin_spool import (
-        StdinSpooler,
-        drain_and_stop,
-    )
+    from kinesis_log_streamer_spark.streaming.stdin_spool import StdinSpooler
 
-    # stdin is read from the first instant: the spooler lands records
-    # while the session starts, and the file source takes the files
-    # that landed before the query did.  A piped logger is never
-    # blocked behind JVM start-up.
+    # stdin is read from the first instant and the host identity (up
+    # to two metadata-probe timeouts off AWS) resolves while the
+    # session starts: a piped logger is never blocked behind JVM
+    # start-up, and the first batch waits for neither.
     work = tempfile.mkdtemp(prefix="klss-spool-")
     landing = os.path.join(work, "landing")
-    ckpt = os.path.join(work, "ckpt")
-    query = threshold = None
+    spooler = spark = threshold = None
     try:
         os.makedirs(landing)
-        spooler = StdinSpooler(stream, landing, fmt=args.format, entries=entries)
+        spooler = StdinSpooler(
+            stream,
+            landing,
+            fmt=args.format,
+            entries=entries,
+            batch_bytes=MAX_BYTES_PER_TRIGGER,
+        )
         spooler.start_thread()
-        spark = get_spark("kinesis-log-streamer-cli")
+        with ThreadPoolExecutor(1, thread_name_prefix="host-id") as pool:
+            host_id = pool.submit(get_host_id, probe_network=not args.dry_run)
+            spark = get_spark("kinesis-log-streamer-cli")
+        sink = _make_sink(args)
         threshold = spark.conf.get(_DISCOVERY_THRESHOLD)
         spark.conf.set(_DISCOVERY_THRESHOLD, str(2**31 - 1))
-        # cleanSource=delete: processed spool files are removed on later
-        # triggers, so a never-EOF pipe (the Apache CustomLog deployment)
-        # keeps both the landing dir and the source's file listing
-        # bounded instead of growing for the life of the process.
-        raw = (
-            spark.readStream.format("text")
-            .option("maxBytesPerTrigger", MAX_BYTES_PER_TRIGGER)
-            .option("cleanSource", "delete")
-            .load(landing)
-        )
-        # JSON landing files are JSONL: one sink-ready record per line
-        records = build_records(args, raw, entries, output_format)
-
-        if args.dry_run:
-
-            class _StdoutSink:
-                def write_batch(self, df, epoch_id):
-                    for row in df.collect():
-                        print(f"{row['partitionKey']}\t{row['data']}")
-
-            sink = _StdoutSink()
-        else:
-            from kinesis_log_streamer_spark.streaming.kinesis_sink import (
-                KinesisSink,
+        key = host_id.result()
+        for epoch, files in enumerate(iter(spooler.take, None)):
+            paths = [path for path, _ in files]
+            records = build_records(
+                args, spark.read.text(paths), entries, output_format, key
             )
-
-            sink = KinesisSink(
-                args.stream_name[0],
-                region=args.region,
-                profile=args.profile,
-                delivery=args.delivery,
-            )
-
-        query = run_stream(
-            records,
-            sink,
-            ckpt,
-            available_now=False,
-            processing_time=TRIGGER,
-        )
-        drain_and_stop(query, spooler)
+            sink.write_batch(records, epoch)
+            for path in paths:
+                os.remove(path)
+            spooler.release(files)
     finally:
-        if query is not None and query.isActive:
-            query.stop()
+        if spooler is not None:
+            spooler.close()
         if threshold is not None:
             spark.conf.set(_DISCOVERY_THRESHOLD, threshold)
         shutil.rmtree(work, ignore_errors=True)
@@ -230,6 +207,27 @@ def run_streaming(args, entries, output_format, stream) -> int:
         print(f"stdin spool failed: {spooler.error}", file=sys.stderr)
         return 1
     return 0
+
+
+def _make_sink(args):
+    """``--dry-run`` prints each record as ``key<TAB>data``; otherwise
+    the records go to the named Kinesis stream."""
+    if args.dry_run:
+
+        class _StdoutSink:
+            def write_batch(self, df, epoch_id):
+                for row in df.collect():
+                    print(f"{row['partitionKey']}\t{row['data']}")
+
+        return _StdoutSink()
+    from kinesis_log_streamer_spark.streaming.kinesis_sink import KinesisSink
+
+    return KinesisSink(
+        args.stream_name[0],
+        region=args.region,
+        profile=args.profile,
+        delivery=args.delivery,
+    )
 
 
 def main(argv: Sequence[str] | None = None) -> int:

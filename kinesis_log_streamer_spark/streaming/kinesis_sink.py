@@ -11,9 +11,12 @@ engine upgrades this deliberately:
   and is walked one Arrow record batch at a time, so a write is one
   Spark job with no exchange and no Python worker task.
 * **At-least-once** — failed records are retried with exponential
-  backoff; records still failing raise out of ``foreachBatch``, which
-  fails the query, and a restart from the checkpoint replays the
-  micro-batch.  (Documented delta from the reference's at-most-once.)
+  backoff; records still failing raise out of ``write_batch``.  In a
+  ``foreachBatch`` query that fails the query, and a restart from its
+  checkpoint replays the micro-batch.  The CLI keeps no checkpoint (it
+  never replayed from the one it deleted on exit): a failed put ends
+  the run with a non-zero exit, and what to resend is the caller's
+  call.  (Documented delta from the reference's at-most-once.)
   ``KinesisSink(delivery="at_most_once")`` restores STRICT reference
   parity — one call, no retry, log-and-drop, never raise
   (:func:`put_records_at_most_once`).
@@ -99,8 +102,8 @@ def put_records_with_retry(
     and drops failures (basestreamer.go:73-83); we retry — documented
     at-least-once upgrade.  Records still failing after ``max_retries``
     are handed to ``on_drop`` (a dead-letter hook); with no hook the
-    call RAISES so Structured Streaming fails the task and replays the
-    batch from the checkpoint — a silent drop would void the
+    call RAISES — a failed query replays the batch from its checkpoint,
+    the CLI exits non-zero — because a silent drop would void the
     at-least-once guarantee."""
     pending = batch
     for attempt in range(max_retries + 1):
@@ -200,8 +203,8 @@ class KinesisSink:
     ``delivery`` selects the end-to-end guarantee:
 
     * ``"at_least_once"`` (default) — retry with backoff, raise on
-      exhaustion so the query fails and its restart replays the
-      micro-batch from the checkpoint.
+      exhaustion: a query fails and its restart replays the
+      micro-batch from the checkpoint; the CLI exits non-zero.
     * ``"at_most_once"`` — strict reference parity
       (:func:`put_records_at_most_once`): one call, no retry, log and
       drop, never raise.

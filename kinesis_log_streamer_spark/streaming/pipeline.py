@@ -14,24 +14,31 @@ CLI's Spark stage for entry point 2 is the E1 key stamp alone
 Spark-side form of the same merge, for values that arrive unenriched.
 
 Streaming semantics mapping:
-* flush-on-idle (B1) → a ``processingTime`` trigger
-  (``cli.TRIGGER``) approximates the idle-flush cadence (documented
-  delta, SURVEY §7 risk 3).
-* EOF drain (B1) → ``stdin_spool.drain_and_stop``: once stdin ended,
-  one ``processAllAvailable`` commits every landed record, then the
-  query stops.  ``Trigger.AvailableNow`` drains input already present
-  at start, for sources that do not grow.
-* bounded channel → a byte budget per micro-batch
-  (``maxBytesPerTrigger``, ``cli.MAX_BYTES_PER_TRIGGER``) bounds one
-  batch's intake.  The spool itself is not bounded by the query: it
-  lands whatever stdin delivers, holding at most one chunk and one
+* flush-on-idle (B1) → the CLI (``cli.run_streaming``) runs no
+  streaming query: its spooler hands landed files over as soon as a
+  zero-timeout poll finds stdin quiet (a ``stdin_spool.BACKLOG_GRACE_MS``
+  poll after a backlog-sized read), at EOF, or once
+  ``cli.MAX_BYTES_PER_TRIGGER`` bytes are held, and each hand-over is
+  one ``spark.read.text`` batch into the sink.  No Spark trigger can
+  express "send when the channel is momentarily empty" (SURVEY §7
+  risk 3).
+* EOF drain (B1) → the CLI's loop ends once the spooler has handed
+  over its last file and that batch is sent.  For a query that tails
+  a growing dir (i08), ``stdin_spool.drain_and_stop`` runs one
+  ``processAllAvailable`` after stdin ended, then stops the query;
+  ``Trigger.AvailableNow`` drains input already present at start, for
+  sources that do not grow.
+* bounded channel → the CLI's spooler stops reading stdin while more
+  than ``2 × cli.MAX_BYTES_PER_TRIGGER`` landed bytes are unsent, and
+  one batch takes at most ``cli.MAX_BYTES_PER_TRIGGER`` bytes of files
+  (always at least one); the spooler holds at most one chunk and one
   partial record in memory, and stops at the first malformed JSON
   value.
 * per-host partition key → one key per process, resolved once on the
   driver (every executor of the ``local[N]`` session runs on the
   driver's host) and stamped as a constant ``partitionKey`` column;
-  the sink puts a micro-batch from the driver in partition order, so
-  one landed file's records stay together and in order.
+  the sink puts a batch from the driver in partition order, so one
+  landed file's records stay together and in order.
 """
 
 from __future__ import annotations

@@ -13,17 +13,34 @@ engine's one JSON splitter), and lands each chunk's records as one
 atomically-renamed file in a landing directory.  JSON values given the
 CLI's ``-I`` entry map land sink-ready — merged and serialized once by
 ``json_source.render_record``, as the reference does per value
-(jsonstreamer.go:42-62) — so the query only stamps the partition key.
-`spark.readStream.format("text")` tails the directory and the
-micro-batch trigger cadence is the flush-on-idle timer.  A byte budget
-per micro-batch (``maxBytesPerTrigger``) bounds one batch's intake;
-it does NOT bound the spool, which lands whatever stdin delivers
-however far the query lags.
+(jsonstreamer.go:42-62) — so Spark only stamps the partition key.
 
-EOF is exact (:func:`drain_and_stop`): once the spooler has landed its
-last file, one ``processAllAvailable`` returns only after a source
-listing taken after that file landed found nothing left to commit,
-and the query is stopped then — no idle window.
+Hand-over (the reference's flush-on-idle, basestreamer.go:42-46):
+landed files are held until the spooler hands them to its consumer
+(:meth:`StdinSpooler.take`), which it does when a zero-timeout poll of
+the stream's fd finds no more input ready (after a backlog-sized read
+the poll waits ``BACKLOG_GRACE_MS``), at EOF or a spool error, or once
+the held bytes reach ``batch_bytes``.  A stream without a
+``fileno`` hands over after every landed file.  The CLI turns each
+take into one Spark batch, so a queued backlog drains in one batch
+and a lone record is sent as soon as stdin goes quiet.  That pays
+while input comes as a backlog or with gaps longer than one batch's
+fixed cost.  A steady stream of single-line writes finds stdin quiet
+between almost every line, so the consumer sends batches back to back,
+each of a few records: lower latency, but more CPU and PutRecords
+calls per record than fewer, larger batches would take.
+
+Bounded (the reference's cap-5 channel, linestreamer.go:37): with
+``batch_bytes`` set, the spooler stops reading while the landed bytes
+its consumer has not released (:meth:`StdinSpooler.release`) exceed
+``2 × batch_bytes``, having handed over what it holds first, so a
+stalled sink slows the producer instead of filling the disk.
+
+:func:`drain_and_stop` is the EOF drain for a Structured Streaming
+query that tails the landing dir (the i08 registry query): once the
+spooler has landed its last file, one ``processAllAvailable`` returns
+only after a source listing taken after that file landed found
+nothing left to commit, and the query is stopped then.
 
 Memory bound: one chunk + one partial record — never the full input.
 A malformed JSON value ends the spool as soon as it is read, after the
@@ -35,6 +52,7 @@ from __future__ import annotations
 
 import codecs
 import os
+import select
 import threading
 import uuid
 from collections.abc import Mapping
@@ -45,6 +63,14 @@ from kinesis_log_streamer_spark.sources.json_source import (
 )
 
 CHUNK_BYTES = 65536  # the reference's read size, linestreamer.go:34
+
+# After a read of at least half a chunk (input outran the spooler: a
+# backlog), how long the idle poll waits for the producer to refill
+# the pipe.  A producer descheduled for a few ms mid-backlog otherwise
+# splits the backlog into two batches, and a batch's fixed cost is
+# ~0.15-0.3 s; a trickle's short reads keep the zero-timeout poll.
+# Both values were set against one producer (64 KiB backlog writes).
+BACKLOG_GRACE_MS = 20
 
 
 class StdinSpooler:
@@ -68,6 +94,10 @@ class StdinSpooler:
     half-written chunk can never enter a micro-batch.  File names are
     zero-padded sequence numbers — lexicographic order IS arrival
     order.
+
+    ``batch_bytes`` sizes a take (at most that many bytes, always at
+    least one file) and bounds the spool at twice that many unreleased
+    bytes; ``None`` leaves both unbounded.
     """
 
     def __init__(
@@ -77,6 +107,7 @@ class StdinSpooler:
         fmt: str = "line",
         chunk_bytes: int = CHUNK_BYTES,
         entries: Mapping[str, str] | None = None,
+        batch_bytes: int | None = None,
     ) -> None:
         if fmt not in ("line", "json"):
             raise ValueError(f"fmt must be line|json, got {fmt!r}")
@@ -97,6 +128,18 @@ class StdinSpooler:
         self.n_files = 0
         self.done = threading.Event()
         self.error: BaseException | None = None
+        # Hand-over state, guarded by _cond: landed files not handed
+        # over yet (held), handed over but not taken (ready), and the
+        # landed bytes the consumer has not released (unsent).
+        self._cond = threading.Condition()
+        self._held: list[tuple[str, int]] = []
+        self._held_bytes = 0
+        self._ready: list[tuple[str, int]] = []
+        self._unsent = 0
+        self._batch_bytes = batch_bytes
+        self._max_unsent = None if batch_bytes is None else 2 * batch_bytes
+        self._closed = False
+        self._poll = _input_poll(stream)
 
     # -- record extraction -------------------------------------------------
 
@@ -129,14 +172,84 @@ class StdinSpooler:
     def _land(self, records: list[str]) -> None:
         if not records:
             return
-        name = f"part-{self._seq:06d}.txt"
+        path = os.path.join(self._dir, f"part-{self._seq:06d}.txt")
         tmp = os.path.join(self._dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write("\n".join(records) + "\n")
-        os.rename(tmp, os.path.join(self._dir, name))
+        data = ("\n".join(records) + "\n").encode("utf-8")
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+        os.rename(tmp, path)
         self._seq += 1
         self.n_records += len(records)
         self.n_files += 1
+        with self._cond:
+            self._held.append((path, len(data)))
+            self._held_bytes += len(data)
+            self._unsent += len(data)
+
+    # -- hand-over ---------------------------------------------------------
+
+    def _hand_over(self) -> None:
+        """Make every held file takeable; the caller holds ``_cond``."""
+        if self._held:
+            self._ready += self._held
+            self._held = []
+            self._held_bytes = 0
+            self._cond.notify_all()
+
+    def _before_read(self, last_read: int) -> bool:
+        """Hand over the held files unless more input is ready and they
+        are under ``batch_bytes``; then wait while the unreleased bytes
+        exceed the bound.  False once the consumer has closed."""
+        grace = BACKLOG_GRACE_MS if last_read >= self._chunk // 2 else 0
+        idle = self._poll is None or (
+            bool(self._held) and not self._poll.poll(grace)
+        )
+        with self._cond:
+            full = (
+                self._batch_bytes is not None
+                and self._held_bytes >= self._batch_bytes
+            )
+            if idle or full:
+                self._hand_over()
+            cap = self._max_unsent
+            while cap is not None and self._unsent > cap and not self._closed:
+                # Waiting on held files would wait forever.
+                self._hand_over()
+                self._cond.wait()
+            return not self._closed
+
+    def take(self) -> list[tuple[str, int]] | None:
+        """The next handed-over files as ``(path, bytes)`` in landing
+        order, at most ``batch_bytes`` of them (always at least one
+        file); blocks until there are some.  ``None`` once the spool has
+        ended and every landed file was taken."""
+        with self._cond:
+            self._cond.wait_for(lambda: self._ready or self.done.is_set())
+            if not self._ready:
+                return None
+            n, size = 1, self._ready[0][1]
+            limit = self._batch_bytes
+            while n < len(self._ready) and (
+                limit is None or size + self._ready[n][1] <= limit
+            ):
+                size += self._ready[n][1]
+                n += 1
+            taken, self._ready = self._ready[:n], self._ready[n:]
+            return taken
+
+    def release(self, files: list[tuple[str, int]]) -> None:
+        """The consumer is done with ``files`` (sent and deleted): their
+        bytes no longer count against the bound."""
+        with self._cond:
+            self._unsent -= sum(size for _, size in files)
+            self._cond.notify_all()
+
+    def close(self) -> None:
+        """The consumer stops taking: a spooler waiting for room stops
+        reading instead."""
+        with self._cond:
+            self._closed = True
+            self._cond.notify_all()
 
     # -- main loop ---------------------------------------------------------
 
@@ -150,13 +263,16 @@ class StdinSpooler:
         try:
             return self._run()
         except BaseException as exc:
-            # Surface the failure AND unblock drain_and_stop — a dead
-            # spool thread that never set `done` would park the drain
-            # loop forever (it has no timeout).
+            # Surface the failure AND unblock take()/drain_and_stop — a
+            # dead spool thread that never set `done` would park its
+            # consumer forever (neither has a timeout).
             self.error = exc
             raise
         finally:
-            self.done.set()
+            with self._cond:
+                self._hand_over()
+                self.done.set()
+                self._cond.notify_all()
 
     def _run(self) -> int:
         os.makedirs(self._dir, exist_ok=True)
@@ -167,8 +283,12 @@ class StdinSpooler:
         # pipe until 64 KiB accumulated and defeat flush-on-idle
         # (basestreamer.go:42-46).  Raw/test streams fall back to read.
         read = getattr(self._stream, "read1", None) or self._stream.read
+        got = 0
         while True:
+            if not self._before_read(got):
+                return self.n_records
             chunk = read(self._chunk)
+            got = len(chunk)
             if not chunk:
                 break
             if isinstance(chunk, bytes):
@@ -205,6 +325,18 @@ class StdinSpooler:
             # after the drain; re-raising here would also print a
             # thread traceback through threading.excepthook.
             pass
+
+
+def _input_poll(stream) -> select.poll | None:
+    """A poll object on ``stream``'s fd, or None for a stream without
+    one (its spooler then hands over after every landed file)."""
+    try:
+        fd = stream.fileno()
+    except (AttributeError, OSError, ValueError):
+        return None
+    poll = select.poll()
+    poll.register(fd, select.POLLIN)
+    return poll
 
 
 def drain_and_stop(query, spooler: StdinSpooler) -> None:

@@ -174,23 +174,24 @@ class TestJsonRecordsBatchAndStreaming:
         assert '"NaN"' not in capsys.readouterr().out
 
     def test_records_plan_no_json_parse_or_serialize(self, spark, monkeypatch):
-        from kinesis_log_streamer_spark.streaming import pipeline
+        from kinesis_log_streamer_spark.streaming import kinesis_sink
 
         captured = []
-        run_stream = pipeline.run_stream
 
-        def capture(records, *a, **kw):
-            captured.append(records)
-            return run_stream(records, *a, **kw)
+        class CapturingSink:
+            def write_batch(self, df, epoch_id):
+                captured.append(df)
 
-        monkeypatch.setattr(pipeline, "run_stream", capture)
-        args = self._streaming_args()
+        monkeypatch.setattr(kinesis_sink, "KinesisSink", lambda *a, **kw: CapturingSink())
+        monkeypatch.setattr(cli, "get_host_id", lambda probe_network=False: "testhost")
+        args = cli.build_parser().parse_args(["-f", "json", "Test"])
         assert cli.run_streaming(args, {"k": "v"}, "json", io.BytesIO(b'{"a":1}')) == 0
         batch = cli.build_records(
             cli.build_parser().parse_args(self.ARGV),
             spark.createDataFrame([('{"a":1}',)], "value string"),
             {"k": "v"},
             "json",
+            "testhost",
         )
         for records in (captured[0], batch):
             plan = records._jdf.queryExecution().analyzed().toString()

@@ -1,4 +1,5 @@
-"""The CLI data path: chunked stdin spool → readStream → sink.
+"""The CLI data path: chunked stdin spool → one Spark batch per
+hand-over → sink (and the spool's ``drain_and_stop`` for queries).
 
 Proves the VERDICT r04 C1 gap is closed: a multi-chunk stream flows
 through the pipeline with batch boundaries and order preserved while
@@ -134,24 +135,37 @@ class TestSpooler:
 
 
 class _RecordingSink:
-    def __init__(self):
+    """Records each non-empty batch; with ``gate`` the first
+    ``write_batch`` waits for ``release`` (a stalled sink), and
+    ``on_write`` runs as each write starts."""
+
+    def __init__(self, gate: bool = False, on_write=None):
         self.batches: list[tuple[int, list[str]]] = []
         self.arrived: list[float] = []  # monotonic time of each batch
+        self.entered = threading.Event()
+        self.release = threading.Event()
+        if not gate:
+            self.release.set()
+        self._on_write = on_write
 
     def write_batch(self, df, epoch_id):
+        if self._on_write is not None:
+            self._on_write()
+        self.entered.set()
+        self.release.wait(60)
         rows = [r["data"] for r in df.collect()]
         if rows:
             self.batches.append((epoch_id, rows))
             self.arrived.append(time.monotonic())
 
 
-def _run_cli_streaming(monkeypatch, stream, fmt="line"):
+def _run_cli_streaming(monkeypatch, stream, fmt="line", sink=None):
     """``cli.run_streaming`` (no --dry-run) with a recording sink bound
     in place of ``KinesisSink``; returns (exit code, sink)."""
     from kinesis_log_streamer_spark import cli
     from kinesis_log_streamer_spark.streaming import kinesis_sink
 
-    sink = _RecordingSink()
+    sink = sink or _RecordingSink()
     monkeypatch.setattr(kinesis_sink, "KinesisSink", lambda *a, **kw: sink)
     monkeypatch.setattr(cli, "get_host_id", lambda probe_network=False: "testhost")
     args = cli.build_parser().parse_args(["--streaming", "-f", fmt, "Stream"])
@@ -256,8 +270,9 @@ class TestStreamingEndToEnd:
 
 
 class TestCliStreamingIntake:
-    """``run_streaming`` sizes micro-batch intake by landed bytes
-    (``cli.MAX_BYTES_PER_TRIGGER``), not by a file count."""
+    """``run_streaming`` sizes each batch (one ``StdinSpooler.take``)
+    by landed bytes (``cli.MAX_BYTES_PER_TRIGGER``), not by a file
+    count."""
 
     def test_backlog_drains_in_at_most_two_batches(self, spark, monkeypatch):
         # 40 landed files: more than Spark's 32-path listing threshold
@@ -267,7 +282,9 @@ class TestCliStreamingIntake:
         assert rc == 0
         got = [r for _, rows in sink.batches for r in rows]
         assert sorted(got) == sorted(_lines(pieces))  # exactly once
-        # the first trigger may list the landing dir mid-spool
+        # a stream without fileno hands over after every landed file,
+        # so the first take() may come mid-spool; the rest are held
+        # by the time that batch is sent
         assert len(sink.batches) <= 2
 
     def test_byte_cap_bounds_each_batch(self, spark, monkeypatch):
@@ -281,19 +298,16 @@ class TestCliStreamingIntake:
         assert rc == 0
         got = [r for _, rows in sink.batches for r in rows]
         assert sorted(got) == sorted(_lines(pieces))
-        # Spark admits files up to the cap, and always at least one
+        # take() hands out whole files up to the cap (at least one
+        # file, and each file here is smaller than the cap)
         for _, rows in sink.batches:
-            assert sum(len(r) + 1 for r in rows) <= cap + file_bytes
+            assert sum(len(r) + 1 for r in rows) <= cap
 
     def test_trickle_flushes_on_idle(self, spark, monkeypatch):
         """Single-record reads with pauses: each record reaches the
-        sink within a couple of trigger intervals of being read, not
-        when a byte budget fills or the stream ends."""
-        from kinesis_log_streamer_spark import cli
-
-        interval, unit = cli.TRIGGER.split()
-        assert unit == "milliseconds"
-        trigger_s = int(interval) / 1000
+        sink within one second of being read (one small Spark batch),
+        not when a byte budget fills or the stream ends."""
+        lag_bound_s = 1.0
 
         class TricklingStream(io.RawIOBase):
             def __init__(self, records: list[str], pause_s: float):
@@ -311,17 +325,17 @@ class TestCliStreamingIntake:
                 return (rec + "\n").encode()
 
         records = [f"trickle-{i}" for i in range(5)]
-        stream = TricklingStream(records, pause_s=6 * trigger_s)
+        stream = TricklingStream(records, pause_s=2 * lag_bound_s)
         rc, sink = _run_cli_streaming(monkeypatch, stream)
         assert rc == 0
         arrived = {
             r: t for (_, rows), t in zip(sink.batches, sink.arrived) for r in rows
         }
         assert sorted(arrived) == records
-        # records[0] also waits for the query's first batch to start;
-        # a record held for more input would lag by a whole pause
+        # records[0] also waits for the session to start; a record
+        # held for more input would lag by a whole pause
         lags = [arrived[r] - stream.read_at[r] for r in records[1:]]
-        assert max(lags) < 4 * trigger_s, lags
+        assert max(lags) < lag_bound_s, lags
 
     @pytest.mark.parametrize(
         "fmt, payload, want_rc",
@@ -393,13 +407,242 @@ class TestStdinReadDuringStartup:
         assert not list(tmp_path.glob("klss-spool-*"))
 
 
+class _WriteEnd:
+    """A pipe's write end, closed once: by the test, or by a fallback
+    timer, so that a hand-over that never comes fails the test instead
+    of hanging it.  ``close()`` is True only for the call that closed."""
+
+    def __init__(self, fd: int, fallback_s: float = 30.0):
+        self.fd = fd
+        self._lock = threading.Lock()
+        self._timer = threading.Timer(fallback_s, self.close)
+        self._timer.daemon = True
+        self._timer.start()
+
+    def close(self) -> bool:
+        with self._lock:
+            if self.fd is None:
+                return False
+            os.close(self.fd)
+            self.fd = None
+        self._timer.cancel()
+        return True
+
+
+class TestSpoolHandOver:
+    """The spooler hands landed files to its consumer when stdin goes
+    quiet, at EOF, or once ``batch_bytes`` are held; a take holds at
+    most ``batch_bytes`` (always at least one file)."""
+
+    def test_quiet_pipe_hands_over_without_eof(self, tmp_path):
+        r, w = os.pipe()
+        write_end = _WriteEnd(w, fallback_s=10.0)
+        with os.fdopen(r, "rb") as stream:
+            sp = StdinSpooler(stream, str(tmp_path), fmt="line", batch_bytes=2**20)
+            sp.start_thread()
+            os.write(w, b"one\ntwo\n")
+            files = sp.take()
+            assert write_end.close(), "handed over only at EOF"
+            assert [os.path.basename(p) for p, _ in files] == ["part-000000.txt"]
+            assert files[0][1] == len(b"one\ntwo\n")
+            assert sp.take() is None
+
+    def test_backlog_producer_pause_does_not_split_the_hand_over(self, tmp_path):
+        """After a read of half a chunk or more the idle poll grants the
+        producer ``BACKLOG_GRACE_MS`` to refill the pipe: a backlog
+        whose writer pauses for a few ms is still one hand-over."""
+        from kinesis_log_streamer_spark.streaming.stdin_spool import (
+            BACKLOG_GRACE_MS,
+            CHUNK_BYTES,
+        )
+
+        line = b"x" * 99 + b"\n"
+        piece = line * (CHUNK_BYTES // len(line))
+        r, w = os.pipe()
+        write_end = _WriteEnd(w, fallback_s=10.0)
+
+        def produce():
+            os.write(w, piece)
+            # pause only once the spooler has landed the first read
+            while not (tmp_path / "part-000000.txt").exists():
+                time.sleep(0.0005)
+            time.sleep(BACKLOG_GRACE_MS / 4000)
+            os.write(w, piece)
+
+        with os.fdopen(r, "rb") as stream:
+            sp = StdinSpooler(stream, str(tmp_path), fmt="line", batch_bytes=2**20)
+            writer = threading.Thread(target=produce, daemon=True)
+            writer.start()
+            sp.start_thread()
+            files = sp.take()
+            writer.join(10)
+            assert write_end.close(), "handed over only at EOF"
+            assert sum(size for _, size in files) == 2 * len(piece)
+            assert sp.take() is None
+
+    def test_take_is_capped_by_batch_bytes(self, tmp_path):
+        pieces = _file_pieces(5)
+        size = len(pieces[0])
+        # the bound, 2 × batch_bytes, holds all five files: run() ends
+        sp = StdinSpooler(
+            ChunkedStream(pieces), str(tmp_path), fmt="line",
+            batch_bytes=5 * size // 2,
+        )
+        sp.run()
+        takes = [[os.path.basename(p) for p, _ in t] for t in iter(sp.take, None)]
+        assert takes == [
+            ["part-000000.txt", "part-000001.txt"],
+            ["part-000002.txt", "part-000003.txt"],
+            ["part-000004.txt"],
+        ]
+
+
+class TestCliBatchLoop:
+    def test_no_streaming_query_and_a_burst_is_one_batch(
+        self, spark, monkeypatch, tmp_path
+    ):
+        """The CLI runs one plain Spark batch per hand-over: while the
+        sink writes, no ``StreamingQuery`` is active and the spool dir
+        holds no checkpoint, only ``landing``.  A burst written to an
+        open pipe before the session is up arrives in one batch."""
+        from kinesis_log_streamer_spark import session
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        lines = [f"burst-{i:05d} GET /index.html 200\n" for i in range(10000)]
+        payload = "".join(lines).encode()
+        assert len(payload) > 4 * 65536  # more than the pipe buffer holds
+        r, w = os.pipe()
+        written = threading.Event()
+
+        def produce():
+            view = memoryview(payload)
+            while view:
+                view = view[os.write(w, view):]
+            written.set()
+
+        real_get_spark = session.get_spark
+
+        def slow_get_spark(*args, **kwargs):
+            assert written.wait(20)
+            time.sleep(0.5)  # the spooler lands the pipe's last bytes
+            return real_get_spark(*args, **kwargs)
+
+        seen = []
+        write_end = _WriteEnd(w, fallback_s=60.0)
+
+        def on_write():
+            seen.append((
+                [q.id for q in spark.streams.active],
+                [p.name for p in tmp_path.glob("klss-spool-*/*")],
+                write_end.close(),  # EOF once the first batch is written
+            ))
+
+        monkeypatch.setattr(session, "get_spark", slow_get_spark)
+        threading.Thread(target=produce, daemon=True).start()
+        sink = _RecordingSink(on_write=on_write)
+        with os.fdopen(r, "rb") as stream:
+            assert _run_cli_streaming(monkeypatch, stream, sink=sink)[0] == 0
+        assert seen == [([], ["landing"], True)]
+        assert len(sink.batches) == 1
+        assert sorted(sink.batches[0][1]) == sorted(x.rstrip("\n") for x in lines)
+
+    def test_stalled_sink_blocks_the_producer(self, spark, monkeypatch, tmp_path):
+        """Bounded spool: while the sink is stalled the spooler stops
+        reading once more than ``2 × MAX_BYTES_PER_TRIGGER`` landed
+        bytes are unsent, so the producer's write blocks and the
+        landing dir stays within that bound plus one chunk file.  After
+        the release every record arrives exactly once."""
+        from kinesis_log_streamer_spark import cli
+        from kinesis_log_streamer_spark.streaming.stdin_spool import CHUNK_BYTES
+
+        cap = 16384
+        monkeypatch.setattr(cli, "MAX_BYTES_PER_TRIGGER", cap)
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        lines = [f"held-{i:06d} GET /index.html 200 {'x' * 40}\n" for i in range(16384)]
+        payload = "".join(lines).encode()
+        r, w = os.pipe()
+        produced = threading.Event()
+
+        def produce():
+            with os.fdopen(w, "wb") as fh:
+                for at in range(0, len(payload), 4096):
+                    fh.write(payload[at : at + 4096])
+            produced.set()
+
+        sink = _RecordingSink(gate=True)
+        result = []
+        stream = os.fdopen(r, "rb")
+        cli_thread = threading.Thread(
+            target=lambda: result.append(
+                _run_cli_streaming(monkeypatch, stream, sink=sink)[0]
+            ),
+            daemon=True,
+        )
+        threading.Thread(target=produce, daemon=True).start()
+        cli_thread.start()
+        try:
+            assert sink.entered.wait(120)
+            landed_max = 0
+            deadline = time.monotonic() + 1.5
+            while time.monotonic() < deadline:
+                landed = 0
+                for path in tmp_path.glob("klss-spool-*/landing/*"):
+                    try:
+                        landed += path.stat().st_size
+                    except OSError:
+                        pass
+                landed_max = max(landed_max, landed)
+                time.sleep(0.02)
+            assert not produced.is_set(), "the producer was never slowed"
+            line = max(len(x) for x in lines)
+            assert 0 < landed_max <= 2 * cap + CHUNK_BYTES + line, landed_max
+        finally:
+            sink.release.set()
+            cli_thread.join(120)
+            stream.close()
+        assert produced.is_set() and result == [0]
+        got = [x for _, rows in sink.batches for x in rows]
+        assert sorted(got) == sorted(x.rstrip("\n") for x in lines)
+
+    def test_host_id_resolves_while_session_starts(self, spark, monkeypatch):
+        """``get_host_id`` (up to two metadata-probe timeouts off AWS)
+        runs while ``get_spark`` starts the session, not after it."""
+        from kinesis_log_streamer_spark import cli, session
+        from kinesis_log_streamer_spark.streaming import kinesis_sink
+
+        spans = {}
+        real_get_spark = session.get_spark
+
+        def slow(name, fn):
+            def run(*args, **kwargs):
+                t0 = time.monotonic()
+                time.sleep(0.5)
+                out = fn(*args, **kwargs)
+                spans[name] = (t0, time.monotonic())
+                return out
+
+            return run
+
+        monkeypatch.setattr(session, "get_spark", slow("spark", real_get_spark))
+        sink = _RecordingSink()
+        monkeypatch.setattr(kinesis_sink, "KinesisSink", lambda *a, **kw: sink)
+        monkeypatch.setattr(
+            cli, "get_host_id", slow("host", lambda probe_network=False: "testhost")
+        )
+        args = cli.build_parser().parse_args(["-f", "line", "Stream"])
+        assert cli.run_streaming(args, {}, "string", ChunkedStream([b"a\n"])) == 0
+        assert sink.batches == [(0, ["a"])]
+        (h0, h1), (s0, s1) = spans["host"], spans["spark"]
+        assert h0 < s1 and s0 < h1, spans
+
+
 class TestCliRecordOrder:
     def test_each_landed_file_prints_contiguous_in_file_order(
         self, spark, monkeypatch, capsys
     ):
         """What ``--dry-run`` promises about order: every record once,
         and one landed file's records together and in file order.
-        Order ACROSS the files of one micro-batch is not kept (the file
+        Order ACROSS the files of one batch is not kept (the file
         source packs a batch's files into splits by size)."""
         from kinesis_log_streamer_spark import cli
 
