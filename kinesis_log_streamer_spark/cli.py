@@ -141,9 +141,10 @@ def build_records(args, values, entries, output_format, host_id):
 def run_streaming(args, entries, output_format, stream) -> int:
     """The CLI's data path (C1 parity with the reference's loop,
     linestreamer.go:34-57, basestreamer.go:27-46): chunked ``stream``
-    → landing-dir spool → one ``spark.read.text`` batch per hand-over
-    → key stamp (JSON records land sink-ready; lines take the line
-    pipeline) → sink → the batch's files deleted, until EOF.
+    → landing-dir spool → ``stdin_spool.send_batches``, one
+    ``spark.read.text`` batch per hand-over → key stamp (JSON records
+    land sink-ready; lines take the line pipeline) → sink → the
+    batch's files deleted, until EOF.
 
     The spooler hands its landed files over when the stream has no
     more input ready, at EOF or a spool error, or once
@@ -162,7 +163,10 @@ def run_streaming(args, entries, output_format, stream) -> int:
     import tempfile
 
     from kinesis_log_streamer_spark.session import get_spark
-    from kinesis_log_streamer_spark.streaming.stdin_spool import StdinSpooler
+    from kinesis_log_streamer_spark.streaming.stdin_spool import (
+        StdinSpooler,
+        send_batches,
+    )
 
     # stdin is read from the first instant and the host identity (up
     # to two metadata-probe timeouts off AWS) resolves while the
@@ -188,15 +192,12 @@ def run_streaming(args, entries, output_format, stream) -> int:
         threshold = spark.conf.get(_DISCOVERY_THRESHOLD)
         spark.conf.set(_DISCOVERY_THRESHOLD, str(2**31 - 1))
         key = host_id.result()
-        for epoch, files in enumerate(iter(spooler.take, None)):
-            paths = [path for path, _ in files]
-            records = build_records(
-                args, spark.read.text(paths), entries, output_format, key
-            )
-            sink.write_batch(records, epoch)
-            for path in paths:
-                os.remove(path)
-            spooler.release(files)
+        send_batches(
+            spooler,
+            spark,
+            lambda values: build_records(args, values, entries, output_format, key),
+            sink,
+        )
     finally:
         if spooler is not None:
             spooler.close()

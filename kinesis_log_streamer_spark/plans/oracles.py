@@ -6036,9 +6036,9 @@ GROUP BY dir, (cum - size_bytes) // 33554432
 ORDER BY dir, group_no
 """
 
-# i08: the live spool->stream drain; the oracle recomputes the rollup
-# straight from events, so a lost or duplicated landing file anywhere
-# in the concurrent land/list/clean path breaks the hash.
+# i08: the CLI's live spool -> batch loop; the oracle recomputes the
+# rollup straight from events, so a lost or duplicated landing file
+# anywhere in the concurrent land/take/send/delete path breaks the hash.
 ORACLES["i08_live_spool_stream"] = """
 SELECT event_type,
        count(*)                        AS n_records,

@@ -12361,31 +12361,33 @@ def p11_join_size_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def i08_live_spool_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CLI data path's LIVE concurrency under the oracle gate
-    (``cli.run_streaming``): the spooler thread lands 64 KiB chunks
-    (the reference's read size, linestreamer.go:34) WHILE a
-    ``processingTime`` micro-batch query tails the landing directory,
-    taking at most 16 files per batch (``maxFilesPerTrigger``), and
-    ``cleanSource=delete`` keeps the listing bounded;
-    ``drain_and_stop`` stops the query at EOF once every landed file
-    is committed (basestreamer.go:27-33).  i07 proves the chunk-carry
-    SPLIT is correct synchronously; this proves the concurrent
-    land/list/clean machinery drops or duplicates nothing — the
-    oracle recomputes the rollup from events, so one lost or re-read
+    """The CLI data path's LIVE concurrency under the oracle gate: the
+    loop ``cli.run_streaming`` runs (``stdin_spool.send_batches``)
+    sends each take of a bounded spooler as one ``spark.read.text``
+    batch WHILE the spooler thread lands more, deletes the sent files
+    and releases them.  The spool is sized from the source (chunks of
+    ~1/16 of it, takes of at most four chunks), so every scale lands
+    ~16 files in at least four batches, and the spooler stops at its
+    bound (2 × ``batch_bytes`` unsent) whenever it runs more than two
+    takes ahead of the sink.  i07 proves the chunk-carry SPLIT is
+    correct synchronously; this proves the concurrent
+    land/take/send/delete/release machinery drops or duplicates
+    nothing — the sink appends each batch to a directory, and the
+    oracle recomputes the rollup from events, so one lost or re-sent
     landing file breaks the hash.
 
-    Scale: the spool is the single-stream CLI tail; the query side is
-    the ordinary file-source micro-batch engine — the same pipeline
-    shape that runs against a never-EOF Apache pipe in production."""
+    Scale: the spool is the single-stream CLI tail; each batch is the
+    same plain Spark read the CLI runs against a never-EOF Apache pipe
+    in production."""
     from kinesis_log_streamer_spark.streaming.stdin_spool import (
         StdinSpooler,
-        drain_and_stop,
+        send_batches,
     )
 
     base = _scratch(spark, "i08")
     src = os.path.join(base, "src")
     landing = os.path.join(base, "landing")
-    ckpt = os.path.join(base, "ckpt")
+    sent = os.path.join(base, "sent")
     os.makedirs(landing)
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 9 == 0)
@@ -12393,45 +12395,46 @@ def i08_live_spool_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_json(F.struct("event_id", "event_type", "value")).alias("value")
     ).write.text(src)
 
-    raw = (
-        spark.readStream.schema("value string")
-        .format("text")
-        .option("maxFilesPerTrigger", "16")
-        .option("cleanSource", "delete")
-        .load(landing)
+    class _AppendSink:
+        def write_batch(self, df: DataFrame, epoch_id: int) -> None:
+            df.write.mode("append").text(sent)
+
+    size = sum(
+        os.path.getsize(os.path.join(src, f))
+        for f in os.listdir(src)
+        if f.startswith("part-")
     )
-    parsed = raw.select(
+    chunk = size // 16 + 1
+    spooler = StdinSpooler(
+        _PartFilesStream(src),
+        landing,
+        fmt="json",
+        chunk_bytes=chunk,
+        batch_bytes=4 * chunk,
+    )
+    spooler.start_thread()
+    try:
+        send_batches(spooler, spark, lambda values: values, _AppendSink())
+    finally:
+        spooler.close()
+    if spooler.error is not None:
+        raise spooler.error
+
+    parsed = spark.read.text(sent).select(
         F.from_json(
             "value", "event_id long, event_type string, value double"
         ).alias("r")
     )
-    # countDistinct is unsupported in streaming aggregation; min/max
-    # ids plus exact counts give the same lost/duplicated signal.
-    agg = parsed.groupBy(F.col("r.event_type").alias("event_type")).agg(
-        F.count(F.lit(1)).alias("n_records"),
-        F.min("r.event_id").alias("min_id"),
-        F.max("r.event_id").alias("max_id"),
-        F.round(F.sum("r.value"), 2).alias("sum_value"),
+    return (
+        parsed.groupBy(F.col("r.event_type").alias("event_type"))
+        .agg(
+            F.count(F.lit(1)).alias("n_records"),
+            F.min("r.event_id").alias("min_id"),
+            F.max("r.event_id").alias("max_id"),
+            F.round(F.sum("r.value"), 2).alias("sum_value"),
+        )
+        .orderBy("event_type")
     )
-    spark.catalog.dropTempView("i08_out")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("i08_out")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="250 milliseconds")
-        .start()
-    )
-    spooler = StdinSpooler(_PartFilesStream(src), landing, fmt="json")
-    try:
-        spooler.start_thread()
-        drain_and_stop(q, spooler)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spooler.error is not None:
-        raise spooler.error
-    return spark.table("i08_out").orderBy("event_type")
 
 
 def p10_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

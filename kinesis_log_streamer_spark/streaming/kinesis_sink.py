@@ -7,30 +7,30 @@ engine upgrades this deliberately:
 
 * **Sub-batching at the real API limits** — 500 records / 5 MiB per
   call (the reference's 5 uses ~1% of a call; BASELINE.md) — inside
-  ``foreachBatch``, on the driver: the micro-batch arrives as Arrow
-  and is walked one Arrow record batch at a time, so a write is one
-  Spark job with no exchange and no Python worker task.
+  ``write_batch``, on the driver: the batch arrives as Arrow and is
+  walked one Arrow record batch at a time, so a write is one Spark job
+  with no exchange and no Python worker task.  The CLI calls
+  ``write_batch`` once per stdin hand-over
+  (``stdin_spool.send_batches``); the k* registry queries call it
+  directly.
 * **At-least-once** — failed records are retried with exponential
-  backoff; records still failing raise out of ``write_batch``.  In a
-  ``foreachBatch`` query that fails the query, and a restart from its
-  checkpoint replays the micro-batch.  The CLI keeps no checkpoint (it
-  never replayed from the one it deleted on exit): a failed put ends
-  the run with a non-zero exit, and what to resend is the caller's
-  call.  (Documented delta from the reference's at-most-once.)
+  backoff; records still failing raise out of ``write_batch``.  The CLI
+  keeps no checkpoint: a failed put ends the run with a non-zero exit,
+  and what to resend is the caller's call.  (Documented delta from the
+  reference's at-most-once.)
   ``KinesisSink(delivery="at_most_once")`` restores STRICT reference
   parity — one call, no retry, log-and-drop, never raise
   (:func:`put_records_at_most_once`).
 * **Partition-key affinity** — rows carry a ``partitionKey`` column
   (E1) that routes them to shards.  Records reach the put loop in
   partition order, so one input split's records stay together and in
-  order; order across the splits of one micro-batch is not kept.
+  order; order across the splits of one batch is not kept.
 
 The client defaults to boto3 (``sources.kinesis_source.kinesis_client``,
 the same builder the ``aws`` reader uses), exercised against an
 in-process moto Kinesis server over HTTP (tests/test_moto_aws.py);
-``client_factory`` injects a local client instead (``DirKinesisClient``,
-or ``CollectingSink`` as a whole-sink stand-in with the same record
-contract — SURVEY.md §2.1 row K1 prescribes the substitution).
+``client_factory`` injects a local client instead (``DirKinesisClient``
+— SURVEY.md §2.1 row K1 prescribes the substitution).
 """
 
 from __future__ import annotations
@@ -102,8 +102,7 @@ def put_records_with_retry(
     and drops failures (basestreamer.go:73-83); we retry — documented
     at-least-once upgrade.  Records still failing after ``max_retries``
     are handed to ``on_drop`` (a dead-letter hook); with no hook the
-    call RAISES — a failed query replays the batch from its checkpoint,
-    the CLI exits non-zero — because a silent drop would void the
+    call RAISES — the CLI exits non-zero — because a silent drop would void the
     at-least-once guarantee."""
     pending = batch
     for attempt in range(max_retries + 1):
@@ -185,13 +184,13 @@ def put_records_at_most_once(
 
 
 class KinesisSink:
-    """foreachBatch writer shipping (data, partitionKey) rows to Kinesis
-    from the driver.
+    """Batch writer shipping (data, partitionKey) rows to Kinesis from
+    the driver.
 
-    Each micro-batch is taken as Arrow (``toArrow``) and converted to
-    Python one Arrow record batch at a time, so the sink holds one
-    micro-batch as Arrow plus one record batch as Python objects.  That
-    suits micro-batches (the CLI's is bounded by
+    Each batch is taken as Arrow (``toArrow``) and converted to Python
+    one Arrow record batch at a time, so the sink holds one batch as
+    Arrow plus one record batch as Python objects.  That suits the
+    CLI's batches (each is bounded by
     ``cli.MAX_BYTES_PER_TRIGGER``); table-sized writes belong to the
     executor-side ``df.write.format("kinesis_py")`` writer.
 
@@ -203,8 +202,7 @@ class KinesisSink:
     ``delivery`` selects the end-to-end guarantee:
 
     * ``"at_least_once"`` (default) — retry with backoff, raise on
-      exhaustion: a query fails and its restart replays the
-      micro-batch from the checkpoint; the CLI exits non-zero.
+      exhaustion: the CLI exits non-zero.
     * ``"at_most_once"`` — strict reference parity
       (:func:`put_records_at_most_once`): one call, no retry, log and
       drop, never raise.
@@ -258,9 +256,9 @@ class KinesisSink:
         )
 
     def write_batch(self, df: DataFrame, epoch_id: int) -> None:
-        """foreachBatch entry point: one Spark job brings the batch to
-        the driver as Arrow; the records are put from here, in
-        partition order."""
+        """Send one batch (``foreachBatch``'s signature): one Spark job
+        brings it to the driver as Arrow; the records are put from
+        here, in partition order."""
         table = df.select("data", "partitionKey").toArrow()
         if self._client is None:
             self._client = self.client_factory()
@@ -287,21 +285,3 @@ class KinesisSink:
             self.stream_name,
         )
 
-
-class CollectingSink:
-    """Local test sink with the Kinesis record contract (A5): captures
-    (data, partitionKey, batch_no) per flush so tests can assert batch
-    boundaries — the stand-in SURVEY §5.2 prescribes."""
-
-    def __init__(self, max_records: int = MAX_RECORDS_PER_CALL) -> None:
-        self.max_records = max_records
-        self.batches: list[list[tuple[bytes, str]]] = []
-
-    def write_batch(self, df: DataFrame, epoch_id: int) -> None:
-        rows = df.select("data", "partitionKey").collect()
-        pairs = [record_pair(r["data"], r["partitionKey"]) for r in rows]
-        self.batches.extend(chunk_records(pairs, max_records=self.max_records))
-
-    @property
-    def records(self) -> list[tuple[bytes, str]]:
-        return [rec for b in self.batches for rec in b]

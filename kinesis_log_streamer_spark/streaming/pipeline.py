@@ -1,5 +1,5 @@
 """End-to-end ingest pipelines: the reference's three entry points as
-Structured Streaming (and batch-twin) dataflows.
+Spark dataflows, applied to each batch the CLI sends.
 
 Entry points reproduced (SURVEY.md §3):
 1. line → string passthrough        (main.go:62-170, T1)
@@ -22,12 +22,10 @@ Streaming semantics mapping:
   one ``spark.read.text`` batch into the sink.  No Spark trigger can
   express "send when the channel is momentarily empty" (SURVEY §7
   risk 3).
-* EOF drain (B1) → the CLI's loop ends once the spooler has handed
-  over its last file and that batch is sent.  For a query that tails
-  a growing dir (i08), ``stdin_spool.drain_and_stop`` runs one
-  ``processAllAvailable`` after stdin ended, then stops the query;
-  ``Trigger.AvailableNow`` drains input already present at start, for
-  sources that do not grow.
+* EOF drain (B1) → the CLI's loop (``stdin_spool.send_batches``) ends
+  once the spooler has handed over its last file and that batch is
+  sent; ``Trigger.AvailableNow`` drains input already present at
+  start, for the registry's queries over sources that do not grow.
 * bounded channel → the CLI's spooler stops reading stdin while more
   than ``2 × cli.MAX_BYTES_PER_TRIGGER`` landed bytes are unsent, and
   one batch takes at most ``cli.MAX_BYTES_PER_TRIGGER`` bytes of files
@@ -46,9 +44,7 @@ from __future__ import annotations
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
-from kinesis_log_streamer_spark.hostid import get_host_id
 from kinesis_log_streamer_spark.operators.transforms import (
     enrich_json_objects,
     filter_empty_lines,
@@ -64,28 +60,27 @@ def build_line_pipeline(
     output_format: str = "string",
     output_key: str = "LogEntry",
     entries: Mapping[str, str] | None = None,
-    host_id: str | None = None,
+    *,
+    host_id: str,
 ) -> DataFrame:
     """Entry points 1 & 3: line records → sink records.
 
     ``output_format='string'`` → T1 passthrough;
     ``'json'`` → T2 wrap + T4 enrichment.  E1 stamps ``host_id`` (the
-    driver's identity by default) as every record's partition key.
-    Works identically on batch and streaming DataFrames (same logical
-    plan; the micro-batch engine re-plans per trigger).
+    caller's resolved host identity) as every record's partition key.
     """
     clean = filter_empty_lines(strip_cr(lines))
     if output_format == "json":
         projected = wrap_line_as_json(clean, "value", output_key, entries)
     else:
         projected = line_passthrough(clean)
-    return to_sink_records(projected, host_id or get_host_id())
+    return to_sink_records(projected, host_id)
 
 
 def build_json_pipeline(
     values: DataFrame,
-    entries: Mapping[str, str] | None = None,
-    host_id: str | None = None,
+    entries: Mapping[str, str] | None,
+    host_id: str,
 ) -> DataFrame:
     """Entry point 2: JSON value records → enriched sink records
     (F2 null skip + T4 objects-only enrichment + T3 re-serialize), keyed
@@ -94,31 +89,7 @@ def build_json_pipeline(
         values["value"] != "null"
     )
     projected = enrich_json_objects(nonnull, "value", entries)
-    return to_sink_records(projected, host_id or get_host_id())
-
-
-def run_stream(
-    records: DataFrame,
-    sink,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
-) -> StreamingQuery:
-    """Attach a sink via foreachBatch and start the query.
-
-    ``available_now=True`` reproduces the reference's EOF drain
-    (process everything pending, flush, stop — basestreamer.go:27-33);
-    a ``processing_time`` trigger gives the continuous-tail mode.
-    """
-    writer = (
-        records.writeStream.foreachBatch(sink.write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return to_sink_records(projected, host_id)
 
 
 def windowed_event_counts(

@@ -21,9 +21,10 @@ landed files are held until the spooler hands them to its consumer
 the stream's fd finds no more input ready (after a backlog-sized read
 the poll waits ``BACKLOG_GRACE_MS``), at EOF or a spool error, or once
 the held bytes reach ``batch_bytes``.  A stream without a
-``fileno`` hands over after every landed file.  The CLI turns each
-take into one Spark batch, so a queued backlog drains in one batch
-and a lone record is sent as soon as stdin goes quiet.  That pays
+``fileno`` hands over after every landed file.  Each take becomes
+one Spark batch (:func:`send_batches`), so a queued backlog drains in
+one batch and a lone record is sent as soon as stdin goes quiet.
+That pays
 while input comes as a backlog or with gaps longer than one batch's
 fixed cost.  A steady stream of single-line writes finds stdin quiet
 between almost every line, so the consumer sends batches back to back,
@@ -36,11 +37,13 @@ its consumer has not released (:meth:`StdinSpooler.release`) exceed
 ``2 × batch_bytes``, having handed over what it holds first, so a
 stalled sink slows the producer instead of filling the disk.
 
-:func:`drain_and_stop` is the EOF drain for a Structured Streaming
-query that tails the landing dir (the i08 registry query): once the
-spooler has landed its last file, one ``processAllAvailable`` returns
-only after a source listing taken after that file landed found
-nothing left to commit, and the query is stopped then.
+One consumer (the reference's one goroutine, linestreamer.go:34-57):
+:func:`send_batches` turns each take into one ``spark.read.text``
+batch → records builder → ``sink.write_batch`` → the batch's files
+deleted → :meth:`StdinSpooler.release`, until the spool has ended and
+every landed file was sent.  Only this module knows that
+take/delete/release protocol; the CLI (``cli.run_streaming``) and the
+i08 registry query both call :func:`send_batches`.
 
 Memory bound: one chunk + one partial record — never the full input.
 A malformed JSON value ends the spool as soon as it is read, after the
@@ -90,9 +93,10 @@ class StdinSpooler:
     stage.
 
     Files are written to ``<dir>/.tmp-*`` then ``os.rename``d into
-    place: the file streaming source lists only completed files, so a
-    half-written chunk can never enter a micro-batch.  File names are
-    zero-padded sequence numbers — lexicographic order IS arrival
+    place.  The consumer only reads files :meth:`take` handed it, but a
+    watcher that lists ``part-*`` while files land (perfbench's
+    ``LandingWatcher``) must never see a half-written one.  File names
+    are zero-padded sequence numbers — lexicographic order IS arrival
     order.
 
     ``batch_bytes`` sizes a take (at most that many bytes, always at
@@ -263,9 +267,9 @@ class StdinSpooler:
         try:
             return self._run()
         except BaseException as exc:
-            # Surface the failure AND unblock take()/drain_and_stop — a
-            # dead spool thread that never set `done` would park its
-            # consumer forever (neither has a timeout).
+            # Surface the failure AND unblock take() — a dead spool
+            # thread that never set `done` would park its consumer
+            # forever (take has no timeout).
             self.error = exc
             raise
         finally:
@@ -339,27 +343,16 @@ def _input_poll(stream) -> select.poll | None:
     return poll
 
 
-def drain_and_stop(query, spooler: StdinSpooler) -> None:
-    """Stop a streaming query once every record the spooler landed is
-    committed — the EOF drain of the reference's flush-on-idle-or-EOF
-    contract (basestreamer.go:27-46).
-
-    Waits for ``spooler.done`` while the query is active, then calls
-    ``query.processAllAvailable()`` once.  Spark lists the source and
-    records "no new data" under the same lock under which that call
-    resets the flag, and ``done`` is set only after the final rename,
-    so the call returns once a listing that saw the last landed file
-    has nothing left to commit.  A query that dies while stdin is still
-    open (a sink failure on a pipe that never EOFs) ends the wait and
-    its cause is re-raised; the query is stopped on every exit.
-    """
-    try:
-        while query.isActive and not spooler.done.wait(0.2):
-            pass
-        if query.isActive:
-            query.processAllAvailable()
-    finally:
-        query.stop()
-    exc = query.exception()
-    if exc is not None:
-        raise exc
+def send_batches(spooler: StdinSpooler, spark, build, sink) -> None:
+    """Send everything ``spooler`` lands, one Spark batch per take:
+    ``build(spark.read.text(paths))`` goes to ``sink.write_batch(df,
+    epoch)``, numbered from 0, then the batch's files are deleted and
+    released (which lets a spooler waiting at its bound read on).
+    Returns once the spool has ended and every landed file was sent; a
+    sink failure propagates with the unsent files still on disk."""
+    for epoch, files in enumerate(iter(spooler.take, None)):
+        paths = [path for path, _ in files]
+        sink.write_batch(build(spark.read.text(paths)), epoch)
+        for path in paths:
+            os.remove(path)
+        spooler.release(files)

@@ -359,10 +359,11 @@ BENDS = {
         "|levels| groups"
     ),
     "i08_live_spool_stream": (
-        "the concurrent land/tail/clean gate: spool tail is "
-        "single-stream (as deployed); the micro-batch drain adds "
-        "per-batch fixed cost bounded by maxFilesPerTrigger "
-        "backpressure — ratio tracks landed files + lines, not a "
+        "the concurrent land/take/send/delete gate, through the "
+        "CLI's own loop (stdin_spool.send_batches): spool tail is "
+        "single-stream (as deployed); the spool is sized from the "
+        "source (~16 files, >= 4 batches at any scale), so batch "
+        "fixed cost stays flat — ratio tracks landed lines, not a "
         "plan bend"
     ),
 }

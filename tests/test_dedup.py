@@ -1,11 +1,19 @@
-"""Dedup-operator tests: exact, MinHash-LSH, SimHash, Jaccard."""
+"""Dedup-operator tests: exact, MinHash-LSH, SimHash, Jaccard, and the
+w08 leak-safe split that keeps exact duplicates on one side."""
 
 from __future__ import annotations
 
+import hashlib
+from collections import defaultdict
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.operators import dedup as D
+from kinesis_log_streamer_spark.plans import queries as Q
+
+from conftest import SF_SMOKE
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat "
@@ -449,3 +457,59 @@ class TestSwarLaneGuard:
         # 1000 distinct tokens: far inside the lane bound, the guard
         # must be invisible (one signature row out).
         assert D.simhash_fingerprints(self._big_doc(spark, 1000)).count() == 1
+
+
+def _pq(name: str) -> pd.DataFrame:
+    return pd.read_parquet(f"{SF_SMOKE}/{name}.parquet")
+
+
+def _md5(s: str) -> str:
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
+class TestLeakSafeSplit:
+    def _assign(self) -> dict[int, str]:
+        docs = _pq("documents")
+        keeper: dict[str, int] = {}
+        fps = {}
+        for r in docs.itertuples():
+            fp = _md5(r.text)
+            fps[int(r.doc_id)] = fp
+            keeper[fp] = min(keeper.get(fp, int(r.doc_id)), int(r.doc_id))
+        return {
+            did: (
+                "train"
+                if _md5(f"split:{keeper[fp]}")[:2] < "cc"
+                else "val"
+            )
+            for did, fp in fps.items()
+        }
+
+    def test_counts_match_hashlib_recompute(self, spark):
+        asg = self._assign()
+        row = Q.w08_leak_safe_split(spark, SF_SMOKE).collect()[0]
+        n_train = sum(1 for s in asg.values() if s == "train")
+        assert row.n_docs == len(asg)
+        assert row.n_train == n_train
+        assert row.n_val == len(asg) - n_train
+        assert row.train_pm == n_train * 1000 // len(asg)
+
+    def test_invariants(self, spark):
+        row = Q.w08_leak_safe_split(spark, SF_SMOKE).collect()[0]
+        # exact-dup groups can never straddle by construction
+        assert row.exact_leak == 0
+        assert row.n_train + row.n_val == row.n_docs
+        # near-dup telemetry is bounded by its truth set
+        assert 0 <= row.cohort_leak <= row.n_true_pairs
+        # the hash split should land in a sane band around 80 %
+        assert 600 <= row.train_pm <= 950
+
+    def test_exact_dups_co_assigned(self, spark):
+        # every duplicated text's members share one split by the
+        # keeper rule — recomputed here directly.
+        docs = _pq("documents")
+        asg = self._assign()
+        by_fp = defaultdict(set)
+        for r in docs.itertuples():
+            by_fp[_md5(r.text)].add(asg[int(r.doc_id)])
+        assert all(len(s) == 1 for s in by_fp.values())

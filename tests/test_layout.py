@@ -1,12 +1,18 @@
-"""Z-order layout operator: Morton interleave + clustered write."""
+"""Z-order layout operator: Morton interleave + clustered write, and the
+p10 small-file compaction planner."""
 
 from __future__ import annotations
 
 import os
+from collections import defaultdict
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.operators.layout import write_zordered, zvalue
+from kinesis_log_streamer_spark.plans import queries as Q
+
+from conftest import SF_SMOKE
 
 
 class TestZValue:
@@ -129,3 +135,71 @@ class TestPartitioningInvariance:
         for n in self.NAMES:
             again = self._rows(Q.REGISTRY[n](spark, self.SF))
             assert again == baseline[n], f"{n} depends on partitioning"
+
+
+def _pq(name: str) -> pd.DataFrame:
+    return pd.read_parquet(f"{SF_SMOKE}/{name}.parquet")
+
+
+class TestCompactionPlan:
+    TARGET = 32 * 1024 * 1024
+
+    def _expected(self) -> list[tuple]:
+        ev = _pq("events")
+        inv = [
+            (
+                str(r.event_type),
+                int(r.event_id),
+                (int(r.event_id) * 7919) % 262144 + 1024,
+            )
+            for r in ev.itertuples()
+        ]
+        groups = defaultdict(lambda: [0, 0, None, None])
+        by_dir = defaultdict(list)
+        for d, fid, sz in inv:
+            by_dir[d].append((sz, fid))
+        for d, files in by_dir.items():
+            files.sort(key=lambda t: (-t[0], t[1]))
+            cum = 0
+            for sz, fid in files:
+                g = cum // self.TARGET
+                cum += sz
+                a = groups[(d, g)]
+                a[0] += 1
+                a[1] += sz
+                a[2] = sz if a[2] is None else max(a[2], sz)
+                a[3] = sz if a[3] is None else min(a[3], sz)
+        return [
+            (d, g, a[0], a[1], a[2], a[3])
+            for (d, g), a in sorted(groups.items())
+        ]
+
+    def test_matches_python_recompute(self, spark):
+        got = [
+            (
+                r.dir,
+                r.group_no,
+                r.n_files,
+                r.group_bytes,
+                r.largest,
+                r.smallest,
+            )
+            for r in Q.p10_compaction_plan(spark, SF_SMOKE).collect()
+        ]
+        assert got == self._expected()
+
+    def test_groups_fill_near_target(self, spark):
+        # fill bounds of the running-fill rule (max file size is
+        # 262143 + 1024 = 263167): every group holds < target + max
+        # bytes, and every NON-last group holds > target - max bytes
+        # — i.e. each planned output object lands within one file of
+        # the 32 MiB target.
+        max_sz = 263167
+        rows = Q.p10_compaction_plan(spark, SF_SMOKE).collect()
+        last_group = {}
+        for r in rows:
+            last_group[r.dir] = max(last_group.get(r.dir, -1), r.group_no)
+        for r in rows:
+            assert r.group_bytes < self.TARGET + max_sz
+            if r.group_no != last_group[r.dir]:
+                assert r.group_bytes > self.TARGET - max_sz

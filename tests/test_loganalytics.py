@@ -1,13 +1,19 @@
-"""Apache access-log analytics tests over a FIXTURES.md §A1 corpus."""
+"""Apache access-log analytics tests over a FIXTURES.md §A1 corpus, and
+the l20/l21 ingest→analytics compositions against a Python recompute."""
 
 from __future__ import annotations
 
 import json
+from collections import defaultdict
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.operators import loganalytics as LA
+from kinesis_log_streamer_spark.plans import queries as Q
+
+from conftest import SF_SMOKE
 
 
 def _record(i: int, status: int = 200, path: str = "/index.html",
@@ -102,3 +108,92 @@ class TestRollups:
         assert sorted(r.ClientAddress for r in out) == [
             "203.0.113.0", "203.0.113.0", "203.0.113.1", "203.0.113.2",
         ] or len(out) >= 3
+
+
+def _pq(name: str) -> pd.DataFrame:
+    return pd.read_parquet(f"{SF_SMOKE}/{name}.parquet")
+
+
+class TestIngestRollupPipeline:
+    def _expected(self) -> list[tuple]:
+        ev = _pq("events")
+        ev = ev[ev["event_id"] % 7 == 0]
+        agg = defaultdict(lambda: [0, 0, 0])  # n, bytes, us_sum
+        for r in ev.itertuples():
+            eid = int(r.event_id)
+            m = eid % 10
+            status = (
+                200 if m <= 5 else 301 if m == 6 else 404 if m == 7
+                else 500 if m == 8 else 503
+            )
+            cls = f"{status // 100}xx"
+            a = agg[cls]
+            a[0] += 1
+            a[1] += (eid * 37) % 10000
+            a[2] += (eid * 101) % 500000
+        out = []
+        for cls in sorted(agg):
+            n, b, us = agg[cls]
+            out.append(
+                (cls, "piped", "HTTPAccessLog", n, b, round(us / n, 1))
+            )
+        return out
+
+    def test_matches_python_recompute(self, spark):
+        got = [
+            (
+                r.status_class,
+                r.handler,
+                r.log_file,
+                r.n_requests,
+                r.bytes_sent,
+                r.avg_us,
+            )
+            for r in Q.l20_ingest_rollup_pipeline(spark, SF_SMOKE).collect()
+        ]
+        assert got == self._expected()
+
+
+class TestErrorlogPipeline:
+    def _expected(self) -> list[tuple]:
+        ev = _pq("events")
+        ev = ev[(ev["event_id"] % 5 == 0) & (ev["event_id"] % 11 != 0)]
+        agg = {}
+        for r in ev.itertuples():
+            eid = int(r.event_id)
+            lvl = {0: "error", 1: "warn", 2: "notice", 3: "crit"}[eid % 4]
+            octet = int(r.user_id) % 256
+            a = agg.setdefault(lvl, [0, set(), None, None])
+            a[0] += 1
+            a[1].add(octet)
+            a[2] = eid if a[2] is None else min(a[2], eid)
+            a[3] = eid if a[3] is None else max(a[3], eid)
+        return [
+            (lvl, "HTTPErrorLog", a[0], len(a[1]), a[2], a[3])
+            for lvl, a in sorted(agg.items())
+        ]
+
+    def test_matches_python_recompute(self, spark):
+        got = [
+            (
+                r.level,
+                r.log_file,
+                r.n_lines,
+                r.n_clients,
+                r.first_err,
+                r.last_err,
+            )
+            for r in Q.l21_errorlog_pipeline(spark, SF_SMOKE).collect()
+        ]
+        assert got == self._expected()
+
+    def test_blank_lines_are_dropped(self, spark):
+        # the event_id % 11 cohort renders blank and must NOT appear:
+        # total kept lines == |%5 cohort| - |%5 ∩ %11 cohort|.
+        ev = _pq("events")
+        n5 = int((ev["event_id"] % 5 == 0).sum())
+        n55 = int(
+            ((ev["event_id"] % 5 == 0) & (ev["event_id"] % 11 == 0)).sum()
+        )
+        rows = Q.l21_errorlog_pipeline(spark, SF_SMOKE).collect()
+        assert sum(r.n_lines for r in rows) == n5 - n55

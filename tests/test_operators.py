@@ -1,14 +1,19 @@
-"""Composite-operator tests: as-of join, sessionization, top-k."""
+"""Composite-operator tests: as-of join (and w09's point-in-time
+matrix over it), sessionization, top-k."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.operators.asof import asof_join, asof_join_ranked
 from kinesis_log_streamer_spark.operators.sessionize import sessionize
 from kinesis_log_streamer_spark.operators.topk import topk_per_group
+from kinesis_log_streamer_spark.plans import queries as Q
+
+from conftest import SF_SMOKE
 
 
 def _ts(s: str) -> dt.datetime:
@@ -303,3 +308,56 @@ class TestAsofNearest:
         assert out[1] is None   # nearest is 30m away > 20m
         assert out[2] == 200    # 15m within tolerance
         assert out[4] == 300    # 0m
+
+
+def _pq(name: str) -> pd.DataFrame:
+    return pd.read_parquet(f"{SF_SMOKE}/{name}.parquet")
+
+
+class TestPointInTimeMatrix:
+    def test_no_future_leakage_and_staleness_rule(self, spark):
+        rows = Q.w09_point_in_time_matrix(spark, SF_SMOKE).collect()
+        assert rows, "matrix must not be empty"
+        for r in rows:
+            # backward as-of can never match a future feature
+            assert r.leak_viol == 0
+            # the staleness rule: f1 present iff a match exists
+            # within 90 days
+            if r.f1 is not None:
+                assert r.f1_age_days is not None
+                assert 0 <= r.f1_age_days <= 90
+            if r.f1_age_days is not None and r.f1_age_days > 90:
+                assert r.f1 is None
+
+    def test_f1_matches_pandas_asof(self, spark):
+        ev = _pq("events")
+        od = _pq("orders")
+        ev = ev[ev["event_id"] % 3 == 0]
+        f1 = (
+            od.groupby(["o_custkey", "o_orderdate"])["o_totalprice"]
+            .max()
+            .round(2)
+            .reset_index()
+        )
+        got = {
+            r.event_id: (r.f1, r.f1_age_days)
+            for r in Q.w09_point_in_time_matrix(spark, SF_SMOKE).collect()
+        }
+        for r in ev.itertuples():
+            cand = f1[
+                (f1["o_custkey"] == r.user_id)
+                & (f1["o_orderdate"] <= r.ts)
+            ]
+            eid = int(r.event_id)
+            if cand.empty:
+                assert got[eid] == (None, None)
+                continue
+            best = cand.loc[cand["o_orderdate"].idxmax()]
+            age = (
+                r.ts.normalize() - best["o_orderdate"].normalize()
+            ).days
+            exp_f1 = float(best["o_totalprice"]) if age <= 90 else None
+            assert got[eid][1] == age
+            assert (got[eid][0] is None) == (exp_f1 is None)
+            if exp_f1 is not None:
+                assert abs(got[eid][0] - exp_f1) < 1e-9

@@ -1,12 +1,17 @@
-"""Skew-handling tests: salted join/count correctness + spread, and
-bucketed-table joins that eliminate the shuffle entirely."""
+"""Skew-handling tests: salted join/count correctness + spread,
+bucketed-table joins that eliminate the shuffle entirely, and the p11
+join-size preflight."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.operators.skew import salted_count, salted_join
+from kinesis_log_streamer_spark.plans import queries as Q
+
+from conftest import SF_SMOKE
 
 
 @pytest.fixture()
@@ -102,3 +107,25 @@ class TestBucketedJoin:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
             spark.sql("DROP TABLE IF EXISTS bkt_a")
             spark.sql("DROP TABLE IF EXISTS bkt_b")
+
+
+def _pq(name: str) -> pd.DataFrame:
+    return pd.read_parquet(f"{SF_SMOKE}/{name}.parquet")
+
+
+class TestJoinSizePreflight:
+    def test_formula_matches_and_verifies(self, spark):
+        rows = Q.p11_join_size_preflight(spark, SF_SMOKE).collect()
+        assert len(rows) == 3
+        # the sum-product formula is EXACT: every pair must verify
+        for r in rows:
+            assert r.match == 1
+            assert r.est_rows == r.actual_rows
+            assert 0 < r.top_key_share_pm <= 1_000_000
+        # independent recompute of one pair in pandas
+        ev = _pq("events")
+        cnt = ev.groupby("user_id").size()
+        est = int((cnt * cnt).sum())
+        got = {r.pair: r for r in rows}["events*events"]
+        assert got.est_rows == est
+        assert got.n_common_keys == len(cnt)

@@ -1,5 +1,6 @@
 """The CLI data path: chunked stdin spool → one Spark batch per
-hand-over → sink (and the spool's ``drain_and_stop`` for queries).
+hand-over (``stdin_spool.send_batches``) → sink, and the i08 registry
+query that runs the same loop.
 
 Proves the VERDICT r04 C1 gap is closed: a multi-chunk stream flows
 through the pipeline with batch boundaries and order preserved while
@@ -14,12 +15,13 @@ import tempfile
 import threading
 import time
 
+import pandas as pd
 import pytest
 
-from kinesis_log_streamer_spark.streaming.stdin_spool import (
-    StdinSpooler,
-    drain_and_stop,
-)
+from kinesis_log_streamer_spark.plans import queries as Q
+from kinesis_log_streamer_spark.streaming.stdin_spool import StdinSpooler
+
+from conftest import SF_SMOKE
 
 
 class ChunkedStream(io.RawIOBase):
@@ -168,7 +170,7 @@ def _run_cli_streaming(monkeypatch, stream, fmt="line", sink=None):
     sink = sink or _RecordingSink()
     monkeypatch.setattr(kinesis_sink, "KinesisSink", lambda *a, **kw: sink)
     monkeypatch.setattr(cli, "get_host_id", lambda probe_network=False: "testhost")
-    args = cli.build_parser().parse_args(["--streaming", "-f", fmt, "Stream"])
+    args = cli.build_parser().parse_args(["-f", fmt, "Stream"])
     output_format = "json" if fmt == "json" else "string"
     return cli.run_streaming(args, {}, output_format, stream), sink
 
@@ -190,65 +192,6 @@ def _lines(pieces: list[bytes]) -> list[str]:
 
 
 class TestStreamingEndToEnd:
-    def test_multi_chunk_stream_batches_and_order(self, spark, tmp_path):
-        """Pipe 6 chunks through spool → readStream(text) → line
-        pipeline → recording sink: every record arrives exactly once,
-        order within each landed file is preserved, and intake is
-        bounded to one file per micro-batch (batch boundaries)."""
-        from kinesis_log_streamer_spark.streaming.pipeline import (
-            build_line_pipeline,
-            run_stream,
-        )
-
-        landing = str(tmp_path / "landing")
-        os.makedirs(landing)
-        pieces = [
-            b"a-1\na-2\n",
-            b"b-1\nb-",  # partial record crosses into next chunk
-            b"2\nc-1\n",
-            b"d-1\nd-2\nd-3\n",
-        ]
-        raw = (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", 1)
-            .load(landing)
-        )
-        records = build_line_pipeline(raw, "string", host_id="testhost")
-        sink = _RecordingSink()
-        query = run_stream(
-            records,
-            sink,
-            str(tmp_path / "ckpt"),
-            available_now=False,
-            processing_time="200 milliseconds",
-        )
-        try:
-            spooler = StdinSpooler(ChunkedStream(pieces), landing, fmt="line")
-            t = spooler.start_thread()
-            t.join(timeout=10)
-            assert spooler.done.is_set()
-            drain_and_stop(query, spooler)
-        finally:
-            if query.isActive:
-                query.stop()
-
-        got = [r for _, rows in sink.batches for r in rows]
-        want = ["a-1", "a-2", "b-1", "b-2", "c-1", "d-1", "d-2", "d-3"]
-        assert sorted(got) == sorted(want)
-        # Batch boundaries: maxFilesPerTrigger=1 → every micro-batch
-        # is EXACTLY one landed file, records in file order (the file
-        # source orders ready files by mtime, so cross-file sequence
-        # is not contractual — record independence is; the sink
-        # sequences per shard).
-        per_file = [
-            ["a-1", "a-2"],
-            ["b-1"],
-            ["b-2", "c-1"],
-            ["d-1", "d-2", "d-3"],
-        ]
-        batch_rows = [rows for _, rows in sink.batches]
-        assert sorted(batch_rows) == sorted(per_file)
-
     def test_cli_streaming_dry_run(self, spark, capsys, monkeypatch):
         """`--dry-run` end-to-end through run_streaming, the CLI's one
         data path: chunked stdin in, records on stdout, zero
@@ -256,7 +199,7 @@ class TestStreamingEndToEnd:
         from kinesis_log_streamer_spark import cli
 
         args = cli.build_parser().parse_args(
-            ["--streaming", "--dry-run", "-f", "line", "Stream"]
+            ["--dry-run", "-f", "line", "Stream"]
         )
         entries = {}
         stream = ChunkedStream([b"one\ntw", b"o\nthree\n"])
@@ -729,71 +672,6 @@ class TestKinesisSinkWriteShape:
         assert "Exchange" not in new[0]  # ...that shuffles nothing
 
 
-class _FakeSpooler:
-    def __init__(self):
-        self.done = threading.Event()
-
-
-class _FakeQuery:
-    """The slice of ``StreamingQuery`` that ``drain_and_stop`` uses,
-    recording each call with whether the spooler was done by then."""
-
-    def __init__(self, spooler, dies_at=None, error=None, drain_error=None):
-        self._spooler = spooler
-        self._dies_at = dies_at
-        self._error = error
-        self._drain_error = drain_error
-        self._stopped = False
-        self.calls: list[tuple[str, bool]] = []
-
-    @property
-    def isActive(self):
-        dead = self._dies_at is not None and time.monotonic() >= self._dies_at
-        return not (self._stopped or dead)
-
-    def processAllAvailable(self):
-        self.calls.append(("processAllAvailable", self._spooler.done.is_set()))
-        if self._drain_error is not None:
-            raise self._drain_error
-
-    def stop(self):
-        self.calls.append(("stop", self._spooler.done.is_set()))
-        self._stopped = True
-
-    def exception(self):
-        return self._error
-
-
-class TestDrainAndStop:
-    def test_drains_once_after_done_then_stops(self):
-        spooler = _FakeSpooler()
-        query = _FakeQuery(spooler)
-        threading.Timer(0.3, spooler.done.set).start()
-        drain_and_stop(query, spooler)
-        assert query.calls == [("processAllAvailable", True), ("stop", True)]
-
-    def test_dead_query_ends_the_wait_and_raises(self):
-        spooler = _FakeSpooler()  # stdin never ends
-        boom = RuntimeError("sink failed")
-        query = _FakeQuery(spooler, dies_at=time.monotonic() + 0.3, error=boom)
-        t = time.monotonic()
-        with pytest.raises(RuntimeError) as e:
-            drain_and_stop(query, spooler)
-        assert e.value is boom
-        assert time.monotonic() - t < 1.0
-        assert query.calls == [("stop", False)]
-
-    def test_failed_drain_still_stops_the_query(self):
-        spooler = _FakeSpooler()
-        spooler.done.set()
-        boom = RuntimeError("batch failed")
-        query = _FakeQuery(spooler, drain_error=boom)
-        with pytest.raises(RuntimeError) as e:
-            drain_and_stop(query, spooler)
-        assert e.value is boom
-        assert query.calls == [("processAllAvailable", True), ("stop", True)]
-
-
 def test_spooler_prefers_read1_over_blocking_read(tmp_path):
     """sys.stdin.buffer-style streams must be consumed via read1 (any
     available bytes) — a buffered read(n) would block a quiet pipe
@@ -818,7 +696,7 @@ def test_spooler_prefers_read1_over_blocking_read(tmp_path):
 
 
 def test_spooler_crash_sets_done_and_error(tmp_path):
-    """A dead spool thread must still release drain_and_stop: done is
+    """A dead spool thread must still release its consumer: done is
     set in a finally, with the exception surfaced on .error (the CLI
     exits 1 instead of hanging forever)."""
     sp = StdinSpooler(
@@ -834,7 +712,7 @@ def test_cli_streaming_json_non_finite_exits_1(spark, capsys):
     from kinesis_log_streamer_spark import cli
 
     args = cli.build_parser().parse_args(
-        ["--streaming", "--dry-run", "-f", "json", "Stream"]
+        ["--dry-run", "-f", "json", "Stream"]
     )
     stream = ChunkedStream([b'{"ok": 1} {"n": 1e400}'])
     assert cli.run_streaming(args, {}, "json", stream) == 1
@@ -845,7 +723,7 @@ def test_cli_streaming_json_garbage_exits_1(spark, capsys):
     from kinesis_log_streamer_spark import cli
 
     args = cli.build_parser().parse_args(
-        ["--streaming", "--dry-run", "-f", "json", "Stream"]
+        ["--dry-run", "-f", "json", "Stream"]
     )
     stream = ChunkedStream([b'{"ok": 1} {"unterminated'])
     rc = cli.run_streaming(args, {}, "json", stream)
@@ -963,3 +841,65 @@ def test_json_float_split_after_decimal_point(tmp_path):
                 got += [_json.loads(x) for x in fh.read().splitlines()]
         assert got == want, (pieces, got)
         assert n == len(want)
+
+
+def _pq(name: str) -> pd.DataFrame:
+    return pd.read_parquet(f"{SF_SMOKE}/{name}.parquet")
+
+
+class TestLiveSpoolStream:
+    def test_matches_python_recompute(self, spark):
+        ev = _pq("events")
+        ev = ev[ev["event_id"] % 9 == 0]
+        exp = []
+        for et, g in ev.groupby("event_type"):
+            exp.append(
+                (
+                    str(et),
+                    len(g),
+                    int(g["event_id"].min()),
+                    int(g["event_id"].max()),
+                    round(float(g["value"].sum()), 2),
+                )
+            )
+        exp.sort()
+        got = [
+            (r.event_type, r.n_records, r.min_id, r.max_id, r.sum_value)
+            for r in Q.i08_live_spool_stream(spark, SF_SMOKE).collect()
+        ]
+        assert got == exp
+
+    def test_cli_and_i08_send_through_one_loop(self, spark, monkeypatch):
+        """``cli.run_streaming`` and i08 both send through
+        ``stdin_spool.send_batches``; i08 starts no ``StreamingQuery``
+        and takes at least two batches at sf0.001."""
+        from pyspark.sql.streaming import DataStreamWriter
+
+        from kinesis_log_streamer_spark import cli
+        from kinesis_log_streamer_spark.streaming import stdin_spool
+
+        loops = []
+        send_batches = stdin_spool.send_batches
+
+        def recording(spooler, session, build, sink):
+            epochs = []
+            loops.append(epochs)
+
+            class CountingSink:
+                def write_batch(self, df, epoch_id):
+                    epochs.append(epoch_id)
+                    sink.write_batch(df, epoch_id)
+
+            send_batches(spooler, session, build, CountingSink())
+
+        started = []
+        monkeypatch.setattr(stdin_spool, "send_batches", recording)
+        monkeypatch.setattr(
+            DataStreamWriter, "start", lambda self, *a, **kw: started.append(self)
+        )
+        assert Q.i08_live_spool_stream(spark, SF_SMOKE).collect()
+        assert started == [] and spark.streams.active == []
+        assert len(loops) == 1 and len(loops[0]) >= 2, loops
+        args = cli.build_parser().parse_args(["--dry-run", "Stream"])
+        assert cli.run_streaming(args, {}, "string", ChunkedStream([b"a\n"])) == 0
+        assert len(loops) == 2 and loops[1] == [0], loops

@@ -1,26 +1,20 @@
-"""Streaming-semantics tests: AvailableNow drain (EOF flush), batch
-boundaries, windowed/sessionized aggregation (SURVEY §5.2 item 3)."""
+"""Streaming-semantics tests: PutRecords batching and the Kinesis sink,
+windowed/sessionized aggregation (SURVEY §5.2 item 3), the Kinesis
+source, and the shard-routing queries (k06, k07)."""
 
 from __future__ import annotations
 
 import hashlib
 import json
-from collections import Counter
+from collections import Counter, defaultdict
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from kinesis_log_streamer_spark.plans import queries as Q
-from kinesis_log_streamer_spark.streaming.kinesis_sink import (
-    CollectingSink,
-    chunk_records,
-)
-from kinesis_log_streamer_spark.streaming.pipeline import (
-    build_line_pipeline,
-    run_stream,
-    windowed_event_counts,
-)
+from kinesis_log_streamer_spark.streaming.kinesis_sink import chunk_records
+from kinesis_log_streamer_spark.streaming.pipeline import windowed_event_counts
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,13 +50,6 @@ class TestChunking:
 
 class TestNullData:
     """A NULL ``data`` column must fail loudly, not ship ``b"None"``."""
-
-    def test_collecting_sink_rejects_null_data(self, spark):
-        df = spark.createDataFrame(
-            [("ok", "k1"), (None, "host-7")], "data string, partitionKey string"
-        )
-        with pytest.raises(ValueError, match="NULL data.*host-7"):
-            CollectingSink().write_batch(df, epoch_id=0)
 
     def test_kinesis_sink_rejects_null_data(self, spark, tmp_path):
         from kinesis_log_streamer_spark.sources.kinesis_source import (
@@ -251,30 +238,6 @@ class TestKinesisSinkDriverWrite:
         assert sorted(shipped) == sorted(
             f"e{e}-{i}" for e in range(2) for i in range(30)
         )
-
-
-class TestAvailableNowDrain:
-    def test_stream_drains_and_flushes(self, spark, tmp_path):
-        # EOF drain: all pending input processed, tail flushed
-        # (basestreamer.go:27-33 ≙ Trigger.AvailableNow)
-        src = tmp_path / "in"
-        src.mkdir()
-        (src / "a.log").write_text("l1\nl2\n\nl3\n")
-        (src / "b.log").write_text("l4\r\nl5\r\n")
-        lines = spark.readStream.format("text").load(str(src))
-        records = build_line_pipeline(
-            lines, output_format="json",
-            entries={"LogFile": "T"}, host_id="h1",
-        )
-        sink = CollectingSink(max_records=5)
-        q = run_stream(records, sink, str(tmp_path / "ckpt"), available_now=True)
-        q.awaitTermination(120)
-        payloads = sorted(
-            json.loads(d.decode())["LogEntry"] for d, _ in sink.records
-        )
-        assert payloads == ["l1", "l2", "l3", "l4", "l5"]
-        assert all(k == "h1" for _, k in sink.records)
-        assert all(len(b) <= 5 for b in sink.batches)
 
 
 class TestWindowedAggregation:
@@ -667,6 +630,10 @@ def _pq(name: str) -> pd.DataFrame:
     return pd.read_parquet(f"{SF}/{name}.parquet")
 
 
+def _md5(s: str) -> str:
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
 def _shard_no(key: str) -> int:
     return int(hashlib.md5(key.encode("utf-8")).hexdigest()[0], 16) // 2
 
@@ -729,3 +696,35 @@ class TestReshardPlan:
         assert len(hot) == 1
         assert hot[0].share_pm == 1000 and hot[0].n_children == 4
         assert all(r.action == "merge" for r in rows if r is not hot[0])
+
+
+class TestShardBalance:
+    def test_host_mode_hot_shards_per_user_spreads(self, spark):
+        rows = Q.k06_shard_balance(spark, SF).collect()
+        host = [r for r in rows if r.mode == "host"]
+        per = [r for r in rows if r.mode == "per_user"]
+        # the reference's single host key routes EVERYTHING to one
+        # shard — the diagnosis the query exists to surface.
+        assert len(host) == 1
+        assert host[0].share_pm == 1000
+        assert host[0].hottest_pm == 1000
+        # per-user keys spread across shards; with 8 hash ranges the
+        # hottest shard should carry well under half the stream.
+        assert len(per) >= 4
+        assert per[0].hottest_pm < 500
+        assert sum(r.n_records for r in per) == sum(
+            r.n_records for r in host
+        )
+
+    def test_matches_hashlib_recompute(self, spark):
+        ev = _pq("events")
+        shards = defaultdict(int)
+        for uid in ev["user_id"]:
+            nib = _md5(str(int(uid)))[0]
+            shards["0123456789abcdef".index(nib) // 2] += 1
+        got = {
+            r.shard_no: r.n_records
+            for r in Q.k06_shard_balance(spark, SF).collect()
+            if r.mode == "per_user"
+        }
+        assert got == dict(shards)
